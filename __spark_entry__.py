@@ -2408,7 +2408,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # analytics gates up to 50. The 23 long-stable gates parked past the
     # window (media decodes, streaming, r4 events geometry, raster
     # coverage/vectorize) keep full local coverage via
-    # tools/check_oracles.py, which runs all 73.
+    # tools/check_oracles.py, which runs all 74.
     return {
         # --- 23 gates rotated INTO the driver window (never checked r1-r4)
         "region_poly_overlay": region_poly_overlay,

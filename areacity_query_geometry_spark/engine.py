@@ -17,9 +17,12 @@ answers one coordinate per call; this engine answers them all in one
 distributed join.
 
 Hot-path shape (Q1): probe cell_id is ONE codegen'd SQL expression per
-point; the tile join is a plain equi-join (broadcast when the tile set
-fits, sort-merge otherwise); whole-cell interior hits (kind=1) never
-leave the JVM; only points landing in boundary-ish cells cross into the
+point; while both broadcast tile indexes fit their budgets, one scalar
+Arrow UDF resolves every probe's regions from (lng, lat, cell_id) in a
+single pass over the probe, whose id columns never leave the JVM. Past
+a budget the tile join is a plain equi-join (broadcast when the tile
+set fits, sort-merge otherwise) whose interior hits (kind=1) stay in
+the JVM, and only points in boundary-ish cells cross into the
 vectorized Arrow refine.
 """
 from __future__ import annotations
@@ -29,12 +32,13 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import (
     DataFrame, Observation, SparkSession, Window, functions as F,
 )
 from pyspark.sql.types import (
-    BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
-    StructType,
+    ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
+    StructField, StructType,
 )
 
 from . import GRID_VERSION, grid, tiler
@@ -441,111 +445,179 @@ def _make_refine_fn(id_cols: tuple[str, ...]):
     return _refine_point_batches
 
 
+def _cell_pairs(cells: np.ndarray, cell_ptr: np.ndarray, cid: np.ndarray):
+    """(row, slot, entry) pairs of a sorted-cell CSR lookup: each row
+    of `cid` whose cell is in `cells` (at index `slot`) pairs with every
+    entry of that cell's range. Formed by `searchsorted` plus
+    repeat/cumsum range expansion (no per-row Python); rows come out
+    ascending. Shared by the Q1, Q2 and Q3 index kernels."""
+    if len(cells) == 0 or len(cid) == 0:
+        e = np.empty(0, np.int64)
+        return e, e, e
+    ci = np.searchsorted(cells, cid)
+    np.clip(ci, 0, len(cells) - 1, out=ci)
+    rows = np.nonzero(cells[ci] == cid)[0]  # semi-join guard
+    slots = ci[rows]
+    c0 = cell_ptr[slots]
+    cnt = cell_ptr[slots + 1] - c0
+    starts = np.zeros(len(rows), dtype=np.int64)
+    np.cumsum(cnt[:-1], out=starts[1:])
+    entry = (np.arange(int(cnt.sum()), dtype=np.int64)
+             - np.repeat(starts, cnt) + np.repeat(c0, cnt))
+    return np.repeat(rows, cnt), np.repeat(slots, cnt), entry
+
+
+def _index_point_hits(I: dict, px: np.ndarray, py: np.ndarray,
+                      cid: np.ndarray, keep: np.ndarray | None = None,
+                      J: dict | None = None):
+    """Q1 hits of one batch of probe points against the broadcast
+    indexes — the one kernel behind the one-pass Q1 UDF
+    (`_make_regions_udf`) and the boundary-only refine
+    (`_make_index_refine_fn`). The distributed analog of the
+    reference's in-memory STRtree process index (AreaCityQuery.java:50-53):
+    the indexes ship once per worker, the probe table never shuffles.
+
+    I is the boundary index (`_boundary_index`, kind 0/2 tiles with
+    pre-decoded segments), J the interior index (`_interior_index`,
+    kind 1) or None for boundary hits only, `keep` the sorted region
+    ids of a `where` filter (None = unfiltered) — the in-kernel twin of
+    the join paths' LEFT SEMI tile filter, applied to both indexes.
+
+    Returns ((ir, ig), (br, bg)): interior and boundary (row, region)
+    hit pairs, each sorted by row. Interior pairs are one per interior
+    tile row of the probe's cell (the interior equi-join's fan-out);
+    boundary pairs are deduped per (row, region), since several
+    sub-tiles of one region in one cell may all accept the same point.
+    Kind-2 tiles accept by half-open rect, kind-0 tiles by the flat
+    crossing-parity / on-segment kernel (`_pair_hits_flat`, bit-
+    identical to the join refine's)."""
+    empty = np.empty(0, np.int64)
+    ir, ig = empty, empty
+    if J is not None:
+        ir, _, ient = _cell_pairs(J["cells"], J["cell_ptr"], cid)
+        ig = J["region"][ient]
+        if keep is not None:
+            km = _in_sorted(ig, keep)
+            ir, ig = ir[km], ig[km]
+
+    row_pt, _, pair_tile = _cell_pairs(I["cells"], I["cell_ptr"], cid)
+    if keep is not None:
+        km = _in_sorted(I["region"][pair_tile], keep)
+        pair_tile, row_pt = pair_tile[km], row_pt[km]
+    ppx = px[row_pt]
+    ppy = py[row_pt]
+    kindt = I["kind"][pair_tile]
+    hit_rows, hit_regs = [], []
+
+    m2 = kindt == 2
+    if m2.any():
+        t2 = pair_tile[m2]
+        h2 = ((ppx[m2] >= I["minx"][t2]) & (ppx[m2] < I["maxx"][t2])
+              & (ppy[m2] >= I["miny"][t2]) & (ppy[m2] < I["maxy"][t2]))
+        hit_rows.append(row_pt[m2][h2])
+        hit_regs.append(I["region"][t2][h2])
+
+    m0 = np.nonzero(kindt == 0)[0]
+    if len(m0):
+        t0 = pair_tile[m0]
+        soff = I["seg_ptr"][t0]
+        slen = I["seg_ptr"][t0 + 1] - soff
+        tot_s = int(slen.sum())
+        npairs0 = len(m0)
+        row_pair = np.repeat(np.arange(npairs0, dtype=np.int64), slen)
+        rstart = np.zeros(npairs0, dtype=np.int64)
+        np.cumsum(slen[:-1], out=rstart[1:])
+        sidx = (np.arange(tot_s, dtype=np.int64)
+                - np.repeat(rstart, slen) + np.repeat(soff, slen))
+        p0x = ppx[m0]
+        p0y = ppy[m0]
+        hit0 = _pair_hits_flat(
+            I["X1"][sidx], I["Y1"][sidx], I["X2"][sidx],
+            I["Y2"][sidx], I["YDS"][sidx], I["DX"][sidx],
+            I["LN"][sidx], I["DEG"][sidx],
+            row_pair, p0x[row_pair], p0y[row_pair], npairs0)
+        hit_rows.append(row_pt[m0][hit0])
+        hit_regs.append(I["region"][t0][hit0])
+
+    br = np.concatenate(hit_rows) if hit_rows else empty
+    if len(br) == 0:
+        return (ir, ig), (empty, empty)
+    bg = np.concatenate(hit_regs)
+    order = np.lexsort((bg, br))
+    br, bg = br[order], bg[order]
+    first = np.empty(len(br), dtype=bool)
+    first[0] = True
+    first[1:] = (np.diff(br) != 0) | (np.diff(bg) != 0)
+    return (ir, ig), (br[first], bg[first])
+
+
 def _make_index_refine_fn(id_cols: tuple[str, ...], bc,
                           keep: np.ndarray | None = None):
-    """Boundary refine against a BROADCAST pre-decoded tile index — the
-    100-TB shape of the Q1 boundary leg. The join-based refine ships
-    every (point, tile) pair through Arrow with the tile's full WKB
-    bytes duplicated per matched point (measured on the dense fixture:
-    3.8M pairs ≈ 0.9 GB Arrow traffic per 10M probes) after a
-    repartition shuffle; here the probe rows stream through UNSHUFFLED
-    carrying only (*id_cols, lng, lat, cell_id) — pairs are formed
-    inside the kernel by `searchsorted` into the index's cell table,
-    segments address the index's pre-decoded CSR arrays directly, and
-    the flat kernel (`_pair_hits_flat`, bit-identical to the join
-    refine's) evaluates the whole batch in one pass. This is the
-    distributed analog of the reference's in-memory STRtree process
-    index (/root/reference/AreaCityQuery.java:50-53): the index ships
-    once per worker, the (100-TB) probe table never shuffles."""
+    """Boundary-only refine against the broadcast boundary index, as a
+    mapInPandas function over (*id_cols, lng, lat, cell_id) batches →
+    (*id_cols, region_id). The Q1 union plan's boundary leg when the
+    interior index is off or over budget (the one-pass plan otherwise
+    resolves both kinds in `_make_regions_udf`). Compared with the
+    join-based refine, probe rows stream through UNSHUFFLED and no
+    per-pair tile WKB crosses Arrow (measured on the dense fixture:
+    3.8M pairs ≈ 0.9 GB Arrow traffic per 10M probes)."""
     id_list = list(id_cols)
-    keep_regions = keep  # the refine's dedup reuses the name `keep`
-
-    def _empty(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf[id_list].iloc[:0].copy()
-        out["region_id"] = pd.Series([], dtype="int64")
-        return out
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idx = bc.value  # unpickled once per worker process, reused
-        cells = idx["cells"]
-        cptr = idx["cell_ptr"]
         for pdf in it:
-            n = len(pdf)
-            if n == 0 or len(cells) == 0:
-                yield _empty(pdf)
-                continue
-            cid = pdf["cell_id"].to_numpy()
-            px = np.asarray(pdf["lng"], dtype=np.float64)
-            py = np.asarray(pdf["lat"], dtype=np.float64)
-            ci = np.searchsorted(cells, cid)
-            np.clip(ci, 0, len(cells) - 1, out=ci)
-            rows = np.nonzero(cells[ci] == cid)[0]  # semi-join guard
-            if len(rows) == 0:
-                yield _empty(pdf)
-                continue
-            c0 = cptr[ci[rows]]
-            tcnt = cptr[ci[rows] + 1] - c0
-            tot = int(tcnt.sum())
-            starts = np.zeros(len(rows), dtype=np.int64)
-            np.cumsum(tcnt[:-1], out=starts[1:])
-            pair_tile = (np.arange(tot, dtype=np.int64)
-                         - np.repeat(starts, tcnt) + np.repeat(c0, tcnt))
-            row_pt = np.repeat(rows, tcnt)
-            if keep_regions is not None:
-                km = _in_sorted(idx["region"][pair_tile], keep_regions)
-                pair_tile, row_pt = pair_tile[km], row_pt[km]
-            ppx = px[row_pt]
-            ppy = py[row_pt]
-            kindt = idx["kind"][pair_tile]
-            hit_rows, hit_regs = [], []
-
-            m2 = kindt == 2
-            if m2.any():
-                t2 = pair_tile[m2]
-                h2 = ((ppx[m2] >= idx["minx"][t2]) & (ppx[m2] < idx["maxx"][t2])
-                      & (ppy[m2] >= idx["miny"][t2]) & (ppy[m2] < idx["maxy"][t2]))
-                hit_rows.append(row_pt[m2][h2])
-                hit_regs.append(idx["region"][t2][h2])
-
-            m0 = np.nonzero(kindt == 0)[0]
-            if len(m0):
-                t0 = pair_tile[m0]
-                soff = idx["seg_ptr"][t0]
-                slen = idx["seg_ptr"][t0 + 1] - soff
-                tot_s = int(slen.sum())
-                npairs0 = len(m0)
-                row_pair = np.repeat(np.arange(npairs0, dtype=np.int64), slen)
-                rstart = np.zeros(npairs0, dtype=np.int64)
-                np.cumsum(slen[:-1], out=rstart[1:])
-                sidx = (np.arange(tot_s, dtype=np.int64)
-                        - np.repeat(rstart, slen) + np.repeat(soff, slen))
-                p0x = ppx[m0]
-                p0y = ppy[m0]
-                hit0 = _pair_hits_flat(
-                    idx["X1"][sidx], idx["Y1"][sidx], idx["X2"][sidx],
-                    idx["Y2"][sidx], idx["YDS"][sidx], idx["DX"][sidx],
-                    idx["LN"][sidx], idx["DEG"][sidx],
-                    row_pair, p0x[row_pair], p0y[row_pair], npairs0)
-                hit_rows.append(row_pt[m0][hit0])
-                hit_regs.append(idx["region"][t0][hit0])
-
-            hr = np.concatenate(hit_rows) if hit_rows else np.empty(0, np.int64)
-            if len(hr) == 0:
-                yield _empty(pdf)
-                continue
-            hg = np.concatenate(hit_regs)
-            # dedup (point, region): several sub-tiles of one region in
-            # one cell may all accept the same point
-            order = np.lexsort((hg, hr))
-            hr, hg = hr[order], hg[order]
-            keep = np.empty(len(hr), dtype=bool)
-            keep[0] = True
-            keep[1:] = (np.diff(hr) != 0) | (np.diff(hg) != 0)
-            out = pdf.iloc[hr[keep]][id_list].copy()
-            out["region_id"] = hg[keep].astype("int64")
+            _, (hr, hg) = _index_point_hits(
+                idx, np.asarray(pdf["lng"], dtype=np.float64),
+                np.asarray(pdf["lat"], dtype=np.float64),
+                pdf["cell_id"].to_numpy(), keep)
+            out = pdf.iloc[hr][id_list].copy()
+            out["region_id"] = hg.astype("int64")
             yield out
 
     return fn
+
+
+def _make_regions_udf(ib, bb, keep: np.ndarray | None = None,
+                      counts: bool = False):
+    """The one-pass Q1 index kernel as a scalar Arrow UDF:
+    (lng, lat, cell_id) → array<bigint> of the probe's region ids,
+    interior hits first. Only these three columns (24 bytes per probe)
+    cross into Python; the caller's id columns stay in the JVM and the
+    plan explodes the array. ib / bb are the interior / boundary index
+    Broadcasts, `keep` as in `_index_point_hits`.
+
+    counts=True returns struct<region_id array<bigint>, interior int>
+    instead, `interior` being how many of the ids are interior hits —
+    what `query_points_with_metrics` observes before the explode."""
+    ids_type = ArrayType(LongType())
+    out_type = (StructType([StructField("region_id", ids_type),
+                            StructField("interior", IntegerType())])
+                if counts else ids_type)
+
+    def regions(lng: pa.Array, lat: pa.Array, cell: pa.Array) -> pa.Array:
+        n = len(cell)
+        if cell.null_count:
+            cell = cell.fill_null(-1)  # cell ids are never negative
+        (ir, ig), (br, bg) = _index_point_hits(
+            bb.value, lng.to_numpy(zero_copy_only=False),
+            lat.to_numpy(zero_copy_only=False),
+            cell.to_numpy(zero_copy_only=False), keep, ib.value)
+        rows = np.concatenate((ir, br))
+        # both runs are row-sorted, so the stable sort is one merge
+        order = np.argsort(rows, kind="stable")
+        offsets = np.zeros(n + 1, dtype=np.int32)
+        np.cumsum(np.bincount(rows, minlength=n), out=offsets[1:])
+        ids = pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(np.concatenate((ig, bg))[order]))
+        if not counts:
+            return ids
+        n_int = np.bincount(ir, minlength=n).astype(np.int32)
+        return pa.StructArray.from_arrays(
+            [ids, pa.array(n_int)], names=["region_id", "interior"])
+
+    # the pa.Array hints make this a SCALAR Arrow UDF; they resolve
+    # against the module-level pyarrow import
+    return F.arrow_udf(regions, out_type)
 
 
 def _probe_is_rect(g: dict, b: tuple[float, float, float, float]) -> bool:
@@ -774,13 +846,14 @@ class SpatialEngine:
         ceilings). 0 disables the index path.
 
         interior_index_rows: row ceiling for the INTERIOR (kind=1)
-        cell→region CSR broadcast that the Q3 geometry-intersects
-        index path needs alongside the boundary index. Interior rows
-        are 16 bytes each ((cell_id, region_id) — rects reconstruct
-        from the cell id), so the 12M default matches
-        `interior_broadcast_rows`' ~200MB-once-per-executor budget.
-        Past the ceiling Q3 falls back to the cover-join plan. 0
-        disables."""
+        cell→region CSR broadcast that the one-pass Q1 plan (and so
+        Q2's Q1 leg) and the Q3 geometry-intersects index path need
+        alongside the boundary index. Interior rows are 16 bytes each
+        ((cell_id, region_id) — rects reconstruct from the cell id),
+        so the 12M default matches `interior_broadcast_rows`'
+        ~200MB-once-per-executor budget. Past the ceiling Q1 falls back
+        to the union plan (interior equi-join + boundary refine) and Q3
+        to the cover-join plan. 0 disables."""
         self.spark = spark
         self.boundaries = boundaries
         self.tiles = tiles
@@ -873,7 +946,7 @@ class SpatialEngine:
              AND t.kind = 1
 
         (boundary-cell refinement still needs the Arrow kernel — SQL
-        covers the ~97% interior fast path). Returns the view names."""
+        covers only the interior cells). Returns the view names."""
         b, t = f"{prefix}_boundaries", f"{prefix}_tiles"
         self.boundaries.createOrReplaceTempView(b)
         self.tiles.createOrReplaceTempView(t)
@@ -1077,11 +1150,11 @@ class SpatialEngine:
         kind=1 (whole-cell) tile as a sorted-cell CSR of region ids,
         plus each unique cell's rect (reconstructed via
         grid.cells_bounds — interior tiles are stored one row per
-        BASE-res cell with rect == cell rect, tiler.push). The Q3
-        index path needs it because `_boundary_index` deliberately
-        holds only kind≠1 tiles (Q1/Q2 resolve interiors JVM-side).
-        Returns the Broadcast or None when the interior row count
-        exceeds `interior_index_rows` (Q3 then keeps the join plan)."""
+        BASE-res cell with rect == cell rect, tiler.push). The one-pass
+        Q1 plan and the Q3 index path need it because `_boundary_index`
+        deliberately holds only kind≠1 tiles. Returns the Broadcast or
+        None when the interior row count exceeds `interior_index_rows`
+        (Q1 then takes the union plan, Q3 the join plan)."""
         if self._iindex is not None:
             return self._iindex
         if self._iindex_off or self.interior_index_rows <= 0:
@@ -1127,14 +1200,26 @@ class SpatialEngine:
                       observers: tuple | None = None) -> DataFrame:
         """Core spatial join: (*id_cols, lng, lat) → (*id_cols, region_id).
 
-        kind=1 (whole-cell interior) hits never leave the JVM; kind 0/2
-        rows cross into the Arrow refine. A point hits at most one tile
-        tree per region by construction, and same-key sub-tiles are
-        deduped inside the refine group, so no dedup shuffle is needed.
+        Default (both broadcast indexes within budget): ONE pass over
+        the probe — `select(*id_cols, explode(regions_udf(lng, lat,
+        cell_id)))`, where the scalar Arrow UDF (`_make_regions_udf`)
+        resolves interior (kind=1) cells from `_interior_index` and
+        refines kind 0/2 cells against `_boundary_index`. The probe
+        source is read once, with no join, union or exchange; only the
+        coordinates and cell id cross Arrow, for every probe (on the
+        dense fixture's docs join ~80% of geo spans land in boundary
+        cells, so sending only those would save little).
+
+        Otherwise (an index off or over its budget, or the salted
+        shuffle path) the union plan: kind=1 hits by an equi-join that
+        stays in the JVM, UNION the kind 0/2 rows through a mapInPandas
+        refine. A point hits at most one tile tree per region by
+        construction, and same-key sub-tiles are deduped inside the
+        refine, so neither plan needs a dedup shuffle.
 
         observers: optional (interior_obs, refined_obs) Observation pair
-        — attaches row-count metrics to each branch (the QueryResult
-        counter analog, AreaCityQuery.java:1611-1657).
+        — each gets {"rows": n}, the interior and refined hit rows (the
+        QueryResult counter analog, AreaCityQuery.java:1611-1657).
         """
         probe = self._probe_cells(points, lng, lat)
         if not self.broadcast_tiles and self.salt_buckets > 1:
@@ -1193,9 +1278,31 @@ class SpatialEngine:
                            <= self.broadcast_wkb_budget)
                 tiles_b = (F.broadcast(tb) if bcast_b
                            else tb.hint("shuffle_merge"))
+            bidx = self._boundary_index() if bcast_b else None
+            iidx = self._interior_index() if bidx is not None else None
+            if iidx is not None:
+                # one-pass index plan; the union plan below runs only
+                # when an index is off or over its budget
+                hits = _make_regions_udf(
+                    iidx, bidx[0], self._keep_region_ids(where),
+                    counts=observers is not None)(
+                    F.col(lng).cast("double"), F.col(lat).cast("double"),
+                    F.col("cell_id"))
+                if observers is None:
+                    return probe.select(
+                        *id_cols, F.explode(hits).alias("region_id"))
+                obs_i, obs_r = observers
+                n_int = F.col("_hits.interior")
+                n_ref = F.size("_hits.region_id") - n_int
+                return (probe.select(*id_cols, hits.alias("_hits"))
+                        .observe(obs_i, F.coalesce(F.sum(n_int), F.lit(0))
+                                 .alias("rows"))
+                        .observe(obs_r, F.coalesce(F.sum(n_ref), F.lit(0))
+                                 .alias("rows"))
+                        .select(*id_cols, F.explode("_hits.region_id")
+                                .alias("region_id")))
             interior = probe.join(tiles_i, "cell_id") \
                             .select(*id_cols, "region_id")
-            bidx = self._boundary_index() if bcast_b else None
             if bidx is not None:
                 # broadcast-index refine: the probe side streams through
                 # UNSHUFFLED — skinny semi-join against the index's cell
@@ -1330,7 +1437,10 @@ class SpatialEngine:
         (AreaCityQuery.java:1611-1657): returns (df, observations) where
         observations = {"interior": Observation, "refined": Observation};
         after an action on df, `obs.get` yields {"rows": n} — interior ≙
-        the no-exact-test fast path, refined ≙ ExactHitCount."""
+        the no-exact-test fast path, refined ≙ ExactHitCount. The
+        one-pass plan observes the UDF's per-probe interior-hit count
+        before the explode, so metrics run the same plan as
+        query_points."""
         from pyspark.sql import Observation
 
         obs_i, obs_r = Observation(), Observation()
@@ -1740,7 +1850,6 @@ class SpatialEngine:
             fptr = I["fseg_ptr"]
             FX1, FY1 = I["FX1"], I["FY1"]
             FX2, FY2 = I["FX2"], I["FY2"]
-            ncells = len(cells_sorted)
             cos_pi24 = np.cos(np.pi / 24)
             km = tol / 1000.0
             a = 0.01 if km < 5 else 0.1 if km < 50 else 1.0 if km < 500 else 10.0
@@ -1757,16 +1866,8 @@ class SpatialEngine:
                     yield empty
                     continue
                 rep, cells = _circle_cell_cover(px, py, tol, base_res)
-                pos = np.searchsorted(cells_sorted, cells)
-                ok = pos < ncells
-                ok[ok] &= cells_sorted[pos[ok]] == cells[ok]
-                rep, pos = rep[ok], pos[ok]
-                t0 = cell_ptr[pos]
-                tcnt = cell_ptr[pos + 1] - t0
-                prep = np.repeat(rep, tcnt)
-                toffs = np.arange(int(tcnt.sum()), dtype=np.int64) \
-                    - np.repeat(np.cumsum(tcnt) - tcnt, tcnt)
-                tix = np.repeat(t0, tcnt) + toffs
+                crow, _, tix = _cell_pairs(cells_sorted, cell_ptr, cells)
+                prep = rep[crow]
                 scnt = fptr[tix + 1] - fptr[tix]
                 # boundary tiles only, and (as dist_fn) skip tiles with
                 # no true-boundary segments after window-run filtering;
@@ -2556,17 +2657,8 @@ class SpatialEngine:
                 hit_regs: list[np.ndarray] = []
 
                 # ---------- boundary-index candidates (kind 0/2 tiles)
-                pos = np.searchsorted(bcells, cid)
-                ok = pos < len(bcells)
-                ok[ok] &= bcells[pos[ok]] == cid[ok]
-                brep, bpos = rep[ok], pos[ok]
-                t0 = bptr[bpos]
-                tcnt = bptr[bpos + 1] - t0
-                prep = np.repeat(brep, tcnt)
-                pcell = np.repeat(bpos, tcnt)
-                toffs = np.arange(int(tcnt.sum()), dtype=np.int64) \
-                    - np.repeat(np.cumsum(tcnt) - tcnt, tcnt)
-                tix = np.repeat(t0, tcnt) + toffs
+                crow, pcell, tix = _cell_pairs(bcells, bptr, cid)
+                prep = rep[crow]
                 if keep_regions is not None and len(prep):
                     km = _in_sorted(tregion[tix], keep_regions)
                     prep, pcell, tix = prep[km], pcell[km], tix[km]
@@ -2663,17 +2755,8 @@ class SpatialEngine:
                 # ---------- interior-index candidates (kind 1 tiles,
                 # rect == base cell rect — tiler.push stores interiors
                 # one row per base cell)
-                ipos = np.searchsorted(icells, cid)
-                iok = ipos < len(icells)
-                iok[iok] &= icells[ipos[iok]] == cid[iok]
-                irep, islot = rep[iok], ipos[iok]
-                r0 = iptr[islot]
-                rcnt = iptr[islot + 1] - r0
-                iprep = np.repeat(irep, rcnt)
-                islot2 = np.repeat(islot, rcnt)
-                roffs = np.arange(int(rcnt.sum()), dtype=np.int64) \
-                    - np.repeat(np.cumsum(rcnt) - rcnt, rcnt)
-                irx = np.repeat(r0, rcnt) + roffs
+                crow, islot2, irx = _cell_pairs(icells, iptr, cid)
+                iprep = rep[crow]
                 if keep_regions is not None and len(iprep):
                     km = _in_sorted(iregion[irx], keep_regions)
                     iprep, islot2, irx = iprep[km], islot2[km], irx[km]

@@ -1565,9 +1565,9 @@ def triage_image(data: bytes) -> tuple[str, int | None]:
     the variants the corpus synthesizer produces; a decode is only
     attempted for containers the codecs support."""
     if data[: len(_PNG_SIG)] == _PNG_SIG:
-        # IHDR is the first chunk by spec; fields at fixed offsets
-        tag = data[12:16]
-        if tag != b"IHDR":
+        # IHDR is the first chunk by spec; fields at fixed offsets, and
+        # its 13 data bytes end at offset 29
+        if data[12:16] != b"IHDR" or len(data) < 29:
             return "reject:png-malformed", None
         _, _, depth, ctype, _, _, inter = struct.unpack_from(
             ">IIBBBBB", data, 16)

@@ -46,6 +46,13 @@ def test_progressive_jpeg_rejects_baseline_classifies():
         == ("ok:jpeg-baseline-header", None)
 
 
+def test_truncated_png_ihdr_rejects():
+    # signature + IHDR chunk header + 4 of its 13 data bytes: 20 bytes
+    blob = media._PNG_SIG + struct.pack(">I", 13) + b"IHDR" + b"\x00" * 4
+    assert len(blob) == 20
+    assert media.triage_image(blob) == ("reject:png-malformed", None)
+
+
 def test_unknown_container_rejects():
     assert media.triage_image(b"RIFFxxxxWAVE") \
         == ("reject:unknown-container", None)

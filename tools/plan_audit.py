@@ -1,8 +1,9 @@
 """Regenerate the captured physical plans in PLANS.md (everything
 below the AUTOGEN marker): Q1 point lookup and Q3 geometry probe over
-the province fixture, `.explain("formatted")`, plus the plan-shape
-assertions we care about (broadcast tile side, single probe exchange,
-MapInPandas only on the boundary branch, bucketed scan available).
+the province fixture (or, where that file is absent, the generated
+`fixtures_dense` boundary set), `.explain("formatted")`, plus the
+plan-shape assertions we care about (one pass over the probe source,
+no shuffle on the index paths, Python stages only where expected).
 
 Usage: python tools/plan_audit.py
 """
@@ -13,6 +14,7 @@ import io
 import os
 import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
@@ -44,7 +46,15 @@ def main():
              .config("spark.ui.enabled", "false")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
-    eng = SpatialEngine.from_geojson(spark, PROVINCE, base_res=10)
+    boundary_set, path = "province fixture", PROVINCE
+    if not os.path.exists(PROVINCE):
+        from areacity_query_geometry_spark import fixtures_dense
+
+        boundary_set = "generated fixtures_dense set (default shape)"
+        tmp = tempfile.TemporaryDirectory()  # removed at exit
+        path = os.path.join(tmp.name, "dense.json")
+        fixtures_dense.generate(path)
+    eng = SpatialEngine.from_geojson(spark, path, base_res=10)
 
     pts = spark.range(1000).select(
         F.col("id").alias("point_id"),
@@ -66,6 +76,11 @@ def main():
         probes, where="deep = 0", with_props=False))
     q1_where_plan = grab_plan(eng.query_points(
         pts, where="deep = 0", with_props=False))
+    # the Q1 union plan (interior index off or past its budget)
+    saved_i = (eng._iindex, eng._iindex_off)
+    eng._iindex, eng._iindex_off = None, True
+    q1_union_plan = grab_plan(eng.query_points(pts, with_props=False))
+    eng._iindex, eng._iindex_off = saved_i
     # the join-plan fallback (past-budget boundary sets)
     saved = (eng._bindex, eng._bindex_off)
     eng._bindex, eng._bindex_off = None, True
@@ -88,14 +103,22 @@ def main():
     def nodes(plan, name):
         return len(re.findall(rf"\(\d+\) {name}\n", plan))
 
-    check("Q1 tile WKB never shuffles (tile side broadcast, ≥2 BroadcastExchange)",
-          nodes(q1_plan, "BroadcastExchange") >= 2)
-    check("Q1 ZERO shuffle Exchanges (broadcast boundary index since r4: "
-          "interior broadcast join + semi-join vs the index cell list + "
-          "unshuffled index refine — the probe table never shuffles)",
-          nodes(q1_plan, "Exchange") == 0)
-    check("Q1 single MapInPandas (boundary branch only)",
-          nodes(q1_plan, "MapInPandas") == 1)
+    check("Q1 one-pass index plan reads the probe source once (one Range)",
+          len(re.findall(r"\(\d+\) Range\b", q1_plan)) == 1)
+    check("Q1 one-pass index plan: no Union, ZERO Exchanges (no join and "
+          "no per-query BroadcastExchange — both tile indexes ship as "
+          "broadcast variables)",
+          nodes(q1_plan, "Union") == 0
+          and nodes(q1_plan, "Exchange") == 0
+          and nodes(q1_plan, "BroadcastExchange") == 0)
+    check("Q1 one Python eval node (ArrowEvalPython over lng, lat, cell_id; "
+          "the id columns stay in the JVM), no MapInPandas",
+          nodes(q1_plan, "ArrowEvalPython") == 1
+          and nodes(q1_plan, "MapInPandas") == 0)
+    check("Q1 union plan only with the interior index off: interior join "
+          "UNION one boundary MapInPandas",
+          nodes(q1_union_plan, "Union") == 1
+          and nodes(q1_union_plan, "MapInPandas") == 1)
     check("Q3 default = broadcast-index refine: ONE MapInPandas over the "
           "probe table, ZERO Exchanges (cover, candidate lookup, kernels "
           "and dedup all in-kernel against the CSR indexes)",
@@ -267,6 +290,8 @@ def main():
 {MARKER}
 
 ## Plan-shape audit (regenerated)
+
+Boundary set: {boundary_set}, base_res 10.
 
 {audit}
 
