@@ -620,6 +620,209 @@ def _make_regions_udf(ib, bb, keep: np.ndarray | None = None,
     return F.arrow_udf(regions, out_type)
 
 
+def _tolerance_pairs(I: dict, px: np.ndarray, py: np.ndarray, tol: float,
+                     base_res: int, keep: np.ndarray | None = None):
+    """tolerance>0 candidates of a batch of Q1-miss points against the
+    boundary index (≙ the reference's per-feature 24-gon scan,
+    AreaCityQuery.java:102-163): per-point cover cells enumerated
+    in-kernel (`_circle_cell_cover`), candidate tiles looked up in the
+    index CSR, per-(point, tile) planar-nearest computed FLAT over all
+    (pair, segment) rows (min + first-argmin via reduceat — the exact
+    arithmetic of predicates.nearest_on_segments, over the window-run-
+    filtered segment block), then the same inscribed/escribed radius
+    gates + exact 24-gon test as the cover-join dist_fn. Rows are
+    bit-identical to the cover-join path's; `keep` as in
+    `_index_point_hits`.
+
+    Returns (point, tile, dist_m): one row per kept (point, tile) pair,
+    point indexing px/py and tile indexing I's per-tile arrays (a
+    region with several tiles in reach gets several rows)."""
+    empty = np.empty(0, np.int64)
+    none = (empty, empty, np.empty(0, np.float64))
+    if not len(px):
+        return none
+    fptr = I["fseg_ptr"]
+    FX1, FY1 = I["FX1"], I["FY1"]
+    FX2, FY2 = I["FX2"], I["FY2"]
+    rep, cells = _circle_cell_cover(px, py, tol, base_res)
+    crow, _, tix = _cell_pairs(I["cells"], I["cell_ptr"], cells)
+    prep = rep[crow]
+    scnt = fptr[tix + 1] - fptr[tix]
+    # boundary tiles only, and (as dist_fn) skip tiles with no
+    # true-boundary segments after window-run filtering; `keep` = the
+    # in-kernel twin of _tiles_for's LEFT SEMI region filter
+    m = (I["kind"][tix] == 0) & (scnt > 0)
+    if keep is not None:
+        m &= _in_sorted(I["region"][tix], keep)
+    prep, tix, scnt = prep[m], tix[m], scnt[m]
+    if not len(prep):
+        return none
+    s0 = fptr[tix]
+    srep = np.repeat(np.arange(len(prep), dtype=np.int64), scnt)
+    soffs = np.arange(int(scnt.sum()), dtype=np.int64) \
+        - np.repeat(np.cumsum(scnt) - scnt, scnt)
+    sidx = np.repeat(s0, scnt) + soffs
+    ax, ay = FX1[sidx], FY1[sidx]
+    bx, by = FX2[sidx], FY2[sidx]
+    dxs, dys = bx - ax, by - ay
+    ln2 = dxs * dxs + dys * dys
+    ln2 = np.where(ln2 == 0, 1.0, ln2)
+    pp = prep[srep]
+    qx = px[pp] - ax
+    qy = py[pp] - ay
+    t = np.clip((qx * dxs + qy * dys) / ln2, 0.0, 1.0)
+    cx = ax + t * dxs
+    cy = ay + t * dys
+    d2 = (px[pp] - cx) ** 2 + (py[pp] - cy) ** 2
+    starts = np.zeros(len(prep), dtype=np.int64)
+    np.cumsum(scnt[:-1], out=starts[1:])
+    dmin2 = np.minimum.reduceat(d2, starts)
+    # first row (in segment order) achieving the min — the argmin
+    # predicates.nearest_on_segments would pick
+    big = np.where(d2 == dmin2[srep], soffs, np.int64(1) << 62)
+    frow = starts + np.minimum.reduceat(big, starts)
+    nx, ny = cx[frow], cy[frow]
+    # anisotropy-corrected second candidate (r5) — the flat
+    # transcription of nearest_on_segments_scaled, formula for formula
+    # (bit-identity with the join path's matrix form; same first-hit
+    # tie-break)
+    wq = np.cos(np.radians(py))[pp]
+    dxw = dxs * wq
+    qxw = qx * wq
+    ln2s = dxw * dxw + dys * dys
+    ln2s = np.where(ln2s == 0, 1.0, ln2s)
+    ts = np.clip((qxw * dxw + qy * dys) / ln2s, 0.0, 1.0)
+    cxs = ax + ts * dxs
+    cys = ay + ts * dys
+    d2s = ((px[pp] - cxs) * wq) ** 2 + (py[pp] - cys) ** 2
+    dmin2s = np.minimum.reduceat(d2s, starts)
+    bigs = np.where(d2s == dmin2s[srep], soffs, np.int64(1) << 62)
+    frows = starts + np.minimum.reduceat(bigs, starts)
+    sxx, syy = cxs[frows], cys[frows]
+    d_planar = np.sqrt(dmin2)
+    # per-point circle radii — the exact CreateSimpleCircle step-ladder
+    # arithmetic (identical to dist_fn's)
+    km = tol / 1000.0
+    a = 0.01 if km < 5 else 0.1 if km < 50 else 1.0 if km < 500 else 10.0
+    b = np.asarray(distance.haversine(px, py, px + a, py))
+    c = np.asarray(distance.haversine(px, py, px, py + a))
+    rb = tol / b * a
+    rc = tol / c * a
+    rmin_p = np.minimum(rb, rc) * np.cos(np.pi / 24)
+    rmax_p = np.maximum(rb, rc)
+    definite = d_planar <= rmin_p[prep]
+    impossible = d_planar > rmax_p[prep]
+    ok = definite.copy()
+    amb = np.nonzero(~definite & ~impossible)[0]
+    if len(amb):
+        # only segments within the outer radius can cross the 24-gon or
+        # start inside it (its vertices lie within rmax of the point);
+        # the 1e-9 relative margin is far above the rounding error, so
+        # dropping the rest leaves every verdict as it was
+        is_amb = np.zeros(len(prep), dtype=bool)
+        is_amb[amb] = True
+        reach2 = (rmax_p[prep] * (1.0 + 1e-9)) ** 2
+        near = is_amb[srep] & (d2 <= reach2[srep])
+        ncnt = np.bincount(srep[near], minlength=len(prep))[amb]
+        nstart = np.zeros(len(amb), dtype=np.int64)
+        np.cumsum(ncnt[:-1], out=nstart[1:])
+        pa_ = prep[amb]
+        ok[amb] = _ambiguous_circle_keep(
+            px[pa_], py[pa_], rb[pa_], rc[pa_],
+            ax[near], ay[near], bx[near], by[near], nstart, ncnt)
+    if not ok.any():
+        return none
+    kp = prep[ok]
+    d0 = np.asarray(distance.haversine(nx[ok], ny[ok], px[kp], py[kp]))
+    d1 = np.asarray(distance.haversine(sxx[ok], syy[ok], px[kp], py[kp]))
+    # the scaled candidate wins only on a GENUINE improvement (rel
+    # 1e-12), the join path's guard (bit-identity across paths and
+    # with pre-r5 gates)
+    d = np.where(d1 < d0 * (1.0 - 1e-12), d1, d0)
+    return kp, tix[ok], np.asarray(d, dtype=np.float64)
+
+
+def _nearest_per_deep(row: np.ndarray, region: np.ndarray,
+                      deep: np.ndarray, dist: np.ndarray, k: int):
+    """`_finish_tolerance`'s reduction on one batch, in numpy: the min
+    distance per (row, region), then the first `k` regions per (row,
+    deep) ordered by (dist, region_id) — the min-agg plus the
+    `row_number() <= k` window. Returns (row, region, dist)."""
+    o = np.lexsort((dist, region, row))
+    row, region, deep, dist = row[o], region[o], deep[o], dist[o]
+    first = np.ones(len(row), dtype=bool)
+    first[1:] = (row[1:] != row[:-1]) | (region[1:] != region[:-1])
+    row, region, deep, dist = row[first], region[first], deep[first], \
+        dist[first]
+    o = np.lexsort((region, dist, deep, row))
+    row, region, deep, dist = row[o], region[o], deep[o], dist[o]
+    pos = np.arange(len(row))
+    new = np.ones(len(row), dtype=bool)
+    new[1:] = (row[1:] != row[:-1]) | (deep[1:] != deep[:-1])
+    rank = pos - np.maximum.accumulate(np.where(new, pos, 0))
+    sel = rank < k
+    return row[sel], region[sel], dist[sel]
+
+
+def _make_nearest_udf(ib, bb, tol: float, base_res: int, k: int,
+                      keep: np.ndarray | None = None):
+    """The one-pass Q2 (tolerance>0) kernel as a scalar Arrow UDF:
+    (lng, lat, cell_id) → array<struct<region_id bigint, dist_m
+    double>>. A probe with Q1 hits (`_index_point_hits`, as
+    `_make_regions_udf`) gets them with dist_m null; any other probe
+    with coordinates gets its tolerance candidates (`_tolerance_pairs`)
+    reduced to the nearest `k` regions per deep level
+    (`_nearest_per_deep`). ib / bb and `keep` as in `_make_regions_udf`;
+    the per-tile `deep` array of the boundary index maps candidates to
+    their level."""
+    out_type = ArrayType(StructType([StructField("region_id", LongType()),
+                                     StructField("dist_m", DoubleType())]))
+
+    def nearest(lng: pa.Array, lat: pa.Array, cell: pa.Array) -> pa.Array:
+        n = len(cell)
+        if cell.null_count:
+            cell = cell.fill_null(-1)  # cell ids are never negative
+        I = bb.value
+        px = lng.to_numpy(zero_copy_only=False)  # nulls read as NaN
+        py = lat.to_numpy(zero_copy_only=False)
+        (ir, ig), (br, bg) = _index_point_hits(
+            I, px, py, cell.to_numpy(zero_copy_only=False), keep, ib.value)
+        hit = np.zeros(n, dtype=bool)
+        hit[ir] = True
+        hit[br] = True
+        miss = np.nonzero(~hit & ~np.isnan(px) & ~np.isnan(py))[0]
+        prow, tix, dist = _tolerance_pairs(I, px[miss], py[miss], tol,
+                                           base_res, keep)
+        tr, tg, td = _nearest_per_deep(miss[prow], I["region"][tix],
+                                       I["deep"][tix], dist, k)
+        rows = np.concatenate((ir, br, tr))
+        order = np.argsort(rows, kind="stable")
+        offsets = np.zeros(n + 1, dtype=np.int32)
+        np.cumsum(np.bincount(rows, minlength=n), out=offsets[1:])
+        n_q1 = len(ir) + len(br)
+        dist_all = np.concatenate((np.zeros(n_q1), td))[order]
+        q1_row = (np.arange(len(rows)) < n_q1)[order]
+        values = pa.StructArray.from_arrays(
+            [pa.array(np.concatenate((ig, bg, tg))[order]),
+             pa.array(dist_all, mask=q1_row)],
+            names=["region_id", "dist_m"])
+        return pa.ListArray.from_arrays(pa.array(offsets), values)
+
+    return F.arrow_udf(nearest, out_type)
+
+
+def _distance_prop_json():
+    """prop_json of a tolerance match as the reference annotates it
+    (AreaCityQuery.java:142): {...props, "PointDistanceID": N,
+    "PointDistance": D.DD}, over (prop_json, region_id, dist_m)."""
+    return F.concat(
+        F.expr("substring(prop_json, 1, length(prop_json) - 1)"),
+        F.lit(', "PointDistanceID": '), F.col("region_id").cast("string"),
+        F.lit(', "PointDistance": '), F.format_string("%.2f", F.col("dist_m")),
+        F.lit("}"),
+    )
+
+
 def _probe_is_rect(g: dict, b: tuple[float, float, float, float]) -> bool:
     """True when the probe geometry is exactly its bbox: a POINT
     (degenerate rect) or a single-ring axis-aligned rectangle POLYGON.
@@ -846,14 +1049,14 @@ class SpatialEngine:
         ceilings). 0 disables the index path.
 
         interior_index_rows: row ceiling for the INTERIOR (kind=1)
-        cell→region CSR broadcast that the one-pass Q1 plan (and so
-        Q2's Q1 leg) and the Q3 geometry-intersects index path need
-        alongside the boundary index. Interior rows are 16 bytes each
+        cell→region CSR broadcast that the one-pass Q1 and Q2 plans
+        and the Q3 geometry-intersects index path need alongside the
+        boundary index. Interior rows are 16 bytes each
         ((cell_id, region_id) — rects reconstruct from the cell id),
         so the 12M default matches `interior_broadcast_rows`'
         ~200MB-once-per-executor budget. Past the ceiling Q1 falls back
-        to the union plan (interior equi-join + boundary refine) and Q3
-        to the cover-join plan. 0 disables."""
+        to the union plan (interior equi-join + boundary refine), Q2 to
+        the two-stage plan and Q3 to the cover-join plan. 0 disables."""
         self.spark = spark
         self.boundaries = boundaries
         self.tiles = tiles
@@ -1033,8 +1236,8 @@ class SpatialEngine:
     def _boundary_index(self) -> tuple | None:
         """Build (once, lazily) the broadcast boundary-tile index:
         every kind≠1 tile pre-decoded into flat numpy CSR arrays —
-        sorted cell table, per-cell tile ranges, per-tile region/kind/
-        rect/segment ranges, concatenated segment component arrays with
+        sorted cell table, per-cell tile ranges, per-tile region/deep/
+        kind/rect/segment ranges, concatenated segment component arrays with
         the refine kernel's derived terms (yds/dx/ln/degen) computed
         once at build instead of once per task.
 
@@ -1058,6 +1261,7 @@ class SpatialEngine:
         out_schema = StructType([
             StructField("cell_id", LongType()),
             StructField("region_id", LongType()),
+            StructField("deep", IntegerType()),
             StructField("kind", IntegerType()),
             StructField("minx", DoubleType()),
             StructField("miny", DoubleType()),
@@ -1077,22 +1281,27 @@ class SpatialEngine:
                     s = predicates.segments_of_rings(core.all_rings(g))
                     segs.append(np.ascontiguousarray(
                         s, dtype=np.float64).tobytes())
-                out = pdf[["cell_id", "region_id", "kind",
+                out = pdf[["cell_id", "region_id", "deep", "kind",
                            "minx", "miny", "maxx", "maxy"]].copy()
                 out["segs"] = segs
                 yield out
 
-        pdf = (tb.select("cell_id", "region_id", "kind",
+        pdf = (tb.select("cell_id", "region_id", "deep", "kind",
                          "minx", "miny", "maxx", "maxy", "tile_wkb")
                .mapInPandas(extract, out_schema).toPandas())
         cell = pdf["cell_id"].to_numpy().astype(np.int64)
         region = pdf["region_id"].to_numpy().astype(np.int64)
+        # a null deep is one more level of its own, as in a Window
+        # partitioned by deep
+        deep = pdf["deep"].fillna(np.iinfo(np.int64).min) \
+            .to_numpy().astype(np.int64)
         kind = pdf["kind"].to_numpy().astype(np.int64)
         rect = {k: pdf[k].to_numpy().astype(np.float64)
                 for k in ("minx", "miny", "maxx", "maxy")}
         order = np.lexsort((rect["miny"].view(np.int64),
                             rect["minx"].view(np.int64), region, cell))
-        cell, region, kind = cell[order], region[order], kind[order]
+        cell, region, deep, kind = (cell[order], region[order],
+                                    deep[order], kind[order])
         rect = {k: v[order] for k, v in rect.items()}
         segs_list = [pdf["segs"].iloc[i] for i in order]
         seg_len = np.fromiter((len(b) // 32 for b in segs_list),
@@ -1129,7 +1338,7 @@ class SpatialEngine:
         np.cumsum(fcnt, out=fseg_ptr[1:])
         idx = {
             "cells": cells, "cell_ptr": cell_ptr,
-            "region": region, "kind": kind,
+            "region": region, "deep": deep, "kind": kind,
             "minx": rect["minx"], "miny": rect["miny"],
             "maxx": rect["maxx"], "maxy": rect["maxy"],
             "seg_ptr": seg_ptr,
@@ -1151,10 +1360,11 @@ class SpatialEngine:
         plus each unique cell's rect (reconstructed via
         grid.cells_bounds — interior tiles are stored one row per
         BASE-res cell with rect == cell rect, tiler.push). The one-pass
-        Q1 plan and the Q3 index path need it because `_boundary_index`
-        deliberately holds only kind≠1 tiles. Returns the Broadcast or
-        None when the interior row count exceeds `interior_index_rows`
-        (Q1 then takes the union plan, Q3 the join plan)."""
+        Q1/Q2 plans and the Q3 index path need it because
+        `_boundary_index` deliberately holds only kind≠1 tiles. Returns
+        the Broadcast or None when the interior row count exceeds
+        `interior_index_rows` (Q1 then takes the union plan, Q2 the
+        two-stage plan, Q3 the join plan)."""
         if self._iindex is not None:
             return self._iindex
         if self._iindex_off or self.interior_index_rows <= 0:
@@ -1194,6 +1404,28 @@ class SpatialEngine:
             self._keep_cache[where] = arr
         return arr
 
+    def _boundary_broadcastable(self) -> bool:
+        """Whether the boundary tiles may broadcast: always under the
+        whole-table broadcast; otherwise (broadcast_tiles=False) per
+        branch, by row AND byte ceiling — few-but-huge tiles (township
+        set: 955k rows, 0.3 GB WKB) must take the shuffle leg even
+        under the row ceiling."""
+        if self.broadcast_tiles:
+            return True
+        return (self._tile_kind_counts()[1] <= self.boundary_broadcast_rows
+                and self._boundary_wkb_bytes() <= self.broadcast_wkb_budget)
+
+    def _one_pass_indexes(self) -> tuple | None:
+        """(interior, boundary) index Broadcasts when the one-pass Q1/Q2
+        plans apply — both indexes within budget and no salted shuffle
+        path — else None."""
+        if not self.broadcast_tiles and self.salt_buckets > 1:
+            return None
+        bidx = self._boundary_index() if self._boundary_broadcastable() \
+            else None
+        iidx = self._interior_index() if bidx is not None else None
+        return None if iidx is None else (iidx, bidx[0])
+
     def _match_points(self, points: DataFrame, where: str | None = None,
                       lng="lng", lat="lat",
                       id_cols: tuple[str, ...] = ("point_id",),
@@ -1222,6 +1454,28 @@ class SpatialEngine:
         QueryResult counter analog, AreaCityQuery.java:1611-1657).
         """
         probe = self._probe_cells(points, lng, lat)
+        idx = self._one_pass_indexes()
+        if idx is not None:
+            # one-pass index plan; the union plan below runs only when
+            # an index is off or over its budget
+            hits = _make_regions_udf(
+                *idx, self._keep_region_ids(where),
+                counts=observers is not None)(
+                F.col(lng).cast("double"), F.col(lat).cast("double"),
+                F.col("cell_id"))
+            if observers is None:
+                return probe.select(
+                    *id_cols, F.explode(hits).alias("region_id"))
+            obs_i, obs_r = observers
+            n_int = F.col("_hits.interior")
+            n_ref = F.size("_hits.region_id") - n_int
+            return (probe.select(*id_cols, hits.alias("_hits"))
+                    .observe(obs_i, F.coalesce(F.sum(n_int), F.lit(0))
+                             .alias("rows"))
+                    .observe(obs_r, F.coalesce(F.sum(n_ref), F.lit(0))
+                             .alias("rows"))
+                    .select(*id_cols, F.explode("_hits.region_id")
+                            .alias("region_id")))
         if not self.broadcast_tiles and self.salt_buckets > 1:
             # shuffle-join path: replicate tiles S× and spread probe rows
             # pseudo-randomly so hot cells don't pin one reducer
@@ -1262,45 +1516,17 @@ class SpatialEngine:
                 #     dense fixture: 450k of 3.7M).
                 # Only past these per-branch ceilings does the salted
                 # sort-merge path earn its shuffles.
-                n_i, n_b = self._tile_kind_counts()
+                n_i = self._tile_kind_counts()[0]
                 ti = base.filter(F.col("kind") == 1) \
                          .select("cell_id", "region_id")
                 tiles_i = (F.broadcast(ti)
                            if n_i <= self.interior_broadcast_rows
                            else ti.hint("shuffle_merge"))
                 tb = base.filter(F.col("kind") != 1)
-                # the boundary branch carries tile_wkb, so its broadcast
-                # decision is BYTE-aware, not just row-aware: few-but-
-                # huge tiles (township set: 955k rows, 0.3 GB WKB) must
-                # take the shuffle leg even under the row ceiling
-                bcast_b = (n_b <= self.boundary_broadcast_rows
-                           and self._boundary_wkb_bytes()
-                           <= self.broadcast_wkb_budget)
+                bcast_b = self._boundary_broadcastable()
                 tiles_b = (F.broadcast(tb) if bcast_b
                            else tb.hint("shuffle_merge"))
             bidx = self._boundary_index() if bcast_b else None
-            iidx = self._interior_index() if bidx is not None else None
-            if iidx is not None:
-                # one-pass index plan; the union plan below runs only
-                # when an index is off or over its budget
-                hits = _make_regions_udf(
-                    iidx, bidx[0], self._keep_region_ids(where),
-                    counts=observers is not None)(
-                    F.col(lng).cast("double"), F.col(lat).cast("double"),
-                    F.col("cell_id"))
-                if observers is None:
-                    return probe.select(
-                        *id_cols, F.explode(hits).alias("region_id"))
-                obs_i, obs_r = observers
-                n_int = F.col("_hits.interior")
-                n_ref = F.size("_hits.region_id") - n_int
-                return (probe.select(*id_cols, hits.alias("_hits"))
-                        .observe(obs_i, F.coalesce(F.sum(n_int), F.lit(0))
-                                 .alias("rows"))
-                        .observe(obs_r, F.coalesce(F.sum(n_ref), F.lit(0))
-                                 .alias("rows"))
-                        .select(*id_cols, F.explode("_hits.region_id")
-                                .alias("region_id")))
             interior = probe.join(tiles_i, "cell_id") \
                             .select(*id_cols, "region_id")
             if bidx is not None:
@@ -1607,16 +1833,75 @@ class SpatialEngine:
         Points matched by Q1 return their Q1 rows (point_distance null).
         Unmatched points probe a 24-gon circle of radius tolerance_m
         (the whole world for -1); per admin level (`deep`) the single
-        nearest feature wins, annotated with PointDistance (haversine
-        meters, "0.00") and PointDistanceID (feature ordinal) exactly
-        as the reference injects them (AreaCityQuery.java:142).
+        nearest feature wins (the `k` nearest for k > 1, ties broken by
+        region_id), annotated with PointDistance (haversine meters,
+        "0.00") and PointDistanceID (feature ordinal) exactly as the
+        reference injects them (AreaCityQuery.java:142).
+
+        Plans. tolerance 0 is Q1 with props. For tolerance > 0 with both
+        broadcast indexes within budget (and cover_res at base_res) the
+        plan is ONE pass over the probe, like Q1's: `select(point_id,
+        explode(nearest_udf(lng, lat, cell_id)))` (`_make_nearest_udf`:
+        Q1 hits, else the nearest regions per deep, all in one Arrow
+        batch) and one broadcast join with the props dim — no
+        checkpoint, anti-join, window, union or shuffle exchange.
+        Otherwise (an index off or over budget, the salted path, a
+        coarser cover_res, or tolerance -1) the two-stage plan: Q1 is
+        checkpointed, its misses (a LEFT ANTI join on point_id) run a
+        distance stage, and `_finish_tolerance` keeps the nearest per
+        deep.
+
+        point_id must be a row key, one row per probe, as every caller
+        uses it: the one-pass plan judges each row alone, while the
+        two-stage plan drops a row from the miss set when another row
+        with the same point_id hit Q1, and merges the candidates of
+        equal-id misses before picking the nearest.
         """
         pts = points.select(
             F.col("point_id"), F.col(lng).alias("lng"), F.col(lat).alias("lat")
         )
-        # localCheckpoint (ContextCleaner-reclaimed), NOT .cache():
-        # gates must not leak cached state into the shared session
-        base = self._match_points(pts, where).localCheckpoint(eager=True)
+        base_res = self.base_res
+        # cover_res knob: covering the 24-gon bbox at a res coarser than
+        # base_res shrinks the cover shuffle O((tol/cell)²)-fold but
+        # multiplies the (probe, tile) candidate pairs the dist_fn gates
+        # must score. MEASURED on the dense fixture (25 km, 1M probes,
+        # local[8]): base_res 25.4 s vs 30-48 s at res 12..9 — the
+        # per-pair nearest_on_segments gate outweighs the 27M-row
+        # shuffle it saves, so the default stays base_res; the knob
+        # remains for boundary sets dense enough to invert that trade.
+        # Output is IDENTICAL at any cover_res (checksum-swept): the
+        # cover only proposes candidates — the per-tile
+        # inscribed/escribed radius gates + the exact 24-gon test in
+        # dist_fn decide membership.
+        cov_res = max(0, min(base_res,
+                             base_res if cover_res is None else cover_res))
+        idx = (self._one_pass_indexes()
+               if tolerance_m > 0 and cov_res == base_res else None)
+        if idx is not None:
+            hits = _make_nearest_udf(
+                *idx, float(tolerance_m), base_res, k,
+                self._keep_region_ids(where))(
+                F.col("lng").cast("double"), F.col("lat").cast("double"),
+                F.col("cell_id"))
+            m = (self._probe_cells(pts)
+                 .select(F.col("point_id").cast("long"),
+                         F.explode(hits).alias("_h"))
+                 .select("point_id", "_h.region_id", "_h.dist_m"))
+            near = F.col("dist_m").isNotNull()
+            return (self._with_props(m)
+                    .withColumn("point_distance", F.col("dist_m"))
+                    .withColumn("point_distance_id",
+                                F.when(near, F.col("region_id")))
+                    .withColumn("prop_json_out",
+                                F.when(near, _distance_prop_json())
+                                .otherwise(F.col("prop_json")))
+                    .drop("dist_m"))
+        base = self._match_points(pts, where)
+        if tolerance_m != 0:
+            # the miss anti-join reads Q1 again: localCheckpoint
+            # (ContextCleaner-reclaimed), NOT .cache() — gates must not
+            # leak cached state into the shared session
+            base = base.localCheckpoint(eager=True)
         base_out = self._with_props(base).withColumn(
             "point_distance", F.lit(None).cast("double")
         ).withColumn("point_distance_id", F.lit(None).cast("long")) \
@@ -1625,7 +1910,6 @@ class SpatialEngine:
             return base_out
         misses = pts.join(base.select("point_id").distinct(), "point_id", "left_anti")
 
-        base_res = self.base_res
         if tolerance_m > 0:
             cover_schema = StructType([
                 StructField("point_id", LongType()),
@@ -1635,32 +1919,18 @@ class SpatialEngine:
             ])
 
             tol_m = float(tolerance_m)
-            # cover_res knob: covering the 24-gon bbox at a res coarser
-            # than base_res shrinks the cover shuffle O((tol/cell)²)-
-            # fold but multiplies the (probe, tile) candidate pairs the
-            # dist_fn gates must score. MEASURED on the dense fixture
-            # (25 km, 1M probes, local[8]): base_res 25.4 s vs 30-48 s
-            # at res 12..9 — the per-pair nearest_on_segments gate
-            # outweighs the 27M-row shuffle it saves, so the default
-            # stays base_res; the knob remains for boundary sets dense
-            # enough to invert that trade. Output is IDENTICAL at any
-            # cover_res (checksum-swept): the cover only proposes
-            # candidates — the per-tile inscribed/escribed radius gates
-            # + the exact 24-gon test in dist_fn decide membership.
-            cov_res = max(0, min(base_res,
-                                 base_res if cover_res is None else cover_res))
-
             bidx = (self._boundary_index()
                     if cov_res == base_res else None)
             if bidx is not None:
-                # BROADCAST-INDEX Q2 (the tolerance twin of Q1's
-                # boundary-index refine): no tile bytes ever shuffle —
-                # the only exchanges left are the skinny miss
-                # repartition and _finish_tolerance's min-agg. `where`
-                # rides along as an in-kernel keep-region array (since
-                # late r4); the SMJ cover-join below stays the fallback
-                # for boundary sets past the index byte budget
-                # (township scale) and for coarse cover_res overrides.
+                # two-stage broadcast-index Q2 (the one-pass plan does
+                # not apply): no tile bytes shuffle, but the miss set is
+                # a second probe scan plus anti-join, repartitioned for
+                # the distance kernel, and _finish_tolerance
+                # min-aggregates and windows per point. `where` rides
+                # along as an in-kernel keep-region array; the SMJ
+                # cover-join below stays the fallback for boundary sets
+                # past the index byte budget (township scale) and for
+                # coarse cover_res overrides.
                 dists = self._dists_tolerance_index(
                     misses.repartition(F.col("point_id")), tol_m,
                     self._keep_region_ids(where))
@@ -1818,23 +2088,15 @@ class SpatialEngine:
 
     def _dists_tolerance_index(self, misses: DataFrame, tol_m: float,
                                keep: np.ndarray | None = None) -> DataFrame:
-        """tolerance>0 distance stage against the broadcast boundary
-        index (≙ the reference's per-feature 24-gon scan,
-        AreaCityQuery.java:102-163, re-expressed as one Arrow pass):
-        a single mapInPandas over the miss set — per-point cover cells
-        enumerated in-kernel (`_circle_cell_cover`), candidate tiles
-        looked up in the index CSR (searchsorted), per-(point, tile)
-        planar-nearest computed FLAT over all (pair, segment) rows
-        (min + first-argmin via reduceat — the exact arithmetic of
-        predicates.nearest_on_segments, over the window-run-filtered
-        segment block), then the same inscribed/escribed radius gates
-        + exact 24-gon test as the join-path dist_fn. Output rows are
-        bit-identical to the cover-join path (checksum-swept); only
-        the plan differs — no tile bytes ever shuffle."""
+        """tolerance>0 distance stage of the two-stage plan against the
+        broadcast boundary index: one mapInPandas over the miss set,
+        (point_id, region_id, dist_m) per kept (point, tile) pair from
+        `_tolerance_pairs`, for `_finish_tolerance` to reduce. Used only
+        when the one-pass plan does not apply (e.g. the interior index
+        off or over budget, or the salted path)."""
         bc, _ = self._boundary_index()
         base_res = self.base_res
         tol = float(tol_m)
-        keep_regions = keep  # the kernel's gate result reuses `keep`
         dist_schema = StructType([
             StructField("point_id", LongType()),
             StructField("region_id", LongType()),
@@ -1843,120 +2105,17 @@ class SpatialEngine:
 
         def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             I = bc.value
-            cells_sorted = I["cells"]
-            cell_ptr = I["cell_ptr"]
-            region = I["region"]
-            kind = I["kind"]
-            fptr = I["fseg_ptr"]
-            FX1, FY1 = I["FX1"], I["FY1"]
-            FX2, FY2 = I["FX2"], I["FY2"]
-            cos_pi24 = np.cos(np.pi / 24)
-            km = tol / 1000.0
-            a = 0.01 if km < 5 else 0.1 if km < 50 else 1.0 if km < 500 else 10.0
-            empty = pd.DataFrame({
-                "point_id": pd.Series([], dtype="int64"),
-                "region_id": pd.Series([], dtype="int64"),
-                "dist_m": pd.Series([], dtype="float64"),
-            })
             for pdf in it:
-                pid = pdf["point_id"].to_numpy()
-                px = pdf["lng"].to_numpy(dtype=np.float64)
-                py = pdf["lat"].to_numpy(dtype=np.float64)
-                if not len(pid):
-                    yield empty
-                    continue
-                rep, cells = _circle_cell_cover(px, py, tol, base_res)
-                crow, _, tix = _cell_pairs(cells_sorted, cell_ptr, cells)
-                prep = rep[crow]
-                scnt = fptr[tix + 1] - fptr[tix]
-                # boundary tiles only, and (as dist_fn) skip tiles with
-                # no true-boundary segments after window-run filtering;
-                # `keep` = the in-kernel twin of _tiles_for's LEFT SEMI
-                # region filter (where-filtered queries)
-                m = (kind[tix] == 0) & (scnt > 0)
-                if keep_regions is not None:
-                    m &= _in_sorted(region[tix], keep_regions)
-                prep, tix, scnt = prep[m], tix[m], scnt[m]
-                if not len(prep):
-                    yield empty
-                    continue
-                s0 = fptr[tix]
-                srep = np.repeat(np.arange(len(prep), dtype=np.int64), scnt)
-                soffs = np.arange(int(scnt.sum()), dtype=np.int64) \
-                    - np.repeat(np.cumsum(scnt) - scnt, scnt)
-                sidx = np.repeat(s0, scnt) + soffs
-                ax, ay = FX1[sidx], FY1[sidx]
-                bx, by = FX2[sidx], FY2[sidx]
-                dxs, dys = bx - ax, by - ay
-                ln2 = dxs * dxs + dys * dys
-                ln2 = np.where(ln2 == 0, 1.0, ln2)
-                pp = prep[srep]
-                qx = px[pp] - ax
-                qy = py[pp] - ay
-                t = np.clip((qx * dxs + qy * dys) / ln2, 0.0, 1.0)
-                cx = ax + t * dxs
-                cy = ay + t * dys
-                d2 = (px[pp] - cx) ** 2 + (py[pp] - cy) ** 2
-                starts = np.zeros(len(prep), dtype=np.int64)
-                np.cumsum(scnt[:-1], out=starts[1:])
-                dmin2 = np.minimum.reduceat(d2, starts)
-                # first row (in segment order) achieving the min — the
-                # argmin predicates.nearest_on_segments would pick
-                big = np.where(d2 == dmin2[srep], soffs, np.int64(1) << 62)
-                frow = starts + np.minimum.reduceat(big, starts)
-                nx, ny = cx[frow], cy[frow]
-                # anisotropy-corrected second candidate (r5) — the flat
-                # transcription of nearest_on_segments_scaled, formula
-                # for formula (bit-identity with the join path's matrix
-                # form; same first-hit tie-break)
-                wq = np.cos(np.radians(py))[pp]
-                dxw = dxs * wq
-                qxw = qx * wq
-                ln2s = dxw * dxw + dys * dys
-                ln2s = np.where(ln2s == 0, 1.0, ln2s)
-                ts = np.clip((qxw * dxw + qy * dys) / ln2s, 0.0, 1.0)
-                cxs = ax + ts * dxs
-                cys = ay + ts * dys
-                d2s = ((px[pp] - cxs) * wq) ** 2 + (py[pp] - cys) ** 2
-                dmin2s = np.minimum.reduceat(d2s, starts)
-                bigs = np.where(d2s == dmin2s[srep], soffs,
-                                np.int64(1) << 62)
-                frows = starts + np.minimum.reduceat(bigs, starts)
-                sxx, syy = cxs[frows], cys[frows]
-                d_planar = np.sqrt(dmin2)
-                # per-point circle radii — the exact CreateSimpleCircle
-                # step-ladder arithmetic (identical to dist_fn's)
-                b = np.asarray(distance.haversine(px, py, px + a, py))
-                c = np.asarray(distance.haversine(px, py, px, py + a))
-                rb = tol / b * a
-                rc = tol / c * a
-                rmin_p = np.minimum(rb, rc) * cos_pi24
-                rmax_p = np.maximum(rb, rc)
-                definite = d_planar <= rmin_p[prep]
-                impossible = d_planar > rmax_p[prep]
-                keep = definite.copy()
-                amb = np.nonzero(~definite & ~impossible)[0]
-                if len(amb):
-                    pa = prep[amb]
-                    keep[amb] = _ambiguous_circle_keep(
-                        px[pa], py[pa], rb[pa], rc[pa],
-                        FX1, FY1, FX2, FY2, s0[amb], scnt[amb])
-                if keep.any():
-                    kp = prep[keep]
-                    d0 = np.asarray(distance.haversine(
-                        nx[keep], ny[keep], px[kp], py[kp]))
-                    d1 = np.asarray(distance.haversine(
-                        sxx[keep], syy[keep], px[kp], py[kp]))
-                    # same genuine-improvement guard as the join path
-                    # (bit-identity across paths and with pre-r5 gates)
-                    d = np.where(d1 < d0 * (1.0 - 1e-12), d1, d0)
-                    yield pd.DataFrame({
-                        "point_id": pid[kp].astype("int64"),
-                        "region_id": region[tix[keep]],
-                        "dist_m": np.asarray(d, dtype="float64"),
-                    })
-                else:
-                    yield empty
+                prow, tix, d = _tolerance_pairs(
+                    I, pdf["lng"].to_numpy(dtype=np.float64),
+                    pdf["lat"].to_numpy(dtype=np.float64), tol, base_res,
+                    keep)
+                yield pd.DataFrame({
+                    "point_id": pdf["point_id"].to_numpy()[prow]
+                    .astype("int64"),
+                    "region_id": I["region"][tix],
+                    "dist_m": d,
+                })
 
         return misses.mapInPandas(fn, dist_schema)
 
@@ -2537,16 +2696,8 @@ class SpatialEngine:
         w = Window.partitionBy("point_id", "deep").orderBy("dist_m", "region_id")
         winners = joined.withColumn("_rn", F.row_number().over(w)) \
                         .filter(F.col("_rn") <= k).drop("_rn")
-        # reference prop annotation (AreaCityQuery.java:142):
-        #   {...props, "PointDistanceID": N, "PointDistance": D.DD}
         annotated = winners.withColumn(
-            "prop_json_out",
-            F.concat(
-                F.expr("substring(prop_json, 1, length(prop_json) - 1)"),
-                F.lit(', "PointDistanceID": '), F.col("region_id").cast("string"),
-                F.lit(', "PointDistance": '), F.format_string("%.2f", F.col("dist_m")),
-                F.lit("}"),
-            ),
+            "prop_json_out", _distance_prop_json(),
         ).withColumn("point_distance", F.col("dist_m")) \
          .withColumn("point_distance_id", F.col("region_id")) \
          .drop("dist_m")

@@ -1561,9 +1561,11 @@ def synthesize_mixed_images(spans: DataFrame, ref_col: str = "ref",
 
 
 def triage_image(data: bytes) -> tuple[str, int | None]:
-    """Classify one blob → (status, px_sum-or-None). Never raises on
-    the variants the corpus synthesizer produces; a decode is only
-    attempted for containers the codecs support."""
+    """Classify one blob → (status, px_sum-or-None). Never raises: a
+    malformed or truncated blob classifies as a reject, and a decode
+    is only attempted for containers the codecs support."""
+    import zlib
+
     if data[: len(_PNG_SIG)] == _PNG_SIG:
         # IHDR is the first chunk by spec; fields at fixed offsets, and
         # its 13 data bytes end at offset 29
@@ -1575,26 +1577,39 @@ def triage_image(data: bytes) -> tuple[str, int | None]:
             return "reject:png-interlaced", None
         if ctype == 3:
             return "reject:png-palette", None
-        if (depth, ctype) == (8, 0):
-            px = decode_png_gray8(data).astype(np.int64)
-            return "ok:png-gray8", int(px.sum())
-        if (depth, ctype) == (8, 2):
-            px = decode_png_rgb24(data).astype(np.int64)
-            return "ok:png-rgb24", int(px.sum())
-        return "reject:png-unsupported", None
+        decoders = {(8, 0): ("ok:png-gray8", decode_png_gray8),
+                    (8, 2): ("ok:png-rgb24", decode_png_rgb24)}
+        if (depth, ctype) not in decoders:
+            return "reject:png-unsupported", None
+        status, decode = decoders[(depth, ctype)]
+        try:  # bad CRC, corrupt IDAT stream, truncated chunk
+            px = decode(data).astype(np.int64)
+        except (ValueError, struct.error, zlib.error):
+            return "reject:png-malformed", None
+        return status, int(px.sum())
     if data[:2] == b"\xff\xd8":
         pos = 2
-        while pos + 4 <= len(data):
+        while pos + 2 <= len(data):
             if data[pos] != 0xFF:
                 break
             marker = data[pos + 1]
+            if marker == 0xFF:  # fill byte before a marker
+                pos += 1
+                continue
             if marker == 0xC2:
                 return "reject:jpeg-progressive", None
             if marker == 0xC0:
                 return "ok:jpeg-baseline-header", None
             if marker == 0xD9:
                 break
+            if marker == 0x01 or 0xD0 <= marker <= 0xD8:
+                pos += 2  # standalone marker: no length field
+                continue
+            if pos + 4 > len(data):
+                break
             (ln,) = struct.unpack_from(">H", data, pos + 2)
+            if ln < 2 or pos + 2 + ln > len(data):
+                break  # segment runs past the blob
             pos += 2 + ln
         return "reject:jpeg-unsupported", None
     return "reject:unknown-container", None

@@ -494,7 +494,7 @@ def nearest_on_segments_scaled(px: np.ndarray, py: np.ndarray,
     clamping), so rect-fixture outputs are bit-identical either way.
 
     Kept arithmetically in lockstep with the flat transcription inside
-    engine._dists_tolerance_index — same formulas, same first-hit
+    engine._tolerance_pairs — same formulas, same first-hit
     tie-break (np.argmin) — so the index and join tolerance paths stay
     bit-identical (tests/test_q2_index_parity.py).
 

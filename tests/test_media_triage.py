@@ -53,6 +53,50 @@ def test_truncated_png_ihdr_rejects():
     assert media.triage_image(blob) == ("reject:png-malformed", None)
 
 
+def _sof(marker: bytes) -> bytes:
+    return marker + struct.pack(">HBHHB", 11, 8, 3, 4, 1) + b"\x01\x11\x00"
+
+
+def test_jpeg_walker_skips_fill_bytes_and_standalone_markers():
+    # fill bytes before the SOF2 marker
+    assert media.triage_image(b"\xff\xd8\xff\xff\xff" + _sof(b"\xff\xc2")
+                              + b"\xff\xd9") \
+        == ("reject:jpeg-progressive", None)
+    # an RST and a TEM marker (no length field) before a SOF0
+    assert media.triage_image(b"\xff\xd8\xff\xd3\xff\x01"
+                              + _sof(b"\xff\xc0")) \
+        == ("ok:jpeg-baseline-header", None)
+    # an APP0 segment between SOI and SOF2 is stepped over by length
+    app0 = b"\xff\xe0" + struct.pack(">H", 6) + b"JFIF"
+    assert media.triage_image(b"\xff\xd8" + app0 + _sof(b"\xff\xc2")) \
+        == ("reject:jpeg-progressive", None)
+
+
+def test_jpeg_truncated_segment_rejects():
+    # APP0 claims 64 bytes, 4 follow; the SOF2 bytes sit inside the
+    # claimed segment and must not be read as a marker
+    blob = (b"\xff\xd8\xff\xe0" + struct.pack(">H", 64) + b"JFIF"
+            + _sof(b"\xff\xc2"))
+    assert media.triage_image(blob) == ("reject:jpeg-unsupported", None)
+    assert media.triage_image(b"\xff\xd8\xff\xe0\x00") \
+        == ("reject:jpeg-unsupported", None)
+
+
+def test_png_bad_crc_and_corrupt_idat_reject():
+    _, blob = _gray_png()
+    bad_crc = bytearray(blob)
+    bad_crc[-13] ^= 0xFF  # last byte of the IDAT chunk's CRC
+    assert media.triage_image(bytes(bad_crc)) \
+        == ("reject:png-malformed", None)
+    ihdr = struct.pack(">IIBBBBB", 4, 3, 8, 0, 0, 0, 0)
+    garbage_idat = (media._PNG_SIG + media._png_chunk(b"IHDR", ihdr)
+                    + media._png_chunk(b"IDAT", b"not zlib")
+                    + media._png_chunk(b"IEND", b""))
+    assert media.triage_image(garbage_idat) \
+        == ("reject:png-malformed", None)
+    assert media.triage_image(blob[:-20]) == ("reject:png-malformed", None)
+
+
 def test_unknown_container_rejects():
     assert media.triage_image(b"RIFFxxxxWAVE") \
         == ("reject:unknown-container", None)

@@ -1,4 +1,5 @@
-"""The broadcast-index Q2 path (engine._dists_tolerance_index) must be
+"""The broadcast-index Q2 path (the one-pass plan: engine._tolerance_pairs
+inside engine._make_nearest_udf) must be
 row-for-row, bit-for-bit interchangeable with the cover-join path: the
 index kernel replicates predicates.nearest_on_segments' arithmetic flat
 over (pair, segment) rows and applies the same radius/24-gon gates, so

@@ -87,6 +87,27 @@ def main():
     q3_join_plan = grab_plan(eng.query_geometry(probes, with_props=False))
     eng._bindex, eng._bindex_off = saved
 
+    # Q2 at a finite tolerance over a parquet probe source: the
+    # one-pass plan, and the two-stage plan with the interior index off.
+    # Building the two-stage DataFrame already runs its Q1 checkpoint
+    # job; the one-pass one must run none.
+    pq_dir = tempfile.TemporaryDirectory()  # removed at exit
+    pq_path = os.path.join(pq_dir.name, "probes.parquet")
+    pts.write.parquet(pq_path)
+    pq_pts = spark.read.parquet(pq_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-audit-q2", "Q2 plan construction")
+    q2_plan_tol = grab_plan(eng.query_points_with_tolerance(pq_pts, 25000.0))
+    q2_jobs = len(sc.statusTracker().getJobIdsForGroup("plan-audit-q2"))
+    q1_props_plan = grab_plan(eng.query_points(pq_pts))
+    eng._iindex, eng._iindex_off = None, True
+    sc.setJobGroup("plan-audit-q2-two", "two-stage Q2 plan construction")
+    q2_two_plan = grab_plan(eng.query_points_with_tolerance(pq_pts, 25000.0))
+    q2_two_jobs = len(sc.statusTracker().getJobIdsForGroup(
+        "plan-audit-q2-two"))
+    eng._iindex, eng._iindex_off = saved_i
+    sc.setLocalProperty("spark.jobGroup.id", None)
+
     # tolerance=-1 terminal scan: plan of the RETURNED union must show
     # the cogrouped reverse-scan stage, never a cartesian/BNLJ
     q2pts = spark.createDataFrame(
@@ -132,6 +153,30 @@ def main():
           nodes(q1_where_plan, "Exchange") == 0
           and nodes(q3_where_plan, "Exchange") == 0
           and nodes(q3_where_plan, "MapInPandas") == 1)
+    check("Q2 tolerance>0 one-pass index plan reads the probe parquet "
+          "once (one Scan parquet) through one ArrowEvalPython "
+          "(Q1 hits or nearest regions per deep), no MapInPandas",
+          nodes(q2_plan_tol, r"Scan parquet\s*") == 1
+          and nodes(q2_plan_tol, "ArrowEvalPython") == 1
+          and nodes(q2_plan_tol, "MapInPandas") == 0)
+    check("Q2 one-pass plan: no Window, Union or shuffle Exchange; the "
+          "props dim's BroadcastExchange is the only exchange",
+          nodes(q2_plan_tol, "Window") == 0
+          and nodes(q2_plan_tol, "Union") == 0
+          and nodes(q2_plan_tol, "Exchange") == 0
+          and nodes(q2_plan_tol, "BroadcastExchange") == 1)
+    check("Q2 one-pass plan: no localCheckpoint (no job while building "
+          "the plan, and no scan of checkpointed data beyond Q1 with "
+          "props' own)",
+          q2_jobs == 0
+          and nodes(q2_plan_tol, r"Scan ExistingRDD\s*")
+          == nodes(q1_props_plan, r"Scan ExistingRDD\s*"))
+    check("Q2 two-stage plan only with the interior index off: "
+          "checkpointed Q1, distance MapInPandas, min-agg Window, Union",
+          q2_two_jobs > 0
+          and nodes(q2_two_plan, "MapInPandas") == 1
+          and nodes(q2_two_plan, "Window") == 1
+          and nodes(q2_two_plan, "Union") == 1)
     # (BroadcastNestedLoopJoin appears here ONLY as the constant-fan-out
     # replications over tiny broadcast dims: the ≤#deep-levels deep list
     # onto misses and the ≤#buckets range onto tiles — not an all-pairs
@@ -299,6 +344,12 @@ Boundary set: {boundary_set}, base_res 10.
 
 ```
 {q1_plan}
+```
+
+## Q2 captured plan (tolerance 25 km, one-pass index plan)
+
+```
+{q2_plan_tol}
 ```
 
 ## Q3 captured plan (broadcast-index default)
