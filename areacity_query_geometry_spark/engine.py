@@ -467,6 +467,114 @@ def _cell_pairs(cells: np.ndarray, cell_ptr: np.ndarray, cid: np.ndarray):
     return np.repeat(rows, cnt), np.repeat(slots, cnt), entry
 
 
+# y-slabs per boundary tile: `_index_point_hits` tests a probe only
+# against the segments listed under its slab
+SLABS = 16
+
+
+def _slab_of(y: np.ndarray, y0: np.ndarray, h: np.ndarray) -> np.ndarray:
+    """Slab of each `y` in its tile's grid (`slab_y0`, `slab_h`):
+    clip(floor((y - y0) / h), 0, SLABS - 1), NaN to slab 0. Monotone in
+    y, so a segment listed under the slabs of its padded y-range ends
+    is listed under the slab of every y in between. The build and the
+    kernel both call this, so both evaluate the same float expression."""
+    s = np.floor((y - y0) / h)
+    s[np.isnan(s)] = 0
+    return np.clip(s, 0, SLABS - 1).astype(np.int64)
+
+
+def _build_boundary_index(pdf: pd.DataFrame) -> dict:
+    """The driver-side numpy half of `SpatialEngine._boundary_index`:
+    one row per kind≠1 tile (cell_id, region_id, deep, kind, minx,
+    miny, maxx, maxy, segs = the tile's ring segments as packed
+    float64 x1,y1,x2,y2 rows) → the broadcast index dict:
+
+    - `cells`/`cell_ptr`: sorted cell table and per-cell tile ranges;
+      per tile `region`, `deep`, `kind`, the rect, and `seg_ptr`;
+    - `SEG` (nseg, 5): x1, y1, x2, y2, ln per segment, each segment
+      once (ln = its length, 1.0 when degenerate);
+    - the y-slab CSR: each tile's [miny, maxy] cut into SLABS equal
+      slabs (`slab_y0`, `slab_h`); slab t*SLABS+s lists (`slab_ptr`,
+      `slab_seg`) every segment of tile t whose y-range, padded by
+      4·EPS·(1 + ln), overlaps slab s. No other segment can cross a
+      probe's scanline or accept it within EPS, so the kernel tests
+      only the probe's slab;
+    - `fseg_ptr`/`fseg`: per tile, the indexes into SEG of the
+      segments fit for distance use (window runs dropped, as
+      `_distance_segs`).
+    """
+    cell = pdf["cell_id"].to_numpy().astype(np.int64)
+    region = pdf["region_id"].to_numpy().astype(np.int64)
+    # a null deep is one more level of its own, as in a Window
+    # partitioned by deep
+    deep = pdf["deep"].fillna(np.iinfo(np.int64).min) \
+        .to_numpy().astype(np.int64)
+    kind = pdf["kind"].to_numpy().astype(np.int64)
+    rect = {k: pdf[k].to_numpy().astype(np.float64)
+            for k in ("minx", "miny", "maxx", "maxy")}
+    order = np.lexsort((rect["miny"].view(np.int64),
+                        rect["minx"].view(np.int64), region, cell))
+    cell, region, deep, kind = (cell[order], region[order],
+                                deep[order], kind[order])
+    rect = {k: v[order] for k, v in rect.items()}
+    segs_list = pdf["segs"].to_numpy()[order]
+    seg_len = np.fromiter((len(b) // 32 for b in segs_list),
+                          dtype=np.int64, count=len(segs_list))
+    seg_ptr = np.zeros(len(segs_list) + 1, dtype=np.int64)
+    np.cumsum(seg_len, out=seg_ptr[1:])
+    S = np.frombuffer(b"".join(segs_list), dtype=np.float64).reshape(-1, 4)
+    x1, y1, x2, y2 = S[:, 0], S[:, 1], S[:, 2], S[:, 3]
+    ln = np.hypot(x2 - x1, y2 - y1)
+    ln[ln == 0] = 1.0
+    cells, first = np.unique(cell, return_index=True)
+    cell_ptr = np.append(first, len(cell)).astype(np.int64)
+    ntiles = len(cell)
+    tile_of_seg = np.repeat(np.arange(ntiles, dtype=np.int64), seg_len)
+
+    y0 = rect["miny"]
+    h = (rect["maxy"] - y0) / SLABS
+    ok = np.isfinite(y0) & np.isfinite(h) & (h > 0)
+    y0, h = np.where(ok, y0, 0.0), np.where(ok, h, 1.0)
+    pad = 4 * predicates.EPS * (1 + ln)
+    ty0, th = y0[tile_of_seg], h[tile_of_seg]
+    s_lo = _slab_of(np.minimum(y1, y2) - pad, ty0, th)
+    s_hi = _slab_of(np.maximum(y1, y2) + pad, ty0, th)
+    n_in = s_hi - s_lo + 1
+    seg_of = np.repeat(np.arange(len(S), dtype=np.int64), n_in)
+    key = (tile_of_seg * SLABS + s_lo)[seg_of] \
+        + np.arange(len(seg_of)) - np.repeat(np.cumsum(n_in) - n_in, n_in)
+    slab_ptr = np.zeros(ntiles * SLABS + 1, dtype=np.int64)
+    np.cumsum(np.bincount(key, minlength=ntiles * SLABS), out=slab_ptr[1:])
+    ix = np.int32 if len(seg_of) < 2**31 else np.int64
+
+    # window-run-filtered segments for DISTANCE use (the index twin of
+    # _distance_segs: exact float equality against the per-tile
+    # CLIP_EPS-expanded window identifies closure/bridge runs, which
+    # must never feed a nearest-distance). Parity and containment use
+    # every segment.
+    wx0 = (rect["minx"] - tiler.CLIP_EPS)[tile_of_seg]
+    wy0 = (rect["miny"] - tiler.CLIP_EPS)[tile_of_seg]
+    wx1 = (rect["maxx"] + tiler.CLIP_EPS)[tile_of_seg]
+    wy1 = (rect["maxy"] + tiler.CLIP_EPS)[tile_of_seg]
+    on_win = (((x1 == x2) & ((x1 == wx0) | (x1 == wx1)))
+              | ((y1 == y2) & ((y1 == wy0) | (y1 == wy1))))
+    fseg = np.nonzero(~on_win)[0]
+    fseg_ptr = np.zeros(ntiles + 1, dtype=np.int64)
+    np.cumsum(np.bincount(tile_of_seg[fseg], minlength=ntiles),
+              out=fseg_ptr[1:])
+    return {
+        "cells": cells, "cell_ptr": cell_ptr,
+        "region": region, "deep": deep, "kind": kind,
+        "minx": rect["minx"], "miny": rect["miny"],
+        "maxx": rect["maxx"], "maxy": rect["maxy"],
+        "seg_ptr": seg_ptr, "SEG": np.column_stack((S, ln)),
+        "slab_y0": y0, "slab_h": h,
+        "slab_ptr": slab_ptr.astype(ix),
+        "slab_seg": seg_of[np.argsort(key, kind="stable")].astype(ix),
+        "fseg_ptr": fseg_ptr, "fseg": fseg.astype(ix),
+    }
+
+
 def _index_point_hits(I: dict, px: np.ndarray, py: np.ndarray,
                       cid: np.ndarray, keep: np.ndarray | None = None,
                       J: dict | None = None):
@@ -490,7 +598,11 @@ def _index_point_hits(I: dict, px: np.ndarray, py: np.ndarray,
     sub-tiles of one region in one cell may all accept the same point.
     Kind-2 tiles accept by half-open rect, kind-0 tiles by the flat
     crossing-parity / on-segment kernel (`_pair_hits_flat`, bit-
-    identical to the join refine's)."""
+    identical to the join refine's). A kind-0 pair gathers only the
+    rows of its probe's y-slab from the packed segment store `SEG`
+    (`_build_boundary_index`): the segments left out can neither
+    cross the probe's scanline nor accept it within EPS, so the hits
+    are those of the tile's full segment list."""
     empty = np.empty(0, np.int64)
     ir, ig = empty, empty
     if J is not None:
@@ -520,21 +632,25 @@ def _index_point_hits(I: dict, px: np.ndarray, py: np.ndarray,
     m0 = np.nonzero(kindt == 0)[0]
     if len(m0):
         t0 = pair_tile[m0]
-        soff = I["seg_ptr"][t0]
-        slen = I["seg_ptr"][t0 + 1] - soff
+        p0x = ppx[m0]
+        p0y = ppy[m0]
+        slab = t0 * SLABS + _slab_of(p0y, I["slab_y0"][t0], I["slab_h"][t0])
+        soff = I["slab_ptr"][slab].astype(np.int64)
+        slen = I["slab_ptr"][slab + 1] - soff
         tot_s = int(slen.sum())
         npairs0 = len(m0)
         row_pair = np.repeat(np.arange(npairs0, dtype=np.int64), slen)
         rstart = np.zeros(npairs0, dtype=np.int64)
         np.cumsum(slen[:-1], out=rstart[1:])
-        sidx = (np.arange(tot_s, dtype=np.int64)
-                - np.repeat(rstart, slen) + np.repeat(soff, slen))
-        p0x = ppx[m0]
-        p0y = ppy[m0]
+        S = I["SEG"][I["slab_seg"][np.arange(tot_s, dtype=np.int64)
+                                   - np.repeat(rstart, slen)
+                                   + np.repeat(soff, slen)]]
+        x1, y1, x2, y2, ln = S.T
+        dx = x2 - x1
+        yd = y2 - y1
         hit0 = _pair_hits_flat(
-            I["X1"][sidx], I["Y1"][sidx], I["X2"][sidx],
-            I["Y2"][sidx], I["YDS"][sidx], I["DX"][sidx],
-            I["LN"][sidx], I["DEG"][sidx],
+            x1, y1, x2, y2, np.where(yd == 0, 1.0, yd), dx, ln,
+            (dx == 0) & (yd == 0),
             row_pair, p0x[row_pair], p0y[row_pair], npairs0)
         hit_rows.append(row_pt[m0][hit0])
         hit_regs.append(I["region"][t0][hit0])
@@ -628,11 +744,12 @@ def _tolerance_pairs(I: dict, px: np.ndarray, py: np.ndarray, tol: float,
     in-kernel (`_circle_cell_cover`), candidate tiles looked up in the
     index CSR, per-(point, tile) planar-nearest computed FLAT over all
     (pair, segment) rows (min + first-argmin via reduceat — the exact
-    arithmetic of predicates.nearest_on_segments, over the window-run-
-    filtered segment block), then the same inscribed/escribed radius
-    gates + exact 24-gon test as the cover-join dist_fn. Rows are
-    bit-identical to the cover-join path's; `keep` as in
-    `_index_point_hits`.
+    arithmetic of predicates.nearest_on_segments, over the tile's
+    window-run-filtered segments, read from the packed store as
+    `SEG[fseg[fseg_ptr[t]:fseg_ptr[t + 1]]]`), then the same
+    inscribed/escribed radius gates + exact 24-gon test as the
+    cover-join dist_fn. Rows are bit-identical to the cover-join
+    path's; `keep` as in `_index_point_hits`.
 
     Returns (point, tile, dist_m): one row per kept (point, tile) pair,
     point indexing px/py and tile indexing I's per-tile arrays (a
@@ -642,8 +759,6 @@ def _tolerance_pairs(I: dict, px: np.ndarray, py: np.ndarray, tol: float,
     if not len(px):
         return none
     fptr = I["fseg_ptr"]
-    FX1, FY1 = I["FX1"], I["FY1"]
-    FX2, FY2 = I["FX2"], I["FY2"]
     rep, cells = _circle_cell_cover(px, py, tol, base_res)
     crow, _, tix = _cell_pairs(I["cells"], I["cell_ptr"], cells)
     prep = rep[crow]
@@ -662,8 +777,7 @@ def _tolerance_pairs(I: dict, px: np.ndarray, py: np.ndarray, tol: float,
     soffs = np.arange(int(scnt.sum()), dtype=np.int64) \
         - np.repeat(np.cumsum(scnt) - scnt, scnt)
     sidx = np.repeat(s0, scnt) + soffs
-    ax, ay = FX1[sidx], FY1[sidx]
-    bx, by = FX2[sidx], FY2[sidx]
+    ax, ay, bx, by = I["SEG"][I["fseg"][sidx], :4].T
     dxs, dys = bx - ax, by - ay
     ln2 = dxs * dxs + dys * dys
     ln2 = np.where(ln2 == 0, 1.0, ln2)
@@ -1235,11 +1349,12 @@ class SpatialEngine:
 
     def _boundary_index(self) -> tuple | None:
         """Build (once, lazily) the broadcast boundary-tile index:
-        every kind≠1 tile pre-decoded into flat numpy CSR arrays —
-        sorted cell table, per-cell tile ranges, per-tile region/deep/
-        kind/rect/segment ranges, concatenated segment component arrays with
-        the refine kernel's derived terms (yds/dx/ln/degen) computed
-        once at build instead of once per task.
+        every kind≠1 tile pre-decoded into flat numpy CSR arrays
+        (`_build_boundary_index`): sorted cell table, per-cell tile
+        ranges, per-tile region/deep/kind/rect/segment ranges, one
+        packed (nseg, 5) segment store, a per-tile y-slab CSR into it
+        for the point kernel, and an index of the segments fit for
+        distance use.
 
         Returns (Broadcast, bcells_df) or None when the boundary WKB
         volume exceeds `boundary_index_wkb_bytes` (the join-based
@@ -1289,68 +1404,10 @@ class SpatialEngine:
         pdf = (tb.select("cell_id", "region_id", "deep", "kind",
                          "minx", "miny", "maxx", "maxy", "tile_wkb")
                .mapInPandas(extract, out_schema).toPandas())
-        cell = pdf["cell_id"].to_numpy().astype(np.int64)
-        region = pdf["region_id"].to_numpy().astype(np.int64)
-        # a null deep is one more level of its own, as in a Window
-        # partitioned by deep
-        deep = pdf["deep"].fillna(np.iinfo(np.int64).min) \
-            .to_numpy().astype(np.int64)
-        kind = pdf["kind"].to_numpy().astype(np.int64)
-        rect = {k: pdf[k].to_numpy().astype(np.float64)
-                for k in ("minx", "miny", "maxx", "maxy")}
-        order = np.lexsort((rect["miny"].view(np.int64),
-                            rect["minx"].view(np.int64), region, cell))
-        cell, region, deep, kind = (cell[order], region[order],
-                                    deep[order], kind[order])
-        rect = {k: v[order] for k, v in rect.items()}
-        segs_list = [pdf["segs"].iloc[i] for i in order]
-        seg_len = np.fromiter((len(b) // 32 for b in segs_list),
-                              dtype=np.int64, count=len(segs_list))
-        seg_ptr = np.zeros(len(segs_list) + 1, dtype=np.int64)
-        np.cumsum(seg_len, out=seg_ptr[1:])
-        S = np.frombuffer(b"".join(segs_list), dtype=np.float64)
-        S = S.reshape(-1, 4) if len(S) else S.reshape(0, 4)
-        x1, y1, x2, y2 = (np.ascontiguousarray(S[:, k]) for k in range(4))
-        yd = y2 - y1
-        yds = np.where(yd == 0, 1.0, yd)
-        dx = x2 - x1
-        ln = np.hypot(dx, yd)
-        degen = ln == 0
-        ln = np.where(degen, 1.0, ln)
-        cells, first = np.unique(cell, return_index=True)
-        cell_ptr = np.append(first, len(cell)).astype(np.int64)
-        # window-run-filtered segment CSR for DISTANCE use (the index
-        # twin of _distance_segs: exact float equality against the
-        # per-tile CLIP_EPS-expanded window identifies closure/bridge
-        # runs, which must never feed a nearest-distance). Raw closed
-        # rings above stay for parity/containment.
-        ntiles = len(cell)
-        tile_of_seg = np.repeat(np.arange(ntiles, dtype=np.int64), seg_len)
-        wx0 = (rect["minx"] - tiler.CLIP_EPS)[tile_of_seg]
-        wy0 = (rect["miny"] - tiler.CLIP_EPS)[tile_of_seg]
-        wx1 = (rect["maxx"] + tiler.CLIP_EPS)[tile_of_seg]
-        wy1 = (rect["maxy"] + tiler.CLIP_EPS)[tile_of_seg]
-        on_win = (((x1 == x2) & ((x1 == wx0) | (x1 == wx1)))
-                  | ((y1 == y2) & ((y1 == wy0) | (y1 == wy1))))
-        fkeep = ~on_win
-        fcnt = np.bincount(tile_of_seg[fkeep], minlength=ntiles)
-        fseg_ptr = np.zeros(ntiles + 1, dtype=np.int64)
-        np.cumsum(fcnt, out=fseg_ptr[1:])
-        idx = {
-            "cells": cells, "cell_ptr": cell_ptr,
-            "region": region, "deep": deep, "kind": kind,
-            "minx": rect["minx"], "miny": rect["miny"],
-            "maxx": rect["maxx"], "maxy": rect["maxy"],
-            "seg_ptr": seg_ptr,
-            "X1": x1, "Y1": y1, "X2": x2, "Y2": y2,
-            "YDS": yds, "DX": dx, "LN": ln, "DEG": degen,
-            "fseg_ptr": fseg_ptr,
-            "FX1": x1[fkeep], "FY1": y1[fkeep],
-            "FX2": x2[fkeep], "FY2": y2[fkeep],
-        }
+        idx = _build_boundary_index(pdf)
         bc = self.spark.sparkContext.broadcast(idx)
-        bcells = self.spark.createDataFrame(
-            pd.DataFrame({"cell_id": cells})).localCheckpoint(eager=True)
+        bcells = self.spark.createDataFrame(pd.DataFrame(
+            {"cell_id": idx["cells"]})).localCheckpoint(eager=True)
         self._bindex = (bc, bcells)
         return self._bindex
 
@@ -2738,8 +2795,7 @@ class SpatialEngine:
             tmnx, tmny = I["minx"], I["miny"]
             tmxx, tmxy = I["maxx"], I["maxy"]
             sptr, fptr = I["seg_ptr"], I["fseg_ptr"]
-            X1, Y1 = I["X1"], I["Y1"]
-            FX1, FY1 = I["FX1"], I["FY1"]
+            SEG, fseg = I["SEG"], I["fseg"]
             icells, iptr, iregion = J["cells"], J["cell_ptr"], J["region"]
             icx0, icy0, icx1, icy1 = J["cx0"], J["cy0"], J["cx1"], J["cy1"]
             seg_cache: dict[int, tuple] = {}  # tile idx → (raw, filtered)
@@ -2754,10 +2810,8 @@ class SpatialEngine:
                 if ent is None:
                     r0, r1 = sptr[t], sptr[t + 1]
                     f0, f1 = fptr[t], fptr[t + 1]
-                    raw = np.column_stack((I["X1"][r0:r1], I["Y1"][r0:r1],
-                                           I["X2"][r0:r1], I["Y2"][r0:r1]))
-                    flt = np.column_stack((I["FX1"][f0:f1], I["FY1"][f0:f1],
-                                           I["FX2"][f0:f1], I["FY2"][f0:f1]))
+                    raw = np.ascontiguousarray(SEG[r0:r1, :4])
+                    flt = SEG[fseg[f0:f1], :4]
                     ent = seg_cache[t] = (raw, flt)
                 return ent
 
@@ -2889,12 +2943,12 @@ class SpatialEngine:
                         py_t = tmny[t3].copy()
                         mr = (sptr[t3 + 1] - sptr[t3]) > 0
                         if mr.any():
-                            px_t[mr] = X1[sptr[t3[mr]]]
-                            py_t[mr] = Y1[sptr[t3[mr]]]
+                            px_t[mr] = SEG[sptr[t3[mr]], 0]
+                            py_t[mr] = SEG[sptr[t3[mr]], 1]
                         mf = (fptr[t3 + 1] - fptr[t3]) > 0
                         if mf.any():
-                            px_t[mf] = FX1[fptr[t3[mf]]]
-                            py_t[mf] = FY1[fptr[t3[mf]]]
+                            px_t[mf] = SEG[fseg[fptr[t3[mf]]], 0]
+                            py_t[mf] = SEG[fseg[fptr[t3[mf]]], 1]
                         ok_t = mr | mf | (tkind[t3] == 2)
                         contain_hits(ok_t, px_t, py_t,
                                      wkt_a[prep[sel3]], hit, sel3)

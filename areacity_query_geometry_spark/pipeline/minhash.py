@@ -33,14 +33,9 @@ MH_P = 1_000_000_007
 MAX_BUCKET = 256
 
 
-def near_dup_sql(view: str, n_hashes: int = 16, band_rows: int = 4,
-                 min_jaccard: float = 0.05,
-                 max_bucket: int = MAX_BUCKET) -> str:
-    """The full near-dup query over `view`(doc_id, text). Returns
-    (d1, d2, jaccard) for every verified candidate pair ≥ min_jaccard.
-    n_hashes must be a multiple of band_rows. Buckets larger than
-    max_bucket emit star pairs (rep, other) instead of all pairs —
-    see the module docstring; pass max_bucket=None to disable."""
+def _bucket_ctes(view: str, n_hashes: int, band_rows: int) -> str:
+    """The CTEs both queries share: shingles → signatures → band
+    signatures (`bands`) → bucket sizes and min-doc_id reps (`bsz`)."""
     assert n_hashes % band_rows == 0
     mins = ", ".join(
         f"min(({2 * i + 3} * h0 + {7 * i + 11}) % {MH_P}) AS mh{i}"
@@ -81,7 +76,18 @@ def near_dup_sql(view: str, n_hashes: int = 16, band_rows: int = 4,
         bsz AS (
             SELECT band, bsig, count(*) AS n, min(doc_id) AS rep
             FROM bands GROUP BY band, bsig
-        ),
+        )"""
+
+
+def near_dup_sql(view: str, n_hashes: int = 16, band_rows: int = 4,
+                 min_jaccard: float = 0.05,
+                 max_bucket: int = MAX_BUCKET) -> str:
+    """The full near-dup query over `view`(doc_id, text). Returns
+    (d1, d2, jaccard) for every verified candidate pair ≥ min_jaccard.
+    n_hashes must be a multiple of band_rows. Buckets larger than
+    max_bucket emit star pairs (rep, other) instead of all pairs —
+    see the module docstring; pass max_bucket=None to disable."""
+    return f"""{_bucket_ctes(view, n_hashes, band_rows)},
         -- hot-bucket guard: restrict the LEFT side of the self-join
         -- BEFORE the join (so Catalyst never materializes n^2 rows for
         -- an oversized bucket) — small buckets keep every member on the
@@ -119,13 +125,8 @@ def capped_buckets_sql(view: str, n_hashes: int = 16, band_rows: int = 4,
                        max_bucket: int = MAX_BUCKET) -> str:
     """No-silent-caps companion to near_dup_sql: one row per (band,
     bsig) bucket that exceeded max_bucket and therefore degraded to the
-    star expansion, with its size. Reuses the signature pipeline up to
-    `bands` verbatim (same CTE text → same plan prefix)."""
-    full = near_dup_sql(view, n_hashes, band_rows, max_bucket=max_bucket)
-    prefix = full.split("        bsz AS (")[0]
-    return f"""{prefix}        bsz AS (
-            SELECT band, bsig, count(*) AS n
-            FROM bands GROUP BY band, bsig
-        )
+    star expansion, with its size. Built from the same CTEs as
+    near_dup_sql (same plan prefix)."""
+    return f"""{_bucket_ctes(view, n_hashes, band_rows)}
         SELECT band, bsig, n FROM bsz WHERE n > {int(max_bucket)}
     """

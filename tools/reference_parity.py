@@ -235,18 +235,35 @@ def spark_geometry(spark, eng, probes, where: str | None = None
 
 
 def _load_feats(src: str) -> dict:
-    """feature id → geometry from a raw one-feature-per-line GeoJSON
-    (handles both the province export's compact spacing and the
-    continents export's spaced layout)."""
-    feats: dict[str, dict] = {}
+    """feature id → (deep, geometry) from a raw one-feature-per-line
+    GeoJSON (handles both the province export's compact spacing and
+    the continents export's spaced layout)."""
+    feats: dict[str, tuple] = {}
     with open(src, encoding="utf-8") as f:
         for line in f:
             line = line.strip().rstrip(",")
             if '"Feature"' not in line[:40]:
                 continue
             d = json.loads(line)
-            feats[str(d["properties"]["id"])] = d["geometry"]
+            props = d["properties"]
+            feats[str(props["id"])] = (str(props.get("deep")), d["geometry"])
     return feats
+
+
+def _pair_by_deep(ref_ids: set, my_ids: set, feats: dict) -> list:
+    """(ref choice, my choice) pairs of a probe's differing ids: per
+    deep level, each engine picks its nearest feature, so the ids that
+    only one engine returned are paired within their level (in id
+    order), never across levels."""
+    pairs = []
+    by_deep: dict[str, tuple[list, list]] = {}
+    for side, ids in enumerate((ref_ids - my_ids, my_ids - ref_ids)):
+        for fid in ids:
+            by_deep.setdefault(feats[fid][0], ([], []))[side].append(fid)
+    for deep in sorted(by_deep):
+        ref_only, my_only = by_deep[deep]
+        pairs += zip(sorted(ref_only), sorted(my_only))
+    return pairs
 
 
 def _true_feature_min(feats: dict, fid: str, lng: float, lat: float,
@@ -265,7 +282,7 @@ def _true_feature_min(feats: dict, fid: str, lng: float, lat: float,
              * np.sin(np.radians(lng2 - lng1) / 2) ** 2)
         return 2 * R * np.arcsin(np.sqrt(a))
 
-    geom = feats[fid]
+    geom = feats[fid][1]
     polys = geom["coordinates"] if geom["type"] == "MultiPolygon" \
         else [geom["coordinates"]]
     t = np.linspace(0, 1, samples)
@@ -298,8 +315,7 @@ def adjudicate_identity(leg: dict, pts: list[tuple[int, float, float]],
         lng, lat = coords[pid]
         ref_ids = set(strip_dists(ref_hits).split(",")) - {""}
         my_ids = set(strip_dists(my_hits).split(",")) - {""}
-        for rid_ref, rid_my in zip(sorted(ref_ids - my_ids),
-                                   sorted(my_ids - ref_ids)):
+        for rid_ref, rid_my in _pair_by_deep(ref_ids, my_ids, feats):
             rows.append([
                 pid, rid_ref, rid_my,
                 round(_true_feature_min(feats, rid_ref, lng, lat), 2),
@@ -315,37 +331,8 @@ def adjudicate(leg: dict, pts: list[tuple[int, float, float]],
     haversine evaluated at each sample — and record both engines'
     errors against it. This settles which engine is closer to the
     geodesic ground truth when their 2dp texts disagree."""
-    import numpy as np
-
-    R = 6378137.0
-
-    def hav(lng1, lat1, lng2, lat2):
-        p1, p2 = np.radians(lat1), np.radians(lat2)
-        a = (np.sin((p2 - p1) / 2) ** 2
-             + np.cos(p1) * np.cos(p2)
-             * np.sin(np.radians(lng2 - lng1) / 2) ** 2)
-        return 2 * R * np.arcsin(np.sqrt(a))
-
-    feats: dict[str, dict] = {}
-    with open(src, encoding="utf-8") as f:
-        for line in f:
-            line = line.strip().rstrip(",")
-            # the province export writes '{"type":"Feature"...', the
-            # continents export '{ "type": "Feature", ...' — match on
-            # content, not exact spacing
-            if '"Feature"' not in line[:40]:
-                continue
-            d = json.loads(line)
-            feats[str(d["properties"]["id"])] = d["geometry"]
-
-    def rings(geom):
-        polys = geom["coordinates"] if geom["type"] == "MultiPolygon" \
-            else [geom["coordinates"]]
-        for p in polys:
-            yield from p
-
+    feats = _load_feats(src)
     coords = {str(i): (lng, lat) for i, lng, lat in pts}
-    t = np.linspace(0, 1, 4097)
     rows = []
     mismatches = leg.get("all_text_mismatches", leg["examples"])
     # -1 legs: geodesic mode makes EVERY answered probe's distance
@@ -376,15 +363,7 @@ def adjudicate(leg: dict, pts: list[tuple[int, float, float]],
         for fid in dr:
             if dr[fid] is None or dr[fid] == dm.get(fid):
                 continue
-            best = np.inf
-            for ring in rings(feats[fid]):
-                c = np.asarray(ring)
-                a, b = c[:-1], c[1:]
-                for i in range(0, len(a), 256):
-                    aa, bb = a[i:i + 256], b[i:i + 256]
-                    x = aa[:, None, 0] + t * (bb[:, None, 0] - aa[:, None, 0])
-                    y = aa[:, None, 1] + t * (bb[:, None, 1] - aa[:, None, 1])
-                    best = min(best, hav(lng, lat, x, y).min())
+            best = _true_feature_min(feats, fid, lng, lat)
             rows.append([pid, fid, round(float(best), 2), dr[fid],
                          dm[fid], round(dr[fid] - best, 2),
                          round((dm[fid] or 0.0) - best, 2)])
