@@ -121,6 +121,15 @@ def _best_segment_by_hav_proxy(px: np.ndarray, py: np.ndarray,
     return d.argmin(axis=1)
 
 
+def _ranges(starts, cnt: np.ndarray):
+    """Ragged range expansion, with no per-range Python: the elements
+    of the ranges [starts[i], starts[i] + cnt[i]) in order, as (range
+    index i, value), both int64. starts=0 gives offsets in the range."""
+    row = np.repeat(np.arange(len(cnt), dtype=np.int64), cnt)
+    return row, (np.repeat(starts - (np.cumsum(cnt) - cnt), cnt)
+                 + np.arange(len(row), dtype=np.int64))
+
+
 def _circle_cell_cover(px: np.ndarray, py: np.ndarray,
                        tol_m: float, res: int):
     """(point-index repeat, packed cell id) rows covering each point's
@@ -159,9 +168,7 @@ def _circle_cell_cover(px: np.ndarray, py: np.ndarray,
     kx = x1 - x0 + 1
     ky = y1 - y0 + 1
     cnt = kx * ky
-    rep = np.repeat(np.arange(len(px)), cnt)
-    offs = np.arange(int(cnt.sum()), dtype=np.int64) \
-        - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    rep, offs = _ranges(0, cnt)
     ix = x0[rep] + offs // ky[rep]
     iy = y0[rep] + offs % ky[rep]
     return rep, grid.pack(res, ix, iy)
@@ -213,10 +220,7 @@ def _ambiguous_circle_keep(ppx, ppy, prb, prc,
         T = int(sc.sum())
         if T == 0:
             continue
-        rowp = np.repeat(np.arange(len(sc), dtype=np.int64), sc)
-        offs = np.arange(T, dtype=np.int64) \
-            - np.repeat(np.cumsum(sc) - sc, sc)
-        tsi = np.repeat(seg_start[sl], sc) + offs
+        rowp, tsi = _ranges(seg_start[sl], sc)
         # 24-gon segments of each row's circle, gathered per tile-seg
         gx = ppx[sl][:, None] + prb[sl][:, None] * _C24[None, :]
         gy = ppy[sl][:, None] + prc[sl][:, None] * _S24[None, :]
@@ -264,16 +268,8 @@ def _refine_csr(ents: list, starts: np.ndarray, ends: np.ndarray,
     seg_off = np.zeros(len(ents), dtype=np.int64)
     np.cumsum(lens[:-1], out=seg_off[1:])
     # per (sorted) pair: its group's segment count and offset
-    npair_g = ends - starts
-    pair_grp = np.repeat(np.arange(len(ents), dtype=np.int64), npair_g)
-    segcnt = lens[pair_grp]
-    tot = int(segcnt.sum())
-    row_pair = np.repeat(np.arange(npairs, dtype=np.int64), segcnt)
-    row_start = np.zeros(npairs, dtype=np.int64)
-    np.cumsum(segcnt[:-1], out=row_start[1:])
-    idx = (np.arange(tot, dtype=np.int64)
-           - np.repeat(row_start, segcnt)
-           + np.repeat(seg_off[pair_grp], segcnt))
+    pair_grp = np.repeat(np.arange(len(ents), dtype=np.int64), ends - starts)
+    row_pair, idx = _ranges(seg_off[pair_grp], lens[pair_grp])
     return _pair_hits_flat(X1[idx], Y1[idx], X2[idx], Y2[idx],
                            YDS[idx], DX[idx], LN[idx], DEG[idx],
                            row_pair, px0[row_pair], py0[row_pair], npairs)
@@ -460,11 +456,7 @@ def _cell_pairs(cells: np.ndarray, cell_ptr: np.ndarray, cid: np.ndarray):
     slots = ci[rows]
     c0 = cell_ptr[slots]
     cnt = cell_ptr[slots + 1] - c0
-    starts = np.zeros(len(rows), dtype=np.int64)
-    np.cumsum(cnt[:-1], out=starts[1:])
-    entry = (np.arange(int(cnt.sum()), dtype=np.int64)
-             - np.repeat(starts, cnt) + np.repeat(c0, cnt))
-    return np.repeat(rows, cnt), np.repeat(slots, cnt), entry
+    return np.repeat(rows, cnt), np.repeat(slots, cnt), _ranges(c0, cnt)[1]
 
 
 # y-slabs per boundary tile: `_index_point_hits` tests a probe only
@@ -539,10 +531,7 @@ def _build_boundary_index(pdf: pd.DataFrame) -> dict:
     ty0, th = y0[tile_of_seg], h[tile_of_seg]
     s_lo = _slab_of(np.minimum(y1, y2) - pad, ty0, th)
     s_hi = _slab_of(np.maximum(y1, y2) + pad, ty0, th)
-    n_in = s_hi - s_lo + 1
-    seg_of = np.repeat(np.arange(len(S), dtype=np.int64), n_in)
-    key = (tile_of_seg * SLABS + s_lo)[seg_of] \
-        + np.arange(len(seg_of)) - np.repeat(np.cumsum(n_in) - n_in, n_in)
+    seg_of, key = _ranges(tile_of_seg * SLABS + s_lo, s_hi - s_lo + 1)
     slab_ptr = np.zeros(ntiles * SLABS + 1, dtype=np.int64)
     np.cumsum(np.bincount(key, minlength=ntiles * SLABS), out=slab_ptr[1:])
     ix = np.int32 if len(seg_of) < 2**31 else np.int64
@@ -575,6 +564,68 @@ def _build_boundary_index(pdf: pd.DataFrame) -> dict:
     }
 
 
+def _slab_point_hits(I: dict, tiles: np.ndarray, px: np.ndarray,
+                     py: np.ndarray) -> np.ndarray:
+    """SFS `intersects(point, tile)` per (point, kind-0 tile) pair by
+    `_pair_hits_flat` over the rows of the point's y-slab of the
+    packed store `SEG` (`_build_boundary_index`). The segments left out
+    can neither cross the point's scanline nor accept it within EPS, so
+    the verdicts are those of the tile's whole ring."""
+    slab = tiles * SLABS + _slab_of(py, I["slab_y0"][tiles],
+                                    I["slab_h"][tiles])
+    soff = I["slab_ptr"][slab].astype(np.int64)
+    row_pair, idx = _ranges(soff, I["slab_ptr"][slab + 1] - soff)
+    x1, y1, x2, y2, ln = I["SEG"][I["slab_seg"][idx]].T
+    dx = x2 - x1
+    yd = y2 - y1
+    return _pair_hits_flat(
+        x1, y1, x2, y2, np.where(yd == 0, 1.0, yd), dx, ln,
+        (dx == 0) & (yd == 0),
+        row_pair, px[row_pair], py[row_pair], len(tiles))
+
+
+# bounds `_boundary_prim_hits`' temporaries whatever the probe sizes
+PRIM_BLOCK_ROWS = 1 << 16
+
+
+def _boundary_prim_hits(I: dict, tiles: np.ndarray, pk: np.ndarray,
+                        p: np.ndarray) -> np.ndarray:
+    """Q3 hit per (primitive, kind-0 tile) pair; `pk`/`p` as in
+    `_decompose_probe_batch` (1 = rect/point, 2 = segment). hit = the
+    primitive touches one of the tile's distance-fit segments (flat
+    (pair, segment) rows: `predicates.segments_intersect_rect` or
+    `_pair_seg_intersect`, reduced per pair with bincount) OR its first
+    point is in the tile (`_slab_point_hits`). Pairs run in blocks of
+    at most PRIM_BLOCK_ROWS raw ring segments, which bound both the fit
+    rows and the slab rows (a larger tile runs alone)."""
+    n = len(tiles)
+    hit = np.zeros(n, dtype=bool)
+    fptr = I["fseg_ptr"]
+    raw = I["seg_ptr"][tiles + 1] - I["seg_ptr"][tiles]
+    end = np.cumsum(raw)
+    b0 = 0
+    while b0 < n:
+        b1 = max(b0 + 1, int(np.searchsorted(
+            end, end[b0] - raw[b0] + PRIM_BLOCK_ROWS, side="right")))
+        t, pb = tiles[b0:b1], p[b0:b1]
+        f0 = fptr[t]
+        rp, idx = _ranges(f0, fptr[t + 1] - f0)
+        seg = I["SEG"][I["fseg"][idx], :4]
+        a = pb[rp]
+        rect = pk[b0:b1][rp] == 1
+        touch = np.empty(len(rp), dtype=bool)
+        touch[rect] = predicates.segments_intersect_rect(
+            seg[rect], a[rect, 0], a[rect, 1], a[rect, 2], a[rect, 3])
+        sr = ~rect
+        touch[sr] = predicates._pair_seg_intersect(
+            a[sr, 0], a[sr, 1], a[sr, 2], a[sr, 3],
+            seg[sr, 0], seg[sr, 1], seg[sr, 2], seg[sr, 3])
+        hit[b0:b1] = (np.bincount(rp[touch], minlength=len(t)) > 0) \
+            | _slab_point_hits(I, t, pb[:, 0], pb[:, 1])
+        b0 = b1
+    return hit
+
+
 def _index_point_hits(I: dict, px: np.ndarray, py: np.ndarray,
                       cid: np.ndarray, keep: np.ndarray | None = None,
                       J: dict | None = None):
@@ -596,13 +647,8 @@ def _index_point_hits(I: dict, px: np.ndarray, py: np.ndarray,
     tile row of the probe's cell (the interior equi-join's fan-out);
     boundary pairs are deduped per (row, region), since several
     sub-tiles of one region in one cell may all accept the same point.
-    Kind-2 tiles accept by half-open rect, kind-0 tiles by the flat
-    crossing-parity / on-segment kernel (`_pair_hits_flat`, bit-
-    identical to the join refine's). A kind-0 pair gathers only the
-    rows of its probe's y-slab from the packed segment store `SEG`
-    (`_build_boundary_index`): the segments left out can neither
-    cross the probe's scanline nor accept it within EPS, so the hits
-    are those of the tile's full segment list."""
+    Kind-2 tiles accept by half-open rect, kind-0 tiles by
+    `_slab_point_hits`."""
     empty = np.empty(0, np.int64)
     ir, ig = empty, empty
     if J is not None:
@@ -632,26 +678,7 @@ def _index_point_hits(I: dict, px: np.ndarray, py: np.ndarray,
     m0 = np.nonzero(kindt == 0)[0]
     if len(m0):
         t0 = pair_tile[m0]
-        p0x = ppx[m0]
-        p0y = ppy[m0]
-        slab = t0 * SLABS + _slab_of(p0y, I["slab_y0"][t0], I["slab_h"][t0])
-        soff = I["slab_ptr"][slab].astype(np.int64)
-        slen = I["slab_ptr"][slab + 1] - soff
-        tot_s = int(slen.sum())
-        npairs0 = len(m0)
-        row_pair = np.repeat(np.arange(npairs0, dtype=np.int64), slen)
-        rstart = np.zeros(npairs0, dtype=np.int64)
-        np.cumsum(slen[:-1], out=rstart[1:])
-        S = I["SEG"][I["slab_seg"][np.arange(tot_s, dtype=np.int64)
-                                   - np.repeat(rstart, slen)
-                                   + np.repeat(soff, slen)]]
-        x1, y1, x2, y2, ln = S.T
-        dx = x2 - x1
-        yd = y2 - y1
-        hit0 = _pair_hits_flat(
-            x1, y1, x2, y2, np.where(yd == 0, 1.0, yd), dx, ln,
-            (dx == 0) & (yd == 0),
-            row_pair, p0x[row_pair], p0y[row_pair], npairs0)
+        hit0 = _slab_point_hits(I, t0, ppx[m0], ppy[m0])
         hit_rows.append(row_pt[m0][hit0])
         hit_regs.append(I["region"][t0][hit0])
 
@@ -773,10 +800,8 @@ def _tolerance_pairs(I: dict, px: np.ndarray, py: np.ndarray, tol: float,
     if not len(prep):
         return none
     s0 = fptr[tix]
-    srep = np.repeat(np.arange(len(prep), dtype=np.int64), scnt)
-    soffs = np.arange(int(scnt.sum()), dtype=np.int64) \
-        - np.repeat(np.cumsum(scnt) - scnt, scnt)
-    sidx = np.repeat(s0, scnt) + soffs
+    srep, sidx = _ranges(s0, scnt)
+    soffs = sidx - np.repeat(s0, scnt)
     ax, ay, bx, by = I["SEG"][I["fseg"][sidx], :4].T
     dxs, dys = bx - ax, by - ay
     ln2 = dxs * dxs + dys * dys
@@ -2771,14 +2796,15 @@ class SpatialEngine:
         (grid.cover_bboxes), candidate tiles come from the boundary
         CSR (`_boundary_index`, kind 0/2 — pre-decoded segments, no
         per-task WKB decode) and the interior CSR (`_interior_index`,
-        kind 1), and the SAME predicate kernels as the cover-join
-        refine decide hits (filtered segments for crossing/touch, raw
-        closed rings for parity/containment — see _tile_groups). A
-        probe's primitives never leave their batch, so (probe_id,
-        region_id) dedup is LOCAL — the join path's global
+        kind 1). Rect/point and segment primitives meet kind-0 tiles
+        in one flat (primitive, tile, segment) pass,
+        `_boundary_prim_hits`, with the cover-join refine's per-row
+        arithmetic. A probe's primitives never leave their batch, so
+        (probe_id, region_id) dedup is LOCAL — the join path's global
         dropDuplicates exchange disappears along with the cover
         shuffle. Output set is identical to the join path
-        (tests/test_q3_index_parity.py sweeps real province geometry).
+        (tests/test_q3_index_parity.py sweeps generated nested
+        boundaries).
         """
         bc, _ = self._boundary_index()
         bi = self._interior_index()
@@ -2798,22 +2824,11 @@ class SpatialEngine:
             SEG, fseg = I["SEG"], I["fseg"]
             icells, iptr, iregion = J["cells"], J["cell_ptr"], J["region"]
             icx0, icy0, icx1, icy1 = J["cx0"], J["cy0"], J["cx1"], J["cy1"]
-            seg_cache: dict[int, tuple] = {}  # tile idx → (raw, filtered)
             probe_cache: dict = {}
             empty = pd.DataFrame({
                 "probe_id": pd.Series([], dtype="int64"),
                 "region_id": pd.Series([], dtype="int64"),
             })
-
-            def tile_segs(t: int) -> tuple:
-                ent = seg_cache.get(t)
-                if ent is None:
-                    r0, r1 = sptr[t], sptr[t + 1]
-                    f0, f1 = fptr[t], fptr[t + 1]
-                    raw = np.ascontiguousarray(SEG[r0:r1, :4])
-                    flt = SEG[fseg[f0:f1], :4]
-                    ent = seg_cache[t] = (raw, flt)
-                return ent
 
             def probe_segs(wkt0: str) -> np.ndarray:
                 ent = probe_cache.get(("segs", wkt0))
@@ -2887,39 +2902,11 @@ class SpatialEngine:
                         hit[m] = predicates.segs_intersect_rects(
                             p_a[pm, 0], p_a[pm, 1], p_a[pm, 2], p_a[pm, 3],
                             tmnx[tm], tmny[tm], tmxx[tm], tmxy[tm])
-                    # rect/seg probe × boundary tile: grouped per tile,
-                    # same kernels as the join refine (_tile_groups)
+                    # rect/seg probe × boundary tile: one flat pass
                     sel = np.nonzero((tk == 0) & (pk != 3))[0]
                     if len(sel):
-                        o = sel[np.argsort(tix[sel], kind="stable")]
-                        tso = tix[o]
-                        starts = np.nonzero(
-                            np.r_[True, tso[1:] != tso[:-1]])[0]
-                        ends = np.append(starts[1:], len(o))
-                        po = prep[o]
-                        a0, a1 = p_a[po, 0], p_a[po, 1]
-                        a2, a3 = p_a[po, 2], p_a[po, 3]
-                        pko = pk[o]
-                        hv = np.zeros(len(o), dtype=bool)
-                        for s0, s1 in zip(starts, ends):
-                            raw, flt = tile_segs(int(tso[s0]))
-                            seg_sel = np.arange(s0, s1)
-                            mrect = pko[seg_sel] == 1
-                            if mrect.any():
-                                rr = seg_sel[mrect]
-                                touch = predicates.segments_in_cells(
-                                    flt, a0[rr], a1[rr], a2[rr], a3[rr])
-                                inside = predicates.points_intersect_prepared(
-                                    a0[rr], a1[rr], raw)
-                                hv[rr] = touch | inside
-                            if (~mrect).any():
-                                ss = seg_sel[~mrect]
-                                cross = predicates.segs_intersect_segs_any(
-                                    a0[ss], a1[ss], a2[ss], a3[ss], flt)
-                                inside = predicates.points_intersect_prepared(
-                                    a0[ss], a1[ss], raw)
-                                hv[ss] = cross | inside
-                        hit[o] = hv
+                        hit[sel] = _boundary_prim_hits(
+                            I, tix[sel], pk[sel], p_a[prep[sel]])
                     # containment rows × boundary-index tiles: one
                     # representative per (prim, cell, region) — pairs
                     # are prim-major / cell-contiguous / region-sorted,

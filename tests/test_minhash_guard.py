@@ -71,6 +71,11 @@ def test_sub_cap_output_identical_to_unguarded(spark, corpora):
     assert len([t for t in guarded if t[0] // 8 == t[1] // 8]) > 42
 
 
+def _shingles(text: str) -> set[str]:
+    w = text.split(" ")
+    return {" ".join(w[i:i + 3]) for i in range(len(w) - 2)}
+
+
 def _py_buckets(texts: dict[int, str], n_hashes=16, band_rows=4) -> Counter:
     """(band, bsig) → bucket size, recomputed in Python from the
     documented arithmetic: distinct word 3-gram shingles, md5-prefix
@@ -79,11 +84,10 @@ def _py_buckets(texts: dict[int, str], n_hashes=16, band_rows=4) -> Counter:
     P = minhash.MH_P
     out = Counter()
     for text in texts.values():
-        w = text.split(" ")
-        if len(w) < 3:
+        if len(text.split(" ")) < 3:
             continue
         h0 = [int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % P
-              for g in {" ".join(w[i:i + 3]) for i in range(len(w) - 2)}]
+              for g in _shingles(text)]
         mh = [min(((2 * i + 3) * h + 7 * i + 11) % P for h in h0)
               for i in range(n_hashes)]
         for b in range(n_hashes // band_rows):
@@ -107,3 +111,28 @@ def test_capped_bucket_rows_on_small_table(spark):
             if n > 50}
     assert len(want) == 4 and {n for _, _, n in want} == {120}
     assert got == want
+
+
+def test_star_drops_member_pair_when_rep_pair_fails(spark):
+    """Star expansion keeps members connected only through verified rep
+    pairs. Docs 1 and 2 are identical (Jaccard 1.0); doc 0, the rep,
+    has their 40 shingles plus 3 whose hashes never win a minimum, so
+    all three share every band bucket, yet its Jaccard with them is
+    40/43 < 0.95. Capped at 2, each bucket pairs only (0, 1) and
+    (0, 2); both fail verification and the true pair (1, 2) is lost."""
+    body = " ".join(f"w{i}" for i in range(42))
+    texts = {0: body + " x2 y2 z2", 1: body, 2: body}
+    buckets = _py_buckets(texts)
+    assert len(buckets) == 4 and set(buckets.values()) == {3}
+    rep_j = len(_shingles(body)) / len(_shingles(texts[0]))
+    assert rep_j < 0.95
+    spark.createDataFrame(sorted(texts.items()), "doc_id long, text string") \
+        .createOrReplaceTempView("mh_star_split")
+
+    def pairs(max_bucket):
+        return sorted(map(tuple, spark.sql(minhash.near_dup_sql(
+            "mh_star_split", min_jaccard=0.95,
+            max_bucket=max_bucket)).collect()))
+
+    assert pairs(None) == [(1, 2, 1.0)]
+    assert pairs(2) == []

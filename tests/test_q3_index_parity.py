@@ -3,12 +3,26 @@ hit-set identical to the cover-join path on every probe shape: the
 index kernel reuses the join refine's predicate kernels over the
 pre-decoded CSR segments (filtered for crossing/touch, raw closed
 rings for parity/containment), so any divergence is a real kernel
-bug, not candidate-generation noise.
+bug, not candidate-generation noise. Runs on a generated
+`fixtures_dense` boundary set (no external files).
 
 Reference semantics under test: QueryGeometry
 (/root/reference/AreaCityQuery.java:179-309)."""
 import pytest
 from pyspark.sql import functions as F
+
+from areacity_query_geometry_spark import fixtures_dense as fd
+from areacity_query_geometry_spark.engine import SpatialEngine
+
+BASE_RES = 9
+
+
+@pytest.fixture(scope="module")
+def dense_engine(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("q3dense") / "dense.json")
+    fd.generate(path, nx=8, ny=8, city_bx=2, city_by=2,
+                prov_bx=4, prov_by=4, pts_per_edge=6)
+    return SpatialEngine.from_geojson(spark, path, base_res=BASE_RES)
 
 
 def _checksums(eng, probes):
@@ -48,12 +62,12 @@ PROBES = {
 
 
 @pytest.mark.parametrize("shape", sorted(PROBES))
-def test_index_path_matches_join_path(spark, province_engine, shape):
-    eng = province_engine
+def test_index_path_matches_join_path(spark, dense_engine, shape):
+    eng = dense_engine
     assert eng._boundary_index() is not None \
         and eng._interior_index() is not None, \
         "fixture must exercise the index path"
-    # a lattice of probe windows sweeping the province extent, sized
+    # a lattice of probe windows sweeping the fixture extent, sized
     # from tiny (sub-tile) to huge (region ⊂ probe), so every kernel
     # branch — rect overlap, seg crossing, probe⊂region, region⊂probe
     # — fires at least once
@@ -61,9 +75,9 @@ def test_index_path_matches_join_path(spark, province_engine, shape):
     pid = 0
     for i in range(6):
         for j in range(6):
-            for size in (0.05, 0.8, 6.0):
-                x0 = 97.0 + i * 5.1
-                y0 = 21.0 + j * 4.3
+            for size in (0.1, 1.6, 12.0):
+                x0 = 74.0 + i * 10.2
+                y0 = 19.0 + j * 6.0
                 f = dict(x0=x0, y0=y0, x1=x0 + size, y1=y0 + size,
                          xm=x0 + size / 2, ym=y0 + size / 2)
                 rows.append((pid, PROBES[shape].format(**f)))
@@ -74,25 +88,26 @@ def test_index_path_matches_join_path(spark, province_engine, shape):
     assert with_index == _join_path(eng, probes)
 
 
-def test_where_filter_rides_index_path(spark, province_engine):
+def test_where_filter_rides_index_path(spark, dense_engine):
     # `where` rides the index path as an in-kernel keep-region array
     # (since late r4) — only matching regions return, and the hit set
     # equals the cover-join path's LEFT SEMI pruning.
-    eng = province_engine
+    eng = dense_engine
     probes = spark.createDataFrame(
         [(0, "POLYGON ((110 20, 116 20, 116 26, 110 26, 110 20))"),
          (1, "LINESTRING (108 22, 118 36)")],
         "probe_id long, wkt string")
-    wh = "name = '广东省'"
+    wh = "deep = 1"
     out = eng.query_geometry(probes, where=wh)
-    names = {r["name"] for r in out.select("name").distinct().collect()}
-    assert names == {"广东省"}
+    deeps = {int(r["deep"]) for r in out.select("deep").distinct().collect()}
+    assert deeps == {1}
 
     def sums():
         o = eng.query_geometry(probes, where=wh, with_props=False)
         return sorted((r.probe_id, r.region_id) for r in o.collect())
 
     with_index = sums()
+    assert with_index
     saved = (eng._bindex, eng._bindex_off)
     try:
         eng._bindex, eng._bindex_off = None, True
@@ -101,21 +116,21 @@ def test_where_filter_rides_index_path(spark, province_engine):
         eng._bindex, eng._bindex_off = saved
 
 
-def test_cell_aligned_edge_probes_parity(spark, province_engine):
-    # adversarial alignment: probes sitting EXACTLY on res-10 cell
-    # borders (w = 360/2^10 = 0.3515625, dyadic — exact in fp), where
+def test_cell_aligned_edge_probes_parity(spark, dense_engine):
+    # adversarial alignment: probes sitting EXACTLY on res-9 cell
+    # borders (w = 360/2^9 = 0.703125, dyadic — exact in fp), where
     # cover/candidate generation is most at risk of diverging between
     # the index lookup and the equi-join: degenerate point-rects on
     # cell corners, zero-height rects along cell edges, segments
     # running down a shared border, and rects exactly one cell wide.
-    eng = province_engine
-    w = 0.3515625
+    eng = dense_engine
+    w = 0.703125
     rows = []
     pid = 0
     for i in range(24):
-        x = 94.921875 + i * w        # exact multiples of the cell width
+        x = 73.828125 + i * w        # exact multiples of the cell width
         for j in range(10):
-            y = 19.6875 + j * 2 * w
+            y = 18.28125 + j * 2 * w
             for wkt in (
                 f"POINT ({x} {y})",
                 f"POLYGON (({x} {y}, {x + w} {y}, {x + w} {y}, "
@@ -133,10 +148,10 @@ def test_cell_aligned_edge_probes_parity(spark, province_engine):
     assert with_index == _join_path(eng, probes)
 
 
-def test_interior_budget_fallback(spark, province_engine):
+def test_interior_budget_fallback(spark, dense_engine):
     # past the interior-index row ceiling Q3 must keep the cover-join
     # plan (the index path needs BOTH CSRs) — and return the same hits
-    eng = province_engine
+    eng = dense_engine
     probes = spark.createDataFrame(
         [(0, "POLYGON ((100 25, 106 25, 106 31, 100 31, 100 25))")],
         "probe_id long, wkt string")
@@ -153,8 +168,8 @@ def test_interior_budget_fallback(spark, province_engine):
         eng._iindex, eng._iindex_off = saved
 
 
-def test_empty_and_miss_probes(spark, province_engine):
-    eng = province_engine
+def test_empty_and_miss_probes(spark, dense_engine):
+    eng = dense_engine
     probes = spark.createDataFrame(
         [(0, "POLYGON EMPTY"), (1, "POINT (0 0)"),
          (2, "LINESTRING (1 1, 2 2)")],
