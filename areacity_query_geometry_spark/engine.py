@@ -27,12 +27,16 @@ vectorized Arrow refine.
 """
 from __future__ import annotations
 
+import os
+import sys
 import time
+import zipimport
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from pyspark import SparkFiles
 from pyspark.sql import (
     DataFrame, Observation, SparkSession, Window, functions as F,
 )
@@ -119,6 +123,22 @@ def _best_segment_by_hav_proxy(px: np.ndarray, py: np.ndarray,
             np.asarray(distance.haversine(bx[None, :], by[None, :], P, Q))),
         np.asarray(distance.haversine(mx[None, :], my[None, :], P, Q)))
     return d.argmin(axis=1)
+
+
+def _drop_spark_zip_importers() -> None:
+    """Drop the cached importers of Spark's own zip archives (pyspark.zip,
+    py4j, the Spark jars). PySpark calls `importlib.invalidate_caches()`
+    at the start of every task, and each cached importer then rereads its
+    archive's whole directory: ~0.2 CPU-s a task on CPython 3.11. A later
+    import recreates them from `zipimport._zip_directory_cache`, and the
+    archives never change while a worker lives. Importers under the
+    SparkFiles root (`addPyFile` zips, which can be replaced) stay."""
+    root = SparkFiles._root_directory  # set on workers only
+    root = os.path.join(root, "") if root else None
+    for path, imp in list(sys.path_importer_cache.items()):
+        if isinstance(imp, zipimport.zipimporter) and not (
+                root and imp.archive.startswith(root)):
+            sys.path_importer_cache.pop(path, None)
 
 
 def _ranges(starts, cnt: np.ndarray):
@@ -315,7 +335,8 @@ def _make_refine_fn(id_cols: tuple[str, ...]):
     crossing/on-segment kernel, reduced back per pair with bincount.
     Tile WKB decodes are cached across batches for the task's lifetime.
     `id_cols` pass through opaquely (point_id, or (doc_id, span_idx)
-    for the docs-table join)."""
+    for the docs-table join). Each batch first calls
+    `_drop_spark_zip_importers`, as every worker-side function does."""
     id_list = list(id_cols)
 
     def _empty(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -332,6 +353,7 @@ def _make_refine_fn(id_cols: tuple[str, ...]):
         # streams only the (contiguous) point slices from memory.
         registry: dict[tuple, tuple] = {}
         for pdf in it:
+            _drop_spark_zip_importers()
             if len(pdf) == 0:
                 yield _empty(pdf)
                 continue
@@ -703,12 +725,14 @@ def _make_index_refine_fn(id_cols: tuple[str, ...], bc,
     resolves both kinds in `_make_regions_udf`). Compared with the
     join-based refine, probe rows stream through UNSHUFFLED and no
     per-pair tile WKB crosses Arrow (measured on the dense fixture:
-    3.8M pairs ≈ 0.9 GB Arrow traffic per 10M probes)."""
+    3.8M pairs ≈ 0.9 GB Arrow traffic per 10M probes). Each batch first
+    calls `_drop_spark_zip_importers`."""
     id_list = list(id_cols)
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idx = bc.value  # unpickled once per worker process, reused
         for pdf in it:
+            _drop_spark_zip_importers()
             _, (hr, hg) = _index_point_hits(
                 idx, np.asarray(pdf["lng"], dtype=np.float64),
                 np.asarray(pdf["lat"], dtype=np.float64),
@@ -731,13 +755,15 @@ def _make_regions_udf(ib, bb, keep: np.ndarray | None = None,
 
     counts=True returns struct<region_id array<bigint>, interior int>
     instead, `interior` being how many of the ids are interior hits —
-    what `query_points_with_metrics` observes before the explode."""
+    what `query_points_with_metrics` observes before the explode. Each
+    batch first calls `_drop_spark_zip_importers`."""
     ids_type = ArrayType(LongType())
     out_type = (StructType([StructField("region_id", ids_type),
                             StructField("interior", IntegerType())])
                 if counts else ids_type)
 
     def regions(lng: pa.Array, lat: pa.Array, cell: pa.Array) -> pa.Array:
+        _drop_spark_zip_importers()
         n = len(cell)
         if cell.null_count:
             cell = cell.fill_null(-1)  # cell ids are never negative
@@ -913,11 +939,12 @@ def _make_nearest_udf(ib, bb, tol: float, base_res: int, k: int,
     reduced to the nearest `k` regions per deep level
     (`_nearest_per_deep`). ib / bb and `keep` as in `_make_regions_udf`;
     the per-tile `deep` array of the boundary index maps candidates to
-    their level."""
+    their level. Each batch first calls `_drop_spark_zip_importers`."""
     out_type = ArrayType(StructType([StructField("region_id", LongType()),
                                      StructField("dist_m", DoubleType())]))
 
     def nearest(lng: pa.Array, lat: pa.Array, cell: pa.Array) -> pa.Array:
+        _drop_spark_zip_importers()
         n = len(cell)
         if cell.null_count:
             cell = cell.fill_null(-1)  # cell ids are never negative
@@ -1388,6 +1415,7 @@ class SpatialEngine:
         the already-columnar arrays (one toPandas of ~the WKB volume,
         bounded by the budget) and broadcasts them — workers unpickle
         the index once per process and reuse it across tasks and jobs.
+        The decode calls `_drop_spark_zip_importers` per batch.
         """
         if self._bindex is not None:
             return self._bindex
@@ -1412,6 +1440,7 @@ class SpatialEngine:
 
         def extract(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in it:
+                _drop_spark_zip_importers()
                 segs = []
                 for w in pdf["tile_wkb"]:
                     if w is None:
@@ -1749,8 +1778,6 @@ class SpatialEngine:
         one-pass plan observes the UDF's per-probe interior-hit count
         before the explode, so metrics run the same plan as
         query_points."""
-        from pyspark.sql import Observation
-
         obs_i, obs_r = Observation(), Observation()
         out = self._match_points(points, where, lng, lat,
                                  observers=(obs_i, obs_r))
@@ -1937,7 +1964,8 @@ class SpatialEngine:
         uses it: the one-pass plan judges each row alone, while the
         two-stage plan drops a row from the miss set when another row
         with the same point_id hit Q1, and merges the candidates of
-        equal-id misses before picking the nearest.
+        equal-id misses before picking the nearest. Every worker-side
+        function here calls `_drop_spark_zip_importers` per batch.
         """
         pts = points.select(
             F.col("point_id"), F.col(lng).alias("lng"), F.col(lat).alias("lat")
@@ -2023,6 +2051,7 @@ class SpatialEngine:
                 # per-row Python on the (potentially billions-of-docs)
                 # miss set.
                 for pdf in it:
+                    _drop_spark_zip_importers()
                     pid = pdf["point_id"].to_numpy()
                     px = pdf["lng"].to_numpy(dtype=np.float64)
                     py = pdf["lat"].to_numpy(dtype=np.float64)
@@ -2085,6 +2114,7 @@ class SpatialEngine:
             polygon×polygon test for all but razor-edge candidates."""
             cos_pi24 = np.cos(np.pi / 24)
             for pdf in it:
+                _drop_spark_zip_importers()
                 pids, rids, ds = [], [], []
                 for (rid, mnx, mny, mxx, mxy, twkb), grp in pdf.groupby(
                         ["region_id", "minx", "miny", "maxx", "maxy",
@@ -2175,7 +2205,8 @@ class SpatialEngine:
         (point_id, region_id, dist_m) per kept (point, tile) pair from
         `_tolerance_pairs`, for `_finish_tolerance` to reduce. Used only
         when the one-pass plan does not apply (e.g. the interior index
-        off or over budget, or the salted path)."""
+        off or over budget, or the salted path). Each batch first calls
+        `_drop_spark_zip_importers`."""
         bc, _ = self._boundary_index()
         base_res = self.base_res
         tol = float(tol_m)
@@ -2188,6 +2219,7 @@ class SpatialEngine:
         def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             I = bc.value
             for pdf in it:
+                _drop_spark_zip_importers()
                 prow, tix, d = _tolerance_pairs(
                     I, pdf["lng"].to_numpy(dtype=np.float64),
                     pdf["lat"].to_numpy(dtype=np.float64), tol, base_res,
@@ -2804,7 +2836,7 @@ class SpatialEngine:
         dropDuplicates exchange disappears along with the cover
         shuffle. Output set is identical to the join path
         (tests/test_q3_index_parity.py sweeps generated nested
-        boundaries).
+        boundaries). Each batch first calls `_drop_spark_zip_importers`.
         """
         bc, _ = self._boundary_index()
         bi = self._interior_index()
@@ -2857,6 +2889,7 @@ class SpatialEngine:
                             px_t[sel], py_t[sel], ent)
 
             for pdf in it:
+                _drop_spark_zip_importers()
                 dec = _decompose_probe_batch(pdf)
                 if dec is None:
                     yield empty
@@ -3006,7 +3039,8 @@ class SpatialEngine:
         BROADCAST-INDEX refine (`_geometry_index_refine`) — zero
         shuffle Exchanges, no per-task WKB decode, local dedup;
         `where` rides along as an in-kernel keep-region array.
-        Past-budget sets run the cover-join plan below.
+        Past-budget sets run the cover-join plan below. Both plans'
+        functions call `_drop_spark_zip_importers` per batch.
         """
         if self._boundary_index() is not None \
                 and self._interior_index() is not None:
@@ -3034,18 +3068,9 @@ class SpatialEngine:
             # cell cover is ONE vectorized cover_bboxes call per Arrow
             # batch — no per-segment Python.
             for pdf in it:
+                _drop_spark_zip_importers()
                 dec = _decompose_probe_batch(pdf)
-                if dec is None:
-                    yield pd.DataFrame({
-                        "probe_id": pd.Series([], dtype="int64"),
-                        "p0": pd.Series([], dtype="float64"),
-                        "p1": pd.Series([], dtype="float64"),
-                        "p2": pd.Series([], dtype="float64"),
-                        "p3": pd.Series([], dtype="float64"),
-                        "pkind": pd.Series([], dtype="int64"),
-                        "wkt": pd.Series([], dtype=object),
-                        "cell_id": pd.Series([], dtype="int64"),
-                    })
+                if dec is None:  # no primitive rows: nothing to cover
                     continue
                 pid_a, kind_a, p_a, wkt_a, bb_a = dec
                 rep, cid = grid.cover_bboxes(
@@ -3154,6 +3179,7 @@ class SpatialEngine:
                 return order, starts, ends, segs_at, xsegs_at
 
             for pdf in it:
+                _drop_spark_zip_importers()
                 n = len(pdf)
                 if n == 0:
                     yield pd.DataFrame({"probe_id": pd.Series([], dtype="int64"),

@@ -3,6 +3,7 @@ strategy. Measured basis (BENCH/TOWNSHIP.md r4 re-measure): at 1.04M
 tiles / 0.3 GB boundary WKB, whole-table broadcast is the losing leg
 even though the row count sits far under the 3M ceiling — so "auto"
 must look at bytes, and the per-branch boundary broadcast must too.
+Runs on a generated `fixtures_dense` boundary set (no external files).
 """
 import pytest
 from pyspark.sql import functions as F
@@ -16,71 +17,73 @@ def _pts(spark, pts):
         "point_id long, lng double, lat double")
 
 
-PROBES = [(114.044346, 22.691963), (116.407526, 39.904030),
-          (121.473701, 31.230416), (0.0, 0.0), (108.0, 34.0)]
+# four probes inside the fixture extent (lng 73-135, lat 18-54), each
+# in a district, a city and a province, and one far outside it
+PROBES = [(80.3, 24.1), (97.7, 41.2), (121.4, 31.2), (0.0, 0.0),
+          (128.9, 50.6)]
 
 
 class TestAutoResolution:
-    def test_fixture_resolves_broadcast(self, province_engine):
-        # the province fixture is tiny on both axes → broadcast
-        assert province_engine._broadcast_tiles_cfg == "auto"
-        assert province_engine.broadcast_tiles is True
+    def test_fixture_resolves_broadcast(self, dense_engine):
+        # the generated fixture is tiny on both axes → broadcast
+        assert dense_engine._broadcast_tiles_cfg == "auto"
+        assert dense_engine.broadcast_tiles is True
 
-    def test_byte_budget_refuses_broadcast(self, spark, province_engine):
+    def test_byte_budget_refuses_broadcast(self, spark, dense_engine):
         eng = SpatialEngine(
-            spark, province_engine.boundaries, province_engine.tiles,
-            base_res=province_engine.base_res, broadcast_wkb_budget=0)
+            spark, dense_engine.boundaries, dense_engine.tiles,
+            base_res=dense_engine.base_res, broadcast_wkb_budget=0)
         assert eng.broadcast_tiles is False
 
-    def test_explicit_pin_wins(self, spark, province_engine):
+    def test_explicit_pin_wins(self, spark, dense_engine):
         eng = SpatialEngine(
-            spark, province_engine.boundaries, province_engine.tiles,
-            base_res=province_engine.base_res, broadcast_tiles=True,
+            spark, dense_engine.boundaries, dense_engine.tiles,
+            base_res=dense_engine.base_res, broadcast_tiles=True,
             broadcast_wkb_budget=0)
         assert eng.broadcast_tiles is True
 
-    def test_setter_revalidates(self, spark, province_engine):
+    def test_setter_revalidates(self, spark, dense_engine):
         eng = SpatialEngine(
-            spark, province_engine.boundaries, province_engine.tiles,
-            base_res=province_engine.base_res)
+            spark, dense_engine.boundaries, dense_engine.tiles,
+            base_res=dense_engine.base_res)
         with pytest.raises(ValueError):
             eng.broadcast_tiles = 1  # int is not a pin
 
-    def test_wkb_stat_cached_once(self, province_engine):
-        a = province_engine._boundary_wkb_bytes()
+    def test_wkb_stat_cached_once(self, dense_engine):
+        a = dense_engine._boundary_wkb_bytes()
         assert a > 0
-        assert province_engine._boundary_wkb_bytes() is not None
-        assert province_engine._wkb_bytes == a
+        assert dense_engine._boundary_wkb_bytes() is not None
+        assert dense_engine._wkb_bytes == a
 
 
 class TestAutoFallbackParity:
-    def test_per_branch_leg_matches_broadcast(self, spark, province_engine):
+    def test_per_branch_leg_matches_broadcast(self, spark, dense_engine):
         """Force the auto rule onto the per-branch path (byte budget 0
         also disables the boundary-branch broadcast AND the boundary
         index) and require identical hits to the broadcast engine —
         the same cross-leg equality TOWNSHIP hash-checks at 1M tiles."""
         eng = SpatialEngine(
-            spark, province_engine.boundaries, province_engine.tiles,
-            base_res=province_engine.base_res, broadcast_wkb_budget=0)
+            spark, dense_engine.boundaries, dense_engine.tiles,
+            base_res=dense_engine.base_res, broadcast_wkb_budget=0)
         assert eng.broadcast_tiles is False
         probes = _pts(spark, PROBES)
         got = sorted((r["point_id"], r["region_id"]) for r in
                      eng.query_points(probes, with_props=False).collect())
         want = sorted((r["point_id"], r["region_id"]) for r in
-                      province_engine.query_points(
+                      dense_engine.query_points(
                           probes, with_props=False).collect())
         assert got == want
-        assert len(want) >= 3  # the three on-land probes all resolve
+        assert len({p for p, _ in want}) >= 3  # in-extent probes resolve
 
-    def test_store_meta_seeds_stats(self, spark, province_engine, tmp_path):
+    def test_store_meta_seeds_stats(self, spark, dense_engine, tmp_path):
         from areacity_query_geometry_spark.sources import tile_store
 
         path = str(tmp_path / "store")
-        tile_store.save(province_engine, path,
-                        {"base_res": province_engine.base_res,
+        tile_store.save(dense_engine, path,
+                        {"base_res": dense_engine.base_res,
                          "max_res": 14, "seg_budget": 48})
         eng = tile_store.load(spark, path)
         # stats seeded from _meta.json — resolving "auto" runs no job
-        assert eng._wkb_bytes == province_engine._boundary_wkb_bytes()
-        assert eng._kind_counts == province_engine._tile_counts_by_kind()
+        assert eng._wkb_bytes == dense_engine._boundary_wkb_bytes()
+        assert eng._kind_counts == dense_engine._tile_counts_by_kind()
         assert eng.broadcast_tiles is True

@@ -12,7 +12,7 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from areacity_query_geometry_spark import fixtures_dense as fd, tiler
+from areacity_query_geometry_spark import tiler
 from areacity_query_geometry_spark.engine import SLABS, SpatialEngine
 
 BASE_RES = 9
@@ -20,11 +20,8 @@ WHERE = "deep = 2"
 
 
 @pytest.fixture(scope="module")
-def engine(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("bidx") / "dense.json")
-    fd.generate(path, nx=8, ny=8, city_bx=2, city_by=2,
-                prov_bx=4, prov_by=4, pts_per_edge=6)
-    return SpatialEngine.from_geojson(spark, path, base_res=BASE_RES)
+def engine(dense_engine):
+    return dense_engine
 
 
 def _variant(engine, **kw):

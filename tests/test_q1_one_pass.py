@@ -18,23 +18,20 @@ from collections import Counter
 import numpy as np
 import pytest
 
-from areacity_query_geometry_spark import docs, fixtures_dense as fd
+from areacity_query_geometry_spark import docs
 from areacity_query_geometry_spark.engine import SpatialEngine
 
 BASE_RES = 9
 
 
 @pytest.fixture(scope="module")
-def fixture_path(tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("q1dense") / "dense.json")
-    fd.generate(path, nx=8, ny=8, city_bx=2, city_by=2,
-                prov_bx=4, prov_by=4, pts_per_edge=6)
-    return path
+def fixture_path(dense_geojson):
+    return dense_geojson
 
 
 @pytest.fixture(scope="module")
-def engines(spark, fixture_path):
-    one = SpatialEngine.from_geojson(spark, fixture_path, base_res=BASE_RES)
+def engines(spark, dense_engine):
+    one = dense_engine
 
     def variant(**kw):
         return SpatialEngine(spark, one.boundaries, one.tiles, BASE_RES, **kw)

@@ -43,12 +43,8 @@ def _variants(spark, one):
 
 
 @pytest.fixture(scope="module")
-def engines(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("q2dense") / "dense.json")
-    fd.generate(path, nx=8, ny=8, city_bx=2, city_by=2,
-                prov_bx=4, prov_by=4, pts_per_edge=6)
-    return _variants(spark, SpatialEngine.from_geojson(
-        spark, path, base_res=BASE_RES))
+def engines(spark, dense_engine):
+    return _variants(spark, dense_engine)
 
 
 def _near_radius(tol_m, n, seed):

@@ -11,19 +11,6 @@ Reference semantics under test: QueryGeometry
 import pytest
 from pyspark.sql import functions as F
 
-from areacity_query_geometry_spark import fixtures_dense as fd
-from areacity_query_geometry_spark.engine import SpatialEngine
-
-BASE_RES = 9
-
-
-@pytest.fixture(scope="module")
-def dense_engine(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("q3dense") / "dense.json")
-    fd.generate(path, nx=8, ny=8, city_bx=2, city_by=2,
-                prov_bx=4, prov_by=4, pts_per_edge=6)
-    return SpatialEngine.from_geojson(spark, path, base_res=BASE_RES)
-
 
 def _checksums(eng, probes):
     out = eng.query_geometry(probes, with_props=False)
@@ -175,3 +162,6 @@ def test_empty_and_miss_probes(spark, dense_engine):
          (2, "LINESTRING (1 1, 2 2)")],
         "probe_id long, wkt string")
     assert eng.query_geometry(probes, with_props=False).count() == 0
+    assert _join_path(eng, probes) == (0, 0)
+    # a batch of empty geometries decomposes to no cover rows at all
+    assert _join_path(eng, probes.filter("probe_id = 0")) == (0, 0)
