@@ -17,12 +17,14 @@ answers one coordinate per call; this engine answers them all in one
 distributed join.
 
 Hot-path shape (Q1): probe cell_id is ONE codegen'd SQL expression per
-point; while both broadcast tile indexes fit their budgets, one scalar
-Arrow UDF resolves every probe's regions from (lng, lat, cell_id) in a
-single pass over the probe, whose id columns never leave the JVM. Past
-a budget the tile join is a plain equi-join (broadcast when the tile
-set fits, sort-merge otherwise) whose interior hits (kind=1) stay in
-the JVM, and only points in boundary-ish cells cross into the
+point. Each verb has two plans. While both broadcast tile indexes fit
+the engine's broadcast ceilings (`broadcast_wkb_budget`,
+`interior_broadcast_rows`), one scalar Arrow UDF resolves every
+probe's regions from (lng, lat, cell_id) in a single pass over the
+probe, whose id columns never leave the JVM. Otherwise the join
+fallback runs: a plain equi-join with the tiles (broadcast when the
+tile set fits, sort-merge otherwise) whose interior hits (kind=1) stay
+in the JVM, and only points in boundary-ish cells cross into the
 vectorized Arrow refine.
 """
 from __future__ import annotations
@@ -719,14 +721,12 @@ def _index_point_hits(I: dict, px: np.ndarray, py: np.ndarray,
 def _make_index_refine_fn(id_cols: tuple[str, ...], bc,
                           keep: np.ndarray | None = None):
     """Boundary-only refine against the broadcast boundary index, as a
-    mapInPandas function over (*id_cols, lng, lat, cell_id) batches →
-    (*id_cols, region_id). The Q1 union plan's boundary leg when the
-    interior index is off or over budget (the one-pass plan otherwise
-    resolves both kinds in `_make_regions_udf`). Compared with the
-    join-based refine, probe rows stream through UNSHUFFLED and no
-    per-pair tile WKB crosses Arrow (measured on the dense fixture:
-    3.8M pairs ≈ 0.9 GB Arrow traffic per 10M probes). Each batch first
-    calls `_drop_spark_zip_importers`."""
+    mapInPandas-style function over (*id_cols, lng, lat, cell_id)
+    batches → (*id_cols, region_id). No query plan uses it: Q1 resolves
+    both tile kinds in `_make_regions_udf`. It serves only the
+    kernel timers: perfbench's `engine.q1.refine_kernel_s`,
+    `tools/kernel_profile.py` and `tools/micro_index_refine.py`. Each
+    batch first calls `_drop_spark_zip_importers`."""
     id_list = list(id_cols)
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1158,9 +1158,7 @@ class SpatialEngine:
         probe_salt: int = 8,
         interior_broadcast_rows: int = 12_000_000,
         boundary_broadcast_rows: int = 1_500_000,
-        boundary_index_wkb_bytes: int = 128 << 20,
         broadcast_wkb_budget: int = 128 << 20,
-        interior_index_rows: int = 12_000_000,
         geodesic_refine: bool = False,
     ):
         """broadcast_tiles: "auto" (default) resolves LAZILY from the
@@ -1196,33 +1194,24 @@ class SpatialEngine:
         the entire probe table (trillions of rows at the 100-TB
         target). The boundary branch carries tile_wkb, so its ceiling
         is lower. Past both ceilings the join degrades gracefully to
-        the salted sort-merge path.
+        the salted sort-merge path. interior_broadcast_rows also gates
+        the INTERIOR (kind=1) cell→region CSR index
+        (`_interior_index`): the same 16-byte rows, shipped once per
+        worker.
 
         broadcast_wkb_budget: boundary tile-WKB byte ceiling for ANY
         broadcast that carries tile_wkb — the "auto" whole-table
-        resolution above AND the per-branch boundary broadcast on the
+        resolution above, the per-branch boundary broadcast on the
         broadcast_tiles=False path (its row ceiling alone cannot see a
-        set of few-but-huge tiles). Same 128 MB default as the index
-        budget: both price the same once-per-worker memory regime.
+        set of few-but-huge tiles), AND the pre-decoded boundary-tile
+        index (`_boundary_index`), which is ~4× the WKB bytes held once
+        per Python worker: the 128 MB default prices a ~0.5 GB
+        worker-side index, the in-memory-index regime the reference
+        runs its whole process in.
 
-        boundary_index_wkb_bytes: WKB-byte budget for the broadcast
-        boundary-tile index (the unshuffled Q1 boundary refine). The
-        decoded index is ~4× the WKB bytes, held once per Python
-        worker — the default prices a ~0.5 GB worker-side index, the
-        same in-memory-index regime the reference runs its whole
-        process in. Past the budget the boundary leg falls back to the
-        join-based refine (broadcast or salted SMJ per the row
-        ceilings). 0 disables the index path.
-
-        interior_index_rows: row ceiling for the INTERIOR (kind=1)
-        cell→region CSR broadcast that the one-pass Q1 and Q2 plans
-        and the Q3 geometry-intersects index path need alongside the
-        boundary index. Interior rows are 16 bytes each
-        ((cell_id, region_id) — rects reconstruct from the cell id),
-        so the 12M default matches `interior_broadcast_rows`'
-        ~200MB-once-per-executor budget. Past the ceiling Q1 falls back
-        to the union plan (interior equi-join + boundary refine), Q2 to
-        the two-stage plan and Q3 to the cover-join plan. 0 disables."""
+        With both indexes within their ceilings (and no salted shuffle
+        path), Q1 and Q2 answer in one pass over the probe and Q3 from
+        the indexes; otherwise each takes its join fallback."""
         self.spark = spark
         self.boundaries = boundaries
         self.tiles = tiles
@@ -1244,9 +1233,7 @@ class SpatialEngine:
         self.probe_salt = max(1, probe_salt)
         self.interior_broadcast_rows = interior_broadcast_rows
         self.boundary_broadcast_rows = boundary_broadcast_rows
-        self.boundary_index_wkb_bytes = boundary_index_wkb_bytes
         self.broadcast_wkb_budget = broadcast_wkb_budget
-        self.interior_index_rows = interior_index_rows
         self._kind_counts: dict[int, int] | None = None
         self._bindex: tuple | None = None  # (Broadcast, bcells_df)
         self._bindex_off = False
@@ -1409,8 +1396,8 @@ class SpatialEngine:
         distance use.
 
         Returns (Broadcast, bcells_df) or None when the boundary WKB
-        volume exceeds `boundary_index_wkb_bytes` (the join-based
-        refine paths take over). WKB decode runs DISTRIBUTED
+        volume exceeds `broadcast_wkb_budget` (the join fallbacks take
+        over). WKB decode runs DISTRIBUTED
         (mapInPandas over the tile table); the driver only concatenates
         the already-columnar arrays (one toPandas of ~the WKB volume,
         bounded by the budget) and broadcasts them — workers unpickle
@@ -1419,9 +1406,9 @@ class SpatialEngine:
         """
         if self._bindex is not None:
             return self._bindex
-        if self._bindex_off or self.boundary_index_wkb_bytes <= 0:
+        if self._bindex_off:
             return None
-        if self._boundary_wkb_bytes() > self.boundary_index_wkb_bytes:
+        if self._boundary_wkb_bytes() > self.broadcast_wkb_budget:
             self._bindex_off = True
             return None
         tb = self.tiles.filter(F.col("kind") != 1)
@@ -1474,13 +1461,13 @@ class SpatialEngine:
         Q1/Q2 plans and the Q3 index path need it because
         `_boundary_index` deliberately holds only kind≠1 tiles. Returns
         the Broadcast or None when the interior row count exceeds
-        `interior_index_rows` (Q1 then takes the union plan, Q2 the
-        two-stage plan, Q3 the join plan)."""
+        `interior_broadcast_rows` (Q1, Q2 and Q3 then take their join
+        fallbacks)."""
         if self._iindex is not None:
             return self._iindex
-        if self._iindex_off or self.interior_index_rows <= 0:
+        if self._iindex_off:
             return None
-        if self._tile_kind_counts()[0] > self.interior_index_rows:
+        if self._tile_kind_counts()[0] > self.interior_broadcast_rows:
             self._iindex_off = True
             return None
         pdf = (self.tiles.filter(F.col("kind") == 1)
@@ -1528,8 +1515,10 @@ class SpatialEngine:
 
     def _one_pass_indexes(self) -> tuple | None:
         """(interior, boundary) index Broadcasts when the one-pass Q1/Q2
-        plans apply — both indexes within budget and no salted shuffle
-        path — else None."""
+        plans apply — no salted shuffle path, the boundary branch
+        broadcastable, and both indexes within their broadcast ceilings
+        (`broadcast_wkb_budget`, `interior_broadcast_rows`) — else None,
+        and Q1/Q2 take their join fallbacks. The only plan switch."""
         if not self.broadcast_tiles and self.salt_buckets > 1:
             return None
         bidx = self._boundary_index() if self._boundary_broadcastable() \
@@ -1553,12 +1542,12 @@ class SpatialEngine:
         dense fixture's docs join ~80% of geo spans land in boundary
         cells, so sending only those would save little).
 
-        Otherwise (an index off or over its budget, or the salted
-        shuffle path) the union plan: kind=1 hits by an equi-join that
-        stays in the JVM, UNION the kind 0/2 rows through a mapInPandas
-        refine. A point hits at most one tile tree per region by
-        construction, and same-key sub-tiles are deduped inside the
-        refine, so neither plan needs a dedup shuffle.
+        Otherwise (an index over its ceiling, or the salted shuffle
+        path) the join fallback: kind=1 hits by an equi-join that stays
+        in the JVM, UNION the kind 0/2 rows through a tile join and a
+        mapInPandas refine. A point hits at most one tile tree per
+        region by construction, and same-key sub-tiles are deduped
+        inside the refine, so neither plan needs a dedup shuffle.
 
         observers: optional (interior_obs, refined_obs) Observation pair
         — each gets {"rows": n}, the interior and refined hit rows (the
@@ -1567,8 +1556,8 @@ class SpatialEngine:
         probe = self._probe_cells(points, lng, lat)
         idx = self._one_pass_indexes()
         if idx is not None:
-            # one-pass index plan; the union plan below runs only when
-            # an index is off or over its budget
+            # one-pass index plan; the join fallback below runs only
+            # when an index is over its ceiling or on the salted path
             hits = _make_regions_udf(
                 *idx, self._keep_region_ids(where),
                 counts=observers is not None)(
@@ -1637,66 +1626,39 @@ class SpatialEngine:
                 bcast_b = self._boundary_broadcastable()
                 tiles_b = (F.broadcast(tb) if bcast_b
                            else tb.hint("shuffle_merge"))
-            bidx = self._boundary_index() if bcast_b else None
             interior = probe.join(tiles_i, "cell_id") \
                             .select(*id_cols, "region_id")
-            if bidx is not None:
-                # broadcast-index refine: the probe side streams through
-                # UNSHUFFLED — skinny semi-join against the index's cell
-                # list, then pairs form inside the kernel against the
-                # worker-resident pre-decoded index. No repartition, no
-                # per-pair tile_wkb duplication through Arrow. `where`
-                # (since late r4) rides along as a sorted keep-region
-                # array applied in-kernel — the LEFT SEMI tile filter's
-                # twin, so filtered queries stay zero-shuffle too.
-                bc, bcells_df = bidx
-                brows = None
-                bpts = probe.join(F.broadcast(bcells_df),
-                                  "cell_id", "left_semi")
-                sel = bpts.select(
-                    *id_cols, F.col(lng).alias("lng"),
-                    F.col(lat).alias("lat"), "cell_id")
-                refine_schema = StructType(
-                    [points.schema[c] for c in id_cols]
-                    + [StructField("region_id", LongType())])
-                refined = sel.mapInPandas(
-                    _make_index_refine_fn(
-                        id_cols, bc, self._keep_region_ids(where)),
-                    refine_schema)
-            else:
-                # join-based refine (boundary set past the index
-                # budget): skinny semi-join first — only
-                # probes in boundary-ish cells survive, ONE row each (no
-                # fan-out), then repartition by (cell, salt) so the
-                # refine sees cell-contiguous batches — each tile
-                # decodes on one task and its points arrive as one dense
-                # group. The salt splits dense-city hot cells.
-                # the distinct-cells list is far smaller than the
-                # boundary tile rows (no wkb, deduped) — broadcast it
-                # whenever the boundary branch itself is broadcastable
-                # (the hint does not survive the distinct aggregate, so
-                # re-apply explicitly)
-                bcells = tiles_b.select("cell_id").distinct()
-                if self.broadcast_tiles or bcast_b:
-                    bcells = F.broadcast(bcells)
-                bpts = probe.join(bcells, "cell_id", "left_semi")
-                n_parts = self.spark.sparkContext.defaultParallelism
-                salt = F.pmod(F.xxhash64(F.col(lng), F.col(lat)),
-                              F.lit(self.probe_salt)).cast("int")
-                bpts = bpts.repartition(n_parts, F.col("cell_id"), salt)
-                brows = bpts.join(tiles_b, "cell_id")
-        if brows is not None:
-            boundary = brows.select(
-                *id_cols, F.col(lng).alias("lng"), F.col(lat).alias("lat"),
-                "cell_id", "region_id", "kind", "minx", "miny", "maxx",
-                "maxy", "tile_wkb",
-            )
-            refine_schema = StructType(
-                [points.schema[c] for c in id_cols]
-                + [StructField("region_id", LongType())]
-            )
-            refined = boundary.mapInPandas(
-                _make_refine_fn(id_cols), refine_schema)
+            # join-based refine: skinny semi-join first — only probes
+            # in boundary-ish cells survive, ONE row each (no fan-out),
+            # then repartition by (cell, salt) so the refine sees
+            # cell-contiguous batches — each tile decodes on one task
+            # and its points arrive as one dense group. The salt splits
+            # dense-city hot cells.
+            # the distinct-cells list is far smaller than the boundary
+            # tile rows (no wkb, deduped) — broadcast it whenever the
+            # boundary branch itself is broadcastable (the hint does
+            # not survive the distinct aggregate, so re-apply
+            # explicitly)
+            bcells = tiles_b.select("cell_id").distinct()
+            if bcast_b:
+                bcells = F.broadcast(bcells)
+            bpts = probe.join(bcells, "cell_id", "left_semi")
+            n_parts = self.spark.sparkContext.defaultParallelism
+            salt = F.pmod(F.xxhash64(F.col(lng), F.col(lat)),
+                          F.lit(self.probe_salt)).cast("int")
+            bpts = bpts.repartition(n_parts, F.col("cell_id"), salt)
+            brows = bpts.join(tiles_b, "cell_id")
+        boundary = brows.select(
+            *id_cols, F.col(lng).alias("lng"), F.col(lat).alias("lat"),
+            "cell_id", "region_id", "kind", "minx", "miny", "maxx",
+            "maxy", "tile_wkb",
+        )
+        refine_schema = StructType(
+            [points.schema[c] for c in id_cols]
+            + [StructField("region_id", LongType())]
+        )
+        refined = boundary.mapInPandas(
+            _make_refine_fn(id_cols), refine_schema)
         if observers is not None:
             obs_i, obs_r = observers
             interior = interior.observe(obs_i, F.count(F.lit(1)).alias("rows"))
@@ -1934,7 +1896,6 @@ class SpatialEngine:
     def query_points_with_tolerance(
         self, points: DataFrame, tolerance_m: float,
         where: str | None = None, lng="lng", lat="lat", k: int = 1,
-        cover_res: int | None = None,
     ) -> DataFrame:
         """Q2 — nearest-boundary fallback (≙ QueryPointWithTolerance,
         /root/reference/AreaCityQuery.java:102-163).
@@ -1948,17 +1909,18 @@ class SpatialEngine:
         reference injects them (AreaCityQuery.java:142).
 
         Plans. tolerance 0 is Q1 with props. For tolerance > 0 with both
-        broadcast indexes within budget (and cover_res at base_res) the
-        plan is ONE pass over the probe, like Q1's: `select(point_id,
-        explode(nearest_udf(lng, lat, cell_id)))` (`_make_nearest_udf`:
-        Q1 hits, else the nearest regions per deep, all in one Arrow
-        batch) and one broadcast join with the props dim — no
-        checkpoint, anti-join, window, union or shuffle exchange.
-        Otherwise (an index off or over budget, the salted path, a
-        coarser cover_res, or tolerance -1) the two-stage plan: Q1 is
+        broadcast indexes within their ceilings (`_one_pass_indexes`)
+        the plan is ONE pass over the probe, like Q1's:
+        `select(point_id, explode(nearest_udf(lng, lat, cell_id)))`
+        (`_make_nearest_udf`: Q1 hits, else the nearest regions per
+        deep, all in one Arrow batch) and one broadcast join with the
+        props dim — no checkpoint, anti-join, window, union or shuffle
+        exchange. Otherwise (an index over its ceiling, the salted
+        path, or tolerance -1) the two-stage join fallback: Q1 is
         checkpointed, its misses (a LEFT ANTI join on point_id) run a
-        distance stage, and `_finish_tolerance` keeps the nearest per
-        deep.
+        distance stage (the 24-gon cover joined to the kind-0 tiles,
+        or the iterative search for -1), and `_finish_tolerance` keeps
+        the nearest per deep.
 
         point_id must be a row key, one row per probe, as every caller
         uses it: the one-pass plan judges each row alone, while the
@@ -1971,22 +1933,7 @@ class SpatialEngine:
             F.col("point_id"), F.col(lng).alias("lng"), F.col(lat).alias("lat")
         )
         base_res = self.base_res
-        # cover_res knob: covering the 24-gon bbox at a res coarser than
-        # base_res shrinks the cover shuffle O((tol/cell)²)-fold but
-        # multiplies the (probe, tile) candidate pairs the dist_fn gates
-        # must score. MEASURED on the dense fixture (25 km, 1M probes,
-        # local[8]): base_res 25.4 s vs 30-48 s at res 12..9 — the
-        # per-pair nearest_on_segments gate outweighs the 27M-row
-        # shuffle it saves, so the default stays base_res; the knob
-        # remains for boundary sets dense enough to invert that trade.
-        # Output is IDENTICAL at any cover_res (checksum-swept): the
-        # cover only proposes candidates — the per-tile
-        # inscribed/escribed radius gates + the exact 24-gon test in
-        # dist_fn decide membership.
-        cov_res = max(0, min(base_res,
-                             base_res if cover_res is None else cover_res))
-        idx = (self._one_pass_indexes()
-               if tolerance_m > 0 and cov_res == base_res else None)
+        idx = self._one_pass_indexes() if tolerance_m > 0 else None
         if idx is not None:
             hits = _make_nearest_udf(
                 *idx, float(tolerance_m), base_res, k,
@@ -2029,25 +1976,9 @@ class SpatialEngine:
             ])
 
             tol_m = float(tolerance_m)
-            bidx = (self._boundary_index()
-                    if cov_res == base_res else None)
-            if bidx is not None:
-                # two-stage broadcast-index Q2 (the one-pass plan does
-                # not apply): no tile bytes shuffle, but the miss set is
-                # a second probe scan plus anti-join, repartitioned for
-                # the distance kernel, and _finish_tolerance
-                # min-aggregates and windows per point. `where` rides
-                # along as an in-kernel keep-region array; the SMJ
-                # cover-join below stays the fallback for boundary sets
-                # past the index byte budget (township scale) and for
-                # coarse cover_res overrides.
-                dists = self._dists_tolerance_index(
-                    misses.repartition(F.col("point_id")), tol_m,
-                    self._keep_region_ids(where))
-                return self._finish_tolerance(base_out, dists, k)
 
             def cover_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                # Fully vectorized 24-gon bbox cover at cov_res — no
+                # Fully vectorized 24-gon bbox cover at base_res — no
                 # per-row Python on the (potentially billions-of-docs)
                 # miss set.
                 for pdf in it:
@@ -2055,7 +1986,7 @@ class SpatialEngine:
                     pid = pdf["point_id"].to_numpy()
                     px = pdf["lng"].to_numpy(dtype=np.float64)
                     py = pdf["lat"].to_numpy(dtype=np.float64)
-                    rep, cells = _circle_cell_cover(px, py, tol_m, cov_res)
+                    rep, cells = _circle_cell_cover(px, py, tol_m, base_res)
                     yield pd.DataFrame({
                         "point_id": pid[rep].astype("int64"),
                         "lng": px[rep],
@@ -2074,17 +2005,7 @@ class SpatialEngine:
             misses = misses.repartition(F.col("point_id"))
             cover = misses.mapInPandas(cover_fn, cover_schema)
             tiles_b = self._tiles_for(where).filter(F.col("kind") == 0)
-            if cov_res < base_res:
-                tiles_b = tiles_b.withColumn(
-                    "_cover_cell",
-                    F.expr(grid.parent_cell_sql_expr(
-                        "cell_id", base_res, cov_res)))
-                cand = cover.join(
-                    tiles_b,
-                    cover["cell_id"] == tiles_b["_cover_cell"])
-            else:
-                cand = cover.join(tiles_b, "cell_id")
-            cand = cand.select(
+            cand = cover.join(tiles_b, "cell_id").select(
                 "point_id", "lng", "lat", "region_id",
                 "minx", "miny", "maxx", "maxy", "tile_wkb")
         else:  # tolerance -1: unlimited — every boundary tile is a candidate
@@ -2197,41 +2118,6 @@ class SpatialEngine:
 
         dists = cand.mapInPandas(dist_fn, dist_schema)
         return self._finish_tolerance(base_out, dists, k)
-
-    def _dists_tolerance_index(self, misses: DataFrame, tol_m: float,
-                               keep: np.ndarray | None = None) -> DataFrame:
-        """tolerance>0 distance stage of the two-stage plan against the
-        broadcast boundary index: one mapInPandas over the miss set,
-        (point_id, region_id, dist_m) per kept (point, tile) pair from
-        `_tolerance_pairs`, for `_finish_tolerance` to reduce. Used only
-        when the one-pass plan does not apply (e.g. the interior index
-        off or over budget, or the salted path). Each batch first calls
-        `_drop_spark_zip_importers`."""
-        bc, _ = self._boundary_index()
-        base_res = self.base_res
-        tol = float(tol_m)
-        dist_schema = StructType([
-            StructField("point_id", LongType()),
-            StructField("region_id", LongType()),
-            StructField("dist_m", DoubleType()),
-        ])
-
-        def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            I = bc.value
-            for pdf in it:
-                _drop_spark_zip_importers()
-                prow, tix, d = _tolerance_pairs(
-                    I, pdf["lng"].to_numpy(dtype=np.float64),
-                    pdf["lat"].to_numpy(dtype=np.float64), tol, base_res,
-                    keep)
-                yield pd.DataFrame({
-                    "point_id": pdf["point_id"].to_numpy()[prow]
-                    .astype("int64"),
-                    "region_id": I["region"][tix],
-                    "dist_m": d,
-                })
-
-        return misses.mapInPandas(fn, dist_schema)
 
     def _dists_unlimited_iterative(self, misses: DataFrame,
                                    tiles_b: DataFrame, k: int,
@@ -2902,7 +2788,7 @@ class SpatialEngine:
                     # fallback; disable the index to route there)
                     raise ValueError(
                         "Q3 index path met an undecomposable probe; "
-                        "set boundary_index_wkb_bytes=0 to use the "
+                        "set broadcast_wkb_budget=0 to use the "
                         "cover-join fallback")
                 rep, cid = grid.cover_bboxes(
                     bb_a[:, 0], bb_a[:, 1], bb_a[:, 2], bb_a[:, 3], base_res)

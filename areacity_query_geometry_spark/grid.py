@@ -45,21 +45,6 @@ def cell_of(lon, lat, res: int):
     return (np.int64(res) << _RES_SHIFT) | (ix << _IX_SHIFT) | iy
 
 
-def parent_cell_sql_expr(col: str, from_res: int, to_res: int) -> str:
-    """Spark-SQL expression lifting a packed cell_id from `from_res` to
-    its ancestor cell at the coarser `to_res` — pure bit arithmetic
-    (whole-stage codegen'd), the JVM twin of
-    pack(to_res, ix >> d, iy >> d)."""
-    if to_res > from_res:
-        raise ValueError("to_res must be coarser (<=) than from_res")
-    d = from_res - to_res
-    ix = f"(shiftright({col}, {_IX_SHIFT}) & {_MASK28}L)"
-    iy = f"({col} & {_MASK28}L)"
-    return (f"(CAST({to_res} AS BIGINT) * {1 << _RES_SHIFT}L"
-            f" + shiftright({ix}, {d}) * {1 << _IX_SHIFT}L"
-            f" + shiftright({iy}, {d}))")
-
-
 def cell_id_sql_expr(lon_col: str, lat_col: str, res: int) -> str:
     """Spark-SQL expression computing the same cell_id JVM-side —
     keeps the point→cell assignment inside whole-stage codegen (no

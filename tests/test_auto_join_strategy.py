@@ -5,6 +5,10 @@ even though the row count sits far under the 3M ceiling — so "auto"
 must look at bytes, and the per-branch boundary broadcast must too.
 Runs on a generated `fixtures_dense` boundary set (no external files).
 """
+import contextlib
+import io
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -87,3 +91,54 @@ class TestAutoFallbackParity:
         assert eng._wkb_bytes == dense_engine._boundary_wkb_bytes()
         assert eng._kind_counts == dense_engine._tile_counts_by_kind()
         assert eng.broadcast_tiles is True
+
+
+def _plan_nodes(df, name):
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return len(re.findall(rf"\(\d+\) {name}\n", buf.getvalue()))
+
+
+class TestPlanChoice:
+    def test_one_pass_iff_both_indexes_fit_their_ceilings(
+            self, spark, dense_engine):
+        """The only plan switch is `_one_pass_indexes()`: each index is
+        gated by the broadcast ceiling that prices it (interior rows by
+        `interior_broadcast_rows`, boundary WKB bytes by
+        `broadcast_wkb_budget`). With either one over, Q1 takes the
+        join fallback, and every plan returns the same hits."""
+        def variant(**kw):
+            return SpatialEngine(
+                spark, dense_engine.boundaries, dense_engine.tiles,
+                base_res=dense_engine.base_res, **kw)
+
+        no_interior = variant(interior_broadcast_rows=0)
+        no_boundary = variant(broadcast_tiles=True, broadcast_wkb_budget=0)
+        probes = _pts(spark, PROBES)
+
+        def q1(eng):
+            return eng.query_points(probes, with_props=False)
+
+        assert dense_engine._one_pass_indexes() is not None
+        assert _plan_nodes(q1(dense_engine), "ArrowEvalPython") == 1
+        assert _plan_nodes(q1(dense_engine), "Union") == 0
+
+        assert no_interior._interior_index() is None
+        assert no_interior._one_pass_indexes() is None
+        plan = q1(no_interior)
+        assert _plan_nodes(plan, "Union") == 1
+        assert _plan_nodes(plan, "MapInPandas") == 1
+        assert _plan_nodes(plan, "ArrowEvalPython") == 0
+
+        assert no_boundary._boundary_index() is None
+        assert no_boundary._one_pass_indexes() is None
+
+        def hits(eng):
+            return sorted((r["point_id"], r["region_id"])
+                          for r in q1(eng).collect())
+
+        want = hits(dense_engine)
+        assert len({p for p, _ in want}) >= 3  # in-extent probes resolve
+        assert hits(no_interior) == want
+        assert hits(no_boundary) == want

@@ -1,9 +1,10 @@
-"""Broadcast boundary-index refine (engine._boundary_index /
-_make_index_refine_fn) — the unshuffled Q1 boundary leg.
+"""Broadcast boundary index (engine._boundary_index), which the
+one-pass Q1 plan refines kind 0/2 cells against.
 
-Must produce hit-sets IDENTICAL to the join-based refine on the same
-tile table (same kernels; only the pair-formation plumbing differs),
-respect the WKB byte budget, and fall back cleanly when over budget.
+Must produce hit-sets IDENTICAL to the join fallback's tile-join refine
+on the same tile table (same predicates; only the pair-formation
+plumbing differs), respect the `broadcast_wkb_budget` byte ceiling,
+and fall back cleanly when over it.
 Runs on a generated `fixtures_dense` set (no external files), and pins
 the index layout's invariants: one packed segment store, a y-slab CSR
 into it, and an index of the distance-fit segments.
@@ -44,18 +45,17 @@ def _hits(eng, pts, where=None):
 
 def test_index_path_equals_join_path(spark, engine):
     pts = _pts(spark, 3000)
-    joined = _variant(engine, boundary_index_wkb_bytes=0)  # tile-join refine
-    union = _variant(engine, interior_index_rows=0)  # boundary-only refine
+    # tile-join refine
+    joined = _variant(engine, broadcast_tiles=True, broadcast_wkb_budget=0)
     assert engine._boundary_index() is not None
     assert joined._boundary_index() is None
-    assert union._interior_index() is None
     got = _hits(engine, pts)
     assert len({p for p, _ in got}) > 2500
-    assert got == _hits(joined, pts) == _hits(union, pts)
+    assert got == _hits(joined, pts)
 
 
 def test_budget_fallback(spark, engine):
-    tiny = _variant(engine, boundary_index_wkb_bytes=1)
+    tiny = _variant(engine, broadcast_tiles=True, broadcast_wkb_budget=1)
     assert tiny._boundary_index() is None
     assert tiny._bindex_off  # decision cached, no re-agg per query
     # and the engine still answers correctly through the join path
@@ -127,5 +127,5 @@ def test_where_filter_stays_on_index_path_and_agrees(spark, engine):
             engine.boundaries.filter(WHERE).select("region_id").collect()}
     full = {(p, rid) for (p, rid) in _hits(engine, pts) if rid in keep}
     assert filtered and filtered == full
-    joined = _variant(engine, boundary_index_wkb_bytes=0)
+    joined = _variant(engine, broadcast_tiles=True, broadcast_wkb_budget=0)
     assert filtered == _hits(joined, pts, WHERE)

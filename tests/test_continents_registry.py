@@ -8,13 +8,14 @@ from pyspark.sql import functions as F
 from areacity_query_geometry_spark import registry
 from areacity_query_geometry_spark.engine import SpatialEngine
 
-from conftest import CONTINENT_FIXTURE
+from conftest import CONTINENT_FIXTURE, reference_file
 
 
 @pytest.fixture(scope="module")
 def continent_engine(spark):
     # continent polygons are planet-sized — coarser base grid
-    return SpatialEngine.from_geojson(spark, CONTINENT_FIXTURE, base_res=7)
+    return SpatialEngine.from_geojson(
+        spark, reference_file(CONTINENT_FIXTURE), base_res=7)
 
 
 def _lookup(engine, lng, lat):

@@ -6,6 +6,8 @@ from pyspark.sql import functions as F
 
 from areacity_query_geometry_spark import docs as docsmod
 
+from conftest import PROVINCE_FIXTURE, reference_file
+
 
 @pytest.fixture(scope="module")
 def docs_df(spark):
@@ -106,7 +108,7 @@ class TestGeoJoin:
 
         feats = [
             r for line in open(
-                "/root/reference/仅供测试-全国省级GeoJSON数据-大幅简化粗略版.json",
+                reference_file(PROVINCE_FIXTURE),
                 encoding="utf-8")
             if (r := geojson.parse_feature_line(line))
         ]

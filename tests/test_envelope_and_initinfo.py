@@ -9,7 +9,7 @@
 """
 import json
 
-from tests.conftest import PROVINCE_FIXTURE
+from tests.conftest import PROVINCE_FIXTURE, reference_file
 
 
 def _points_df(spark, pts):
@@ -76,7 +76,8 @@ class TestInitInfo:
         from areacity_query_geometry_spark.sources import tile_store
 
         eng = tile_store.load_or_build(
-            spark, PROVINCE_FIXTURE, str(tmp_path / "store"), base_res=8)
+            spark, reference_file(PROVINCE_FIXTURE), str(tmp_path / "store"),
+            base_res=8)
         info = eng.init_info(with_tile_stats=False)
         assert info["data_from_store"] is True
         assert info["store_path"].endswith("store")
@@ -87,7 +88,7 @@ class TestInitWhere:
         from areacity_query_geometry_spark.engine import SpatialEngine
 
         eng = SpatialEngine.from_geojson(
-            spark, PROVINCE_FIXTURE, base_res=8,
+            spark, reference_file(PROVINCE_FIXTURE), base_res=8,
             init_where="name = '北京市'")
         assert eng.init_info(with_tile_stats=False)["feature_count"] == 1
         # Beijing point still resolves; Guangdong point was never indexed

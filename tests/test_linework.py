@@ -7,6 +7,8 @@ import pytest
 from areacity_query_geometry_spark import fixtures, linework
 from areacity_query_geometry_spark.geom import predicates
 
+from conftest import PROVINCE_FIXTURE, reference_file
+
 
 def _square_segs(x0, y0, x1, y1):
     ring = np.array([(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)],
@@ -236,8 +238,7 @@ class TestRealGeometryResIndependence:
 
         from areacity_query_geometry_spark.engine import SpatialEngine
 
-        path = ("/root/reference/"
-                "仅供测试-全国省级GeoJSON数据-大幅简化粗略版.json")
+        path = reference_file(PROVINCE_FIXTURE)
         eng6 = SpatialEngine.from_geojson(spark, path, base_res=6)
         eng8 = SpatialEngine.from_geojson(spark, path, base_res=8)
 

@@ -6,6 +6,8 @@ import pytest
 from areacity_query_geometry_spark import fixtures, overlay
 from areacity_query_geometry_spark.geom import core
 
+from conftest import PROVINCE_FIXTURE, reference_file
+
 
 def _ring(pts):
     return core.ensure_closed(np.asarray(pts, dtype=np.float64))
@@ -181,8 +183,7 @@ class TestOverlayArea:
 
         from areacity_query_geometry_spark.engine import SpatialEngine
 
-        path = ("/root/reference/"
-                "仅供测试-全国省级GeoJSON数据-大幅简化粗略版.json")
+        path = reference_file(PROVINCE_FIXTURE)
         eng6 = SpatialEngine.from_geojson(spark, path, base_res=6)
         eng8 = SpatialEngine.from_geojson(spark, path, base_res=8)
         rng = np.random.RandomState(13)

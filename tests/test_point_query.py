@@ -5,6 +5,8 @@ province-level, so district-level goldens assert their province).
 """
 import pytest
 
+from conftest import PROVINCE_FIXTURE, reference_file
+
 
 def _points_df(spark, pts):
     return spark.createDataFrame(
@@ -88,7 +90,7 @@ class TestLatticeSweepInvariants:
         feats = [
             r
             for line in open(
-                "/root/reference/仅供测试-全国省级GeoJSON数据-大幅简化粗略版.json",
+                reference_file(PROVINCE_FIXTURE),
                 encoding="utf-8",
             )
             if (r := geojson.parse_feature_line(line))
@@ -140,7 +142,7 @@ class TestRectProbeSweepParity:
 
         feats = [
             r for line in open(
-                "/root/reference/仅供测试-全国省级GeoJSON数据-大幅简化粗略版.json",
+                reference_file(PROVINCE_FIXTURE),
                 encoding="utf-8",
             ) if (r := geojson.parse_feature_line(line))
         ]
@@ -200,7 +202,7 @@ class TestLineProbeSweepParity:
 
         feats = [
             r for line in open(
-                "/root/reference/仅供测试-全国省级GeoJSON数据-大幅简化粗略版.json",
+                reference_file(PROVINCE_FIXTURE),
                 encoding="utf-8",
             ) if (r := geojson.parse_feature_line(line))
         ]

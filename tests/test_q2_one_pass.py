@@ -1,13 +1,14 @@
-"""Q2 (tolerance) plans agree on generated boundary sets (no external
-files): the one-pass plan (one scalar Arrow UDF over the probe, then
-explode and the props join), the two-stage index plan (interior index
-off: checkpointed Q1, miss anti-join, boundary-index distance kernel,
-min-agg + window) and the cover-join plan (boundary index off) return
-the same full rows — `point_distance` and `prop_json_out` text
-bit-equal — at 2.5, 25 and 250 km, k=1 and k=2, `where`-filtered and at
-tolerance 0. Probes include shared-edge vertices (Q1 hits), misses near
-the 24-gon radius (the ambiguous-circle branch), far misses and null
-coordinates. A small symmetric set pins the region_id tie-break.
+"""Q2's (tolerance) two plans agree on generated boundary sets (no
+external files): the one-pass plan (one scalar Arrow UDF over the
+probe, then explode and the props join) and the cover-join fallback
+(boundary index over its byte ceiling: checkpointed Q1, miss
+anti-join, 24-gon cover joined to the tiles, distance kernel,
+min-agg + window) return the same full rows — `point_distance` and
+`prop_json_out` text bit-equal — at 2.5, 25 and 250 km, k=1 and k=2,
+`where`-filtered and at tolerance 0. Probes include shared-edge
+vertices (Q1 hits), misses near the 24-gon radius (the
+ambiguous-circle branch), far misses and null coordinates. A small
+symmetric set pins the region_id tie-break.
 Reference semantics: QueryPointWithTolerance
 (AreaCityQuery.java:102-163).
 """
@@ -38,8 +39,8 @@ def _variants(spark, one):
         return SpatialEngine(spark, one.boundaries, one.tiles, BASE_RES, **kw)
 
     return {"one_pass": one,
-            "two_stage": variant(interior_index_rows=0),
-            "cover_join": variant(boundary_index_wkb_bytes=0)}
+            "cover_join": variant(broadcast_tiles=True,
+                                  broadcast_wkb_budget=0)}
 
 
 @pytest.fixture(scope="module")
@@ -113,8 +114,7 @@ def _nodes(plan: str, name: str) -> int:
 
 def test_index_switches(engines):
     assert engines["one_pass"]._one_pass_indexes() is not None
-    assert engines["two_stage"]._one_pass_indexes() is None
-    assert engines["two_stage"]._boundary_index() is not None
+    assert engines["cover_join"]._one_pass_indexes() is None
     assert engines["cover_join"]._boundary_index() is None
 
 
@@ -128,7 +128,7 @@ def test_three_plans_return_identical_rows(engines, probes, tol, k, where):
     cols = outs["one_pass"].columns
     assert all(o.columns == cols for o in outs.values())
     got = {key: _rows(o) for key, o in outs.items()}
-    assert got["one_pass"] == got["two_stage"] == got["cover_join"]
+    assert got["one_pass"] == got["cover_join"]
     rows = [dict(zip(cols, r)) for r in got["one_pass"]]
     assert max(got["one_pass"].values()) == 1  # no duplicate rows
     near = [r for r in rows if r["point_distance"] is not None]
@@ -190,10 +190,21 @@ def test_one_pass_plan_shape(spark, engines, probes, tmp_path):
     n_rdd = _nodes(_plan(engines["one_pass"].query_points(pts)),
                    r"Scan ExistingRDD\s*")
     assert _nodes(one, r"Scan ExistingRDD\s*") == n_rdd
-    two = _plan(engines["two_stage"].query_points_with_tolerance(
-        pts, 25000.0))
+    # the fallback: a checkpoint job builds Q1, then cover and distance
+    # MapInPandas, the min-agg Window and the Union with the Q1 rows
+    sc = spark.sparkContext
+    sc.setJobGroup("q2-fallback-plan", "fallback plan construction")
+    try:
+        two = _plan(engines["cover_join"].query_points_with_tolerance(
+            pts, 25000.0))
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(
+            "q2-fallback-plan"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n_jobs > 0
     assert _nodes(two, r"Scan ExistingRDD\s*") > n_rdd
-    for name in ("MapInPandas", "Window", "Union"):
+    assert _nodes(two, "MapInPandas") == 2
+    for name in ("Window", "Union"):
         assert _nodes(two, name) == 1, name
 
 
@@ -240,7 +251,7 @@ def test_distance_ties_break_by_region_id(spark, tie_engines):
                           .select("point_id", "deep", "region_id",
                                   "point_distance"))
                for key, e in tie_engines.items()}
-        assert got["one_pass"] == got["two_stage"] == got["cover_join"]
+        assert got["one_pass"] == got["cover_join"]
         best = {}
         for pid, deep, region, d in got["one_pass"]:
             best.setdefault((pid, deep), []).append((d, region))

@@ -19,6 +19,7 @@ import pytest
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "tools"))
 import reference_parity as rp  # noqa: E402
+from conftest import reference_file  # noqa: E402
 
 pytestmark = pytest.mark.skipif(
     shutil.which("javac") is None or shutil.which("java") is None,
@@ -27,6 +28,9 @@ pytestmark = pytest.mark.skipif(
 
 @pytest.fixture(scope="module")
 def oracle():
+    for path in (rp.JTS, os.path.join(rp.REF_DIR, "AreaCityQuery.java"),
+                 *(s["src"] for s in rp.SUITES.values())):
+        reference_file(path)
     rp.compile_oracle()
 
 

@@ -3,6 +3,8 @@
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import PROVINCE_FIXTURE, reference_file
+
 
 def _points_df(spark, pts):
     return spark.createDataFrame(
@@ -153,7 +155,7 @@ class TestTolerance:
 
         feats = {}
         for line in open(
-                "/root/reference/仅供测试-全国省级GeoJSON数据-大幅简化粗略版.json",
+                reference_file(PROVINCE_FIXTURE),
                 encoding="utf-8"):
             r = geojson.parse_feature_line(line)
             if r:

@@ -76,21 +76,17 @@ def main():
         probes, where="deep = 0", with_props=False))
     q1_where_plan = grab_plan(eng.query_points(
         pts, where="deep = 0", with_props=False))
-    # the Q1 union plan (interior index off or past its budget)
-    saved_i = (eng._iindex, eng._iindex_off)
-    eng._iindex, eng._iindex_off = None, True
-    q1_union_plan = grab_plan(eng.query_points(pts, with_props=False))
-    eng._iindex, eng._iindex_off = saved_i
-    # the join-plan fallback (past-budget boundary sets)
-    saved = (eng._bindex, eng._bindex_off)
-    eng._bindex, eng._bindex_off = None, True
-    q3_join_plan = grab_plan(eng.query_geometry(probes, with_props=False))
-    eng._bindex, eng._bindex_off = saved
+    # the join fallbacks: an engine over the same tables whose interior
+    # index is past its ceiling
+    over = SpatialEngine(spark, eng.boundaries, eng.tiles, eng.base_res,
+                         interior_broadcast_rows=0)
+    q1_join_plan = grab_plan(over.query_points(pts, with_props=False))
+    q3_join_plan = grab_plan(over.query_geometry(probes, with_props=False))
 
     # Q2 at a finite tolerance over a parquet probe source: the
-    # one-pass plan, and the two-stage plan with the interior index off.
-    # Building the two-stage DataFrame already runs its Q1 checkpoint
-    # job; the one-pass one must run none.
+    # one-pass plan, and the join fallback with the interior index past
+    # its ceiling. Building the fallback DataFrame already runs its Q1
+    # checkpoint job; the one-pass one must run none.
     pq_dir = tempfile.TemporaryDirectory()  # removed at exit
     pq_path = os.path.join(pq_dir.name, "probes.parquet")
     pts.write.parquet(pq_path)
@@ -100,12 +96,11 @@ def main():
     q2_plan_tol = grab_plan(eng.query_points_with_tolerance(pq_pts, 25000.0))
     q2_jobs = len(sc.statusTracker().getJobIdsForGroup("plan-audit-q2"))
     q1_props_plan = grab_plan(eng.query_points(pq_pts))
-    eng._iindex, eng._iindex_off = None, True
-    sc.setJobGroup("plan-audit-q2-two", "two-stage Q2 plan construction")
-    q2_two_plan = grab_plan(eng.query_points_with_tolerance(pq_pts, 25000.0))
-    q2_two_jobs = len(sc.statusTracker().getJobIdsForGroup(
-        "plan-audit-q2-two"))
-    eng._iindex, eng._iindex_off = saved_i
+    sc.setJobGroup("plan-audit-q2-join", "Q2 join fallback construction")
+    q2_join_plan = grab_plan(over.query_points_with_tolerance(
+        pq_pts, 25000.0))
+    q2_join_jobs = len(sc.statusTracker().getJobIdsForGroup(
+        "plan-audit-q2-join"))
     sc.setLocalProperty("spark.jobGroup.id", None)
 
     # tolerance=-1 terminal scan: plan of the RETURNED union must show
@@ -136,10 +131,12 @@ def main():
           "the id columns stay in the JVM), no MapInPandas",
           nodes(q1_plan, "ArrowEvalPython") == 1
           and nodes(q1_plan, "MapInPandas") == 0)
-    check("Q1 union plan only with the interior index off: interior join "
-          "UNION one boundary MapInPandas",
-          nodes(q1_union_plan, "Union") == 1
-          and nodes(q1_union_plan, "MapInPandas") == 1)
+    check("Q1 join fallback with an index past its ceiling "
+          "(interior_broadcast_rows=0): interior join UNION one boundary "
+          "MapInPandas, no ArrowEvalPython",
+          nodes(q1_join_plan, "Union") == 1
+          and nodes(q1_join_plan, "MapInPandas") == 1
+          and nodes(q1_join_plan, "ArrowEvalPython") == 0)
     check("Q3 default = broadcast-index refine: ONE MapInPandas over the "
           "probe table, ZERO Exchanges (cover, candidate lookup, kernels "
           "and dedup all in-kernel against the CSR indexes)",
@@ -171,12 +168,13 @@ def main():
           q2_jobs == 0
           and nodes(q2_plan_tol, r"Scan ExistingRDD\s*")
           == nodes(q1_props_plan, r"Scan ExistingRDD\s*"))
-    check("Q2 two-stage plan only with the interior index off: "
-          "checkpointed Q1, distance MapInPandas, min-agg Window, Union",
-          q2_two_jobs > 0
-          and nodes(q2_two_plan, "MapInPandas") == 1
-          and nodes(q2_two_plan, "Window") == 1
-          and nodes(q2_two_plan, "Union") == 1)
+    check("Q2 join fallback with an index past its ceiling "
+          "(interior_broadcast_rows=0): checkpointed Q1, cover and "
+          "distance MapInPandas, min-agg Window, Union",
+          q2_join_jobs > 0
+          and nodes(q2_join_plan, "MapInPandas") == 2
+          and nodes(q2_join_plan, "Window") == 1
+          and nodes(q2_join_plan, "Union") == 1)
     # (BroadcastNestedLoopJoin appears here ONLY as the constant-fan-out
     # replications over tiny broadcast dims: the ≤#deep-levels deep list
     # onto misses and the ≤#buckets range onto tiles — not an all-pairs
