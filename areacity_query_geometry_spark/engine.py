@@ -89,9 +89,10 @@ def _distance_segs(g: dict, minx: float, miny: float,
 def _refine_hav_on_segments(sega: np.ndarray, px: np.ndarray,
                             py: np.ndarray, n: int = 65) -> np.ndarray:
     """Min haversine from each probe to `n` uniform samples (endpoints
-    included) along its candidate segment (sega: (M, 4)) — the -1
-    paths' LONG-RANGE refinement (late r5). The argmin candidates are
-    projections in a planar metric, and at planetary range the right
+    included) along its candidate segment (sega: (M, 4)) — the
+    tolerance -1 search's long-range refinement (`_pair_geodesic`).
+    The argmin candidates are projections in a planar metric, and at
+    planetary range the right
     segment's projection parameter can sit km from the haversine
     minimum; sampling the winning segment directly bounds the error by
     (seglen/2(n-1))²/(2·distance) — sub-metre for ~20 km segments at
@@ -104,27 +105,6 @@ def _refine_hav_on_segments(sega: np.ndarray, px: np.ndarray,
     Y = sega[:, 1][:, None] + t * (sega[:, 3] - sega[:, 1])[:, None]
     D = np.asarray(distance.haversine(X, Y, px[:, None], py[:, None]))
     return D.min(axis=1)
-
-
-def _best_segment_by_hav_proxy(px: np.ndarray, py: np.ndarray,
-                               segs: np.ndarray) -> np.ndarray:
-    """Per point, the segment index minimizing a 3-point HAVERSINE
-    proxy (both endpoints + midpoint) over ALL of a tile's segments —
-    the geodesic mode's third winning-segment candidate. The degree
-    metrics' argmin can land on the wrong segment within a tile at
-    planetary range (measured 25 km high at 2.5 Mm toward South
-    America from 49°S); selecting directly by sampled meters bounds
-    the miss by the 3-point sampling error, (seglen/4)²/(2·distance) —
-    centimetres for ~20 km segments at Mm range."""
-    ax, ay, bx, by = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
-    mx, my = (ax + bx) / 2.0, (ay + by) / 2.0
-    P, Q = px[:, None], py[:, None]
-    d = np.minimum(
-        np.minimum(
-            np.asarray(distance.haversine(ax[None, :], ay[None, :], P, Q)),
-            np.asarray(distance.haversine(bx[None, :], by[None, :], P, Q))),
-        np.asarray(distance.haversine(mx[None, :], my[None, :], P, Q)))
-    return d.argmin(axis=1)
 
 
 def _drop_spark_zip_importers() -> None:
@@ -789,20 +769,84 @@ def _make_regions_udf(ib, bb, keep: np.ndarray | None = None,
     return F.arrow_udf(regions, out_type)
 
 
+def _first_argmin(v: np.ndarray, srep: np.ndarray, starts: np.ndarray,
+                  soffs: np.ndarray):
+    """Per run of the flat rows (run i = rows starts[i]..., row r in
+    run srep[r] at offset soffs[r]): the run's min of `v` and the row of
+    its first occurrence — np.argmin's tie-break, via reduceat."""
+    vmin = np.minimum.reduceat(v, starts)
+    big = np.where(v == vmin[srep], soffs, np.int64(1) << 62)
+    return vmin, starts + np.minimum.reduceat(big, starts)
+
+
+def _pair_argmins(I: dict, ppx: np.ndarray, ppy: np.ndarray,
+                  tix: np.ndarray) -> dict:
+    """Planar and cos-scaled nearest points of each (point, kind-0
+    tile) pair over the tile's distance-fit segments, FLAT over all
+    (pair, segment) rows read from the packed store as
+    `SEG[fseg[fseg_ptr[t]:fseg_ptr[t + 1]]]`: the arithmetic of
+    predicates.nearest_on_segments_idx and
+    nearest_on_segments_scaled_idx, formula for formula, with the same
+    first-hit tie-break. Every tile needs at least one fit segment.
+
+    Antimeridian unroll: each pair's probe x is shifted by whole turns
+    to within 180° of the tile's center, so the argmins see across
+    ±180. For every pair already within 180° the shift is 0 and the
+    arithmetic is that of the unshifted probe.
+
+    Returns per (pair, segment) row `srep` (its pair), `seg` (x1, y1,
+    x2, y2), `pxa` (the shifted probe x) and `d2` (planar squared
+    distance); per pair `d2min`/`nx`/`ny`/`jn` (planar minimum, nearest
+    point, winning row) and `d2s`/`sx`/`sy`/`js` (the same in the
+    metric whose x is scaled by the probe's cos(lat))."""
+    fptr = I["fseg_ptr"]
+    s0 = fptr[tix]
+    scnt = fptr[tix + 1] - s0
+    srep, sidx = _ranges(s0, scnt)
+    soffs = sidx - np.repeat(s0, scnt)
+    starts = np.zeros(len(tix), dtype=np.int64)
+    np.cumsum(scnt[:-1], out=starts[1:])
+    seg = I["SEG"][I["fseg"][sidx], :4]
+    ax, ay, bx, by = seg.T
+    cxt = (I["minx"][tix] + I["maxx"][tix]) / 2.0
+    pxa_p = ppx - 360.0 * np.round((ppx - cxt) / 360.0)
+    pxa, pyr = pxa_p[srep], ppy[srep]
+    dxs, dys = bx - ax, by - ay
+    ln2 = dxs * dxs + dys * dys
+    ln2 = np.where(ln2 == 0, 1.0, ln2)
+    qx = pxa - ax
+    qy = pyr - ay
+    t = np.clip((qx * dxs + qy * dys) / ln2, 0.0, 1.0)
+    cx = ax + t * dxs
+    cy = ay + t * dys
+    d2 = (pxa - cx) ** 2 + (pyr - cy) ** 2
+    d2min, jn = _first_argmin(d2, srep, starts, soffs)
+    wq = np.cos(np.radians(ppy))[srep]
+    dxw = dxs * wq
+    qxw = qx * wq
+    ln2s = dxw * dxw + dys * dys
+    ln2s = np.where(ln2s == 0, 1.0, ln2s)
+    ts = np.clip((qxw * dxw + qy * dys) / ln2s, 0.0, 1.0)
+    cxs = ax + ts * dxs
+    cys = ay + ts * dys
+    d2s = ((pxa - cxs) * wq) ** 2 + (pyr - cys) ** 2
+    d2s, js = _first_argmin(d2s, srep, starts, soffs)
+    return {"srep": srep, "starts": starts, "soffs": soffs, "seg": seg,
+            "pxa": pxa, "d2": d2,
+            "d2min": d2min, "nx": cx[jn], "ny": cy[jn], "jn": jn,
+            "d2s": d2s, "sx": cxs[js], "sy": cys[js], "js": js}
+
+
 def _tolerance_pairs(I: dict, px: np.ndarray, py: np.ndarray, tol: float,
                      base_res: int, keep: np.ndarray | None = None):
     """tolerance>0 candidates of a batch of Q1-miss points against the
     boundary index (≙ the reference's per-feature 24-gon scan,
     AreaCityQuery.java:102-163): per-point cover cells enumerated
     in-kernel (`_circle_cell_cover`), candidate tiles looked up in the
-    index CSR, per-(point, tile) planar-nearest computed FLAT over all
-    (pair, segment) rows (min + first-argmin via reduceat — the exact
-    arithmetic of predicates.nearest_on_segments, over the tile's
-    window-run-filtered segments, read from the packed store as
-    `SEG[fseg[fseg_ptr[t]:fseg_ptr[t + 1]]]`), then the same
-    inscribed/escribed radius gates + exact 24-gon test as the
-    cover-join dist_fn. Rows are bit-identical to the cover-join
-    path's; `keep` as in `_index_point_hits`.
+    index CSR, per-(point, tile) planar and scaled nearest points by
+    `_pair_argmins`, then the same inscribed/escribed radius gates +
+    exact 24-gon test as the cover-join dist_fn. Rows are bit-identical
+    to the cover-join path's; `keep` as in `_index_point_hits`.
 
     Returns (point, tile, dist_m): one row per kept (point, tile) pair,
     point indexing px/py and tile indexing I's per-tile arrays (a
@@ -815,56 +859,20 @@ def _tolerance_pairs(I: dict, px: np.ndarray, py: np.ndarray, tol: float,
     rep, cells = _circle_cell_cover(px, py, tol, base_res)
     crow, _, tix = _cell_pairs(I["cells"], I["cell_ptr"], cells)
     prep = rep[crow]
-    scnt = fptr[tix + 1] - fptr[tix]
     # boundary tiles only, and (as dist_fn) skip tiles with no
     # true-boundary segments after window-run filtering; `keep` = the
     # in-kernel twin of _tiles_for's LEFT SEMI region filter
-    m = (I["kind"][tix] == 0) & (scnt > 0)
+    m = (I["kind"][tix] == 0) & (fptr[tix + 1] > fptr[tix])
     if keep is not None:
         m &= _in_sorted(I["region"][tix], keep)
-    prep, tix, scnt = prep[m], tix[m], scnt[m]
+    prep, tix = prep[m], tix[m]
     if not len(prep):
         return none
-    s0 = fptr[tix]
-    srep, sidx = _ranges(s0, scnt)
-    soffs = sidx - np.repeat(s0, scnt)
-    ax, ay, bx, by = I["SEG"][I["fseg"][sidx], :4].T
-    dxs, dys = bx - ax, by - ay
-    ln2 = dxs * dxs + dys * dys
-    ln2 = np.where(ln2 == 0, 1.0, ln2)
-    pp = prep[srep]
-    qx = px[pp] - ax
-    qy = py[pp] - ay
-    t = np.clip((qx * dxs + qy * dys) / ln2, 0.0, 1.0)
-    cx = ax + t * dxs
-    cy = ay + t * dys
-    d2 = (px[pp] - cx) ** 2 + (py[pp] - cy) ** 2
-    starts = np.zeros(len(prep), dtype=np.int64)
-    np.cumsum(scnt[:-1], out=starts[1:])
-    dmin2 = np.minimum.reduceat(d2, starts)
-    # first row (in segment order) achieving the min — the argmin
-    # predicates.nearest_on_segments would pick
-    big = np.where(d2 == dmin2[srep], soffs, np.int64(1) << 62)
-    frow = starts + np.minimum.reduceat(big, starts)
-    nx, ny = cx[frow], cy[frow]
-    # anisotropy-corrected second candidate (r5) — the flat
-    # transcription of nearest_on_segments_scaled, formula for formula
-    # (bit-identity with the join path's matrix form; same first-hit
-    # tie-break)
-    wq = np.cos(np.radians(py))[pp]
-    dxw = dxs * wq
-    qxw = qx * wq
-    ln2s = dxw * dxw + dys * dys
-    ln2s = np.where(ln2s == 0, 1.0, ln2s)
-    ts = np.clip((qxw * dxw + qy * dys) / ln2s, 0.0, 1.0)
-    cxs = ax + ts * dxs
-    cys = ay + ts * dys
-    d2s = ((px[pp] - cxs) * wq) ** 2 + (py[pp] - cys) ** 2
-    dmin2s = np.minimum.reduceat(d2s, starts)
-    bigs = np.where(d2s == dmin2s[srep], soffs, np.int64(1) << 62)
-    frows = starts + np.minimum.reduceat(bigs, starts)
-    sxx, syy = cxs[frows], cys[frows]
-    d_planar = np.sqrt(dmin2)
+    A = _pair_argmins(I, px[prep], py[prep], tix)
+    srep, d2 = A["srep"], A["d2"]
+    ax, ay, bx, by = A["seg"].T
+    nx, ny, sxx, syy = A["nx"], A["ny"], A["sx"], A["sy"]
+    d_planar = np.sqrt(A["d2min"])
     # per-point circle radii — the exact CreateSimpleCircle step-ladder
     # arithmetic (identical to dist_fn's)
     km = tol / 1000.0
@@ -907,6 +915,279 @@ def _tolerance_pairs(I: dict, px: np.ndarray, py: np.ndarray, tol: float,
     return kp, tix[ok], np.asarray(d, dtype=np.float64)
 
 
+# bounds the tolerance −1 search's arrays: misses run in chunks of at
+# most UNLIMITED_ROWS // (tiles of the level) rows, and the visited
+# pairs are evaluated in blocks of at most UNLIMITED_ROWS segment rows
+UNLIMITED_ROWS = 1 << 20
+
+
+def _gc_bound(px, py, x0, y0, x1, y1) -> np.ndarray:
+    """Lower bound, in meters, on the haversine distance from (px, py)
+    to any point of the rect [x0, x1] × [y0, y1]: the larger of the
+    latitude gap and asin(cos φ · sin min(Δλ, 90°)), Δλ the longitude
+    gap taken mod 360 (so the antimeridian needs no special case). The
+    second term is the distance to the great circle of the nearest
+    meridian; past 90° of longitude no point is nearer than 90° − |φ|.
+    Shrunk by 1e-9 relative and 1 m absolute, which covers the rounding
+    of `distance.haversine` at any range."""
+    dlat = np.maximum(np.maximum(y0 - py, py - y1), 0.0)
+    dlon = np.where(np.mod(px - x0, 360.0) <= x1 - x0, 0.0,
+                    np.minimum(np.mod(x0 - px, 360.0),
+                               np.mod(px - x1, 360.0)))
+    c = np.maximum(np.radians(dlat), np.arcsin(
+        np.cos(np.radians(py)) * np.sin(np.radians(np.minimum(dlon, 90.0)))))
+    return c * (distance.EARTH_R * (1.0 - 1e-9)) - 1.0
+
+
+def _pair_geodesic(A: dict, ppx: np.ndarray, ppy: np.ndarray) -> np.ndarray:
+    """`geodesic_refine` distance per pair of `_pair_argmins` `A`:
+    the min haversine over both argmin points and 65 samples along
+    each of three winning segments — the planar one, the scaled one
+    and the one nearest by a haversine proxy (both endpoints and the
+    midpoint). At planetary range both degree metrics can pick a
+    segment km from the meter-nearest one; the samples bound the rest
+    by (seglen/2(n-1))²/(2·distance)."""
+    srep, seg = A["srep"], A["seg"]
+    pyr = ppy[srep]
+    ax, ay, bx, by = seg.T
+    hav = distance.haversine
+    proxy = np.minimum(np.minimum(hav(ax, ay, A["pxa"], pyr),
+                                  hav(bx, by, A["pxa"], pyr)),
+                       hav((ax + bx) / 2.0, (ay + by) / 2.0, A["pxa"], pyr))
+    _, jp = _first_argmin(proxy, srep, A["starts"], A["soffs"])
+    v = np.minimum(hav(A["nx"], A["ny"], ppx, ppy),
+                   hav(A["sx"], A["sy"], ppx, ppy))
+    for j in (jp, A["jn"], A["js"]):
+        v = np.minimum(v, _refine_hav_on_segments(seg[j], ppx, ppy))
+    return v
+
+
+def _level_index(I: dict, T: np.ndarray) -> dict:
+    """One `deep` level's kind-0 tiles `T` for `_search_level`: packed
+    Sort-Tile-Recursive into blocks of about sqrt(len(T)) tiles (the
+    reference's STRtree shape), each block's rect the union of its
+    tiles' CLIP_EPS-expanded rects, plus a region → tiles CSR."""
+    n = len(T)
+    size = max(1, int(np.sqrt(n)))
+    cx = (I["minx"][T] + I["maxx"][T]) / 2.0
+    cy = (I["miny"][T] + I["maxy"][T]) / 2.0
+    per_slice = size * int(np.ceil(np.sqrt(-(-n // size))))
+    slc = np.empty(n, dtype=np.int64)
+    slc[np.argsort(cx, kind="stable")] = np.arange(n) // per_slice
+    o = np.lexsort((cy, slc))
+    T = T[o]
+    blk_ptr = np.append(np.arange(0, n, size), n)
+    eps = tiler.CLIP_EPS
+    L = {"T": T, "blk_ptr": blk_ptr, "cx": cx[o],
+         "x0": I["minx"][T] - eps, "y0": I["miny"][T] - eps,
+         "x1": I["maxx"][T] + eps, "y1": I["maxy"][T] + eps}
+    for k, red in (("x0", np.minimum), ("y0", np.minimum),
+                   ("x1", np.maximum), ("y1", np.maximum)):
+        L["b" + k] = red.reduceat(L[k], blk_ptr[:-1])
+    treg = I["region"][T]
+    L["rtile"] = np.argsort(treg, kind="stable")
+    L["regs"], first = np.unique(treg[L["rtile"]], return_index=True)
+    L["rptr"] = np.append(first, n)
+    return L
+
+
+def _level_dists(I: dict, L: dict, px: np.ndarray, py: np.ndarray,
+                 vm: np.ndarray, vj: np.ndarray, refine: bool) -> tuple:
+    """Per visited (miss vm, level tile vj) pair: its region and the
+    per-tile candidates `_search_level` min-reduces per region — planar
+    (d, nx, ny), scaled (ds, sx, sy) and, in `refine` mode, the meters
+    of `_pair_geodesic` (else NaN). Pairs run in blocks of at most
+    UNLIMITED_ROWS segment rows."""
+    tix = L["T"][vj]
+    fptr = I["fseg_ptr"]
+    end = np.cumsum(fptr[tix + 1] - fptr[tix])
+    cols = [[] for _ in range(8)]
+    b0 = 0
+    while b0 < len(tix):
+        b1 = max(b0 + 1, int(np.searchsorted(
+            end, (end[b0 - 1] if b0 else 0) + UNLIMITED_ROWS,
+            side="right")))
+        ppx, ppy = px[vm[b0:b1]], py[vm[b0:b1]]
+        A = _pair_argmins(I, ppx, ppy, tix[b0:b1])
+        v = (_pair_geodesic(A, ppx, ppy) if refine
+             else np.full(b1 - b0, np.nan))
+        for c, a in zip(cols, (np.sqrt(A["d2min"]), A["nx"], A["ny"],
+                               np.sqrt(A["d2s"]), A["sx"], A["sy"], v,
+                               I["region"][tix[b0:b1]])):
+            c.append(a)
+        b0 = b1
+    return tuple(np.concatenate(c) for c in cols)
+
+
+def _group_first(keys: tuple) -> tuple:
+    """(order, first): the lexsort order of `keys` (last key primary)
+    and a mask of the first row of each (m, reg) run, m and reg being
+    the last two keys."""
+    o = np.lexsort(keys)
+    m, reg = keys[-1][o], keys[-2][o]
+    first = np.ones(len(o), dtype=bool)
+    first[1:] = (m[1:] != m[:-1]) | (reg[1:] != reg[:-1])
+    return o, first
+
+
+def _search_level(I: dict, L: dict, px: np.ndarray, py: np.ndarray,
+                  k: int, refine: bool):
+    """Tolerance −1 for one chunk of misses against one `deep` level
+    (`_level_index`): each miss visits the level's tiles in order of
+    `_gc_bound` — every tile whose bound is at most the miss's
+    threshold tau, tau rising by rounds — and keeps, per region, the
+    planar and the scaled argmin across the visited tiles, each
+    min-reduced in its own metric with ties broken by (d, x, y); the
+    region's distance is haversine at both winners under the 1e-12
+    guard (in `refine` mode, the min of the per-tile meters).
+
+    A miss stops when (1) it holds min(k, regions of the level)
+    regions, (2) its k-th distance (by (dist, region_id)) is at most
+    tau, so every unvisited tile is farther than it, and (3) outside
+    `refine` mode, no unvisited tile of a region whose planar or
+    scaled winner is that near has a planar or scaled bound at or
+    below that winner: such a tile could still move the winner, and
+    it is visited next. Until (1) holds, tau rises to the next tile's
+    bound, or further as the band above its first value doubles; once
+    (1) holds, to the k-th distance. Each round visits a tile or raises
+    tau past one, so the search ends.
+
+    Returns (miss, region, dist) for every visited (miss, region)."""
+    M, nT = len(px), len(L["T"])
+    need = min(k, len(L["regs"]))
+    BL = _gc_bound(px[:, None], py[:, None],
+                   L["bx0"], L["by0"], L["bx1"], L["by1"])
+    bptr = L["blk_ptr"]
+    tau = np.full(M, -np.inf)
+    target = BL.min(axis=1)
+    first = target.copy()
+    e64, ef = np.empty(0, np.int64), np.empty(0)
+    pend_key, pend_lb, vis, forced = e64, ef, e64, e64
+    # per visited (miss, region): m, d, nx, ny, ds, sx, sy, v, reg
+    W = (e64,) + (ef,) * 7 + (e64,)
+    act = np.arange(M)
+    out = []
+    while len(act):
+        # expand the blocks that the new thresholds reach
+        sub = BL[act]
+        am, ab = np.nonzero((sub <= target[act, None])
+                            & (sub > tau[act, None]))
+        rep, j = _ranges(bptr[ab], bptr[ab + 1] - bptr[ab])
+        m = act[am][rep]
+        key = m * nT + j
+        if len(vis):
+            new = ~_in_sorted(key, vis)
+            key, m, j = key[new], m[new], j[new]
+        pend_key = np.concatenate((pend_key, key))
+        pend_lb = np.concatenate((pend_lb, _gc_bound(
+            px[m], py[m], L["x0"][j], L["y0"][j], L["x1"][j], L["y1"][j])))
+        # visit every pending tile within the threshold, and the forced
+        sel = pend_lb <= target[pend_key // nT]
+        if len(forced):
+            forced = np.unique(forced)
+            sel |= _in_sorted(pend_key, forced)
+        vkey = np.union1d(pend_key[sel], forced)
+        pend_key, pend_lb = pend_key[~sel], pend_lb[~sel]
+        tau[act] = target[act]
+        if len(vkey):
+            vis = np.union1d(vis, vkey)
+            vm = vkey // nT
+            W = tuple(np.concatenate(p) for p in zip(W, (vm,) + _level_dists(
+                I, L, px, py, vm, vkey % nT, refine)))
+        # per (miss, region): planar winner, scaled winner, geodesic min
+        m, d, nx, ny, ds, sx, sy, v, reg = W
+        o, f = _group_first((sy, sx, ds, reg, m))
+        ds, sx, sy = ds[o][f], sx[o][f], sy[o][f]
+        o, f = _group_first((ny, nx, d, reg, m))
+        v = np.minimum.reduceat(v[o], np.nonzero(f)[0]) if len(o) else ef
+        m, reg, d, nx, ny = m[o][f], reg[o][f], d[o][f], nx[o][f], ny[o][f]
+        W = (m, d, nx, ny, ds, sx, sy, v, reg)
+        if refine:
+            dist = v
+        else:
+            d0 = np.asarray(distance.haversine(nx, ny, px[m], py[m]))
+            d1 = np.asarray(distance.haversine(sx, sy, px[m], py[m]))
+            dist = np.where(d1 < d0 * (1.0 - 1e-12), d1, d0)
+        # the k-th (dist, region_id) per miss
+        o = np.lexsort((reg, dist, m))
+        cnt = np.bincount(m, minlength=M)
+        start = np.zeros(M + 1, dtype=np.int64)
+        np.cumsum(cnt, out=start[1:])
+        kth = np.full(M, np.inf)
+        has = cnt >= need
+        kth[has] = dist[o][start[:-1][has] + need - 1]
+        # the next unvisited tile's bound: pending, or unexpanded blocks
+        nxt = np.where(sub > target[act, None], sub, np.inf).min(axis=1)
+        nb = np.full(M, np.inf)
+        nb[act] = nxt
+        np.minimum.at(nb, pend_key // nT, pend_lb)
+        short = ~has
+        cand = has & (kth <= tau)
+        forced = e64
+        if not refine and len(m):
+            # rule (3) for the regions whose winners are near enough
+            # to matter: unvisited tiles that could still move them
+            r3 = cand[m] & (np.minimum(d0, d1) <= kth[m])
+            ri = np.searchsorted(L["regs"], reg[r3])
+            rr, pos = _ranges(L["rptr"][ri], L["rptr"][ri + 1] - L["rptr"][ri])
+            jj = L["rtile"][pos]
+            mm = m[r3][rr]
+            key = mm * nT + jj
+            unv = ~_in_sorted(key, vis)
+            rr, jj, mm, key = rr[unv], jj[unv], mm[unv], key[unv]
+            xa = px[mm] - 360.0 * np.round((px[mm] - L["cx"][jj]) / 360.0)
+            gx = np.maximum(np.maximum(L["x0"][jj] - xa, xa - L["x1"][jj]),
+                            0.0)
+            gy = np.maximum(np.maximum(L["y0"][jj] - py[mm],
+                                       py[mm] - L["y1"][jj]), 0.0)
+            w = np.cos(np.radians(py[mm]))
+            shrink = 1.0 - 1e-9
+            hit = ((np.hypot(gx, gy) * shrink <= d[r3][rr])
+                   | (np.hypot(gx * w, gy) * shrink <= ds[r3][rr]))
+            forced = key[hit]
+        has_forced = np.bincount(forced // nT, minlength=M) > 0
+        done = np.zeros(M, dtype=bool)
+        done[act] = (nb[act] == np.inf) | (cand[act] & ~has_forced[act])
+        grow = np.maximum(nb, first + 2.0 * (tau - first))
+        target = np.where(short, grow, np.maximum(tau, kth))
+        fin = done[m]
+        out.append((m[fin], reg[fin], dist[fin]))
+        W = tuple(a[~fin] for a in W)
+        keep_p = ~done[pend_key // nT]
+        pend_key, pend_lb = pend_key[keep_p], pend_lb[keep_p]
+        act = act[~done[act]]
+    return tuple(np.concatenate(c) for c in zip(*out)) if out else (
+        e64, e64, ef)
+
+
+def _unlimited_pairs(I: dict, px: np.ndarray, py: np.ndarray, k: int,
+                     keep: np.ndarray | None = None, refine: bool = False):
+    """Tolerance −1 candidates of a batch of Q1-miss points against
+    the boundary index (≙ the reference's "traverse all data",
+    AreaCityQuery.java:100), searched per `deep` level over the level's
+    kind-0 tiles with distance-fit segments (`_search_level`), misses
+    in chunks that keep the per-chunk arrays under UNLIMITED_ROWS rows.
+    `keep` as in `_index_point_hits`. Returns (point, region, deep,
+    dist_m) per visited (point, region); `_nearest_per_deep` keeps the
+    nearest k per level."""
+    fptr = I["fseg_ptr"]
+    tiles = np.nonzero((I["kind"] == 0) & (fptr[1:] > fptr[:-1]))[0]
+    if keep is not None:
+        tiles = tiles[_in_sorted(I["region"][tiles], keep)]
+    parts = []
+    for dv in np.unique(I["deep"][tiles]) if len(px) else ():
+        L = _level_index(I, tiles[I["deep"][tiles] == dv])
+        step = max(1, UNLIMITED_ROWS // len(L["T"]))
+        for c0 in range(0, len(px), step):
+            m, reg, dist = _search_level(I, L, px[c0:c0 + step],
+                                         py[c0:c0 + step], k, refine)
+            parts.append((m + c0, reg, np.full(len(m), dv), dist))
+    if not parts:
+        e = np.empty(0, np.int64)
+        return e, e, e, np.empty(0)
+    return tuple(np.concatenate(c) for c in zip(*parts))
+
+
 def _nearest_per_deep(row: np.ndarray, region: np.ndarray,
                       deep: np.ndarray, dist: np.ndarray, k: int):
     """`_finish_tolerance`'s reduction on one batch, in numpy: the min
@@ -930,37 +1211,46 @@ def _nearest_per_deep(row: np.ndarray, region: np.ndarray,
 
 
 def _make_nearest_udf(ib, bb, tol: float, base_res: int, k: int,
-                      keep: np.ndarray | None = None):
-    """The one-pass Q2 (tolerance>0) kernel as a scalar Arrow UDF:
-    (lng, lat, cell_id) → array<struct<region_id bigint, dist_m
-    double>>. A probe with Q1 hits (`_index_point_hits`, as
-    `_make_regions_udf`) gets them with dist_m null; any other probe
-    with coordinates gets its tolerance candidates (`_tolerance_pairs`)
+                      keep: np.ndarray | None = None, refine: bool = False):
+    """The one-pass Q2 kernel as a scalar Arrow UDF: (lng, lat,
+    cell_id) → array<struct<region_id bigint, dist_m double>>. A probe
+    with Q1 hits (`_index_point_hits`, as `_make_regions_udf`) gets
+    them with dist_m null; any other probe with coordinates gets its
+    candidates — `_tolerance_pairs` for tol > 0, the unlimited search
+    `_unlimited_pairs` for tol < 0 (`refine` = `geodesic_refine`) —
     reduced to the nearest `k` regions per deep level
     (`_nearest_per_deep`). ib / bb and `keep` as in `_make_regions_udf`;
-    the per-tile `deep` array of the boundary index maps candidates to
-    their level. Each batch first calls `_drop_spark_zip_importers`."""
+    ib None skips Q1 (every row is a miss, cell_id is not read). Each
+    batch first calls `_drop_spark_zip_importers`."""
     out_type = ArrayType(StructType([StructField("region_id", LongType()),
                                      StructField("dist_m", DoubleType())]))
+    empty = np.empty(0, np.int64)
 
     def nearest(lng: pa.Array, lat: pa.Array, cell: pa.Array) -> pa.Array:
         _drop_spark_zip_importers()
-        n = len(cell)
-        if cell.null_count:
-            cell = cell.fill_null(-1)  # cell ids are never negative
+        n = len(lng)
         I = bb.value
         px = lng.to_numpy(zero_copy_only=False)  # nulls read as NaN
         py = lat.to_numpy(zero_copy_only=False)
-        (ir, ig), (br, bg) = _index_point_hits(
-            I, px, py, cell.to_numpy(zero_copy_only=False), keep, ib.value)
+        (ir, ig), (br, bg) = (empty, empty), (empty, empty)
+        if ib is not None:
+            if cell.null_count:
+                cell = cell.fill_null(-1)  # cell ids are never negative
+            (ir, ig), (br, bg) = _index_point_hits(
+                I, px, py, cell.to_numpy(zero_copy_only=False), keep,
+                ib.value)
         hit = np.zeros(n, dtype=bool)
         hit[ir] = True
         hit[br] = True
         miss = np.nonzero(~hit & ~np.isnan(px) & ~np.isnan(py))[0]
-        prow, tix, dist = _tolerance_pairs(I, px[miss], py[miss], tol,
-                                           base_res, keep)
-        tr, tg, td = _nearest_per_deep(miss[prow], I["region"][tix],
-                                       I["deep"][tix], dist, k)
+        if tol < 0:
+            prow, preg, pdeep, dist = _unlimited_pairs(
+                I, px[miss], py[miss], k, keep, refine)
+        else:
+            prow, tix, dist = _tolerance_pairs(I, px[miss], py[miss], tol,
+                                               base_res, keep)
+            preg, pdeep = I["region"][tix], I["deep"][tix]
+        tr, tg, td = _nearest_per_deep(miss[prow], preg, pdeep, dist, k)
         rows = np.concatenate((ir, br, tr))
         order = np.argsort(rows, kind="stable")
         offsets = np.zeros(n + 1, dtype=np.int32)
@@ -1216,7 +1506,7 @@ class SpatialEngine:
         self.boundaries = boundaries
         self.tiles = tiles
         self.base_res = base_res
-        # geodesic_refine=True makes the tolerance=-1 paths additionally
+        # geodesic_refine=True makes the tolerance=-1 search additionally
         # sample haversine along each argmin winner's SEGMENT (late r5
         # long-range refinement: sub-metre of geodesic truth at
         # planetary range). Default False pins the reference-compatible
@@ -1386,7 +1676,7 @@ class SpatialEngine:
         # can't sneak a 3M+-row tile table into a broadcast build
         return t.hint("shuffle_merge")
 
-    def _boundary_index(self) -> tuple | None:
+    def _boundary_index(self, unbounded: bool = False) -> tuple | None:
         """Build (once, lazily) the broadcast boundary-tile index:
         every kind≠1 tile pre-decoded into flat numpy CSR arrays
         (`_build_boundary_index`): sorted cell table, per-cell tile
@@ -1397,20 +1687,22 @@ class SpatialEngine:
 
         Returns (Broadcast, bcells_df) or None when the boundary WKB
         volume exceeds `broadcast_wkb_budget` (the join fallbacks take
-        over). WKB decode runs DISTRIBUTED
-        (mapInPandas over the tile table); the driver only concatenates
-        the already-columnar arrays (one toPandas of ~the WKB volume,
-        bounded by the budget) and broadcasts them — workers unpickle
+        over) — unless `unbounded`, which the tolerance -1 fallback
+        passes: its search needs every boundary tile. WKB decode runs
+        DISTRIBUTED (mapInPandas over the tile table); the driver only
+        concatenates the already-columnar arrays (one toPandas of ~the
+        WKB volume, bounded by the budget) and broadcasts them — workers unpickle
         the index once per process and reuse it across tasks and jobs.
         The decode calls `_drop_spark_zip_importers` per batch.
         """
+        if not unbounded:
+            if self._bindex_off:
+                return None
+            if self._boundary_wkb_bytes() > self.broadcast_wkb_budget:
+                self._bindex_off = True
+                return None
         if self._bindex is not None:
             return self._bindex
-        if self._bindex_off:
-            return None
-        if self._boundary_wkb_bytes() > self.broadcast_wkb_budget:
-            self._bindex_off = True
-            return None
         tb = self.tiles.filter(F.col("kind") != 1)
 
         out_schema = StructType([
@@ -1908,19 +2200,21 @@ class SpatialEngine:
         "0.00") and PointDistanceID (feature ordinal) exactly as the
         reference injects them (AreaCityQuery.java:142).
 
-        Plans. tolerance 0 is Q1 with props. For tolerance > 0 with both
-        broadcast indexes within their ceilings (`_one_pass_indexes`)
-        the plan is ONE pass over the probe, like Q1's:
-        `select(point_id, explode(nearest_udf(lng, lat, cell_id)))`
-        (`_make_nearest_udf`: Q1 hits, else the nearest regions per
-        deep, all in one Arrow batch) and one broadcast join with the
-        props dim — no checkpoint, anti-join, window, union or shuffle
-        exchange. Otherwise (an index over its ceiling, the salted
-        path, or tolerance -1) the two-stage join fallback: Q1 is
+        Plans. tolerance 0 is Q1 with props. For any other tolerance,
+        -1 included, with both broadcast indexes within their ceilings
+        (`_one_pass_indexes`) the plan is ONE pass over the probe, like
+        Q1's: `select(point_id, explode(nearest_udf(lng, lat,
+        cell_id)))` (`_make_nearest_udf`: Q1 hits, else the nearest
+        regions per deep, all in one Arrow batch) and one broadcast
+        join with the props dim — no checkpoint, anti-join, window,
+        union or shuffle exchange. Otherwise (an index over its
+        ceiling, or the salted path) the two-stage join fallback: Q1 is
         checkpointed, its misses (a LEFT ANTI join on point_id) run a
-        distance stage (the 24-gon cover joined to the kind-0 tiles,
-        or the iterative search for -1), and `_finish_tolerance` keeps
-        the nearest per deep.
+        distance stage, and `_finish_tolerance` keeps the nearest per
+        deep. The distance stage is the 24-gon cover joined to the
+        kind-0 tiles for tolerance > 0; for -1 it is the one-pass
+        kernel over the misses alone, with the boundary index built
+        whatever its size (the search needs every boundary tile).
 
         point_id must be a row key, one row per probe, as every caller
         uses it: the one-pass plan judges each row alone, while the
@@ -1933,11 +2227,11 @@ class SpatialEngine:
             F.col("point_id"), F.col(lng).alias("lng"), F.col(lat).alias("lat")
         )
         base_res = self.base_res
-        idx = self._one_pass_indexes() if tolerance_m > 0 else None
+        idx = self._one_pass_indexes() if tolerance_m != 0 else None
         if idx is not None:
             hits = _make_nearest_udf(
                 *idx, float(tolerance_m), base_res, k,
-                self._keep_region_ids(where))(
+                self._keep_region_ids(where), self.geodesic_refine)(
                 F.col("lng").cast("double"), F.col("lat").cast("double"),
                 F.col("cell_id"))
             m = (self._probe_cells(pts)
@@ -1967,58 +2261,58 @@ class SpatialEngine:
             return base_out
         misses = pts.join(base.select("point_id").distinct(), "point_id", "left_anti")
 
-        if tolerance_m > 0:
-            cover_schema = StructType([
-                StructField("point_id", LongType()),
-                StructField("lng", DoubleType()),
-                StructField("lat", DoubleType()),
-                StructField("cell_id", LongType()),
-            ])
-
-            tol_m = float(tolerance_m)
-
-            def cover_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                # Fully vectorized 24-gon bbox cover at base_res — no
-                # per-row Python on the (potentially billions-of-docs)
-                # miss set.
-                for pdf in it:
-                    _drop_spark_zip_importers()
-                    pid = pdf["point_id"].to_numpy()
-                    px = pdf["lng"].to_numpy(dtype=np.float64)
-                    py = pdf["lat"].to_numpy(dtype=np.float64)
-                    rep, cells = _circle_cell_cover(px, py, tol_m, base_res)
-                    yield pd.DataFrame({
-                        "point_id": pid[rep].astype("int64"),
-                        "lng": px[rep],
-                        "lat": py[rep],
-                        "cell_id": cells,
-                    })
-
-            # cover_fn explodes every miss ~(tol/cell)²-fold, so its
-            # input partitioning must not ride AQE's byte-based
-            # coalescing of the upstream anti-join (165k skinny miss
-            # rows look like "3 partitions" to AQE; the explode then
-            # runs 82× fan-out on 3 tasks — measured an 11.6 s
-            # straggler vs 2.7 s peers at local[2]). One cheap hash
-            # shuffle of the skinny miss set restores explode
-            # parallelism at any cluster size.
-            misses = misses.repartition(F.col("point_id"))
-            cover = misses.mapInPandas(cover_fn, cover_schema)
-            tiles_b = self._tiles_for(where).filter(F.col("kind") == 0)
-            cand = cover.join(tiles_b, "cell_id").select(
-                "point_id", "lng", "lat", "region_id",
-                "minx", "miny", "maxx", "maxy", "tile_wkb")
-        else:  # tolerance -1: unlimited — every boundary tile is a candidate
-            # (the reference documents -1 as "traverses all data,
-            # performance extremely low", AreaCityQuery.java:100.)
-            # Iterative radius doubling: log-many bounded rounds, no
-            # driver-side materialization of the miss set at ANY size.
-            t = self.tiles.filter(F.col("kind") == 0)
-            if where:
-                keep = self.boundaries.filter(where).select("region_id")
-                t = t.join(F.broadcast(keep), "region_id", "left_semi")
-            dists = self._dists_unlimited_iterative(misses, t, k)
+        if tolerance_m < 0:
+            near = _make_nearest_udf(
+                None, self._boundary_index(unbounded=True)[0], -1.0,
+                base_res, k, self._keep_region_ids(where),
+                self.geodesic_refine)(
+                F.col("lng").cast("double"), F.col("lat").cast("double"),
+                F.lit(None).cast("long"))
+            dists = (misses.select(F.col("point_id").cast("long"),
+                                   F.explode(near).alias("_h"))
+                     .select("point_id", "_h.region_id", "_h.dist_m"))
             return self._finish_tolerance(base_out, dists, k)
+
+        cover_schema = StructType([
+            StructField("point_id", LongType()),
+            StructField("lng", DoubleType()),
+            StructField("lat", DoubleType()),
+            StructField("cell_id", LongType()),
+        ])
+
+        tol_m = float(tolerance_m)
+
+        def cover_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            # Fully vectorized 24-gon bbox cover at base_res — no
+            # per-row Python on the (potentially billions-of-docs)
+            # miss set.
+            for pdf in it:
+                _drop_spark_zip_importers()
+                pid = pdf["point_id"].to_numpy()
+                px = pdf["lng"].to_numpy(dtype=np.float64)
+                py = pdf["lat"].to_numpy(dtype=np.float64)
+                rep, cells = _circle_cell_cover(px, py, tol_m, base_res)
+                yield pd.DataFrame({
+                    "point_id": pid[rep].astype("int64"),
+                    "lng": px[rep],
+                    "lat": py[rep],
+                    "cell_id": cells,
+                })
+
+        # cover_fn explodes every miss ~(tol/cell)²-fold, so its
+        # input partitioning must not ride AQE's byte-based
+        # coalescing of the upstream anti-join (165k skinny miss
+        # rows look like "3 partitions" to AQE; the explode then
+        # runs 82× fan-out on 3 tasks — measured an 11.6 s
+        # straggler vs 2.7 s peers at local[2]). One cheap hash
+        # shuffle of the skinny miss set restores explode
+        # parallelism at any cluster size.
+        misses = misses.repartition(F.col("point_id"))
+        cover = misses.mapInPandas(cover_fn, cover_schema)
+        tiles_b = self._tiles_for(where).filter(F.col("kind") == 0)
+        cand = cover.join(tiles_b, "cell_id").select(
+            "point_id", "lng", "lat", "region_id",
+            "minx", "miny", "maxx", "maxy", "tile_wkb")
 
         dist_schema = StructType([
             StructField("point_id", LongType()),
@@ -2056,39 +2350,37 @@ class SpatialEngine:
                     # semantics unchanged.
                     sx, sy, _ = predicates.nearest_on_segments_scaled(
                         px, py, segs)
-                    keep = np.ones(len(px), dtype=bool)
-                    if tol > 0:
-                        # per-point circle radii in degrees — the exact
-                        # CreateSimpleCircle step-ladder arithmetic
-                        km = tol / 1000.0
-                        a = 0.01 if km < 5 else 0.1 if km < 50 else 1.0 if km < 500 else 10.0
-                        b = distance.haversine(px, py, px + a, py)
-                        c = distance.haversine(px, py, px, py + a)
-                        rb = tol / b * a
-                        rc = tol / c * a
-                        rmin = np.minimum(rb, rc) * cos_pi24
-                        rmax = np.maximum(rb, rc)
-                        definite = d_planar <= rmin
-                        impossible = d_planar > rmax
-                        keep = definite.copy()
-                        amb = np.nonzero(~definite & ~impossible)[0]
-                        if len(amb):
-                            # 24-gon vs the FILTERED piece boundary: the
-                            # probe is outside every candidate region
-                            # (it missed Q1 under the same `where`), so
-                            # circle ∩ region ≠ ∅ ⟺ the circle touches
-                            # true boundary — and g's window/bridge runs
-                            # must not vote (same artifact as the
-                            # distance itself, see _distance_segs)
-                            keep[amb] = _ambiguous_circle_keep(
-                                px[amb], py[amb], rb[amb], rc[amb],
-                                np.ascontiguousarray(segs[:, 0]),
-                                np.ascontiguousarray(segs[:, 1]),
-                                np.ascontiguousarray(segs[:, 2]),
-                                np.ascontiguousarray(segs[:, 3]),
-                                np.zeros(len(amb), dtype=np.int64),
-                                np.full(len(amb), len(segs),
-                                        dtype=np.int64))
+                    # per-point circle radii in degrees — the exact
+                    # CreateSimpleCircle step-ladder arithmetic
+                    km = tol / 1000.0
+                    a = 0.01 if km < 5 else 0.1 if km < 50 else 1.0 if km < 500 else 10.0
+                    b = distance.haversine(px, py, px + a, py)
+                    c = distance.haversine(px, py, px, py + a)
+                    rb = tol / b * a
+                    rc = tol / c * a
+                    rmin = np.minimum(rb, rc) * cos_pi24
+                    rmax = np.maximum(rb, rc)
+                    definite = d_planar <= rmin
+                    impossible = d_planar > rmax
+                    keep = definite.copy()
+                    amb = np.nonzero(~definite & ~impossible)[0]
+                    if len(amb):
+                        # 24-gon vs the FILTERED piece boundary: the
+                        # probe is outside every candidate region
+                        # (it missed Q1 under the same `where`), so
+                        # circle ∩ region ≠ ∅ ⟺ the circle touches
+                        # true boundary — and g's window/bridge runs
+                        # must not vote (same artifact as the
+                        # distance itself, see _distance_segs)
+                        keep[amb] = _ambiguous_circle_keep(
+                            px[amb], py[amb], rb[amb], rc[amb],
+                            np.ascontiguousarray(segs[:, 0]),
+                            np.ascontiguousarray(segs[:, 1]),
+                            np.ascontiguousarray(segs[:, 2]),
+                            np.ascontiguousarray(segs[:, 3]),
+                            np.zeros(len(amb), dtype=np.int64),
+                            np.full(len(amb), len(segs),
+                                    dtype=np.int64))
                     if keep.any():
                         d0 = np.asarray(distance.haversine(
                             nx[keep], ny[keep], px[keep], py[keep]))
@@ -2118,571 +2410,6 @@ class SpatialEngine:
 
         dists = cand.mapInPandas(dist_fn, dist_schema)
         return self._finish_tolerance(base_out, dists, k)
-
-    def _dists_unlimited_iterative(self, misses: DataFrame,
-                                   tiles_b: DataFrame, k: int,
-                                   small_direct: int = 100_000) -> DataFrame:
-        """tolerance=-1 distance stage without materializing the miss
-        set on the driver (any miss-set size): per-round radius
-        doubling. Each round covers every active point's radius-r bbox
-        (the 24-gon step-ladder per-axis degree radii, clamped to the
-        tile-store extent), computes exact candidate distances,
-        forms candidates ONLY for each point's still-unsatisfied deep
-        levels (a deep bitmask rides the cover rows — no extra
-        shuffle), and freezes a (point, deep) once its min(k,
-        #regions-of-deep) winners are CERTIFIED: winner distance ≤ r/4
-        (factor-4 margin over the bbox linearization AND the
-        planar-argmin axis anisotropy — sound to |lat| ≲ 69°). A point
-        whose clamped bbox covered the whole extent saw every tile, so
-        all its deeps freeze unconditionally — termination in
-        O(log(world/r0)) rounds. Only (point_id, lng, lat, deep) state
-        and per-(point, region) minima flow between rounds
-        (localCheckpoint'd, ContextCleaner-reclaimed); the driver sees
-        a round counter and an isEmpty flag — never rows.
-
-        Distance definition (r5): haversine at the better of TWO
-        argmin candidates — the degree-planar winner (reference
-        parity) and the cos-scaled locally-metric-correct winner —
-        each min-reduced across tiles in its own metric. Both argmins
-        are over the region's full true-boundary segment set, so the
-        definition stays tiling-independent; the scaled candidate only
-        wins under the 1e-12 relative-improvement guard (rect-fixture
-        hashes bit-stable).
-
-        At planet scale: real region sets have every deep level nearby,
-        so almost all (point, deep)s certify in round one; the
-        full-extent cap round only pairs points with the tiles of deep
-        levels whose k-th feature is continent-distant — inherent in
-        the reference's '-1 traverses all data' semantics
-        (AreaCityQuery.java:100)."""
-        base_res = self.base_res
-        r0 = 262144.0        # 2^18 m starting radius
-        growth = 32.0        # ×32/round → ≤3 rounds to planet scale
-
-        # tiny metadata dims (≤ #deep-levels rows), ONE pass over tiles
-        deep_stats = (
-            tiles_b.groupBy("deep").agg(
-                F.countDistinct("region_id").alias("tot"),
-                F.min("minx").alias("ex0"), F.min("miny").alias("ey0"),
-                F.max("maxx").alias("ex1"), F.max("maxy").alias("ey1"))
-            .localCheckpoint(eager=True)
-        )
-        deep_tot = deep_stats.select("deep", "tot")
-        ex_row = deep_stats.agg(
-            F.min("ex0").alias("ex0"), F.min("ey0").alias("ey0"),
-            F.max("ex1").alias("ex1"), F.max("ey1").alias("ey1")).first()
-        extent = self.spark.createDataFrame(
-            [(ex_row["ex0"], ex_row["ey0"], ex_row["ex1"], ex_row["ey1"])],
-            "ex0 double, ey0 double, ex1 double, ey1 double")
-
-        cover_schema = StructType([
-            StructField("point_id", LongType()),
-            StructField("lng", DoubleType()),
-            StructField("lat", DoubleType()),
-            StructField("mask", LongType()),
-            StructField("cell_id", LongType()),
-        ])
-
-        def make_cover(r_m: float):
-            def cover_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                # per-axis degree radii via the CreateSimpleCircle
-                # step-ladder (AreaCityQuery.java:1388-1405), bbox
-                # clamped to the tile-store extent; vectorized via
-                # grid.cover_bboxes
-                km = r_m / 1000.0
-                a = 0.01 if km < 5 else 0.1 if km < 50 else 1.0 if km < 500 else 10.0
-                for pdf in it:
-                    if not len(pdf):
-                        yield pd.DataFrame({
-                            "point_id": pd.Series([], dtype="int64"),
-                            "lng": pd.Series([], dtype="float64"),
-                            "lat": pd.Series([], dtype="float64"),
-                            "mask": pd.Series([], dtype="int64"),
-                            "cell_id": pd.Series([], dtype="int64"),
-                        })
-                        continue
-                    pid = pdf["point_id"].to_numpy()
-                    msk = pdf["mask"].to_numpy()
-                    px = pdf["lng"].to_numpy(dtype=np.float64)
-                    py = pdf["lat"].to_numpy(dtype=np.float64)
-                    b = np.asarray(distance.haversine(px, py, px + a, py))
-                    c = np.asarray(distance.haversine(px, py, px, py + a))
-                    rb = r_m / b * a
-                    rc = r_m / c * a
-                    minx = np.maximum(px - rb, pdf["ex0"].to_numpy())
-                    maxx = np.minimum(px + rb, pdf["ex1"].to_numpy())
-                    miny = np.maximum(py - rc, pdf["ey0"].to_numpy())
-                    maxy = np.minimum(py + rc, pdf["ey1"].to_numpy())
-                    ok = (minx <= maxx) & (miny <= maxy)
-                    idx = np.nonzero(ok)[0]
-                    rep, cid = grid.cover_bboxes(
-                        minx[idx], miny[idx], maxx[idx], maxy[idx], base_res)
-                    sel = idx[rep]
-                    yield pd.DataFrame({
-                        "point_id": pid[sel].astype("int64"),
-                        "lng": px[sel],
-                        "lat": py[sel],
-                        "mask": msk[sel].astype("int64"),
-                        "cell_id": cid,
-                    })
-            return cover_fn
-
-        active = (misses.select("point_id", "lng", "lat")
-                  .crossJoin(F.broadcast(deep_tot.select("deep")))
-                  .localCheckpoint(eager=True))  # (point, deep) state
-        t_side = F.broadcast(tiles_b) if self.broadcast_tiles else tiles_b
-        # beyond ~the extent's own span the cell cover prunes nothing —
-        # switch to the cogrouped full reverse scan. (ex_row is a 1-row
-        # metadata fetch, same class as QueryInitInfo's kind counts.)
-        if ex_row["ex0"] is None:
-            r_switch = 0.0  # no tiles at all: empty terminal round
-        else:
-            r_switch = 111320.0 * max(ex_row["ex1"] - ex_row["ex0"],
-                                      ex_row["ey1"] - ex_row["ey0"])
-        parts: list[DataFrame] = []
-        r = r0
-        n_prev = active.count()  # scalar control-flow action
-        # telemetry (VERDICT r3 #7): rounds taken, per-round radius /
-        # candidate-row / surviving-frontier counts, and how the
-        # iteration terminated — so a growth-factor mistune at 100×
-        # scale shows up in bench JSON instead of silently burning
-        # rounds. Candidate counts ride an Observation on the round's
-        # ALREADY-materializing checkpoint (CollectMetrics in the same
-        # job) — zero extra Spark jobs; frontier counts reuse the
-        # loop's own control-flow count.
-        stats: dict = {
-            "start_pd_pairs": int(n_prev), "rounds": 0,
-            "round_radius_m": [], "round_candidates": [],
-            "round_frontier_after": [],
-            "terminal_full_scan": False, "terminal_reason": None,
-        }
-        self.last_q2_iter_stats = stats
-        w = Window.partitionBy("point_id", "deep").orderBy("dist_m", "region_id")
-        while True:
-            # direct-to-terminal fast paths: (a) the remaining frontier
-            # is small enough that the exact cogrouped scan is cheaper
-            # than ANY round's fixed job overhead (small_direct is
-            # (point,deep)-pair count — ~10 Spark jobs of cover-round
-            # machinery never beat a sub-second full scan), (b) the
-            # radius has reached the extent span so the cover prunes
-            # nothing anyway
-            if r >= r_switch or n_prev <= small_direct:
-                stats["terminal_full_scan"] = True
-                stats["terminal_reason"] = (
-                    "radius_reached_extent" if r >= r_switch
-                    else "small_frontier")
-                parts.append(self._dists_full_scan(active, tiles_b))
-                break
-            act_pts = active.groupBy("point_id", "lng", "lat").agg(
-                F.expr("bit_or(cast(shiftleft(1, cast(deep AS INT)) AS BIGINT))")
-                .alias("mask"))
-            act_ext = act_pts.crossJoin(F.broadcast(extent))
-            cover = act_ext.mapInPandas(make_cover(r), cover_schema)
-            cand = (cover.join(t_side, "cell_id")
-                    .filter(F.expr(
-                        "(shiftright(mask, cast(deep AS INT)) & 1) = 1"))
-                    .select("point_id", "lng", "lat", "cell_id", "region_id",
-                            "deep", "minx", "miny", "maxx", "maxy",
-                            "tile_wkb"))
-            obs = Observation()
-            per_pr = (self._cand_dists(cand)
-                      .observe(obs, F.count(F.lit(1)).alias("n"))
-                      .localCheckpoint(eager=True))
-            stats["rounds"] += 1
-            stats["round_radius_m"].append(float(r))
-            stats["round_candidates"].append(int(obs.get["n"]))
-            ranked = per_pr.withColumn("rn", F.row_number().over(w))
-            per_pd = (ranked.join(F.broadcast(deep_tot), "deep")
-                      .groupBy("point_id", "deep")
-                      .agg(F.count("*").alias("cnt"),
-                           F.max(F.when(
-                               F.col("rn") <= F.least(F.lit(k), F.col("tot")),
-                               F.col("dist_m"))).alias("dk"),
-                           F.first("tot").alias("tot")))
-            frozen = per_pd.filter(
-                (F.col("cnt") >= F.least(F.lit(k), F.col("tot")))
-                & (F.col("dk") <= F.lit(r / 4.0))) \
-                .select("point_id", "deep")
-            parts.append(per_pr.join(frozen, ["point_id", "deep"], "left_semi")
-                               .select("point_id", "region_id", "dist_m"))
-            active = active.join(frozen, ["point_id", "deep"], "left_anti") \
-                           .localCheckpoint(eager=True)
-            # scalar control-flow counts only — no row data on the driver
-            n_act = active.count()
-            stats["round_frontier_after"].append(int(n_act))
-            if n_act == 0:
-                stats["terminal_reason"] = "converged"
-                break
-            if n_act > 0.5 * n_prev:
-                # cover rounds stopped shrinking the frontier (the k-th
-                # feature of some deep is a large fraction of the world
-                # away for most points) — radius doubling would just
-                # re-pay the cover; go straight to the exact full scan
-                stats["terminal_full_scan"] = True
-                stats["terminal_reason"] = "frontier_stall"
-                parts.append(self._dists_full_scan(active, tiles_b))
-                break
-            n_prev = n_act
-            r *= growth
-
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _dists_full_scan(self, active: DataFrame,
-                         tiles_b: DataFrame) -> DataFrame:
-        """Terminal round of the tolerance=-1 iteration: an exact full
-        reverse scan for the remaining (point, deep) pairs, expressed
-        as a cogrouped applyInPandas — points hash-bucket by point_id,
-        the needed deeps' boundary tiles REPLICATE to every bucket
-        (tile dim ≪ point count; at scale only the continent-distant
-        deep levels are still active here, so the replicated side is a
-        handful of far regions' tiles). Inside each group the old
-        reverse-broadcast kernel runs unchanged: one vectorized
-        planar-nearest call per tile over the bucket's points, argmin
-        min-reduce per region, haversine once at each winner — pair
-        formation never materializes as rows, and the driver holds
-        nothing."""
-        B = max(int(self.spark.sparkContext.defaultParallelism), 8)
-        refine = self.geodesic_refine
-        act_pts = active.groupBy("point_id", "lng", "lat").agg(
-            F.expr("bit_or(cast(shiftleft(1, cast(deep AS INT)) AS BIGINT))")
-            .alias("mask"))
-        pts_b = act_pts.withColumn(
-            "b", F.pmod(F.col("point_id"), F.lit(B)).cast("int"))
-        deeps_needed = active.select("deep").distinct()
-        tls = (tiles_b.join(F.broadcast(deeps_needed), "deep", "left_semi")
-               .select("deep", "cell_id", "region_id", "minx", "miny",
-                       "maxx", "maxy", "tile_wkb")
-               .crossJoin(self.spark.range(B)
-                          .select(F.col("id").cast("int").alias("b"))))
-        schema = StructType([
-            StructField("point_id", LongType()),
-            StructField("region_id", LongType()),
-            StructField("dist_m", DoubleType()),
-        ])
-
-        def kernel(pts: pd.DataFrame, tls_: pd.DataFrame) -> pd.DataFrame:
-            if not len(pts) or not len(tls_):
-                return pd.DataFrame({
-                    "point_id": pd.Series([], dtype="int64"),
-                    "region_id": pd.Series([], dtype="int64"),
-                    "dist_m": pd.Series([], dtype="float64"),
-                })
-            px = pts["lng"].to_numpy(dtype=np.float64)
-            py = pts["lat"].to_numpy(dtype=np.float64)
-            pid = pts["point_id"].to_numpy()
-            msk = pts["mask"].to_numpy()
-            sel_by_deep: dict[int, np.ndarray] = {}
-            # rid → (sel, planar_d, nx, ny) min-reduced across its tiles
-            best: dict[int, tuple] = {}
-            for row in tls_.itertuples(index=False):
-                dp = int(row.deep)
-                sel = sel_by_deep.get(dp)
-                if sel is None:
-                    sel = sel_by_deep[dp] = np.nonzero(
-                        (msk >> dp) & 1)[0]
-                if not len(sel):
-                    continue
-                g = wkb.loads(bytes(row.tile_wkb))
-                segs = _distance_segs(g, row.minx, row.miny,
-                                      row.maxx, row.maxy)
-                if not len(segs):
-                    continue
-                rid = int(row.region_id)
-                ent = best.get(rid)
-                # antimeridian unroll (late r5): shift the PROBE by a
-                # whole number of turns to within 180° of the tile, so
-                # the planar argmins can see across ±180 (haversine is
-                # 360°-periodic, so evaluation never needs the shift;
-                # for every in-range pair round() is 0 and pxa == px
-                # bit-for-bit)
-                cxc = (row.minx + row.maxx) / 2.0
-                pxa = px[sel] - 360.0 * np.round((px[sel] - cxc) / 360.0)
-                nx, ny, d, jn = predicates.nearest_on_segments_idx(
-                    pxa, py[sel], segs)
-                # r5 anisotropy-corrected second candidate: min-reduced
-                # across tiles in ITS OWN metric, haversine decided at
-                # the end (same two-candidate scheme as tolerance>0)
-                sx, sy, sd, js = predicates.nearest_on_segments_scaled_idx(
-                    pxa, py[sel], segs)
-                if refine:
-                    # geodesic mode: evaluate EVERYTHING per tile in
-                    # METERS and min-reduce that — cross-tile reduction
-                    # by a degree metric can pick the wrong tile at
-                    # planetary range (the reference min-reduces meters
-                    # across its splits, which is why it occasionally
-                    # landed exact where the degree reduction was 25 km
-                    # off). Per-tile candidates: haversine at both
-                    # argmin points + 65 samples along each winning
-                    # segment.
-                    h_n = np.asarray(distance.haversine(
-                        nx, ny, px[sel], py[sel]), dtype=np.float64)
-                    h_s = np.asarray(distance.haversine(
-                        sx, sy, px[sel], py[sel]), dtype=np.float64)
-                    jp = _best_segment_by_hav_proxy(pxa, py[sel], segs)
-                    v = np.minimum(np.minimum(
-                        np.minimum(h_n, h_s),
-                        _refine_hav_on_segments(segs[jp], px[sel],
-                                                py[sel])),
-                        np.minimum(
-                            _refine_hav_on_segments(segs[jn], px[sel],
-                                                    py[sel]),
-                            _refine_hav_on_segments(segs[js], px[sel],
-                                                    py[sel])))
-                    if ent is None:
-                        best[rid] = (sel, v)
-                    else:
-                        np.minimum(ent[1], v, out=ent[1])
-                    continue
-                if ent is None:
-                    best[rid] = (sel, np.asarray(d, dtype=np.float64),
-                                 np.asarray(nx), np.asarray(ny),
-                                 np.asarray(sd, dtype=np.float64),
-                                 np.asarray(sx), np.asarray(sy))
-                else:
-                    _, bd, bnx, bny, bsd, bsx, bsy = ent
-                    m = d < bd
-                    bd[m] = d[m]
-                    bnx[m] = nx[m]
-                    bny[m] = ny[m]
-                    ms = sd < bsd
-                    bsd[ms] = sd[ms]
-                    bsx[ms] = sx[ms]
-                    bsy[ms] = sy[ms]
-            out_p, out_r, out_d = [], [], []
-            for rid, ent in best.items():
-                sel = ent[0]
-                out_p.append(pid[sel])
-                out_r.append(np.full(len(sel), rid, dtype=np.int64))
-                if refine:
-                    out_d.append(ent[1])
-                    continue
-                _, bd, bnx, bny, bsd, bsx, bsy = ent
-                d0 = np.asarray(distance.haversine(
-                    bnx, bny, px[sel], py[sel]), dtype=np.float64)
-                d1 = np.asarray(distance.haversine(
-                    bsx, bsy, px[sel], py[sel]), dtype=np.float64)
-                # same genuine-improvement guard as the tolerance paths
-                out_d.append(np.where(d1 < d0 * (1.0 - 1e-12), d1, d0))
-            if not out_p:
-                return pd.DataFrame({
-                    "point_id": pd.Series([], dtype="int64"),
-                    "region_id": pd.Series([], dtype="int64"),
-                    "dist_m": pd.Series([], dtype="float64"),
-                })
-            return pd.DataFrame({
-                "point_id": np.concatenate(out_p).astype("int64"),
-                "region_id": np.concatenate(out_r),
-                "dist_m": np.concatenate(out_d),
-            })
-
-        return (pts_b.groupby("b").cogroup(tls.groupby("b"))
-                .applyInPandas(kernel, schema))
-
-    def _cand_dists(self, cand: DataFrame) -> DataFrame:
-        """Exact per-(point, region) distances for (point, region,
-        tile) candidates, matching the definition the Q2 oracles
-        encode: ARGMIN across the region's tiles (planar, plus the r5
-        cos-scaled metric as an independent second candidate), then
-        haversine evaluated AT the winning boundary points and the
-        better one reported (NOT min of per-tile haversines — at long
-        range the two differ because longitudinal meters shrink with
-        latitude).
-
-        Stage 1 (Arrow batch): candidate rows group per TILE via a
-        lexsort over (cell_id, region_id, bbox bit-keys) — no per-row
-        Python, no byte-string hashing — each tile's WKB decodes once
-        per task (registry cache) and one vectorized planar-nearest
-        call runs per tile group (the Q3 refine's _tile_groups
-        pattern). Stage 2: a JVM struct-min aggregation picks the
-        planar argmin per (point, region) — map-side combine, skinny
-        shuffle — then one thin Arrow pass computes haversine at the
-        winners (the same numpy arithmetic as every other engine
-        distance)."""
-        refine = self.geodesic_refine
-        schema = StructType([
-            StructField("point_id", LongType()),
-            StructField("region_id", LongType()),
-            StructField("deep", IntegerType()),
-            StructField("lng", DoubleType()),
-            StructField("lat", DoubleType()),
-            StructField("planar_d", DoubleType()),
-            StructField("nx", DoubleType()),
-            StructField("ny", DoubleType()),
-            StructField("scaled_d", DoubleType()),
-            StructField("sx", DoubleType()),
-            StructField("sy", DoubleType()),
-            # geodesic mode only: per-(pair, tile) min METERS over all
-            # candidate evaluations (inf in default mode)
-            StructField("vmin", DoubleType()),
-        ])
-
-        _COLS = ("point_id", "region_id", "deep", "lng", "lat",
-                 "planar_d", "nx", "ny", "scaled_d", "sx", "sy", "vmin")
-
-        def _empty():
-            return pd.DataFrame({
-                c: pd.Series([], dtype=(
-                    "int64" if c in ("point_id", "region_id")
-                    else "int32" if c == "deep" else "float64"))
-                for c in _COLS})
-
-        def near_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            registry: dict[tuple, np.ndarray] = {}
-            for pdf in it:
-                n = len(pdf)
-                if n == 0:
-                    yield _empty()
-                    continue
-                cid = pdf["cell_id"].to_numpy()
-                rid = pdf["region_id"].to_numpy()
-                mnxf = pdf["minx"].to_numpy(dtype=np.float64)
-                mnyf = pdf["miny"].to_numpy(dtype=np.float64)
-                mxxf = pdf["maxx"].to_numpy(dtype=np.float64)
-                mxyf = pdf["maxy"].to_numpy(dtype=np.float64)
-                xb = mnxf.view(np.int64)
-                yb = mnyf.view(np.int64)
-                order = np.lexsort((yb, xb, rid, cid))
-                cs, rs, xs, ys = cid[order], rid[order], xb[order], yb[order]
-                new_grp = np.empty(n, dtype=bool)
-                new_grp[0] = True
-                new_grp[1:] = (np.diff(cs) != 0) | (np.diff(rs) != 0) | \
-                              (np.diff(xs) != 0) | (np.diff(ys) != 0)
-                starts = np.nonzero(new_grp)[0]
-                ends = np.append(starts[1:], n)
-                px = pdf["lng"].to_numpy(dtype=np.float64)[order]
-                py = pdf["lat"].to_numpy(dtype=np.float64)[order]
-                pid_o = pdf["point_id"].to_numpy()[order]
-                dp_o = pdf["deep"].to_numpy()[order]
-                wkb_col = pdf["tile_wkb"].to_numpy()[order]
-                nx = np.empty(n)
-                ny = np.empty(n)
-                d = np.empty(n)
-                sxa = np.empty(n)
-                sya = np.empty(n)
-                sda = np.empty(n)
-                vmin = np.full(n, np.inf)
-                valid = np.ones(n, dtype=bool)
-                mnx_o = mnxf[order]
-                mny_o = mnyf[order]
-                mxx_o = mxxf[order]
-                mxy_o = mxyf[order]
-                for s0, s1 in zip(starts, ends):
-                    key = (cs[s0], rs[s0], xs[s0], ys[s0])
-                    segs = registry.get(key)
-                    if segs is None:
-                        g = wkb.loads(bytes(wkb_col[s0]))
-                        segs = _distance_segs(g, mnx_o[s0], mny_o[s0],
-                                              mxx_o[s0], mxy_o[s0])
-                        registry[key] = segs
-                    if not len(segs):
-                        valid[s0:s1] = False
-                        continue
-                    # antimeridian unroll: shift the probe to within
-                    # 180° of the tile for the ARGMIN only (round()==0
-                    # → pxa == px bit-for-bit for every in-range pair)
-                    cxc = (mnx_o[s0] + mxx_o[s0]) / 2.0
-                    pxa = px[s0:s1] - 360.0 * np.round(
-                        (px[s0:s1] - cxc) / 360.0)
-                    nx[s0:s1], ny[s0:s1], d[s0:s1], jn = \
-                        predicates.nearest_on_segments_idx(
-                            pxa, py[s0:s1], segs)
-                    sxa[s0:s1], sya[s0:s1], sda[s0:s1], js = \
-                        predicates.nearest_on_segments_scaled_idx(
-                            pxa, py[s0:s1], segs)
-                    if refine:
-                        # geodesic mode: per-tile candidates evaluated
-                        # in METERS (see _dists_full_scan's refine
-                        # branch for the rationale)
-                        h_n = np.asarray(distance.haversine(
-                            nx[s0:s1], ny[s0:s1],
-                            px[s0:s1], py[s0:s1]), dtype=np.float64)
-                        h_s = np.asarray(distance.haversine(
-                            sxa[s0:s1], sya[s0:s1],
-                            px[s0:s1], py[s0:s1]), dtype=np.float64)
-                        jp = _best_segment_by_hav_proxy(
-                            pxa, py[s0:s1], segs)
-                        vmin[s0:s1] = np.minimum(np.minimum(
-                            np.minimum(h_n, h_s),
-                            _refine_hav_on_segments(
-                                segs[jp], px[s0:s1], py[s0:s1])),
-                            np.minimum(
-                                _refine_hav_on_segments(
-                                    segs[jn], px[s0:s1], py[s0:s1]),
-                                _refine_hav_on_segments(
-                                    segs[js], px[s0:s1], py[s0:s1])))
-                yield pd.DataFrame({
-                    "point_id": pid_o[valid].astype("int64"),
-                    "region_id": rs[valid].astype("int64"),
-                    "deep": dp_o[valid].astype("int32"),
-                    "lng": px[valid],
-                    "lat": py[valid],
-                    "planar_d": d[valid],
-                    "nx": nx[valid],
-                    "ny": ny[valid],
-                    "scaled_d": sda[valid],
-                    "sx": sxa[valid],
-                    "sy": sya[valid],
-                    "vmin": vmin[valid],
-                })
-
-        near = cand.mapInPandas(near_fn, schema)
-        # TWO independent struct-min argmins: the degree-planar winner
-        # (reference-parity definition) and the r5 scaled-metric winner;
-        # haversine decides between them in the thin final pass
-        win = near.groupBy("point_id", "region_id").agg(
-            F.min(F.struct("planar_d", "nx", "ny")).alias("m"),
-            F.min(F.struct("scaled_d", "sx", "sy")).alias("ms"),
-            F.min("vmin").alias("vmin"),
-            F.first("deep").alias("deep"),
-            F.first("lng").alias("lng"), F.first("lat").alias("lat"),
-        ).select("point_id", "region_id", "deep", "lng", "lat",
-                 F.col("m.nx").alias("nx"), F.col("m.ny").alias("ny"),
-                 F.col("ms.sx").alias("sx"), F.col("ms.sy").alias("sy"),
-                 "vmin")
-
-        out_schema = StructType([
-            StructField("point_id", LongType()),
-            StructField("region_id", LongType()),
-            StructField("deep", IntegerType()),
-            StructField("dist_m", DoubleType()),
-        ])
-
-        def hav_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                if refine:
-                    # geodesic mode: the per-tile meters minimum is the
-                    # answer (it already includes haversine at every
-                    # tile's argmin points and segment samples)
-                    d = pdf["vmin"].to_numpy()
-                    yield pd.DataFrame({
-                        "point_id": pdf["point_id"].astype("int64"),
-                        "region_id": pdf["region_id"].astype("int64"),
-                        "deep": pdf["deep"].astype("int32"),
-                        "dist_m": np.asarray(d, dtype="float64"),
-                    })
-                    continue
-                plng = pdf["lng"].to_numpy()
-                plat = pdf["lat"].to_numpy()
-                d0 = np.asarray(distance.haversine(
-                    pdf["nx"].to_numpy(), pdf["ny"].to_numpy(),
-                    plng, plat))
-                d1 = np.asarray(distance.haversine(
-                    pdf["sx"].to_numpy(), pdf["sy"].to_numpy(),
-                    plng, plat))
-                # same genuine-improvement guard as every other
-                # tolerance path (keeps rect-fixture hashes bit-stable)
-                d = np.where(d1 < d0 * (1.0 - 1e-12), d1, d0)
-                yield pd.DataFrame({
-                    "point_id": pdf["point_id"].astype("int64"),
-                    "region_id": pdf["region_id"].astype("int64"),
-                    "deep": pdf["deep"].astype("int32"),
-                    "dist_m": np.asarray(d, dtype="float64"),
-                })
-
-        return win.mapInPandas(hav_fn, out_schema)
 
     def _finish_tolerance(self, base_out: DataFrame, dists: DataFrame, k: int) -> DataFrame:
         per_feature = dists.groupBy("point_id", "region_id").agg(

@@ -26,8 +26,8 @@ Distance is PLANAR squared degrees — division-free dyadic arithmetic,
 so results are exact and engine-independent (the DuckDB oracle matches
 bit-for-bit; CLAUDE.md pins this repo convention). For geographic
 ranking at scale, rank by haversine within the candidate set instead —
-the certification bound then needs the per-axis degree radii ladder
-(engine._dists_unlimited_iterative shows the recipe).
+the pruning bound must then be in meters (engine._gc_bound, the
+great-circle lower bound behind Q2's tolerance -1 search).
 
 100 TB shape: one shuffle per round (the cell equi-join + the probe
 window share the probe-key exchange); per-round driver traffic is ONE

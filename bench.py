@@ -154,28 +154,6 @@ def headline_point_lookup(spark) -> dict:
     }, eng
 
 
-def q2_iter_rounds_telemetry(spark, entrymod) -> dict:
-    """Forced cover-round run of the Q2 tolerance=-1 iterative path
-    (small_direct=0 disables the small-frontier terminal shortcut the
-    sf-sized gates always take), so the bench JSON records rounds
-    taken, per-round radius/candidate/frontier counts, and the
-    termination reason at this SF — the growth-factor telemetry VERDICT
-    r3 #7 asks for. Candidate counts come from an Observation riding
-    each round's own checkpoint job (zero extra jobs)."""
-    from pyspark.sql import functions as F
-
-    from areacity_query_geometry_spark import fixtures
-
-    eng = entrymod._engine(spark)
-    entrymod._register(spark, SF_DIR, ("events",))
-    probes = spark.sql(fixtures.miss_probes_sql("events"))
-    tiles = eng.tiles.filter(F.col("kind") == 0)
-    t0 = time.time()
-    eng._dists_unlimited_iterative(probes, tiles, 1, small_direct=0) \
-        .write.format("noop").mode("overwrite").save()
-    return {"sec": round(time.time() - t0, 2), **eng.last_q2_iter_stats}
-
-
 def isolated_headline(n_lookups: int, cpus: int = 8) -> dict | None:
     """The OFFICIAL headline leg: a fresh-JVM `spark-submit
     --master local[8] --py-files <zip> tools/submit_job.py` run from a
@@ -253,8 +231,6 @@ def main():
     # query_detail carries every run's time + its window's steal%%.
     qtimes = {}
     qdetail = {}
-    q2_iter_stats = {}
-    _seen_iter = None
     cold_total = 0.0
     for name, fn in entrymod.queries().items():
         timed = TimedRuns()
@@ -275,19 +251,6 @@ def main():
         except Exception as e:  # keep the bench line intact on one bad query
             qtimes[name] = -1.0
             print(f"# bench query {name} failed: {e}", file=sys.stderr)
-        # Q2 tolerance=-1 telemetry: the engine records rounds/candidate
-        # counts per iterative invocation — attribute the latest run's
-        # stats to the gate that produced them
-        eng0 = entrymod._ENGINE_CACHE.get(id(spark))
-        st = getattr(eng0, "last_q2_iter_stats", None) if eng0 else None
-        if st is not None and st is not _seen_iter:
-            q2_iter_stats[name] = st
-            _seen_iter = st
-    try:
-        q2_iter_stats["forced_cover_rounds"] = \
-            q2_iter_rounds_telemetry(spark, entrymod)
-    except Exception as e:
-        print(f"# q2 iter telemetry failed: {e}", file=sys.stderr)
     try:
         spark.stop()
     except Exception as e:  # a dead JVM must not cost the isolated leg
@@ -358,7 +321,6 @@ def main():
         "queries": qtimes,
         "query_detail": qdetail,
         "isolated_rechecks": iso_rechecks,
-        "q2_iter_stats": q2_iter_stats,
         "cold_total_sec": round(cold_total, 1),
         "bench_window_steal_pct": steal_pct(bench_snap, cpu_snapshot()),
         "sf": SF_DIR.rstrip("/").split("/")[-1],

@@ -26,75 +26,19 @@ class TestMetrics:
 
 
 class TestKnn:
-    def test_iterative_rounds_equal_direct_scan(self, spark, province_engine):
-        """Force the radius-doubling cover rounds (small_direct=0) and
-        assert they produce the same winners as the direct terminal
-        scan (small_direct=huge) — the gates usually take the
-        small-input fast path, so this is the rounds' coverage."""
-        from pyspark.sql import functions as F
-
+    def test_k2_returns_two_per_level(self, spark, dense_engine):
+        # west of the generated extent: every level has a strict first
+        # and second nearest region
         pts = spark.createDataFrame(
-            [(i, 121.9 + i * 0.01, 29.5 + i * 0.01) for i in range(8)],
-            "point_id long, lng double, lat double")
-        tiles = province_engine.tiles.filter(F.col("kind") == 0)
-
-        from pyspark.sql import Window
-
-        def winners(small_direct):
-            d = province_engine._dists_unlimited_iterative(
-                pts, tiles, 2, small_direct=small_direct)
-            per = d.groupBy("point_id", "region_id") \
-                   .agg(F.min("dist_m").alias("dist_m")) \
-                   .join(province_engine.boundaries.select("region_id", "deep"),
-                         "region_id")
-            w = Window.partitionBy("point_id", "deep") \
-                      .orderBy("dist_m", "region_id")
-            top = per.withColumn("rn", F.row_number().over(w)) \
-                     .filter(F.col("rn") <= 2)
-            return sorted((r.point_id, r.deep, r.region_id,
-                           round(r.dist_m, 6)) for r in top.collect())
-
-        w_iter = winners(0)
-        iter_stats = dict(province_engine.last_q2_iter_stats)
-        assert w_iter == winners(10**9)
-
-        # telemetry contract (VERDICT r3 #7): the forced-rounds run
-        # (small_direct=0) pins one cover round on this fixture — the
-        # coastal points' 2nd-nearest province sits beyond the r/4
-        # certification margin, so round 1 freezes nothing and the
-        # frontier-stall guard hands the 8 surviving pairs to the
-        # terminal full scan instead of burning more rounds
-        st = iter_stats
-        assert st["start_pd_pairs"] == 8
-        assert st["rounds"] == 1
-        assert st["round_radius_m"] == [262144.0]
-        assert st["round_candidates"] == [40]
-        assert st["round_frontier_after"] == [8]
-        assert st["terminal_full_scan"] is True
-        assert st["terminal_reason"] == "frontier_stall"
-
-    def test_iter_stats_small_frontier_path(self, spark, province_engine):
-        """The gate-sized path (frontier ≤ small_direct) must record
-        that it skipped cover rounds entirely."""
-        from pyspark.sql import functions as F
-
-        pts = spark.createDataFrame(
-            [(0, 121.9, 29.5)], "point_id long, lng double, lat double")
-        tiles = province_engine.tiles.filter(F.col("kind") == 0)
-        province_engine._dists_unlimited_iterative(pts, tiles, 1).count()
-        st = province_engine.last_q2_iter_stats
-        assert st["rounds"] == 0 and st["terminal_full_scan"] is True
-        assert st["terminal_reason"] == "small_frontier"
-
-    def test_k2_returns_two_per_level(self, spark, province_engine):
-        pts = spark.createDataFrame(
-            [(0, 121.993491, 29.524288)], "point_id long, lng double, lat double")
-        r1 = province_engine.query_points_with_tolerance(pts, -1, k=1).collect()
-        r2 = province_engine.query_points_with_tolerance(pts, -1, k=2).collect()
-        assert len(r1) == 1 and len(r2) == 2
-        d = sorted(r.point_distance for r in r2)
-        assert r1[0].point_distance == d[0]  # k=1 winner is the nearest
-        assert d[0] < d[1]
+            [(0, 72.0, 25.0)], "point_id long, lng double, lat double")
+        r1 = dense_engine.query_points_with_tolerance(pts, -1, k=1).collect()
+        r2 = dense_engine.query_points_with_tolerance(pts, -1, k=2).collect()
+        assert sorted(r.deep for r in r1) == [0, 1, 2]
+        assert sorted(r.deep for r in r2) == [0, 0, 1, 1, 2, 2]
+        for r in r1:
+            d = sorted(x.point_distance for x in r2 if x.deep == r.deep)
+            assert r.point_distance == d[0]  # k=1 winner is the nearest
+            assert d[0] < d[1]
 
 
 coord = st.floats(min_value=-179.0, max_value=179.0, allow_nan=False,

@@ -89,9 +89,9 @@ def test_polar_tolerance_distance_near_geodesic_truth(spark, polar_engine):
 
 def test_polar_unlimited_tolerance_distance_near_geodesic_truth(
         spark, polar_engine):
-    # tolerance=-1 rides different kernels (_cand_dists /
-    # _dists_full_scan); since late r5 they carry the same second
-    # candidate, min-reduced across tiles in its own metric
+    # tolerance=-1 runs the unlimited search (_unlimited_pairs), which
+    # min-reduces the same second candidate across tiles in its own
+    # metric; this engine is in geodesic_refine mode
     probes = spark.createDataFrame(
         [(1, 14.0, 82.0)], "point_id long, lng double, lat double")
     rows = polar_engine.query_points_with_tolerance(probes, -1).collect()

@@ -5,8 +5,9 @@ probe, then explode and the props join) and the cover-join fallback
 anti-join, 24-gon cover joined to the tiles, distance kernel,
 min-agg + window) return the same full rows — `point_distance` and
 `prop_json_out` text bit-equal — at 2.5, 25 and 250 km, k=1 and k=2,
-`where`-filtered and at tolerance 0. Probes include shared-edge
-vertices (Q1 hits), misses near the 24-gon radius (the
+`where`-filtered, at tolerance 0 and at tolerance -1 (whose fallback
+runs the one-pass kernel over the anti-joined misses). Probes include
+shared-edge vertices (Q1 hits), misses near the 24-gon radius (the
 ambiguous-circle branch), far misses and null coordinates. A small
 symmetric set pins the region_id tie-break.
 Reference semantics: QueryPointWithTolerance
@@ -121,7 +122,7 @@ def test_index_switches(engines):
 @pytest.mark.parametrize("tol,k,where", [
     (2500.0, 1, None), (25000.0, 1, None), (250000.0, 1, None),
     (25000.0, 2, None), (250000.0, 2, None), (250000.0, 1, "deep = 1"),
-    (0.0, 1, None)])
+    (0.0, 1, None), (-1.0, 1, None), (-1.0, 2, None), (-1.0, 1, "deep = 1")])
 def test_three_plans_return_identical_rows(engines, probes, tol, k, where):
     outs = {key: e.query_points_with_tolerance(probes, tol, where=where, k=k)
             for key, e in engines.items()}
@@ -139,18 +140,26 @@ def test_three_plans_return_identical_rows(engines, probes, tol, k, where):
         assert not near
         return
     assert near, "probe set must contain tolerance matches"
-    assert all(0 < r["point_distance"] <= tol for r in near)
+    assert all(0 < r["point_distance"] <= (tol if tol > 0 else math.inf)
+               for r in near)
     per_deep = Counter((r["point_id"], r["deep"]) for r in near)
     assert max(per_deep.values()) == k
     if where:
         keep = {r.region_id for r in engines["one_pass"].boundaries
                 .filter(where).select("region_id").collect()}
         assert {r["region_id"] for r in rows} <= keep
-    # null coordinates and far misses return nothing
+    # null coordinates return nothing; far misses only at -1, where
+    # every miss gets k regions per level
     n = probes.count()
-    far = N_RANDOM + len(TOLS) * N_NEAR
-    assert not {r["point_id"] for r in rows} & (
-        {n - 3, n - 2, n - 1} | set(range(far, far + N_FAR)))
+    far = set(range(N_RANDOM + len(TOLS) * N_NEAR,
+                    N_RANDOM + len(TOLS) * N_NEAR + N_FAR))
+    ids = {r["point_id"] for r in rows}
+    assert not ids & {n - 3, n - 2, n - 1}
+    if tol > 0:
+        assert not ids & far
+    else:
+        assert {pd[0] for pd in per_deep} >= far
+        assert set(per_deep.values()) == {k}
 
 
 def test_near_radius_probes_reach_the_ambiguous_branch(engines,
@@ -178,18 +187,19 @@ def test_one_pass_plan_shape(spark, engines, probes, tmp_path):
     path = str(tmp_path / "probes.parquet")
     probes.write.parquet(path)
     pts = spark.read.parquet(path)
-    one = _plan(engines["one_pass"].query_points_with_tolerance(
-        pts, 25000.0, k=2))
-    assert _nodes(one, r"Scan parquet\s*") == 1
-    assert _nodes(one, "ArrowEvalPython") == 1
-    assert _nodes(one, "BroadcastExchange") == 1  # the props dim
-    for name in ("Exchange", "MapInPandas", "Window", "Union"):
-        assert _nodes(one, name) == 0, name
-    # no checkpointed Q1: the only in-memory scan is the props dim's,
-    # as in Q1 with props
     n_rdd = _nodes(_plan(engines["one_pass"].query_points(pts)),
                    r"Scan ExistingRDD\s*")
-    assert _nodes(one, r"Scan ExistingRDD\s*") == n_rdd
+    for tol in (25000.0, -1.0):
+        one = _plan(engines["one_pass"].query_points_with_tolerance(
+            pts, tol, k=2))
+        assert _nodes(one, r"Scan parquet\s*") == 1
+        assert _nodes(one, "ArrowEvalPython") == 1
+        assert _nodes(one, "BroadcastExchange") == 1  # the props dim
+        for name in ("Exchange", "MapInPandas", "Window", "Union"):
+            assert _nodes(one, name) == 0, (tol, name)
+        # no checkpointed Q1: the only in-memory scan is the props
+        # dim's, as in Q1 with props
+        assert _nodes(one, r"Scan ExistingRDD\s*") == n_rdd
     # the fallback: a checkpoint job builds Q1, then cover and distance
     # MapInPandas, the min-agg Window and the Union with the Q1 rows
     sc = spark.sparkContext
@@ -246,8 +256,8 @@ def test_distance_ties_break_by_region_id(spark, tie_engines):
     ids = {r.id: r.region_id for r in
            tie_engines["one_pass"].boundaries.select("id", "region_id")
            .collect()}
-    for k in (1, 2):
-        got = {key: _rows(e.query_points_with_tolerance(pts, 250000.0, k=k)
+    for tol, k in ((250000.0, 1), (250000.0, 2), (-1.0, 1), (-1.0, 2)):
+        got = {key: _rows(e.query_points_with_tolerance(pts, tol, k=k)
                           .select("point_id", "deep", "region_id",
                                   "point_distance"))
                for key, e in tie_engines.items()}
