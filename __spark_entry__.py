@@ -617,8 +617,8 @@ def _q5_ring(x0: str, y0: str, x1: str, y1: str, ccw: bool) -> str:
 def doc_geo_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The input_hint docs-table join end to end: interleaved
     text+geo+media spans (derived deterministically from events so the
-    oracle can reproduce them in SQL), pre-filtered explode (kind filter
-    inside the array, original span_idx kept) → geo parse → engine
+    oracle can reproduce them in SQL), posexplode + kind filter
+    (original span_idx kept, one codegen stage) → geo parse → engine
     point join, id passthrough = (doc_id, span_idx). Span order/content
     preserved — the geo span is always index 1 of 3."""
     _register(spark, sf_dir, ("events",))
@@ -994,8 +994,8 @@ def doc_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def media_span_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal pipeline end to end WITH value-checked oracle: docs
     with interleaved text+image+audio spans (derived from events so the
-    oracle can rebuild them in SQL) → pre-filtered explode (media-kind
-    filter inside the array) →
+    oracle can rebuild them in SQL) → posexplode + media-kind filter
+    (one codegen stage) →
     Arrow-batched feature extraction (sha256-derived deterministic fake
     decode, areacity_query_geometry_spark/functions/media.py). The
     checksum recovers each float32 feature's exact uint16 source

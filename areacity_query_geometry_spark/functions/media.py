@@ -1457,24 +1457,14 @@ def decode_media(docs: DataFrame, fake: bool = True) -> DataFrame:
     Arrow-batched; one Python roundtrip for the whole media subset.
     Partitioned by doc hash upstream so batches are balanced.
     """
-    # kind filter runs INSIDE the array before the explode (transform
-    # captures each span's original position as span_idx) so the
-    # generator emits only media spans — same trick as
-    # docs.geo_span_points, ~3× fewer generated rows at the typical mix
-    media_spans = F.filter(
-        F.transform(
-            "spans",
-            lambda s, i: F.struct(i.alias("span_idx"),
-                                  s["kind"].alias("kind"),
-                                  s["media_ref"].alias("media_ref")),
-        ),
-        lambda x: x["kind"].isin("image", "audio", "video"),
-    )
-    spans = docs.select("doc_id", F.explode(media_spans).alias("g")).select(
-        "doc_id", F.col("g.span_idx").alias("span_idx"),
-        F.col("g.kind").alias("kind"),
-        F.col("g.media_ref").alias("media_ref"),
-    )
+    # no transform/filter lambda here: higher-order functions are
+    # CodegenFallback and would take the explode out of whole-stage
+    # codegen (see docs.geo_span_points)
+    spans = (docs.select("doc_id", F.posexplode("spans").alias("span_idx", "g"))
+             .filter(F.col("g.kind").isin("image", "audio", "video"))
+             .select("doc_id", "span_idx",
+                     F.col("g.kind").alias("kind"),
+                     F.col("g.media_ref").alias("media_ref")))
 
     def extract(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

@@ -21,6 +21,30 @@ class TestMediaPipeline:
         rows2 = media.decode_media(d, fake=True).collect()
         assert sorted(map(str, rows)) == sorted(map(str, rows2))
 
+    def test_decode_media_rows_match_python_explode(self, spark):
+        """(doc_id, span_idx, kind, media_ref) equal a pure-Python walk
+        of the collected spans: every image/audio/video span at its
+        ORIGINAL position, across null / empty arrays and null
+        elements."""
+        edge = spark.createDataFrame([
+            ("e-null", None),
+            ("e-empty", []),
+            ("e-mixed", [("text", "a", None, 0), None,
+                         ("geo", "geo:1,2", None, 2),
+                         ("video", None, "blob://v", 3),
+                         ("image", None, "blob://i", 4)]),
+        ], docsmod.DOCS_SCHEMA)
+        d = docsmod.generate_docs(spark, n_docs=100, seed=3).unionByName(edge)
+        want = sorted(
+            (r.doc_id, i, s.kind, s.media_ref)
+            for r in d.collect() for i, s in enumerate(r.spans or [])
+            if s is not None and s.kind in ("image", "audio", "video"))
+        assert ("e-mixed", 3, "video", "blob://v") in want
+        feats = media.decode_media(d, fake=True)
+        got = sorted(map(tuple, feats.select(
+            "doc_id", "span_idx", "kind", "media_ref").collect()))
+        assert got == want
+
     def test_schema(self, spark):
         d = docsmod.generate_docs(spark, n_docs=10, seed=3)
         feats = media.decode_media(d, fake=True)

@@ -200,13 +200,22 @@ def main():
           "LeftSemi" in dc_plan and "BroadcastHashJoin" in dc_plan
           and "CartesianProduct" not in dc_plan)
     from areacity_query_geometry_spark import docs as docsmod
+    from areacity_query_geometry_spark.functions import media as mediamod
 
-    dp_plan = grab_plan(docsmod.geo_span_points(
-        docsmod.generate_docs(spark, 50)))
-    check("docs geo-span explode pre-filters inside the array "
-          "(explode(filter(transform(spans)))) — the generator emits only "
-          "geo spans, ~3× fewer rows than posexplode-then-filter",
-          "explode(filter(transform(" in dp_plan.replace("\n", ""))
+    def codegen_posexplode(plan):
+        # the explode compiles with its scan and filter: no higher-order
+        # function (CodegenFallback) anywhere in the plan
+        return (re.search(r"\(\d+\) Generate \[codegen id : \d+\]\n"
+                          r"Input[^\n]*\nArguments: posexplode\(", plan)
+                is not None and "lambdafunction" not in plan)
+
+    few_docs = docsmod.generate_docs(spark, 50)
+    check("docs geo-span explode (geo_span_points): Generate posexplode "
+          "inside a whole-stage codegen stage; no lambdafunction in the plan",
+          codegen_posexplode(grab_plan(docsmod.geo_span_points(few_docs))))
+    check("media span explode (decode_media): Generate posexplode inside a "
+          "whole-stage codegen stage; no lambdafunction in the plan",
+          codegen_posexplode(grab_plan(mediamod.decode_media(few_docs))))
     from areacity_query_geometry_spark import knn as knnmod
 
     knn_active = spark.createDataFrame(

@@ -186,8 +186,8 @@ the local[{n_small * 4}] column and scaling multiplies across nodes.
 Second leg, the north-star DOCS-TABLE shape: an interleaved
 text+geo+media spans table ({docs_n or max(1_000_000, lookups // 10):,} docs) is
 materialized to parquet first (untimed), then each timed run pays the
-pipeline a 100 TB table pays — columnar scan → pre-filtered explode
-(kind filter inside the array) → JVM geo parse → the same cell-grid join with (doc_id, span_idx) passthrough —
+pipeline a 100 TB table pays — columnar scan → posexplode + kind
+filter → JVM geo parse → the same cell-grid join with (doc_id, span_idx) passthrough —
 in the same fresh JVMs:
 
 | config | elapsed (s) | docs/s | membw probe (GB/s) | all runs (sec @ steal%) |

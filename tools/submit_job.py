@@ -121,7 +121,7 @@ def main():
     # second leg: the north-star DOCS-TABLE shape — interleaved
     # text+geo+media spans, MATERIALIZED to parquet first (untimed) so
     # the timed runs measure the honest pipeline a 100 TB table pays:
-    # columnar scan → pre-filtered explode → JVM geo parse → the same
+    # columnar scan → posexplode + kind filter → JVM geo parse → the same
     # cell-grid join, (doc_id, span_idx) passthrough (n/10 docs)
     import shutil
     import tempfile
