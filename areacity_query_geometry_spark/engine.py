@@ -51,41 +51,6 @@ from . import GRID_VERSION, grid, tiler
 from .geom import core, distance, predicates, wkb, wkt as wkt_codec
 from .sources import geojson_source
 
-def _distance_segs(g: dict, minx: float, miny: float,
-                   maxx: float, maxy: float) -> np.ndarray:
-    """Segments of a boundary-tile piece fit for NEAREST-DISTANCE use.
-
-    The stored WKB is the region clipped to the CLIP_EPS-expanded tile
-    rect (tiler.clip_geom_to_cell), so its rings also run ALONG the
-    expanded window: closure edges, plus Sutherland–Hodgman bridge
-    runs that connect disconnected clip pieces and can lie OUTSIDE the
-    region (measured on the reference province file: a coastal cell
-    with islands put a bridge corner 785 m from an offshore probe
-    whose true boundary distance is 1459.86 m). Zero width keeps
-    containment parity and overlay areas exact, but a nearest-segment
-    distance must never see them.
-
-    Window coordinates were ASSIGNED at clip time (minx − CLIP_EPS
-    etc. computed from the same column values stored on the tile row),
-    so exact float equality identifies every window run. A true
-    boundary segment cannot sit on the expanded window line (its
-    source vertex would need to be exactly CLIP_EPS off a gridline),
-    and even then the segment would survive in the neighbouring cell's
-    tile, whose window lines differ — the per-region minimum across
-    candidate tiles is unaffected."""
-    segs = predicates.segments_of_rings(core.all_rings(g))
-    if not len(segs):
-        return segs
-    wx0 = minx - tiler.CLIP_EPS
-    wy0 = miny - tiler.CLIP_EPS
-    wx1 = maxx + tiler.CLIP_EPS
-    wy1 = maxy + tiler.CLIP_EPS
-    x1, y1, x2, y2 = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
-    on_win = (((x1 == x2) & ((x1 == wx0) | (x1 == wx1)))
-              | ((y1 == y2) & ((y1 == wy0) | (y1 == wy1))))
-    return segs[~on_win]
-
-
 def _refine_hav_on_segments(sega: np.ndarray, px: np.ndarray,
                             py: np.ndarray, n: int = 65) -> np.ndarray:
     """Min haversine from each probe to `n` uniform samples (endpoints
@@ -247,45 +212,15 @@ def _ambiguous_circle_keep(ppx, ppy, prb, prc,
     return out
 
 
-def _refine_csr(ents: list, starts: np.ndarray, ends: np.ndarray,
-                px0: np.ndarray, py0: np.ndarray) -> np.ndarray:
-    """Many-tiny-tiles refine: decompose this batch's (point, tile)
-    pairs into one ragged CSR (pair, segment) row list — row r tests
-    sorted-pair `row_pair[r]` against its tile's segment `idx[r]` — and
-    run the crossing-parity + on-segment kernel ONCE, reducing back per
-    pair with bincount. Identical arithmetic to the per-tile broadcast
-    loop (EPS, degenerate-segment handling included); only the loop
-    structure differs. Returns hit flags aligned with the sorted pairs."""
-    npairs = len(px0)
-    lens = np.fromiter((len(e[0]) for e in ents), dtype=np.int64,
-                       count=len(ents))
-    X1 = np.concatenate([e[0] for e in ents])
-    Y1 = np.concatenate([e[1] for e in ents])
-    X2 = np.concatenate([e[2] for e in ents])
-    Y2 = np.concatenate([e[3] for e in ents])
-    YDS = np.concatenate([e[4] for e in ents])
-    DX = np.concatenate([e[5] for e in ents])
-    LN = np.concatenate([e[6] for e in ents])
-    DEG = np.concatenate([e[7] for e in ents])
-    seg_off = np.zeros(len(ents), dtype=np.int64)
-    np.cumsum(lens[:-1], out=seg_off[1:])
-    # per (sorted) pair: its group's segment count and offset
-    pair_grp = np.repeat(np.arange(len(ents), dtype=np.int64), ends - starts)
-    row_pair, idx = _ranges(seg_off[pair_grp], lens[pair_grp])
-    return _pair_hits_flat(X1[idx], Y1[idx], X2[idx], Y2[idx],
-                           YDS[idx], DX[idx], LN[idx], DEG[idx],
-                           row_pair, px0[row_pair], py0[row_pair], npairs)
-
-
 def _pair_hits_flat(x1, y1, x2, y2, yds, dxv, ln, degen,
                     row_pair, p, q, npairs: int) -> np.ndarray:
     """Shared flat (pair, segment)-row kernel: every input array is one
     value per segment ROW (already gathered), `row_pair` maps each row
     to its pair, `p`/`q` are the pair's point repeated per row. Crossing
     parity (half-open `p < xint`) reduces per pair with bincount; EPS
-    on-segment acceptance ORs in. Arithmetic is pinned bit-for-bit by
-    tests/test_refine_csr.py — both the CSR refine and the broadcast
-    boundary-index refine call exactly this."""
+    on-segment acceptance ORs in. `_slab_point_hits` calls it over a
+    point's y-slab; tests/test_slab_index.py runs it over whole tiles
+    as the unslabbed reference."""
     cond = (y1 > q) != (y2 > q)
     xint = x1 + (q - y1) / yds * dxv
     crossing = cond & (p < xint)
@@ -304,145 +239,6 @@ def _pair_hits_flat(x1, y1, x2, y2, yds, dxv, ln, degen,
     hit = parity
     hit[np.unique(row_pair[on])] = True
     return hit
-
-
-def _make_refine_fn(id_cols: tuple[str, ...]):
-    """Build the exact point-refine UDF — the JTS
-    `subGeom.intersects(point)` analog
-    (/root/reference/AreaCityQuery.java:260-263) — FULLY vectorized:
-    no per-group Python loop. Each Arrow batch is one flat (point, tile)
-    pair list straight from the equi-join; kind=2 rows reduce to a
-    column-wise rect test, and kind=0 rows expand into a ragged
-    (pair → tile segment) CSR layout tested with a single broadcast
-    crossing/on-segment kernel, reduced back per pair with bincount.
-    Tile WKB decodes are cached across batches for the task's lifetime.
-    `id_cols` pass through opaquely (point_id, or (doc_id, span_idx)
-    for the docs-table join). Each batch first calls
-    `_drop_spark_zip_importers`, as every worker-side function does."""
-    id_list = list(id_cols)
-
-    def _empty(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf[id_list].iloc[:0].copy()
-        out["region_id"] = pd.Series([], dtype="int64")
-        return out
-
-    def _refine_point_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # tile registry: (cell_id, region_id, minx-bits) → column-major
-        # segment arrays; cached for the task's lifetime. The upstream
-        # repartition by cell keeps each tile on one task, so each WKB
-        # decodes once per job, and the per-tile (points × segments)
-        # broadcast keeps the segment arrays L1-resident — the refine
-        # streams only the (contiguous) point slices from memory.
-        registry: dict[tuple, tuple] = {}
-        for pdf in it:
-            _drop_spark_zip_importers()
-            if len(pdf) == 0:
-                yield _empty(pdf)
-                continue
-            kind = pdf["kind"].to_numpy()
-            px_all = np.asarray(pdf["lng"], dtype=np.float64)
-            py_all = np.asarray(pdf["lat"], dtype=np.float64)
-            hit_all = np.zeros(len(pdf), dtype=bool)
-
-            # ---- kind=2 interior sub-cells: one column-wise rect test
-            m2 = kind == 2
-            if m2.any():
-                hit_all[m2] = (
-                    (px_all[m2] >= pdf["minx"].to_numpy()[m2])
-                    & (px_all[m2] < pdf["maxx"].to_numpy()[m2])
-                    & (py_all[m2] >= pdf["miny"].to_numpy()[m2])
-                    & (py_all[m2] < pdf["maxy"].to_numpy()[m2])
-                )
-
-            # ---- kind=0 boundary tiles: group rows per tile, test each
-            # tile's points in one (points × segments) broadcast
-            m0 = np.nonzero(kind == 0)[0]
-            if len(m0):
-                cid = pdf["cell_id"].to_numpy()[m0]
-                rid = pdf["region_id"].to_numpy()[m0]
-                mnx_bits = pdf["minx"].to_numpy()[m0].view(np.int64)
-                mny_bits = pdf["miny"].to_numpy()[m0].view(np.int64)
-                order = np.lexsort((mny_bits, mnx_bits, rid, cid))
-                cs, rs = cid[order], rid[order]
-                xs, ys = mnx_bits[order], mny_bits[order]
-                new_grp = np.empty(len(m0), dtype=bool)
-                new_grp[0] = True
-                new_grp[1:] = (np.diff(cs) != 0) | (np.diff(rs) != 0) | \
-                              (np.diff(xs) != 0) | (np.diff(ys) != 0)
-                starts = np.nonzero(new_grp)[0]
-                ends = np.append(starts[1:], len(m0))
-                px0 = px_all[m0][order]
-                py0 = py_all[m0][order]
-                hit0 = np.zeros(len(m0), dtype=bool)
-                wkb_col = pdf["tile_wkb"].to_numpy()[m0][order]
-                ents = []
-                for s0 in starts:
-                    key = (cs[s0], rs[s0], xs[s0], ys[s0])
-                    ent = registry.get(key)
-                    if ent is None:
-                        g = wkb.loads(bytes(wkb_col[s0]))
-                        segs = predicates.segments_of_rings(core.all_rings(g))
-                        x1, y1, x2, y2 = (np.ascontiguousarray(segs[:, k])
-                                          for k in range(4))
-                        yd = y2 - y1
-                        yds = np.where(yd == 0, 1.0, yd)
-                        dx = x2 - x1
-                        ln = np.hypot(dx, yd)
-                        degen = ln == 0
-                        ln = np.where(degen, 1.0, ln)
-                        ent = (x1, y1, x2, y2, yds, dx, ln, degen)
-                        registry[key] = ent
-                    ents.append(ent)
-                # two regimes (same predicate, same arithmetic):
-                #  - FEW big tiles (sparse boundary sets, e.g. 34
-                #    provinces): per-tile (points × segments) broadcast —
-                #    the tile's segment arrays stay L1-resident while a
-                #    long contiguous point slice streams through.
-                #  - MANY tiny tiles (reference-density sets: the dense
-                #    fixture joins ~9k groups of ~7 points × ~3 segments
-                #    per Arrow batch): the per-group Python loop costs
-                #    more than the math — decompose into one ragged CSR
-                #    (pair, segment) row list and run ONE kernel per
-                #    batch, reducing parity/on-segment back per pair
-                #    with bincount (the Q3 refine's layout).
-                if len(starts) > 64:
-                    hit0 = _refine_csr(ents, starts, ends, px0, py0)
-                else:
-                    for gi, (s0, s1) in enumerate(zip(starts, ends)):
-                        x1, y1, x2, y2, yds, dx, ln, degen = ents[gi]
-                        p = px0[s0:s1][:, None]
-                        q = py0[s0:s1][:, None]
-                        cond = (y1[None, :] > q) != (y2[None, :] > q)
-                        xint = x1[None, :] + (q - y1[None, :]) / yds[None, :] * dx[None, :]
-                        crossing = cond & (p < xint)
-                        parity = (crossing.sum(axis=1) % 2) == 1
-                        qx = p - x1[None, :]
-                        qy = q - y1[None, :]
-                        crossp = np.abs(qx * (y2 - y1)[None, :] - qy * dx[None, :]) / ln[None, :]
-                        if degen.any():
-                            crossp = np.where(degen[None, :], np.hypot(qx, qy), crossp)
-                        t_par = (qx * dx[None, :] + qy * (y2 - y1)[None, :]) / (ln * ln)[None, :]
-                        if degen.any():
-                            t_par = np.where(degen[None, :], 0.0, t_par)
-                        on = (crossp <= predicates.EPS) & (t_par >= -predicates.EPS) \
-                            & (t_par <= 1 + predicates.EPS)
-                        hit0[s0:s1] = parity | on.any(axis=1)
-                back = np.empty(len(m0), dtype=np.int64)
-                back[order] = np.arange(len(m0))
-                hit_all[m0] = hit0[back]
-
-            if not hit_all.any():
-                yield _empty(pdf)
-                continue
-            out = pdf.loc[hit_all, id_list + ["region_id"]].copy()
-            # same (point, region) may hit via several sub-tiles under one
-            # base key — dedup within the batch (such pairs sit within one
-            # probe row's join fan-out, which Arrow keeps in one batch)
-            out = out.drop_duplicates(id_list + ["region_id"])
-            out["region_id"] = out["region_id"].astype("int64")
-            yield out
-
-    return _refine_point_batches
 
 
 def _cell_pairs(cells: np.ndarray, cell_ptr: np.ndarray, cid: np.ndarray):
@@ -496,8 +292,18 @@ def _build_boundary_index(pdf: pd.DataFrame) -> dict:
       probe's scanline or accept it within EPS, so the kernel tests
       only the probe's slab;
     - `fseg_ptr`/`fseg`: per tile, the indexes into SEG of the
-      segments fit for distance use (window runs dropped, as
-      `_distance_segs`).
+      segments fit for distance and crossing use. A stored tile is its
+      region clipped to the CLIP_EPS-expanded cell rect
+      (tiler.clip_geom_to_cell), so its rings also run ALONG that
+      window: closure edges, and Sutherland–Hodgman bridge runs that
+      join disconnected clip pieces and can lie OUTSIDE the region (a
+      coastal cell with islands put a bridge corner 785 m from an
+      offshore probe whose true boundary distance is 1459.86 m). They
+      keep parity exact but must never feed a nearest distance or
+      witness a crossing. Window coordinates were assigned at clip time
+      from the tile's own rect, so exact float equality finds every
+      run; a true boundary segment on the window line would survive in
+      the neighbouring cell's tile, so per-region minima are unchanged.
     """
     cell = pdf["cell_id"].to_numpy().astype(np.int64)
     region = pdf["region_id"].to_numpy().astype(np.int64)
@@ -540,11 +346,8 @@ def _build_boundary_index(pdf: pd.DataFrame) -> dict:
     np.cumsum(np.bincount(key, minlength=ntiles * SLABS), out=slab_ptr[1:])
     ix = np.int32 if len(seg_of) < 2**31 else np.int64
 
-    # window-run-filtered segments for DISTANCE use (the index twin of
-    # _distance_segs: exact float equality against the per-tile
-    # CLIP_EPS-expanded window identifies closure/bridge runs, which
-    # must never feed a nearest-distance). Parity and containment use
-    # every segment.
+    # window-run-filtered segments (see the docstring); parity and
+    # containment use every segment
     wx0 = (rect["minx"] - tiler.CLIP_EPS)[tile_of_seg]
     wy0 = (rect["miny"] - tiler.CLIP_EPS)[tile_of_seg]
     wx1 = (rect["maxx"] + tiler.CLIP_EPS)[tile_of_seg]
@@ -566,6 +369,54 @@ def _build_boundary_index(pdf: pd.DataFrame) -> dict:
         "slab_seg": seg_of[np.argsort(key, kind="stable")].astype(ix),
         "fseg_ptr": fseg_ptr, "fseg": fseg.astype(ix),
     }
+
+
+def _tile_segs(w) -> bytes:
+    """A tile's ring segments as packed float64 x1,y1,x2,y2 rows, the
+    `segs` column of `_build_boundary_index` (empty for a null
+    tile_wkb). The one WKB decode of the boundary index build and of
+    the join fallbacks' `_batch_index`."""
+    if w is None:
+        return b""
+    g = wkb.loads(bytes(w))
+    return np.ascontiguousarray(predicates.segments_of_rings(
+        core.all_rings(g)), dtype=np.float64).tobytes()
+
+
+def _batch_index(pdf: pd.DataFrame, cache: dict) -> tuple[dict, np.ndarray]:
+    """The boundary index of one batch of joined (probe, kind-0 tile)
+    rows, so the join fallbacks run the index kernels: rows group by
+    tile key (cell, region, minx bits, miny bits), each unique tile's
+    WKB decodes once per task (`cache`: key → `_tile_segs`), and the
+    unique tiles go through `_build_boundary_index`. `pdf` (non-empty)
+    holds cell_id, region_id, minx, miny, maxx, maxy and tile_wkb. Returns
+    (I, tix), tix each row's tile in I: the unique tiles arrive in the
+    index's own key order, so tile g of I is the g-th key."""
+    cid = pdf["cell_id"].to_numpy().astype(np.int64)
+    rid = pdf["region_id"].to_numpy().astype(np.int64)
+    xb = pdf["minx"].to_numpy(dtype=np.float64).view(np.int64)
+    yb = pdf["miny"].to_numpy(dtype=np.float64).view(np.int64)
+    order = np.lexsort((yb, xb, rid, cid))
+    same = np.ones(len(order) - 1, dtype=bool)
+    for k in (cid, rid, xb, yb):
+        ko = k[order]
+        same &= ko[1:] == ko[:-1]
+    new = np.r_[True, ~same]
+    tix = np.empty(len(order), dtype=np.int64)
+    tix[order] = np.cumsum(new) - 1
+    first = order[new]
+    wkbs = pdf["tile_wkb"].to_numpy()
+    segs = []
+    for i in first:
+        key = (cid[i], rid[i], xb[i], yb[i])
+        b = cache.get(key)
+        if b is None:
+            b = cache[key] = _tile_segs(wkbs[i])
+        segs.append(b)
+    tiles = pdf.iloc[first][["cell_id", "region_id", "minx", "miny",
+                             "maxx", "maxy"]].assign(deep=0, kind=0,
+                                                     segs=segs)
+    return _build_boundary_index(tiles), tix
 
 
 def _slab_point_hits(I: dict, tiles: np.ndarray, px: np.ndarray,
@@ -627,6 +478,74 @@ def _boundary_prim_hits(I: dict, tiles: np.ndarray, pk: np.ndarray,
         hit[b0:b1] = (np.bincount(rp[touch], minlength=len(t)) > 0) \
             | _slab_point_hits(I, t, pb[:, 0], pb[:, 1])
         b0 = b1
+    return hit
+
+
+def _prim_tile_hits(I: dict | None, tix: np.ndarray, kind: np.ndarray,
+                    rect: tuple, pk: np.ndarray, p: np.ndarray,
+                    wkt: np.ndarray, probe_cache: dict) -> np.ndarray:
+    """Q3 hit per (primitive, tile) pair — the one kernel of the index
+    refine and the cover-join fallback. `pk`/`p`/`wkt` are the pair's
+    primitive as in `_decompose_probe_batch`; `kind` and `rect` (minx,
+    miny, maxx, maxy) its tile's, and `tix` the tile in I (read for
+    kind 0 only; I may be None when no pair has a kind-0 tile).
+
+    - Rect tiles (kind 1/2): closed bbox overlap for rects and points
+      (boundary touch counts, OGC `intersects`), `segs_intersect_rects`
+      for segments, and for containment rows the rect corner (minx,
+      miny), which is inside the region.
+    - Kind-0 tiles: `_boundary_prim_hits` for rects, points and
+      segments; for containment rows the tile's representative vertex,
+      the start of its first distance-fit segment (window runs can sit
+      eps outside the region), else of its first ring segment, else no
+      hit.
+
+    A containment row hits when that point is in the probe member's
+    polygon: rows group by member WKT, whose ring segments
+    `probe_cache` keeps (a GEOMETRYCOLLECTION probe has one row per
+    polygonal member, so one probe can carry several)."""
+    hit = np.zeros(len(pk), dtype=bool)
+    x0, y0, x1, y1 = rect
+    rt = kind != 0
+    m = rt & (pk == 1)
+    hit[m] = ((p[m, 0] <= x1[m]) & (p[m, 2] >= x0[m])
+              & (p[m, 1] <= y1[m]) & (p[m, 3] >= y0[m]))
+    m = rt & (pk == 2)
+    if m.any():
+        hit[m] = predicates.segs_intersect_rects(
+            p[m, 0], p[m, 1], p[m, 2], p[m, 3], x0[m], y0[m], x1[m], y1[m])
+    m = ~rt & (pk != 3)
+    if m.any():
+        hit[m] = _boundary_prim_hits(I, tix[m], pk[m], p[m])
+    m3 = np.nonzero(pk == 3)[0]
+    if not len(m3):
+        return hit
+    qx, qy, ok = x0[m3].copy(), y0[m3].copy(), rt[m3].copy()
+    b = np.nonzero(~ok)[0]
+    if len(b):
+        sptr, fptr = I["seg_ptr"], I["fseg_ptr"]
+        t = tix[m3[b]]
+        has = sptr[t + 1] > sptr[t]
+        b, t = b[has], t[has]
+        first = sptr[t].copy()
+        mf = fptr[t + 1] > fptr[t]
+        first[mf] = I["fseg"][fptr[t[mf]]]
+        ok[b] = True
+        qx[b], qy[b] = I["SEG"][first, 0], I["SEG"][first, 1]
+    w3 = wkt[m3]
+    order = np.argsort(w3, kind="stable")
+    sw = w3[order]
+    starts = np.nonzero(np.r_[True, sw[1:] != sw[:-1]])[0]
+    for rows in np.split(order, starts[1:]):
+        w = w3[rows[0]]
+        segs = probe_cache.get(w)
+        if segs is None:
+            segs = probe_cache[w] = predicates.segments_of_rings(
+                core.all_rings(wkt_codec.loads(w)))
+        sel = rows[ok[rows]]
+        if len(sel) and len(segs):
+            hit[m3[sel]] = predicates.points_intersect_prepared(
+                qx[sel], qy[sel], segs)
     return hit
 
 
@@ -696,6 +615,39 @@ def _index_point_hits(I: dict, px: np.ndarray, py: np.ndarray,
     first[0] = True
     first[1:] = (np.diff(br) != 0) | (np.diff(bg) != 0)
     return (ir, ig), (br[first], bg[first])
+
+
+def _make_point_refine_fn(id_cols: tuple[str, ...]):
+    """The Q1 join fallback's refine — the JTS `subGeom.intersects(point)`
+    analog (/root/reference/AreaCityQuery.java:260-263) — as a
+    mapInPandas function over joined (*id_cols, lng, lat, cell_id,
+    region_id, kind, minx, miny, maxx, maxy, tile_wkb) rows →
+    (*id_cols, region_id), one row per accepting tile: kind-2 rows by
+    half-open rect, kind-0 rows by `_slab_point_hits` over the batch's
+    `_batch_index`, as `_index_point_hits` does. A point on the border
+    of two same-region tiles gets a row from each, so the caller
+    dedups. Each batch first calls `_drop_spark_zip_importers`."""
+    out_cols = list(id_cols) + ["region_id"]
+
+    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache: dict = {}
+        for pdf in it:
+            _drop_spark_zip_importers()
+            kind = pdf["kind"].to_numpy()
+            px = np.asarray(pdf["lng"], dtype=np.float64)
+            py = np.asarray(pdf["lat"], dtype=np.float64)
+            hit = ((kind == 2)
+                   & (px >= pdf["minx"].to_numpy())
+                   & (px < pdf["maxx"].to_numpy())
+                   & (py >= pdf["miny"].to_numpy())
+                   & (py < pdf["maxy"].to_numpy()))
+            m0 = np.nonzero(kind == 0)[0]
+            if len(m0):
+                I, tix = _batch_index(pdf.iloc[m0], cache)
+                hit[m0] = _slab_point_hits(I, tix, px[m0], py[m0])
+            yield pdf.loc[hit, out_cols].astype({"region_id": "int64"})
+
+    return fn
 
 
 def _make_index_refine_fn(id_cols: tuple[str, ...], bc,
@@ -843,25 +795,33 @@ def _tolerance_pairs(I: dict, px: np.ndarray, py: np.ndarray, tol: float,
     boundary index (≙ the reference's per-feature 24-gon scan,
     AreaCityQuery.java:102-163): per-point cover cells enumerated
     in-kernel (`_circle_cell_cover`), candidate tiles looked up in the
-    index CSR, per-(point, tile) planar and scaled nearest points by
-    `_pair_argmins`, then the same inscribed/escribed radius gates +
-    exact 24-gon test as the cover-join dist_fn. Rows are bit-identical
-    to the cover-join path's; `keep` as in `_index_point_hits`.
+    index CSR, then `_tolerance_pair_dists`. `keep` as in
+    `_index_point_hits`."""
+    if not len(px):
+        e = np.empty(0, np.int64)
+        return e, e, np.empty(0, np.float64)
+    rep, cells = _circle_cell_cover(px, py, tol, base_res)
+    crow, _, tix = _cell_pairs(I["cells"], I["cell_ptr"], cells)
+    return _tolerance_pair_dists(I, px, py, rep[crow], tix, tol, keep)
+
+
+def _tolerance_pair_dists(I: dict, px: np.ndarray, py: np.ndarray,
+                          prep: np.ndarray, tix: np.ndarray, tol: float,
+                          keep: np.ndarray | None = None):
+    """The gate-and-distance half of Q2 at tolerance > 0, per candidate
+    (point prep, tile tix) pair — shared by `_tolerance_pairs` and the
+    cover-join fallback, whose pairs come from the join: per-pair planar
+    and scaled nearest points by `_pair_argmins`, the inscribed/escribed
+    radius gates of the point's 24-gon, and the exact 24-gon test for
+    the pairs between them. Only kind-0 tiles with distance-fit
+    segments count; `keep` as in `_index_point_hits`.
 
     Returns (point, tile, dist_m): one row per kept (point, tile) pair,
     point indexing px/py and tile indexing I's per-tile arrays (a
     region with several tiles in reach gets several rows)."""
     empty = np.empty(0, np.int64)
     none = (empty, empty, np.empty(0, np.float64))
-    if not len(px):
-        return none
     fptr = I["fseg_ptr"]
-    rep, cells = _circle_cell_cover(px, py, tol, base_res)
-    crow, _, tix = _cell_pairs(I["cells"], I["cell_ptr"], cells)
-    prep = rep[crow]
-    # boundary tiles only, and (as dist_fn) skip tiles with no
-    # true-boundary segments after window-run filtering; `keep` = the
-    # in-kernel twin of _tiles_for's LEFT SEMI region filter
     m = (I["kind"][tix] == 0) & (fptr[tix + 1] > fptr[tix])
     if keep is not None:
         m &= _in_sorted(I["region"][tix], keep)
@@ -874,7 +834,7 @@ def _tolerance_pairs(I: dict, px: np.ndarray, py: np.ndarray, tol: float,
     nx, ny, sxx, syy = A["nx"], A["ny"], A["sx"], A["sy"]
     d_planar = np.sqrt(A["d2min"])
     # per-point circle radii — the exact CreateSimpleCircle step-ladder
-    # arithmetic (identical to dist_fn's)
+    # arithmetic
     km = tol / 1000.0
     a = 0.01 if km < 5 else 0.1 if km < 50 else 1.0 if km < 500 else 10.0
     b = np.asarray(distance.haversine(px, py, px + a, py))
@@ -909,8 +869,8 @@ def _tolerance_pairs(I: dict, px: np.ndarray, py: np.ndarray, tol: float,
     d0 = np.asarray(distance.haversine(nx[ok], ny[ok], px[kp], py[kp]))
     d1 = np.asarray(distance.haversine(sxx[ok], syy[ok], px[kp], py[kp]))
     # the scaled candidate wins only on a GENUINE improvement (rel
-    # 1e-12), the join path's guard (bit-identity across paths and
-    # with pre-r5 gates)
+    # 1e-12): for axis-aligned segments both argmins are the same
+    # point up to ulps, and the guard keeps the pre-r5 bit pattern
     d = np.where(d1 < d0 * (1.0 - 1e-12), d1, d0)
     return kp, tix[ok], np.asarray(d, dtype=np.float64)
 
@@ -1306,9 +1266,9 @@ def _decompose_probe_batch(pdf: pd.DataFrame):
       ring decomposes into one row per segment — each segment's own
       bbox cover is far tighter than the whole geometry's), pkind 3 =
       one containment row per polygonal member (carries WKT; catches
-      tile⊂probe when no boundary crossing exists), pkind 0 =
-      unrecognized shape (exact pairwise fallback — unreachable for
-      codec-parsed WKT, kept defensively). GEOMETRYCOLLECTION flattens
+      tile⊂probe when no boundary crossing exists). Any other member
+      type raises ValueError (the WKT codec parses none).
+      GEOMETRYCOLLECTION flattens
       into its members (JTS `intersects` over a collection = union of
       member hits; ≙ WKTReader-accepts-anything,
       /root/reference/AreaCityQuery.java:175-179). Segment extraction
@@ -1376,8 +1336,8 @@ def _decompose_probe_batch(pdf: pd.DataFrame):
                     if root["type"] == "GeometryCollection"
                     else w_)
             else:
-                pv = np.array([b], dtype=np.float64)
-                add(pid_i, 0, pv, pv, wkt_codec.dumps(g))
+                raise ValueError(f"Q3 probe member type {t!r} does not "
+                                 "decompose into primitives")
     if not r_pid:
         return None
     return (np.concatenate(r_pid), np.concatenate(r_kind),
@@ -1720,18 +1680,9 @@ class SpatialEngine:
         def extract(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in it:
                 _drop_spark_zip_importers()
-                segs = []
-                for w in pdf["tile_wkb"]:
-                    if w is None:
-                        segs.append(b"")
-                        continue
-                    g = wkb.loads(bytes(w))
-                    s = predicates.segments_of_rings(core.all_rings(g))
-                    segs.append(np.ascontiguousarray(
-                        s, dtype=np.float64).tobytes())
                 out = pdf[["cell_id", "region_id", "deep", "kind",
                            "minx", "miny", "maxx", "maxy"]].copy()
-                out["segs"] = segs
+                out["segs"] = [_tile_segs(w) for w in pdf["tile_wkb"]]
                 yield out
 
         pdf = (tb.select("cell_id", "region_id", "deep", "kind",
@@ -1837,9 +1788,11 @@ class SpatialEngine:
         Otherwise (an index over its ceiling, or the salted shuffle
         path) the join fallback: kind=1 hits by an equi-join that stays
         in the JVM, UNION the kind 0/2 rows through a tile join and a
-        mapInPandas refine. A point hits at most one tile tree per
-        region by construction, and same-key sub-tiles are deduped
-        inside the refine, so neither plan needs a dedup shuffle.
+        mapInPandas refine (`_make_point_refine_fn`: the index kernels
+        over a per-batch tile index). A point hits at most one kind-1
+        tile per region, but can hit several kind 0/2 tiles of one
+        region whose rows Arrow may put in different batches, so the
+        refined branch is deduped per (*id_cols, region_id).
 
         observers: optional (interior_obs, refined_obs) Observation pair
         — each gets {"rows": n}, the interior and refined hit rows (the
@@ -1949,8 +1902,11 @@ class SpatialEngine:
             [points.schema[c] for c in id_cols]
             + [StructField("region_id", LongType())]
         )
+        # several tiles of one region can accept a point (sub-tiles
+        # sharing an edge), and their rows can sit in different batches
         refined = boundary.mapInPandas(
-            _make_refine_fn(id_cols), refine_schema)
+            _make_point_refine_fn(id_cols), refine_schema) \
+            .dropDuplicates([*id_cols, "region_id"])
         if observers is not None:
             obs_i, obs_r = observers
             interior = interior.observe(obs_i, F.count(F.lit(1)).alias("rows"))
@@ -2211,8 +2167,10 @@ class SpatialEngine:
         ceiling, or the salted path) the two-stage join fallback: Q1 is
         checkpointed, its misses (a LEFT ANTI join on point_id) run a
         distance stage, and `_finish_tolerance` keeps the nearest per
-        deep. The distance stage is the 24-gon cover joined to the
-        kind-0 tiles for tolerance > 0; for -1 it is the one-pass
+        deep. The distance stage for tolerance > 0 is the 24-gon cover
+        joined to the kind-0 tiles, refined by `_tolerance_pair_dists`
+        (the one-pass kernel's gate-and-distance half) over each
+        batch's `_batch_index`; for -1 it is the one-pass
         kernel over the misses alone, with the boundary index built
         whatever its size (the search needs every boundary tile).
 
@@ -2311,7 +2269,7 @@ class SpatialEngine:
         cover = misses.mapInPandas(cover_fn, cover_schema)
         tiles_b = self._tiles_for(where).filter(F.col("kind") == 0)
         cand = cover.join(tiles_b, "cell_id").select(
-            "point_id", "lng", "lat", "region_id",
+            "point_id", "lng", "lat", "cell_id", "region_id",
             "minx", "miny", "maxx", "maxy", "tile_wkb")
 
         dist_schema = StructType([
@@ -2319,94 +2277,24 @@ class SpatialEngine:
             StructField("region_id", LongType()),
             StructField("dist_m", DoubleType()),
         ])
-        tol = float(tolerance_m)
 
         def dist_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            """Planar-nearest + haversine per candidate, vectorized per
-            TILE (each tile's points tested in one numpy call). Gate:
-            the tile must intersect the per-point 24-gon circle — cheap
-            inscribed/escribed radius bounds short-circuit the exact
-            polygon×polygon test for all but razor-edge candidates."""
-            cos_pi24 = np.cos(np.pi / 24)
+            """`_tolerance_pair_dists` over each batch's joined (miss,
+            tile) pairs, against the batch's `_batch_index`."""
+            cache: dict = {}
             for pdf in it:
                 _drop_spark_zip_importers()
-                pids, rids, ds = [], [], []
-                for (rid, mnx, mny, mxx, mxy, twkb), grp in pdf.groupby(
-                        ["region_id", "minx", "miny", "maxx", "maxy",
-                         "tile_wkb"], sort=False):
-                    g = wkb.loads(bytes(twkb))
-                    segs = _distance_segs(g, mnx, mny, mxx, mxy)
-                    if not len(segs):
-                        continue
-                    px = grp["lng"].to_numpy()
-                    py = grp["lat"].to_numpy()
-                    nx, ny, d_planar = predicates.nearest_on_segments(px, py, segs)
-                    # anisotropy-corrected second candidate (r5): the
-                    # degree-planar argmin above can sit far from the
-                    # meter-nearest boundary point at high latitude;
-                    # the reported distance takes the haversine min
-                    # over both candidates. Gating (rmin/rmax + 24-gon)
-                    # stays on the degree-planar distance — hit-set
-                    # semantics unchanged.
-                    sx, sy, _ = predicates.nearest_on_segments_scaled(
-                        px, py, segs)
-                    # per-point circle radii in degrees — the exact
-                    # CreateSimpleCircle step-ladder arithmetic
-                    km = tol / 1000.0
-                    a = 0.01 if km < 5 else 0.1 if km < 50 else 1.0 if km < 500 else 10.0
-                    b = distance.haversine(px, py, px + a, py)
-                    c = distance.haversine(px, py, px, py + a)
-                    rb = tol / b * a
-                    rc = tol / c * a
-                    rmin = np.minimum(rb, rc) * cos_pi24
-                    rmax = np.maximum(rb, rc)
-                    definite = d_planar <= rmin
-                    impossible = d_planar > rmax
-                    keep = definite.copy()
-                    amb = np.nonzero(~definite & ~impossible)[0]
-                    if len(amb):
-                        # 24-gon vs the FILTERED piece boundary: the
-                        # probe is outside every candidate region
-                        # (it missed Q1 under the same `where`), so
-                        # circle ∩ region ≠ ∅ ⟺ the circle touches
-                        # true boundary — and g's window/bridge runs
-                        # must not vote (same artifact as the
-                        # distance itself, see _distance_segs)
-                        keep[amb] = _ambiguous_circle_keep(
-                            px[amb], py[amb], rb[amb], rc[amb],
-                            np.ascontiguousarray(segs[:, 0]),
-                            np.ascontiguousarray(segs[:, 1]),
-                            np.ascontiguousarray(segs[:, 2]),
-                            np.ascontiguousarray(segs[:, 3]),
-                            np.zeros(len(amb), dtype=np.int64),
-                            np.full(len(amb), len(segs),
-                                    dtype=np.int64))
-                    if keep.any():
-                        d0 = np.asarray(distance.haversine(
-                            nx[keep], ny[keep], px[keep], py[keep]))
-                        d1 = np.asarray(distance.haversine(
-                            sx[keep], sy[keep], px[keep], py[keep]))
-                        # the scaled candidate wins only on a GENUINE
-                        # improvement (rel 1e-12): for axis-aligned
-                        # segments both argmins are the same geometric
-                        # point up to fp ulps, and the guard keeps the
-                        # pre-r5 bit pattern (gate oracle hashes)
-                        d = np.where(d1 < d0 * (1.0 - 1e-12), d1, d0)
-                        pids.append(grp["point_id"].to_numpy()[keep])
-                        rids.append(np.full(int(keep.sum()), rid, dtype="int64"))
-                        ds.append(np.asarray(d, dtype="float64"))
-                if pids:
-                    yield pd.DataFrame({
-                        "point_id": np.concatenate(pids).astype("int64"),
-                        "region_id": np.concatenate(rids),
-                        "dist_m": np.concatenate(ds),
-                    })
-                else:
-                    yield pd.DataFrame({
-                        "point_id": pd.Series([], dtype="int64"),
-                        "region_id": pd.Series([], dtype="int64"),
-                        "dist_m": pd.Series([], dtype="float64"),
-                    })
+                if not len(pdf):
+                    continue
+                I, tix = _batch_index(pdf, cache)
+                row, t, d = _tolerance_pair_dists(
+                    I, pdf["lng"].to_numpy(dtype=np.float64),
+                    pdf["lat"].to_numpy(dtype=np.float64),
+                    np.arange(len(pdf)), tix, tol_m)
+                yield pd.DataFrame({
+                    "point_id": pdf["point_id"].to_numpy()[row]
+                    .astype("int64"),
+                    "region_id": I["region"][t], "dist_m": d})
 
         dists = cand.mapInPandas(dist_fn, dist_schema)
         return self._finish_tolerance(base_out, dists, k)
@@ -2441,10 +2329,9 @@ class SpatialEngine:
         (grid.cover_bboxes), candidate tiles come from the boundary
         CSR (`_boundary_index`, kind 0/2 — pre-decoded segments, no
         per-task WKB decode) and the interior CSR (`_interior_index`,
-        kind 1). Rect/point and segment primitives meet kind-0 tiles
-        in one flat (primitive, tile, segment) pass,
-        `_boundary_prim_hits`, with the cover-join refine's per-row
-        arithmetic. A probe's primitives never leave their batch, so
+        kind 1). Every (primitive, tile) pair goes through
+        `_prim_tile_hits`, the kernel the cover-join fallback runs
+        too. A probe's primitives never leave their batch, so
         (probe_id, region_id) dedup is LOCAL — the join path's global
         dropDuplicates exchange disappears along with the cover
         shuffle. Output set is identical to the join path
@@ -2454,188 +2341,59 @@ class SpatialEngine:
         bc, _ = self._boundary_index()
         bi = self._interior_index()
         base_res = self.base_res
-        keep_regions = keep  # the output dedup reuses the name `keep`
         schema = StructType([StructField("probe_id", LongType()),
                              StructField("region_id", LongType())])
 
         def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            I = bc.value
-            J = bi.value
-            bcells, bptr = I["cells"], I["cell_ptr"]
-            tregion, tkind = I["region"], I["kind"]
-            tmnx, tmny = I["minx"], I["miny"]
-            tmxx, tmxy = I["maxx"], I["maxy"]
-            sptr, fptr = I["seg_ptr"], I["fseg_ptr"]
-            SEG, fseg = I["SEG"], I["fseg"]
-            icells, iptr, iregion = J["cells"], J["cell_ptr"], J["region"]
-            icx0, icy0, icx1, icy1 = J["cx0"], J["cy0"], J["cx1"], J["cy1"]
+            I, J = bc.value, bi.value
             probe_cache: dict = {}
-            empty = pd.DataFrame({
-                "probe_id": pd.Series([], dtype="int64"),
-                "region_id": pd.Series([], dtype="int64"),
-            })
-
-            def probe_segs(wkt0: str) -> np.ndarray:
-                ent = probe_cache.get(("segs", wkt0))
-                if ent is None:
-                    g = probe_cache.get(wkt0)
-                    if g is None:
-                        g = probe_cache[wkt0] = wkt_codec.loads(wkt0)
-                    ent = predicates.segments_of_rings(core.all_rings(g))
-                    probe_cache[("segs", wkt0)] = ent
-                return ent
-
-            def contain_hits(rows3, px_t, py_t, wkt_c, hit, sel3):
-                """pkind-3 rows → probe-polygon parity tests, grouped by
-                member WKT text (a GEOMETRYCOLLECTION probe emits one
-                row per polygonal member)."""
-                order = np.argsort(wkt_c, kind="stable")
-                sw = wkt_c[order]
-                starts = np.nonzero(np.r_[True, sw[1:] != sw[:-1]])[0]
-                ends = np.append(starts[1:], len(wkt_c))
-                for s0, s1 in zip(starts, ends):
-                    rows_o = order[s0:s1]
-                    ent = probe_segs(wkt_c[rows_o[0]])
-                    sel = rows_o[rows3[rows_o]]
-                    if len(sel) and len(ent):
-                        hit[sel3[sel]] = predicates.points_intersect_prepared(
-                            px_t[sel], py_t[sel], ent)
-
             for pdf in it:
                 _drop_spark_zip_importers()
                 dec = _decompose_probe_batch(pdf)
                 if dec is None:
-                    yield empty
                     continue
                 pid_a, kind_a, p_a, wkt_a, bb_a = dec
-                if (kind_a == 0).any():
-                    # unreachable: wkt.loads rejects any type that does
-                    # not decompose to kinds 1/2/3 — kept as a loud
-                    # guard (the cover-join path carries the pairwise
-                    # fallback; disable the index to route there)
-                    raise ValueError(
-                        "Q3 index path met an undecomposable probe; "
-                        "set broadcast_wkb_budget=0 to use the "
-                        "cover-join fallback")
                 rep, cid = grid.cover_bboxes(
                     bb_a[:, 0], bb_a[:, 1], bb_a[:, 2], bb_a[:, 3], base_res)
-                hit_pids: list[np.ndarray] = []
-                hit_regs: list[np.ndarray] = []
-
-                # ---------- boundary-index candidates (kind 0/2 tiles)
-                crow, pcell, tix = _cell_pairs(bcells, bptr, cid)
-                prep = rep[crow]
-                if keep_regions is not None and len(prep):
-                    km = _in_sorted(tregion[tix], keep_regions)
-                    prep, pcell, tix = prep[km], pcell[km], tix[km]
-                if len(prep):
-                    pk = kind_a[prep]
-                    tk = tkind[tix]
-                    hit = np.zeros(len(prep), dtype=bool)
-                    # rect/pt probe × interior-subcell tile: one closed
-                    # bbox-overlap test (boundary touch counts)
-                    m = (pk == 1) & (tk == 2)
-                    if m.any():
-                        pm, tm = prep[m], tix[m]
-                        hit[m] = ((p_a[pm, 0] <= tmxx[tm])
-                                  & (p_a[pm, 2] >= tmnx[tm])
-                                  & (p_a[pm, 1] <= tmxy[tm])
-                                  & (p_a[pm, 3] >= tmny[tm]))
-                    # seg probe × interior-subcell tile: exact kernel
-                    m = (pk == 2) & (tk == 2)
-                    if m.any():
-                        pm, tm = prep[m], tix[m]
-                        hit[m] = predicates.segs_intersect_rects(
-                            p_a[pm, 0], p_a[pm, 1], p_a[pm, 2], p_a[pm, 3],
-                            tmnx[tm], tmny[tm], tmxx[tm], tmxy[tm])
-                    # rect/seg probe × boundary tile: one flat pass
-                    sel = np.nonzero((tk == 0) & (pk != 3))[0]
-                    if len(sel):
-                        hit[sel] = _boundary_prim_hits(
-                            I, tix[sel], pk[sel], p_a[prep[sel]])
-                    # containment rows × boundary-index tiles: one
-                    # representative per (prim, cell, region) — pairs
-                    # are prim-major / cell-contiguous / region-sorted,
-                    # so a consecutive-diff dedup matches the join
-                    # path's per-(cell, region) tile dedup
-                    sel3 = np.nonzero(pk == 3)[0]
-                    if len(sel3):
-                        pr3, pc3 = prep[sel3], pcell[sel3]
-                        rg3 = tregion[tix[sel3]]
-                        first = np.r_[True, (np.diff(pr3) != 0)
-                                      | (np.diff(pc3) != 0)
-                                      | (np.diff(rg3) != 0)]
-                        sel3 = sel3[first]
-                        t3 = tix[sel3]
-                        # representative point: prefer a TRUE boundary
-                        # vertex (window runs can sit eps outside the
-                        # region); fall back to the raw ring; kind-2
-                        # sub-cells use their rect corner (inside the
-                        # region by construction)
-                        px_t = tmnx[t3].copy()
-                        py_t = tmny[t3].copy()
-                        mr = (sptr[t3 + 1] - sptr[t3]) > 0
-                        if mr.any():
-                            px_t[mr] = SEG[sptr[t3[mr]], 0]
-                            py_t[mr] = SEG[sptr[t3[mr]], 1]
-                        mf = (fptr[t3 + 1] - fptr[t3]) > 0
-                        if mf.any():
-                            px_t[mf] = SEG[fseg[fptr[t3[mf]]], 0]
-                            py_t[mf] = SEG[fseg[fptr[t3[mf]]], 1]
-                        ok_t = mr | mf | (tkind[t3] == 2)
-                        contain_hits(ok_t, px_t, py_t,
-                                     wkt_a[prep[sel3]], hit, sel3)
-                    hm = np.nonzero(hit)[0]
-                    if len(hm):
-                        hit_pids.append(pid_a[prep[hm]])
-                        hit_regs.append(tregion[tix[hm]])
-
-                # ---------- interior-index candidates (kind 1 tiles,
-                # rect == base cell rect — tiler.push stores interiors
-                # one row per base cell)
-                crow, islot2, irx = _cell_pairs(icells, iptr, cid)
-                iprep = rep[crow]
-                if keep_regions is not None and len(iprep):
-                    km = _in_sorted(iregion[irx], keep_regions)
-                    iprep, islot2, irx = iprep[km], islot2[km], irx[km]
-                if len(iprep):
-                    pk = kind_a[iprep]
-                    rx0, ry0 = icx0[islot2], icy0[islot2]
-                    rx1, ry1 = icx1[islot2], icy1[islot2]
-                    ihit = np.zeros(len(iprep), dtype=bool)
-                    m = pk == 1
-                    if m.any():
-                        pm = iprep[m]
-                        ihit[m] = ((p_a[pm, 0] <= rx1[m])
-                                   & (p_a[pm, 2] >= rx0[m])
-                                   & (p_a[pm, 1] <= ry1[m])
-                                   & (p_a[pm, 3] >= ry0[m]))
-                    m = pk == 2
-                    if m.any():
-                        pm = iprep[m]
-                        ihit[m] = predicates.segs_intersect_rects(
-                            p_a[pm, 0], p_a[pm, 1], p_a[pm, 2], p_a[pm, 3],
-                            rx0[m], ry0[m], rx1[m], ry1[m])
-                    m3 = np.nonzero(pk == 3)[0]
-                    if len(m3):
-                        contain_hits(np.ones(len(m3), dtype=bool),
-                                     rx0[m3], ry0[m3],
-                                     wkt_a[iprep[m3]], ihit, m3)
-                    hm = np.nonzero(ihit)[0]
-                    if len(hm):
-                        hit_pids.append(pid_a[iprep[hm]])
-                        hit_regs.append(iregion[irx[hm]])
-
-                if not hit_pids:
-                    yield empty
+                # boundary-index candidates (kind 0/2 tiles). Containment
+                # rows keep one tile per (primitive, cell, region), the
+                # join path's deduped tile side: pairs are
+                # primitive-major, cell-contiguous and region-sorted
+                crow, slot, tix = _cell_pairs(I["cells"], I["cell_ptr"], cid)
+                prep, reg = rep[crow], I["region"][tix]
+                dup = np.zeros(len(prep), dtype=bool)
+                dup[1:] = ((prep[1:] == prep[:-1]) & (slot[1:] == slot[:-1])
+                           & (reg[1:] == reg[:-1]))
+                b = ~(dup & (kind_a[prep] == 3))
+                # interior-index candidates (kind 1 tiles, rect == base
+                # cell rect — tiler.push stores interiors one row per
+                # base cell)
+                icrow, islot, irx = _cell_pairs(J["cells"], J["cell_ptr"],
+                                                cid)
+                tb = tix[b]
+                prep = np.concatenate((prep[b], rep[icrow]))
+                reg = np.concatenate((reg[b], J["region"][irx]))
+                tix = np.concatenate((tb, np.zeros(len(icrow), np.int64)))
+                kind = np.concatenate((I["kind"][tb],
+                                       np.ones(len(icrow), np.int64)))
+                rect = tuple(np.concatenate((I[k][tb], J[c][islot]))
+                             for k, c in (("minx", "cx0"), ("miny", "cy0"),
+                                          ("maxx", "cx1"), ("maxy", "cy1")))
+                if keep is not None:
+                    km = _in_sorted(reg, keep)
+                    prep, reg, tix, kind = (prep[km], reg[km], tix[km],
+                                            kind[km])
+                    rect = tuple(r[km] for r in rect)
+                hit = _prim_tile_hits(I, tix, kind, rect, kind_a[prep],
+                                      p_a[prep], wkt_a[prep], probe_cache)
+                if not hit.any():
                     continue
-                hp = np.concatenate(hit_pids)
-                hg = np.concatenate(hit_regs)
+                hp, hg = pid_a[prep[hit]], reg[hit]
                 order = np.lexsort((hg, hp))
                 hp, hg = hp[order], hg[order]
-                keep = np.r_[True, (np.diff(hp) != 0) | (np.diff(hg) != 0)]
-                yield pd.DataFrame({"probe_id": hp[keep].astype("int64"),
-                                    "region_id": hg[keep].astype("int64")})
+                first = np.r_[True, (hp[1:] != hp[:-1]) | (hg[1:] != hg[:-1])]
+                yield pd.DataFrame({"probe_id": hp[first].astype("int64"),
+                                    "region_id": hg[first].astype("int64")})
 
         return probes.select("probe_id", "wkt").mapInPandas(fn, schema)
 
@@ -2652,8 +2410,11 @@ class SpatialEngine:
         BROADCAST-INDEX refine (`_geometry_index_refine`) — zero
         shuffle Exchanges, no per-task WKB decode, local dedup;
         `where` rides along as an in-kernel keep-region array.
-        Past-budget sets run the cover-join plan below. Both plans'
-        functions call `_drop_spark_zip_importers` per batch.
+        Past-budget sets run the cover-join plan below: primitives
+        cover cells, join the tiles, and refine through the same
+        `_prim_tile_hits`, kind-0 tiles against a per-batch
+        `_batch_index`, then one global dedup. Both plans' functions
+        call `_drop_spark_zip_importers` per batch.
         """
         if self._boundary_index() is not None \
                 and self._interior_index() is not None:
@@ -2727,237 +2488,26 @@ class SpatialEngine:
         ])
 
         def refine_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # tile segment registry cached for the task's lifetime
-            # (tile WKB decodes once per task, as in the point refine)
-            registry: dict[tuple, np.ndarray] = {}
-            probe_cache: dict[int, dict] = {}
-
-            def _tile_groups(pdf, idx, tmnx, tmny):
-                """Group candidate rows per tile: lexsorted index, group
-                boundaries, and decoded tile segments per group.
-                segs_at(s0) returns the RAW ring segments (closed —
-                required for parity/containment); xsegs_at(s0) the
-                window-run-FILTERED set (required for crossing/touch
-                tests, where a Sutherland–Hodgman closure or bridge run
-                along the expanded clip window — which can lie OUTSIDE
-                the region — must not witness an intersection; see
-                _distance_segs)."""
-                cid = pdf["cell_id"].to_numpy()[idx]
-                rid = pdf["region_id"].to_numpy()[idx]
-                xb = tmnx[idx].view(np.int64)
-                yb = tmny[idx].view(np.int64)
-                order = np.lexsort((yb, xb, rid, cid))
-                cs, rs, xs, ys = cid[order], rid[order], xb[order], yb[order]
-                new_grp = np.empty(len(idx), dtype=bool)
-                new_grp[0] = True
-                new_grp[1:] = (np.diff(cs) != 0) | (np.diff(rs) != 0) | \
-                              (np.diff(xs) != 0) | (np.diff(ys) != 0)
-                starts = np.nonzero(new_grp)[0]
-                ends = np.append(starts[1:], len(idx))
-                wkb_col = pdf["tile_wkb"].to_numpy()[idx][order]
-                mnx_o = tmnx[idx][order]
-                mny_o = tmny[idx][order]
-                mxx_o = tmxx[idx][order]
-                mxy_o = tmxy[idx][order]
-
-                def _ent(s0):
-                    key = (cs[s0], rs[s0], xs[s0], ys[s0])
-                    ent = registry.get(key)
-                    if ent is None:
-                        g = wkb.loads(bytes(wkb_col[s0]))
-                        raw = predicates.segments_of_rings(core.all_rings(g))
-                        e = tiler.CLIP_EPS
-                        if len(raw):
-                            wx0 = mnx_o[s0] - e
-                            wy0 = mny_o[s0] - e
-                            wx1 = mxx_o[s0] + e
-                            wy1 = mxy_o[s0] + e
-                            x1, y1 = raw[:, 0], raw[:, 1]
-                            x2, y2 = raw[:, 2], raw[:, 3]
-                            on_win = (((x1 == x2) & ((x1 == wx0) | (x1 == wx1)))
-                                      | ((y1 == y2) & ((y1 == wy0) | (y1 == wy1))))
-                            flt = raw[~on_win]
-                        else:
-                            flt = raw
-                        ent = (raw, flt)
-                        registry[key] = ent
-                    return ent
-
-                def segs_at(s0):
-                    return _ent(s0)[0]
-
-                def xsegs_at(s0):
-                    return _ent(s0)[1]
-
-                return order, starts, ends, segs_at, xsegs_at
-
+            """`_prim_tile_hits` over each batch's joined (primitive,
+            tile) rows, kind-0 tiles against the batch's
+            `_batch_index`."""
+            cache: dict = {}
+            probe_cache: dict = {}
             for pdf in it:
                 _drop_spark_zip_importers()
-                n = len(pdf)
-                if n == 0:
-                    yield pd.DataFrame({"probe_id": pd.Series([], dtype="int64"),
-                                        "region_id": pd.Series([], dtype="int64")})
-                    continue
                 kind = pdf["kind"].to_numpy()
-                pkind = pdf["pkind"].to_numpy()
-                p0 = pdf["p0"].to_numpy(dtype=np.float64)
-                p1 = pdf["p1"].to_numpy(dtype=np.float64)
-                p2 = pdf["p2"].to_numpy(dtype=np.float64)
-                p3 = pdf["p3"].to_numpy(dtype=np.float64)
-                tmnx = pdf["minx"].to_numpy(dtype=np.float64)
-                tmny = pdf["miny"].to_numpy(dtype=np.float64)
-                tmxx = pdf["maxx"].to_numpy(dtype=np.float64)
-                tmxy = pdf["maxy"].to_numpy(dtype=np.float64)
-                hit_all = np.zeros(n, dtype=bool)
-
-                # ---- rect probe × rect tile: one closed bbox-overlap test
-                # (closed ⇒ boundary touch counts, OGC `intersects`)
-                m_rr = (pkind == 1) & (kind != 0)
-                if m_rr.any():
-                    hit_all[m_rr] = (
-                        (p0[m_rr] <= tmxx[m_rr]) & (p2[m_rr] >= tmnx[m_rr])
-                        & (p1[m_rr] <= tmxy[m_rr]) & (p3[m_rr] >= tmny[m_rr])
-                    )
-
-                # ---- seg probe × rect tile: exact orientation kernel
-                m_sr = (pkind == 2) & (kind != 0)
-                if m_sr.any():
-                    hit_all[m_sr] = predicates.segs_intersect_rects(
-                        p0[m_sr], p1[m_sr], p2[m_sr], p3[m_sr],
-                        tmnx[m_sr], tmny[m_sr], tmxx[m_sr], tmxy[m_sr])
-
-                # ---- rect probe × boundary tile: group per tile, then
-                # (a) any tile segment touches the rect (Liang-Barsky,
-                #     batched probes × segments — also covers tile ⊂ rect)
-                # (b) rect corner inside the tile polygon (rect ⊂ tile)
-                m_rb = np.nonzero((pkind == 1) & (kind == 0))[0]
-                if len(m_rb):
-                    order, starts, ends, segs_at, xsegs_at = \
-                        _tile_groups(pdf, m_rb, tmnx, tmny)
-                    a0, a1 = p0[m_rb][order], p1[m_rb][order]
-                    a2, a3 = p2[m_rb][order], p3[m_rb][order]
-                    hit0 = np.zeros(len(m_rb), dtype=bool)
-                    for s0, s1 in zip(starts, ends):
-                        touch = predicates.segments_in_cells(
-                            xsegs_at(s0),
-                            a0[s0:s1], a1[s0:s1], a2[s0:s1], a3[s0:s1])
-                        inside = predicates.points_intersect_prepared(
-                            a0[s0:s1], a1[s0:s1], segs_at(s0))
-                        hit0[s0:s1] = touch | inside
-                    back = np.empty(len(m_rb), dtype=np.int64)
-                    back[order] = np.arange(len(m_rb))
-                    hit_all[m_rb] = hit0[back]
-
-                # ---- seg probe × boundary tile: (a) probe segment
-                # crosses any tile segment (orientation broadcast);
-                # (b) probe endpoint inside the tile polygon (seg ⊂ tile)
-                m_sb = np.nonzero((pkind == 2) & (kind == 0))[0]
-                if len(m_sb):
-                    order, starts, ends, segs_at, xsegs_at = \
-                        _tile_groups(pdf, m_sb, tmnx, tmny)
-                    a0, a1 = p0[m_sb][order], p1[m_sb][order]
-                    a2, a3 = p2[m_sb][order], p3[m_sb][order]
-                    hit0 = np.zeros(len(m_sb), dtype=bool)
-                    for s0, s1 in zip(starts, ends):
-                        cross = predicates.segs_intersect_segs_any(
-                            a0[s0:s1], a1[s0:s1], a2[s0:s1], a3[s0:s1],
-                            xsegs_at(s0))
-                        inside = predicates.points_intersect_prepared(
-                            a0[s0:s1], a1[s0:s1], segs_at(s0))
-                        hit0[s0:s1] = cross | inside
-                    back = np.empty(len(m_sb), dtype=np.int64)
-                    back[order] = np.arange(len(m_sb))
-                    hit_all[m_sb] = hit0[back]
-
-                # ---- polygon-probe containment rows: tile⊂probe when no
-                # boundary crossing exists — test one point OF the tile
-                # (rect corner, or the decoded tile's first vertex)
-                # against the probe polygon, vectorized per probe group
-                m_c = np.nonzero(pkind == 3)[0]
-                if len(m_c):
-                    wkt_c = pdf["wkt"].to_numpy()[m_c]
-                    # interior tiles: any rect corner decides — take
-                    # (minx, miny) for the whole subset in one shot
-                    px_t = tmnx[m_c].copy()
-                    py_t = tmny[m_c].copy()
-                    ok_t = np.ones(len(m_c), dtype=bool)
-                    # boundary tiles: first vertex OF the decoded tile —
-                    # grouped per tile (decode once via the shared
-                    # registry), assigned to the whole group slice; the
-                    # old formulation looped per candidate ROW in Python
-                    # and dominated large-probe gates
-                    sub = np.nonzero(kind[m_c] == 0)[0]
-                    if len(sub):
-                        order_b, starts_b, ends_b, segs_at_b, xsegs_at_b = \
-                            _tile_groups(pdf, m_c[sub], tmnx, tmny)
-                        for s0, s1 in zip(starts_b, ends_b):
-                            # representative point: prefer a TRUE
-                            # boundary vertex (window runs can sit eps
-                            # outside the region); fall back to the raw
-                            # ring when the piece is window-only
-                            segs = xsegs_at_b(s0)
-                            if len(segs) == 0:
-                                segs = segs_at_b(s0)
-                            sl = sub[order_b[s0:s1]]
-                            if len(segs) == 0:
-                                ok_t[sl] = False
-                            else:
-                                px_t[sl] = segs[0, 0]
-                                py_t[sl] = segs[0, 1]
-                    # group by the member's WKT TEXT (not probe_id): a
-                    # GEOMETRYCOLLECTION probe emits one pkind-3 row per
-                    # polygonal member, so one probe_id can carry
-                    # several distinct geometries
-                    order = np.argsort(wkt_c, kind="stable")
-                    sw = wkt_c[order]
-                    starts = np.nonzero(np.r_[True, sw[1:] != sw[:-1]])[0]
-                    ends = np.append(starts[1:], len(m_c))
-                    hit0 = np.zeros(len(m_c), dtype=bool)
-                    for s0, s1 in zip(starts, ends):
-                        rows_o = order[s0:s1]
-                        wkt0 = wkt_c[rows_o[0]]
-                        ent = probe_cache.get(("segs", wkt0))
-                        if ent is None:
-                            g = probe_cache.get(wkt0)
-                            if g is None:
-                                g = probe_cache[wkt0] = wkt_codec.loads(wkt0)
-                            ent = predicates.segments_of_rings(core.all_rings(g))
-                            probe_cache[("segs", wkt0)] = ent
-                        sel = rows_o[ok_t[rows_o]]
-                        if len(sel) and len(ent):
-                            hit0[sel] = predicates.points_intersect_prepared(
-                                px_t[sel], py_t[sel], ent)
-                    hit_all[m_c] = hit0
-
-                # ---- unrecognized probe shapes: exact pairwise fallback
-                m_g = np.nonzero(pkind == 0)[0]
-                if len(m_g):
-                    pid_g = pdf["probe_id"].to_numpy()[m_g]
-                    wkt_g = pdf["wkt"].to_numpy()[m_g]
-                    rid_g = pdf["region_id"].to_numpy()[m_g]
-                    wkb_g = pdf["tile_wkb"].to_numpy()[m_g]
-                    for j in range(len(m_g)):
-                        g = probe_cache.get(wkt_g[j])
-                        if g is None:
-                            g = probe_cache[wkt_g[j]] = wkt_codec.loads(wkt_g[j])
-                        i = m_g[j]
-                        if kind[i] != 0:
-                            tile = distance.rect(tmnx[i], tmny[i], tmxx[i], tmxy[i])
-                        else:
-                            key2 = (pdf["cell_id"].iat[i], rid_g[j],
-                                    tmnx[i:i + 1].view(np.int64)[0],
-                                    tmny[i:i + 1].view(np.int64)[0], -1)
-                            tile = registry.get(key2)
-                            if tile is None:
-                                tile = registry[key2] = wkb.loads(bytes(wkb_g[j]))
-                        hit_all[i] = predicates.geoms_intersect(g, tile)
-
-                if not hit_all.any():
-                    yield pd.DataFrame({"probe_id": pd.Series([], dtype="int64"),
-                                        "region_id": pd.Series([], dtype="int64")})
-                    continue
-                out = pdf.loc[hit_all, ["probe_id", "region_id"]].drop_duplicates()
-                yield out.astype({"probe_id": "int64", "region_id": "int64"})
+                I, tix = None, np.zeros(len(pdf), dtype=np.int64)
+                m0 = np.nonzero(kind == 0)[0]
+                if len(m0):
+                    I, tix[m0] = _batch_index(pdf.iloc[m0], cache)
+                hit = _prim_tile_hits(
+                    I, tix, kind,
+                    tuple(pdf[c].to_numpy(dtype=np.float64)
+                          for c in ("minx", "miny", "maxx", "maxy")),
+                    pdf["pkind"].to_numpy(),
+                    pdf[["p0", "p1", "p2", "p3"]].to_numpy(dtype=np.float64),
+                    pdf["wkt"].to_numpy(), probe_cache)
+                yield pdf.loc[hit, ["probe_id", "region_id"]].astype("int64")
 
         matches = joined.select(
             "probe_id", "p0", "p1", "p2", "p3", "pkind", "wkt",

@@ -1467,9 +1467,14 @@ def decode_media(docs: DataFrame, fake: bool = True) -> DataFrame:
                      F.col("g.media_ref").alias("media_ref")))
 
     def extract(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # a span with a null media_ref has nothing to decode: its
+        # feature and n_bytes are null
         for pdf in it:
             feats = []
             for ref in pdf["media_ref"]:
+                if ref is None:
+                    feats.append(None)
+                    continue
                 vec = None if not fake else _fake_feature(ref)
                 if vec is None:
                     vec = _try_real_decode(ref)
@@ -1480,7 +1485,9 @@ def decode_media(docs: DataFrame, fake: bool = True) -> DataFrame:
                 feats.append(vec.tolist())
             out = pdf[["doc_id", "span_idx", "kind", "media_ref"]].copy()
             out["feature"] = feats
-            out["n_bytes"] = [len(r) for r in pdf["media_ref"]]
+            out["n_bytes"] = pd.array(
+                [None if r is None else len(r) for r in pdf["media_ref"]],
+                dtype="Int64")
             yield out
 
     return spans.mapInPandas(extract, MEDIA_FEATURE_SCHEMA)

@@ -99,9 +99,11 @@ def save_bucketed(engine: SpatialEngine, table: str, n_buckets: int = 64) -> Non
     shuffle-free co-located join path: a sort-merge join of probes
     against a cell_id-bucketed tile table reads the tile side without
     any Exchange — only the skinny probe rows shuffle (SURVEY.md §4
-    "co-locate joins via bucketing"). The broadcast path stays the
-    default for small tile sets; this is the 100TB tile-table variant
-    (e.g. township-level boundaries at fine resolution)."""
+    "co-locate joins via bucketing"). The bucketed scan serves the join
+    fallback only: while both broadcast tile indexes fit their budgets
+    the engine answers from them in one pass and never reads the table
+    through a join. This is the 100TB tile-table variant (e.g.
+    township-level boundaries at fine resolution)."""
     (engine.tiles.write.mode("overwrite")
         .bucketBy(n_buckets, "cell_id")
         .sortBy("cell_id")
@@ -111,8 +113,11 @@ def save_bucketed(engine: SpatialEngine, table: str, n_buckets: int = 64) -> Non
 
 def load_bucketed(spark: SparkSession, table: str, base_res: int,
                   boundaries=None) -> SpatialEngine:
-    """Engine over the bucketed tile table, forced onto the shuffle-join
-    path (broadcast_tiles=False) so the bucketed scan is actually used."""
+    """Engine over the bucketed tile table with the whole-table tile
+    broadcast off (broadcast_tiles=False). The bucketed scan serves the
+    join fallback, which runs only when a broadcast tile index is over
+    its budget (`broadcast_wkb_budget`, `interior_broadcast_rows`);
+    otherwise the one-pass index plans answer without the scan."""
     tiles = spark.table(table)
     return SpatialEngine(spark, boundaries, tiles, base_res=base_res,
                          broadcast_tiles=False)

@@ -45,6 +45,16 @@ class TestMediaPipeline:
             "doc_id", "span_idx", "kind", "media_ref").collect()))
         assert got == want
 
+    def test_decode_media_null_ref(self, spark):
+        """A media span whose media_ref is null gives a null feature
+        and a null n_bytes instead of failing the job."""
+        d = spark.createDataFrame([("n-null", [("image", None, None, 0)])],
+                                  docsmod.DOCS_SCHEMA)
+        rows = media.decode_media(d, fake=True).collect()
+        assert [(r.doc_id, r.span_idx, r.kind, r.media_ref, r.feature,
+                 r.n_bytes) for r in rows] == [
+            ("n-null", 0, "image", None, None, None)]
+
     def test_schema(self, spark):
         d = docsmod.generate_docs(spark, n_docs=10, seed=3)
         feats = media.decode_media(d, fake=True)

@@ -129,12 +129,20 @@ def main():
           "the id columns stay in the JVM), no MapInPandas",
           nodes(q1_plan, "ArrowEvalPython") == 1
           and nodes(q1_plan, "MapInPandas") == 0)
+    def keyed_aggs(plan, keys):
+        return len(re.findall(
+            r"\(\d+\) HashAggregate[^\n]*\nInput \[\d+\]: [^\n]*\n"
+            rf"Keys \[{len(keys)}\]: \["
+            + ", ".join(rf"{k}#\d+L?" for k in keys) + r"\]\n", plan))
+
     check("Q1 join fallback with an index past its ceiling "
           "(interior_broadcast_rows=0): interior join UNION one boundary "
-          "MapInPandas, no ArrowEvalPython",
+          "MapInPandas whose rows are deduped by a (point_id, region_id) "
+          "aggregate (partial and final), no ArrowEvalPython",
           nodes(q1_join_plan, "Union") == 1
           and nodes(q1_join_plan, "MapInPandas") == 1
-          and nodes(q1_join_plan, "ArrowEvalPython") == 0)
+          and nodes(q1_join_plan, "ArrowEvalPython") == 0
+          and keyed_aggs(q1_join_plan, ("point_id", "region_id")) == 2)
     check("Q3 default = broadcast-index refine: ONE MapInPandas over the "
           "probe table, ZERO Exchanges (cover, candidate lookup, kernels "
           "and dedup all in-kernel against the CSR indexes)",

@@ -89,7 +89,7 @@ def main():
     brows = bpts_r.join(tb, "cell_id")
     bench("B2 semi+repart+tile join (no refine)", brows)
 
-    from areacity_query_geometry_spark.engine import _make_refine_fn
+    from areacity_query_geometry_spark.engine import _make_point_refine_fn
     from pyspark.sql.types import LongType, StructField, StructType
 
     boundary = brows.select(
@@ -98,7 +98,8 @@ def main():
         "tile_wkb")
     schema = StructType([probes.schema["point_id"],
                          StructField("region_id", LongType())])
-    refined = boundary.mapInPandas(_make_refine_fn(("point_id",)), schema)
+    refined = boundary.mapInPandas(
+        _make_point_refine_fn(("point_id",)), schema)
     bench("C boundary + refine", refined)
 
     full = eng.query_points(probes, with_props=False)
