@@ -43,7 +43,7 @@ from pyspark.sql import (
     DataFrame, Observation, SparkSession, Window, functions as F,
 )
 from pyspark.sql.types import (
-    ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
+    ArrayType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType,
 )
 
@@ -275,11 +275,14 @@ def _slab_of(y: np.ndarray, y0: np.ndarray, h: np.ndarray) -> np.ndarray:
     return np.clip(s, 0, SLABS - 1).astype(np.int64)
 
 
-def _build_boundary_index(pdf: pd.DataFrame) -> dict:
+def _build_boundary_index(tiles, count: np.ndarray, segs: np.ndarray) -> dict:
     """The driver-side numpy half of `SpatialEngine._boundary_index`:
-    one row per kind≠1 tile (cell_id, region_id, deep, kind, minx,
-    miny, maxx, maxy, segs = the tile's ring segments as packed
-    float64 x1,y1,x2,y2 rows) → the broadcast index dict:
+    one entry per kind≠1 tile in `tiles` (a mapping of equal-length
+    arrays cell_id, region_id, deep, kind, minx, miny, maxx, maxy; a
+    null deep arrives as int64 min, one more level of its own as in a
+    Window partitioned by deep) and its ring segments from
+    `wkb.ring_segments` (count per tile, (nseg, 4) float64 x1, y1, x2,
+    y2 rows in tile order) → the broadcast index dict:
 
     - `cells`/`cell_ptr`: sorted cell table and per-cell tile ranges;
       per tile `region`, `deep`, `kind`, the rect, and `seg_ptr`;
@@ -305,26 +308,20 @@ def _build_boundary_index(pdf: pd.DataFrame) -> dict:
       run; a true boundary segment on the window line would survive in
       the neighbouring cell's tile, so per-region minima are unchanged.
     """
-    cell = pdf["cell_id"].to_numpy().astype(np.int64)
-    region = pdf["region_id"].to_numpy().astype(np.int64)
-    # a null deep is one more level of its own, as in a Window
-    # partitioned by deep
-    deep = pdf["deep"].fillna(np.iinfo(np.int64).min) \
-        .to_numpy().astype(np.int64)
-    kind = pdf["kind"].to_numpy().astype(np.int64)
-    rect = {k: pdf[k].to_numpy().astype(np.float64)
+    cell, region, deep, kind = (
+        np.asarray(tiles[k]).astype(np.int64)
+        for k in ("cell_id", "region_id", "deep", "kind"))
+    rect = {k: np.asarray(tiles[k]).astype(np.float64)
             for k in ("minx", "miny", "maxx", "maxy")}
     order = np.lexsort((rect["miny"].view(np.int64),
                         rect["minx"].view(np.int64), region, cell))
     cell, region, deep, kind = (cell[order], region[order],
                                 deep[order], kind[order])
     rect = {k: v[order] for k, v in rect.items()}
-    segs_list = pdf["segs"].to_numpy()[order]
-    seg_len = np.fromiter((len(b) // 32 for b in segs_list),
-                          dtype=np.int64, count=len(segs_list))
-    seg_ptr = np.zeros(len(segs_list) + 1, dtype=np.int64)
+    seg_len = count[order]
+    seg_ptr = np.zeros(len(seg_len) + 1, dtype=np.int64)
     np.cumsum(seg_len, out=seg_ptr[1:])
-    S = np.frombuffer(b"".join(segs_list), dtype=np.float64).reshape(-1, 4)
+    S = segs[_ranges((np.cumsum(count) - count)[order], seg_len)[1]]
     x1, y1, x2, y2 = S[:, 0], S[:, 1], S[:, 2], S[:, 3]
     ln = np.hypot(x2 - x1, y2 - y1)
     ln[ln == 0] = 1.0
@@ -371,25 +368,13 @@ def _build_boundary_index(pdf: pd.DataFrame) -> dict:
     }
 
 
-def _tile_segs(w) -> bytes:
-    """A tile's ring segments as packed float64 x1,y1,x2,y2 rows, the
-    `segs` column of `_build_boundary_index` (empty for a null
-    tile_wkb). The one WKB decode of the boundary index build and of
-    the join fallbacks' `_batch_index`."""
-    if w is None:
-        return b""
-    g = wkb.loads(bytes(w))
-    return np.ascontiguousarray(predicates.segments_of_rings(
-        core.all_rings(g)), dtype=np.float64).tobytes()
-
-
-def _batch_index(pdf: pd.DataFrame, cache: dict) -> tuple[dict, np.ndarray]:
+def _batch_index(pdf: pd.DataFrame) -> tuple[dict, np.ndarray]:
     """The boundary index of one batch of joined (probe, kind-0 tile)
     rows, so the join fallbacks run the index kernels: rows group by
-    tile key (cell, region, minx bits, miny bits), each unique tile's
-    WKB decodes once per task (`cache`: key → `_tile_segs`), and the
-    unique tiles go through `_build_boundary_index`. `pdf` (non-empty)
-    holds cell_id, region_id, minx, miny, maxx, maxy and tile_wkb. Returns
+    tile key (cell, region, minx bits, miny bits), the unique tiles'
+    WKB decodes in one `wkb.ring_segments` call, and the unique tiles
+    go through `_build_boundary_index`. `pdf` (non-empty) holds
+    cell_id, region_id, minx, miny, maxx, maxy and tile_wkb. Returns
     (I, tix), tix each row's tile in I: the unique tiles arrive in the
     index's own key order, so tile g of I is the g-th key."""
     cid = pdf["cell_id"].to_numpy().astype(np.int64)
@@ -405,18 +390,12 @@ def _batch_index(pdf: pd.DataFrame, cache: dict) -> tuple[dict, np.ndarray]:
     tix = np.empty(len(order), dtype=np.int64)
     tix[order] = np.cumsum(new) - 1
     first = order[new]
-    wkbs = pdf["tile_wkb"].to_numpy()
-    segs = []
-    for i in first:
-        key = (cid[i], rid[i], xb[i], yb[i])
-        b = cache.get(key)
-        if b is None:
-            b = cache[key] = _tile_segs(wkbs[i])
-        segs.append(b)
-    tiles = pdf.iloc[first][["cell_id", "region_id", "minx", "miny",
-                             "maxx", "maxy"]].assign(deep=0, kind=0,
-                                                     segs=segs)
-    return _build_boundary_index(tiles), tix
+    count, segs = wkb.ring_segments(
+        pa.array(pdf["tile_wkb"].to_numpy()[first], pa.binary()))
+    tiles = {k: pdf[k].to_numpy()[first]
+             for k in ("cell_id", "region_id", "minx", "miny", "maxx", "maxy")}
+    tiles["deep"] = tiles["kind"] = np.zeros(len(first), np.int64)
+    return _build_boundary_index(tiles, count, segs), tix
 
 
 def _slab_point_hits(I: dict, tiles: np.ndarray, px: np.ndarray,
@@ -630,7 +609,6 @@ def _make_point_refine_fn(id_cols: tuple[str, ...]):
     out_cols = list(id_cols) + ["region_id"]
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict = {}
         for pdf in it:
             _drop_spark_zip_importers()
             kind = pdf["kind"].to_numpy()
@@ -643,7 +621,7 @@ def _make_point_refine_fn(id_cols: tuple[str, ...]):
                    & (py < pdf["maxy"].to_numpy()))
             m0 = np.nonzero(kind == 0)[0]
             if len(m0):
-                I, tix = _batch_index(pdf.iloc[m0], cache)
+                I, tix = _batch_index(pdf.iloc[m0])
                 hit[m0] = _slab_point_hits(I, tix, px[m0], py[m0])
             yield pdf.loc[hit, out_cols].astype({"region_id": "int64"})
 
@@ -1648,12 +1626,14 @@ class SpatialEngine:
         Returns (Broadcast, bcells_df) or None when the boundary WKB
         volume exceeds `broadcast_wkb_budget` (the join fallbacks take
         over) — unless `unbounded`, which the tolerance -1 fallback
-        passes: its search needs every boundary tile. WKB decode runs
-        DISTRIBUTED (mapInPandas over the tile table); the driver only
-        concatenates the already-columnar arrays (one toPandas of ~the
-        WKB volume, bounded by the budget) and broadcasts them — workers unpickle
-        the index once per process and reuse it across tasks and jobs.
-        The decode calls `_drop_spark_zip_importers` per batch.
+        passes: its search needs every boundary tile. The build is ONE
+        Spark job, with no Python worker: the driver collects the tile
+        columns with `toArrow` (about the WKB volume, bounded by the
+        budget), decodes every tile's WKB in one vectorized
+        `wkb.ring_segments` call and broadcasts the index — workers
+        unpickle it once per process and reuse it across tasks and
+        jobs. bcells_df (the index's sorted cell ids) is a lazy local
+        DataFrame; no query plan reads it, perfbench's layer timers do.
         """
         if not unbounded:
             if self._bindex_off:
@@ -1663,35 +1643,18 @@ class SpatialEngine:
                 return None
         if self._bindex is not None:
             return self._bindex
-        tb = self.tiles.filter(F.col("kind") != 1)
-
-        out_schema = StructType([
-            StructField("cell_id", LongType()),
-            StructField("region_id", LongType()),
-            StructField("deep", IntegerType()),
-            StructField("kind", IntegerType()),
-            StructField("minx", DoubleType()),
-            StructField("miny", DoubleType()),
-            StructField("maxx", DoubleType()),
-            StructField("maxy", DoubleType()),
-            StructField("segs", BinaryType()),
-        ])
-
-        def extract(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                _drop_spark_zip_importers()
-                out = pdf[["cell_id", "region_id", "deep", "kind",
-                           "minx", "miny", "maxx", "maxy"]].copy()
-                out["segs"] = [_tile_segs(w) for w in pdf["tile_wkb"]]
-                yield out
-
-        pdf = (tb.select("cell_id", "region_id", "deep", "kind",
-                         "minx", "miny", "maxx", "maxy", "tile_wkb")
-               .mapInPandas(extract, out_schema).toPandas())
-        idx = _build_boundary_index(pdf)
+        cols = ["cell_id", "region_id", "kind", "minx", "miny", "maxx",
+                "maxy"]
+        tbl = (self.tiles.filter(F.col("kind") != 1)
+               .select(*cols, "deep", "tile_wkb").toArrow())
+        count, segs = wkb.ring_segments(tbl.column("tile_wkb"))
+        tiles = {c: tbl.column(c).to_numpy() for c in cols}
+        tiles["deep"] = tbl.column("deep").cast(pa.int64()).fill_null(
+            np.iinfo(np.int64).min).to_numpy()
+        idx = _build_boundary_index(tiles, count, segs)
         bc = self.spark.sparkContext.broadcast(idx)
-        bcells = self.spark.createDataFrame(pd.DataFrame(
-            {"cell_id": idx["cells"]})).localCheckpoint(eager=True)
+        bcells = self.spark.createDataFrame(
+            pd.DataFrame({"cell_id": idx["cells"]}))
         self._bindex = (bc, bcells)
         return self._bindex
 
@@ -1713,10 +1676,10 @@ class SpatialEngine:
         if self._tile_kind_counts()[0] > self.interior_broadcast_rows:
             self._iindex_off = True
             return None
-        pdf = (self.tiles.filter(F.col("kind") == 1)
-               .select("cell_id", "region_id").toPandas())
-        cell = pdf["cell_id"].to_numpy().astype(np.int64)
-        region = pdf["region_id"].to_numpy().astype(np.int64)
+        tbl = (self.tiles.filter(F.col("kind") == 1)
+               .select("cell_id", "region_id").toArrow())
+        cell = tbl.column("cell_id").to_numpy().astype(np.int64)
+        region = tbl.column("region_id").to_numpy().astype(np.int64)
         order = np.lexsort((region, cell))
         cell, region = cell[order], region[order]
         cells, first = np.unique(cell, return_index=True)
@@ -2281,12 +2244,11 @@ class SpatialEngine:
         def dist_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             """`_tolerance_pair_dists` over each batch's joined (miss,
             tile) pairs, against the batch's `_batch_index`."""
-            cache: dict = {}
             for pdf in it:
                 _drop_spark_zip_importers()
                 if not len(pdf):
                     continue
-                I, tix = _batch_index(pdf, cache)
+                I, tix = _batch_index(pdf)
                 row, t, d = _tolerance_pair_dists(
                     I, pdf["lng"].to_numpy(dtype=np.float64),
                     pdf["lat"].to_numpy(dtype=np.float64),
@@ -2491,7 +2453,6 @@ class SpatialEngine:
             """`_prim_tile_hits` over each batch's joined (primitive,
             tile) rows, kind-0 tiles against the batch's
             `_batch_index`."""
-            cache: dict = {}
             probe_cache: dict = {}
             for pdf in it:
                 _drop_spark_zip_importers()
@@ -2499,7 +2460,7 @@ class SpatialEngine:
                 I, tix = None, np.zeros(len(pdf), dtype=np.int64)
                 m0 = np.nonzero(kind == 0)[0]
                 if len(m0):
-                    I, tix[m0] = _batch_index(pdf.iloc[m0], cache)
+                    I, tix[m0] = _batch_index(pdf.iloc[m0])
                 hit = _prim_tile_hits(
                     I, tix, kind,
                     tuple(pdf[c].to_numpy(dtype=np.float64)

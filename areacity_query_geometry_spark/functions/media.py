@@ -1380,13 +1380,20 @@ def resize_images(decoded: DataFrame, max_side: int = 4) -> DataFrame:
     media_ref hash, then emits an aspect-preserving max_side thumbnail
     whose "pixels" are hash-derived — the Spark-side plumbing (struct
     output schema, Arrow batching, aspect arithmetic) is real; swap
-    `_fake_feature`-style synthesis for PIL when decoders exist."""
+    `_fake_feature`-style synthesis for PIL when decoders exist. A span
+    with a null media_ref keeps its row, with null width, height and
+    thumb."""
     img = decoded.filter(F.col("kind") == "image")
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             ws, hs, thumbs = [], [], []
             for ref in pdf["media_ref"]:
+                if pd.isna(ref):
+                    ws.append(None)
+                    hs.append(None)
+                    thumbs.append(None)
+                    continue
                 h = hashlib.sha256(ref.encode()).digest()
                 w0 = 64 + h[0] % 192
                 h0 = 64 + h[1] % 192
@@ -1404,8 +1411,8 @@ def resize_images(decoded: DataFrame, max_side: int = 4) -> DataFrame:
                 hs.append(h0)
                 thumbs.append({"w": tw, "h": th, "pixels": px.tolist()})
             out = pdf[["doc_id", "span_idx", "media_ref"]].copy()
-            out["width"] = pd.Series(ws, dtype="int32")
-            out["height"] = pd.Series(hs, dtype="int32")
+            out["width"] = pd.array(ws, dtype="Int32")
+            out["height"] = pd.array(hs, dtype="Int32")
             out["thumb"] = thumbs
             yield out
 
@@ -1425,7 +1432,8 @@ def sample_frames(decoded: DataFrame, every_n: int = 10) -> DataFrame:
     """Frame-sample stage for video/audio spans (stub decode): a
     deterministic hash-derived frame count, one output row per sampled
     frame (every_n stride) with a per-frame feature vector. Real
-    plumbing (explode-shaped mapInPandas, per-frame rows), fake frames."""
+    plumbing (explode-shaped mapInPandas, per-frame rows), fake frames.
+    A span with a null media_ref gives no frame."""
     med = decoded.filter(F.col("kind").isin("video", "audio"))
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1434,6 +1442,8 @@ def sample_frames(decoded: DataFrame, every_n: int = 10) -> DataFrame:
                                     "frame_no", "frame_feature")}
             for did, sidx, ref in zip(pdf["doc_id"], pdf["span_idx"],
                                       pdf["media_ref"]):
+                if pd.isna(ref):
+                    continue
                 h = hashlib.sha256(ref.encode()).digest()
                 n_frames = 30 + h[2] % 270
                 for f0 in range(0, n_frames, every_n):
@@ -1443,6 +1453,8 @@ def sample_frames(decoded: DataFrame, every_n: int = 10) -> DataFrame:
                     rows["frame_no"].append(f0)
                     rows["frame_feature"].append(
                         _fake_feature(f"{ref}#f{f0}").tolist())
+            if not rows["doc_id"]:
+                continue  # an empty object column has no Arrow list type
             out = pd.DataFrame(rows)
             out["span_idx"] = out["span_idx"].astype("int32")
             out["frame_no"] = out["frame_no"].astype("int32")

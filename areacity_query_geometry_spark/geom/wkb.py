@@ -12,6 +12,7 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pyarrow as pa
 
 from . import core
 
@@ -90,3 +91,127 @@ def _read_rings(mv: memoryview, off: int, fmt: str):
         rings.append(xy.reshape(n, 2).astype(np.float64))
         off += 16 * n
     return rings, off
+
+
+def ring_segments(arr) -> tuple[np.ndarray, np.ndarray]:
+    """The ring segments of a column of WKB, every row decoded at once:
+    (count, segs), count[i] (int64) the segments of row i and segs a
+    (count.sum(), 4) float64 array of x1, y1, x2, y2 rows in row order.
+    A row's segments are `predicates.segments_of_rings(core.all_rings(
+    loads(w)))`, bit for bit: a ring's segments are its consecutive
+    point pairs, rings of fewer than 2 points give none, and so do
+    null or empty WKB, Point and LineString. Either byte order at
+    either nesting level. Any other type (or a MultiPolygon part that
+    is no Polygon, or a truncated row) raises ValueError.
+
+    `arr` is a pyarrow binary or large_binary Array or ChunkedArray.
+    The header walk is vectorized across rows and loops only over the
+    part and ring index; all coordinates are gathered in one pass."""
+    if isinstance(arr, pa.ChunkedArray):
+        parts = [_ring_segments(c) for c in arr.chunks]
+        if not parts:
+            return np.zeros(0, np.int64), np.zeros((0, 4))
+        return (np.concatenate([p[0] for p in parts]),
+                np.concatenate([p[1] for p in parts]))
+    return _ring_segments(arr)
+
+
+def _words(data: np.ndarray, size: int) -> np.ndarray:
+    """Word k = the `size` bytes of `data` at byte k, as an unsigned
+    little-endian integer (a strided view, no copy)."""
+    return np.ndarray((max(len(data) - size + 1, 0),), dtype=f"<u{size}",
+                      buffer=data, strides=(1,))
+
+
+def _ring_segments(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    if not (pa.types.is_binary(arr.type)
+            or pa.types.is_large_binary(arr.type)):
+        raise TypeError(f"WKB column must be binary, got {arr.type}")
+    n = len(arr)
+    count = np.zeros(n, np.int64)
+    _, obuf, dbuf = arr.buffers()
+    offs = np.frombuffer(
+        obuf, np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    )[arr.offset:arr.offset + n + 1].astype(np.int64)
+    data = np.frombuffer(dbuf, np.uint8) if dbuf is not None \
+        else np.zeros(0, np.uint8)
+    u4, u8 = _words(data, 4), _words(data, 8)
+    start, end = offs[:-1], offs[1:]
+    ok = end > start
+    if arr.null_count:
+        ok &= arr.is_valid().to_numpy(zero_copy_only=False)
+    row = np.nonzero(ok)[0]
+
+    def u32(q, be, rows):
+        # the uint32 at byte q of each of `rows`, in its byte order
+        if (q + 4 > end[rows]).any():
+            raise ValueError("truncated WKB")
+        v = u4[q]
+        v[be] = v[be].byteswap()
+        return v.astype(np.int64)
+
+    pos = start[row]
+    be = data[pos] != 1
+    typ = u32(pos + 1, be, row)
+    bad = ~np.isin(typ, (T_POINT, T_LINESTRING, T_POLYGON, T_MULTIPOLYGON))
+    if bad.any():
+        raise ValueError(f"unsupported WKB geometry type {typ[bad][0]}")
+    # the parts to walk: a Polygon row is one part whose header is the
+    # row's own; a MultiPolygon row's parts follow its 9-byte header
+    mp = typ == T_MULTIPOLYGON
+    nparts = u32(pos[mp] + 5, be[mp], row[mp])
+    poly = typ == T_POLYGON
+    prow = np.concatenate((row[poly], row[mp]))
+    cur = np.concatenate((pos[poly], pos[mp] + 9))
+    left = np.concatenate((np.ones(poly.sum(), np.int64), nparts))
+    keep = left > 0
+    prow, cur, left = prow[keep], cur[keep], left[keep]
+    rings = []  # per step: (row, first coordinate byte, points, big-endian)
+    while len(prow):
+        if (cur + 9 > end[prow]).any():
+            raise ValueError("truncated WKB")
+        pbe = data[cur] != 1
+        ptyp = u32(cur + 1, pbe, prow)
+        if (ptyp != T_POLYGON).any():
+            raise ValueError(f"unsupported WKB geometry type "
+                             f"{ptyp[ptyp != T_POLYGON][0]} in a "
+                             f"MultiPolygon")
+        nr = u32(cur + 5, pbe, prow)
+        cur = cur + 9
+        act = np.arange(len(prow))
+        j = 0
+        while True:
+            act = act[nr[act] > j]
+            if not len(act):
+                break
+            c = cur[act]
+            npt = u32(c, pbe[act], prow[act])
+            c = c + 4
+            rings.append((prow[act], c, npt, pbe[act]))
+            cur[act] = c + 16 * npt
+            if (cur[act] > end[prow[act]]).any():
+                raise ValueError("truncated WKB")
+            j += 1
+        left -= 1
+        keep = left > 0
+        prow, cur, left = prow[keep], cur[keep], left[keep]
+    if not rings:
+        return count, np.zeros((0, 4))
+    rrow, rpos, rnpt, rbe = (np.concatenate(c) for c in zip(*rings))
+    # each row's rings were walked in order, so a stable sort by row
+    # puts every ring in its place
+    o = np.argsort(rrow, kind="stable")
+    m = rnpt[o] >= 2
+    rrow, rpos, nseg, rbe = rrow[o][m], rpos[o][m], rnpt[o][m] - 1, rbe[o][m]
+    count[:] = np.bincount(rrow, weights=nseg, minlength=n)
+    # segment k of a ring is its points k and k + 1: x1, y1, x2, y2 at
+    # bytes 0, 8, 16 and 24 from the ring's k-th point
+    ring_of = np.repeat(np.arange(len(nseg)), nseg)
+    q = rpos[ring_of] + 16 * (np.arange(len(ring_of))
+                              - (np.cumsum(nseg) - nseg)[ring_of])
+    out = np.empty((len(q), 4), np.uint64)
+    for k in range(4):
+        out[:, k] = u8[q + 8 * k]
+    sw = rbe[ring_of]
+    out[sw] = out[sw].byteswap()
+    return count, out.view(np.float64)

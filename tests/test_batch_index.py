@@ -106,21 +106,25 @@ def _want(tile, rings, px, py):
 
 
 def _check(pdf, tile, rings, px, py):
-    cache: dict = {}
-    I, tix = _batch_index(pdf, cache)
-    # one index tile, and one decode, per batch tile
-    assert len(I["region"]) == len(cache) == len(rings)
+    I, tix = _batch_index(pdf)
+    # one index tile per batch tile, holding that tile's ring segments
+    assert len(I["region"]) == len(rings)
     assert (I["region"][tix] == pdf["region_id"].to_numpy()).all()
     assert (I["minx"][tix] == pdf["minx"].to_numpy()).all()
     assert (I["miny"][tix] == pdf["miny"].to_numpy()).all()
     # rows of one tile share one tix, rows of two tiles never do
     assert len(set(zip(tile, tix))) == len(np.unique(tix)) == len(rings)
+    ring_of = dict(zip(tix, tile))
+    for g in range(len(rings)):
+        got = I["SEG"][I["seg_ptr"][g]:I["seg_ptr"][g + 1], :4]
+        assert (got == predicates.segments_of_rings([rings[ring_of[g]]])).all()
     want = _want(tile, rings, px, py)
     assert (_slab_point_hits(I, tix, px, py) == want).all()
-    # a later batch of the task reuses the decoded tiles
-    again = pdf.assign(tile_wkb=None)
-    I2, tix2 = _batch_index(again, cache)
-    assert (_slab_point_hits(I2, tix2, px, py) == want).all()
+    # the index depends on the batch's tile set, not on its row order
+    I2, tix2 = _batch_index(pdf.iloc[::-1])
+    assert I2.keys() == I.keys()
+    assert all((I2[k] == I[k]).all() for k in I)
+    assert (tix2 == tix[::-1]).all()
     return want
 
 

@@ -9,12 +9,17 @@ Runs on a generated `fixtures_dense` set (no external files), and pins
 the index layout's invariants: one packed segment store, a y-slab CSR
 into it, and an index of the distance-fit segments.
 """
+import re
+
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
 from areacity_query_geometry_spark import tiler
-from areacity_query_geometry_spark.engine import SLABS, SpatialEngine
+from areacity_query_geometry_spark.engine import (
+    SLABS, SpatialEngine, _build_boundary_index,
+)
+from areacity_query_geometry_spark.geom import core, predicates, wkb
 
 BASE_RES = 9
 WHERE = "deep = 2"
@@ -129,3 +134,56 @@ def test_where_filter_stays_on_index_path_and_agrees(spark, engine):
     assert filtered and filtered == full
     joined = _variant(engine, broadcast_tiles=True, broadcast_wkb_budget=0)
     assert filtered == _hits(joined, pts, WHERE)
+
+
+def _oracle_index(engine):
+    """The boundary index built from each tile's segments by the
+    per-geometry path (`wkb.loads` + `core.all_rings` +
+    `predicates.segments_of_rings`) over a plain row collect."""
+    rows = (engine.tiles.filter("kind != 1")
+            .select("cell_id", "region_id", "deep", "kind", "minx", "miny",
+                    "maxx", "maxy", "tile_wkb").collect())
+    segs = [np.zeros((0, 4)) if r.tile_wkb is None
+            else predicates.segments_of_rings(core.all_rings(
+                wkb.loads(bytes(r.tile_wkb)))) for r in rows]
+    t = {c: np.array([r[c] for r in rows]) for c in
+         ("cell_id", "region_id", "kind", "minx", "miny", "maxx", "maxy")}
+    t["deep"] = np.array([np.iinfo(np.int64).min if r.deep is None
+                          else r.deep for r in rows], np.int64)
+    return _build_boundary_index(
+        t, np.array([len(s) for s in segs], np.int64), np.vstack(segs))
+
+
+def test_build_is_one_job_and_equals_oracle(spark, engine):
+    """On a fresh engine the build runs exactly one Spark job, and no
+    Python worker (no Python node in its plan); an eager checkpoint or
+    a second decode stage would show here. Its index equals the
+    oracle's array for array: keys, dtypes, shapes and bits."""
+    eng = _variant(engine)
+    eng._boundary_wkb_bytes()  # the budget statistic: its own job
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    group = "test-boundary-index-build"
+    sc.setJobGroup(group, "boundary index build")
+    try:
+        bc, _ = eng._boundary_index()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    bus.waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    execs = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        store.executionsList())
+    plans = [e.physicalPlanDescription() for e in execs
+             if e.jobs().contains(jobs[0])]
+    assert len(plans) == 1
+    assert not re.search("Python|Pandas|InArrow", plans[0]), plans[0]
+
+    got, want = bc.value, _oracle_index(engine)
+    assert got.keys() == want.keys()
+    for k in want:
+        assert got[k].dtype == want[k].dtype, k
+        assert got[k].shape == want[k].shape, k
+        assert got[k].tobytes() == want[k].tobytes(), k

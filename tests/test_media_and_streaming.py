@@ -1,4 +1,9 @@
 """Multimodal stub plumbing + structured-streaming point lookup tests."""
+import json
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -100,6 +105,48 @@ class TestMediaStages:
         again = media.sample_frames(media.decode_media(docs, fake=True),
                                     every_n=50).collect()
         assert sorted(map(str, frames)) == sorted(map(str, again))
+
+    def test_null_ref_spans_pass_resize_and_frame_sample(self):
+        """An image and a video span with a null media_ref, decoded and
+        then resized and frame-sampled in one `local[1]` task: the image
+        keeps its row with a null width, height and thumb, and the
+        video gives no frame, instead of failing the job."""
+        proc = subprocess.run(
+            [sys.executable, "-c", NULL_REF_CHILD.format(root=ROOT)],
+            env=dict(os.environ, PYTHONPATH=ROOT,
+                     SPARK_LOCAL_IP=os.environ.get("SPARK_LOCAL_IP",
+                                                   "127.0.0.1")),
+            capture_output=True, text=True, timeout=600)
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        got = json.loads(proc.stdout.strip().splitlines()[-1])
+        assert got == {"thumbs": [["n-img", 0, None, None, None, None]],
+                       "frames": []}
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+NULL_REF_CHILD = r"""
+import json, sys
+sys.path.insert(0, {root!r})
+from pyspark.sql import SparkSession
+from areacity_query_geometry_spark import docs as docsmod
+from areacity_query_geometry_spark.functions import media
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+         .getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+d = spark.createDataFrame([("n-img", [("image", None, None, 0)]),
+                           ("n-vid", [("video", None, None, 0)])],
+                          docsmod.DOCS_SCHEMA)
+dec = media.decode_media(d, fake=True)
+thumbs = [[r.doc_id, r.span_idx, r.media_ref, r.width, r.height, r.thumb]
+          for r in media.resize_images(dec).collect()]
+frames = [list(r) for r in media.sample_frames(dec).collect()]
+print(json.dumps({{"thumbs": thumbs, "frames": frames}}))
+spark.stop()
+"""
 
 
 class TestStreaming:

@@ -65,11 +65,15 @@ def _index():
         "kind": [r[2] for r in rows],
         "minx": [r[3][0] for r in rows], "miny": [r[3][1] for r in rows],
         "maxx": [r[3][2] for r in rows], "maxy": [r[3][3] for r in rows],
-        "segs": [np.ascontiguousarray(
-            predicates.segments_of_rings(r[4]), dtype=np.float64).tobytes()
-            for r in rows],
     })
-    return _build_boundary_index(pdf)
+    return _build_boundary_index(pdf, *_ring_segs([r[4] for r in rows]))
+
+
+def _ring_segs(tile_rings):
+    """Each tile's ring segments in `wkb.ring_segments`' (count, segs)
+    form."""
+    segs = [predicates.segments_of_rings(r) for r in tile_rings]
+    return np.array([len(g) for g in segs], np.int64), np.vstack(segs)
 
 
 def _probes(I):

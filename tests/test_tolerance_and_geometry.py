@@ -79,7 +79,7 @@ class TestTolerance:
         I, _ = _batch_index(pd.DataFrame({
             "cell_id": [0], "region_id": [0], "minx": [minx],
             "miny": [miny], "maxx": [maxx], "maxy": [maxy],
-            "tile_wkb": [piece]}), {})
+            "tile_wkb": [piece]}))
         segs = I["SEG"][I["fseg"], :4]
         assert len(segs)
         x1, y1, x2, y2 = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
