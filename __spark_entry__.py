@@ -138,18 +138,17 @@ def q1_point_region_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q1_sortmerge_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q1 over the NON-broadcast tile path: broadcast_tiles=False forces
-    the shuffle join and salt_buckets=4 exercises the salted tile
-    replication (engine.py `_match_points` sort-merge leg) — the plan
-    the engine switches to when the tile set passes the 3M-row
-    broadcast threshold (township-scale boundary sets, SCALE.md row 3).
-    Identical oracle to q1_point_region_join: the driver hash-verifies
-    that the sort-merge + salted leg produces the exact same hit-set as
-    the broadcast leg."""
+    """Q1 over the all-shuffle join fallback: both index ceilings at 0
+    (`broadcast_wkb_budget=0, interior_broadcast_rows=0`) pin both
+    tile sides of engine.py `_match_points`' fallback to sort-merge
+    joins — the plan a township-scale boundary set past both ceilings
+    runs (SCALE.md row 3). Identical oracle to q1_point_region_join:
+    the driver hash-verifies that the sort-merge leg produces the exact
+    same hit-set as the one-pass index plan."""
     _register(spark, sf_dir, ("events",))
     base = _engine(spark)
     eng = SpatialEngine(spark, base.boundaries, base.tiles, base.base_res,
-                        broadcast_tiles=False, salt_buckets=4)
+                        broadcast_wkb_budget=0, interior_broadcast_rows=0)
     probes = spark.sql(fixtures.point_probes_sql("events"))
     out = eng.query_points(probes)
     return out.select(

@@ -22,10 +22,10 @@ the engine's broadcast ceilings (`broadcast_wkb_budget`,
 `interior_broadcast_rows`), one scalar Arrow UDF resolves every
 probe's regions from (lng, lat, cell_id) in a single pass over the
 probe, whose id columns never leave the JVM. Otherwise the join
-fallback runs: a plain equi-join with the tiles (broadcast when the
-tile set fits, sort-merge otherwise) whose interior hits (kind=1) stay
-in the JVM, and only points in boundary-ish cells cross into the
-vectorized Arrow refine.
+fallback runs: a plain equi-join with the tiles (each tile side
+broadcast when its ceiling holds, sort-merge otherwise) whose interior
+hits (kind=1) stay in the JVM, and only points in boundary-ish cells
+cross into the vectorized Arrow refine.
 """
 from __future__ import annotations
 
@@ -1372,6 +1372,14 @@ def _dissolve_cells(cell_ids: np.ndarray) -> list[list[np.ndarray]]:
     return [[r] for r in rings] if rings else []
 
 
+# salt modulus of the boundary-probe repartition in front of a broadcast
+# tile join: dense-city probe skew piles millions of points into a few
+# boundary cells, and the (cell_id, salt) key splits each hot cell
+# across this many tasks (9.24× over one task per cell on 20M probes,
+# half of them in 3 cells: BENCH/BASELINE.md "Skew")
+PROBE_SALT = 8
+
+
 class SpatialEngine:
     """Boundary set + tile index + query operators."""
 
@@ -1381,65 +1389,29 @@ class SpatialEngine:
         boundaries: DataFrame,
         tiles: DataFrame,
         base_res: int,
-        broadcast_tiles: bool | str = "auto",
-        salt_buckets: int = 0,
-        probe_salt: int = 8,
         interior_broadcast_rows: int = 12_000_000,
-        boundary_broadcast_rows: int = 1_500_000,
         broadcast_wkb_budget: int = 128 << 20,
         geodesic_refine: bool = False,
     ):
-        """broadcast_tiles: "auto" (default) resolves LAZILY from the
-        tile table's own statistics at first query: whole-table
-        broadcast iff row count < 3M AND boundary tile-WKB bytes ≤
-        `broadcast_wkb_budget`. The byte condition is the one that
-        matters at scale — measured on the 40k-feature township set
-        (1.04M tiles but 10M boundary points ≈ 0.3 GB WKB), replicating
-        the boundary WKB through a whole-table broadcast runs 4.6×
-        slower than the shuffle legs, while the 3.7M-tile dense set
-        (small per-tile WKB) broadcasts fine per-branch. Explicit
-        True/False pins the leg (tests and benches force both).
+        """interior_broadcast_rows: ceiling on the interior (kind=1)
+        tile rows. It gates the interior cell→region CSR index
+        (`_interior_index`) and the broadcast of tile sides without
+        WKB. The rows prune to 16-byte (cell_id, region_id) pairs, so
+        the ceiling is high: broadcasting ~200 MB
+        once beats sort-shuffling the whole probe table (measured on
+        the reference-density set, 3.7M tiles, 10M probes, local[8]:
+        sort-merge 75-110 s vs ~4 s broadcast on the interior join).
 
-        salt_buckets: when the tile set is too large to broadcast
-        (broadcast_tiles=False) the join becomes a shuffle join on
-        cell_id, and dense-city probe skew concentrates on few cells —
-        salting replicates each tile row S× under (cell_id, salt) and
-        spreads probe rows pseudo-randomly over the S replicas
-        (SURVEY.md §4 skew row). 0 disables.
-
-        probe_salt: salt modulus for the boundary-probe repartition on
-        the broadcast path — dense-city probe skew piles millions of
-        points into a handful of boundary cells, and the (cell_id,
-        salt) repartition splits each hot cell across `probe_salt`
-        reducers (tile WKB broadcasts, so replication costs nothing).
-        1 disables (one reducer per cell — skew-exposed).
-
-        interior_broadcast_rows / boundary_broadcast_rows: per-BRANCH
-        broadcast ceilings used when broadcast_tiles=False (whole table
-        past the one-shot threshold). The interior branch prunes to
-        16-byte (cell_id, region_id) pairs before broadcasting, so its
-        ceiling is high: broadcasting ~200 MB once beats sort-shuffling
-        the entire probe table (trillions of rows at the 100-TB
-        target). The boundary branch carries tile_wkb, so its ceiling
-        is lower. Past both ceilings the join degrades gracefully to
-        the salted sort-merge path. interior_broadcast_rows also gates
-        the INTERIOR (kind=1) cell→region CSR index
-        (`_interior_index`): the same 16-byte rows, shipped once per
-        worker.
-
-        broadcast_wkb_budget: boundary tile-WKB byte ceiling for ANY
-        broadcast that carries tile_wkb — the "auto" whole-table
-        resolution above, the per-branch boundary broadcast on the
-        broadcast_tiles=False path (its row ceiling alone cannot see a
-        set of few-but-huge tiles), AND the pre-decoded boundary-tile
-        index (`_boundary_index`), which is ~4× the WKB bytes held once
-        per Python worker: the 128 MB default prices a ~0.5 GB
-        worker-side index, the in-memory-index regime the reference
-        runs its whole process in.
-
-        With both indexes within their ceilings (and no salted shuffle
-        path), Q1 and Q2 answer in one pass over the probe and Q3 from
-        the indexes; otherwise each takes its join fallback."""
+        broadcast_wkb_budget: ceiling on the boundary (kind≠1) tile-WKB
+        bytes. It gates the pre-decoded boundary-tile index
+        (`_boundary_index`, ~4× the WKB bytes held once per Python
+        worker: the 128 MB default prices a ~0.5 GB worker-side index,
+        the in-memory regime the reference runs its whole process in)
+        and the broadcast of any tile side that carries WKB. Measured
+        on the 40k-feature township set (1.04M tiles, 0.3 GB boundary
+        WKB): replicating that WKB through a broadcast ran 4.6× slower
+        than shuffling it. Both index ceilings holding is the only
+        plan switch (`_one_pass_indexes`)."""
         self.spark = spark
         self.boundaries = boundaries
         self.tiles = tiles
@@ -1454,19 +1426,12 @@ class SpatialEngine:
         # same-latitude clamp point, so the refined value genuinely
         # differs from the oracle formula at the 2dp level.
         self.geodesic_refine = bool(geodesic_refine)
-        self._bt_auto: bool | None = None
         self._wkb_bytes: int | None = None
-        self.broadcast_tiles = broadcast_tiles
-        self.salt_buckets = salt_buckets
-        self.probe_salt = max(1, probe_salt)
         self.interior_broadcast_rows = interior_broadcast_rows
-        self.boundary_broadcast_rows = boundary_broadcast_rows
         self.broadcast_wkb_budget = broadcast_wkb_budget
         self._kind_counts: dict[int, int] | None = None
         self._bindex: tuple | None = None  # (Broadcast, bcells_df)
-        self._bindex_off = False
         self._iindex = None  # Broadcast of the interior-cell CSR
-        self._iindex_off = False
         self._keep_cache: dict[str, np.ndarray] = {}
         # QueryInitInfo analog (/root/reference/AreaCityQuery.java:1513-1604):
         # build-phase metadata, populated by from_geojson / tile_store.load
@@ -1505,7 +1470,7 @@ class SpatialEngine:
             t_read = time.time() - t0
             tiles = tiles.localCheckpoint(eager=True)
         n_tiles = tiles.count()
-        eng = cls(spark, boundaries, tiles, base_res)  # auto join strategy
+        eng = cls(spark, boundaries, tiles, base_res)
         eng._init_meta = {
             "file_path_data": path,
             "data_from_store": False,
@@ -1543,34 +1508,10 @@ class SpatialEngine:
 
     # ------------------------------------------------- shared join spine
 
-    @property
-    def broadcast_tiles(self) -> bool:
-        """The whole-table broadcast decision. Explicit True/False pins
-        it; "auto" resolves lazily (and caches) from the tile table's
-        own statistics — see __init__'s docstring for the rule."""
-        cfg = self._broadcast_tiles_cfg
-        if cfg != "auto":
-            return bool(cfg)
-        if self._bt_auto is None:
-            n_tiles = sum(self._tile_counts_by_kind().values())
-            self._bt_auto = (
-                n_tiles < 3_000_000
-                and self._boundary_wkb_bytes() <= self.broadcast_wkb_budget)
-        return self._bt_auto
-
-    @broadcast_tiles.setter
-    def broadcast_tiles(self, value: bool | str) -> None:
-        if value != "auto" and not isinstance(value, bool):
-            raise ValueError(f"broadcast_tiles must be bool or 'auto', "
-                             f"got {value!r}")
-        self._broadcast_tiles_cfg = value
-        self._bt_auto = None
-
     def _boundary_wkb_bytes(self) -> int:
         """Total tile_wkb bytes across boundary (kind≠1) tiles — the
-        engine's ONE byte statistic, cached and shared by the "auto"
-        broadcast resolution, the per-branch boundary-broadcast ceiling,
-        and the boundary-index budget check (1-row agg collect)."""
+        engine's ONE byte statistic, cached (1-row agg collect);
+        `_boundary_fits` compares it with `broadcast_wkb_budget`."""
         if self._wkb_bytes is None:
             stat = (self.tiles.filter(F.col("kind") != 1)
                     .agg(F.sum(F.length("tile_wkb")).alias("b")).collect())
@@ -1580,18 +1521,32 @@ class SpatialEngine:
     def _tile_counts_by_kind(self) -> dict[int, int]:
         """Per-kind tile counts, cached — ≤3 rows over the checkpointed
         tile table (the engine's single metadata-sized driver collect;
-        shared by init_info and the per-branch join planner)."""
+        shared by init_info and the row ceilings)."""
         if self._kind_counts is None:
             rows = self.tiles.groupBy("kind").count().collect()
             self._kind_counts = {int(r["kind"]): int(r["count"]) for r in rows}
         return self._kind_counts
 
-    def _tile_kind_counts(self) -> tuple[int, int]:
-        """(interior_rows, boundary_rows) — computed on the
-        broadcast_tiles=False path to pick per-branch join strategies.
+    def _interior_fits(self) -> bool:
+        """Kind=1 rows within `interior_broadcast_rows`: gates
+        `_interior_index` and the broadcast of (cell_id, region_id) sides.
         Unfiltered counts are a safe upper bound under `where`."""
-        d = self._tile_counts_by_kind()
-        return d.get(1, 0), sum(v for k, v in d.items() if k != 1)
+        return (self._tile_counts_by_kind().get(1, 0)
+                <= self.interior_broadcast_rows)
+
+    def _rect_tiles_fit(self) -> bool:
+        """Kind 1 and 2 rect rows (48 B each) within the bytes of
+        `interior_broadcast_rows` 16-byte pairs: gates the broadcast of
+        the overlay and linework rect side."""
+        c = self._tile_counts_by_kind()
+        return (3 * (c.get(1, 0) + c.get(2, 0))
+                <= self.interior_broadcast_rows)
+
+    def _boundary_fits(self) -> bool:
+        """Boundary tile WKB within `broadcast_wkb_budget`: gates
+        `_boundary_index` and the broadcast of WKB-carrying tile
+        sides."""
+        return self._boundary_wkb_bytes() <= self.broadcast_wkb_budget
 
     def _probe_cells(self, points: DataFrame, lng="lng", lat="lat") -> DataFrame:
         """Attach the base-res cell_id — one pure Spark SQL expression
@@ -1600,19 +1555,21 @@ class SpatialEngine:
             "cell_id", F.expr(grid.cell_id_sql_expr(lng, lat, self.base_res))
         )
 
-    def _tiles_for(self, where: str | None, hint: bool = True) -> DataFrame:
+    def _tiles_for(self, where: str | None) -> DataFrame:
         t = self.tiles
         if where:
             keep = self.boundaries.filter(where).select("region_id")
             t = t.join(F.broadcast(keep), "region_id", "left_semi")
-        if not hint:
-            return t
-        if self.broadcast_tiles:
-            return F.broadcast(t)
-        # broadcast explicitly disabled (tile set past the threshold):
-        # pin the shuffle strategy so a mis-estimated size statistic
-        # can't sneak a 3M+-row tile table into a broadcast build
-        return t.hint("shuffle_merge")
+        return t
+
+    @staticmethod
+    def _pin(t: DataFrame, fits: bool) -> DataFrame:
+        """A join's tile side: broadcast when the ceiling that prices
+        it holds (`_interior_fits` for (cell_id, region_id) sides,
+        `_rect_tiles_fit` for rect sides, `_boundary_fits` for sides
+        with WKB), else pinned to sort-merge so that a mis-estimated
+        size statistic cannot sneak it into a broadcast build."""
+        return F.broadcast(t) if fits else t.hint("shuffle_merge")
 
     def _boundary_index(self, unbounded: bool = False) -> tuple | None:
         """Build (once, lazily) the broadcast boundary-tile index:
@@ -1623,10 +1580,10 @@ class SpatialEngine:
         for the point kernel, and an index of the segments fit for
         distance use.
 
-        Returns (Broadcast, bcells_df) or None when the boundary WKB
-        volume exceeds `broadcast_wkb_budget` (the join fallbacks take
-        over) — unless `unbounded`, which the tolerance -1 fallback
-        passes: its search needs every boundary tile. The build is ONE
+        Returns (Broadcast, bcells_df), or None when `_boundary_fits`
+        fails (the join fallbacks take over) — unless `unbounded`,
+        which the tolerance -1 fallback passes: its search needs every
+        boundary tile. The build is ONE
         Spark job, with no Python worker: the driver collects the tile
         columns with `toArrow` (about the WKB volume, bounded by the
         budget), decodes every tile's WKB in one vectorized
@@ -1635,12 +1592,8 @@ class SpatialEngine:
         jobs. bcells_df (the index's sorted cell ids) is a lazy local
         DataFrame; no query plan reads it, perfbench's layer timers do.
         """
-        if not unbounded:
-            if self._bindex_off:
-                return None
-            if self._boundary_wkb_bytes() > self.broadcast_wkb_budget:
-                self._bindex_off = True
-                return None
+        if not (unbounded or self._boundary_fits()):
+            return None
         if self._bindex is not None:
             return self._bindex
         cols = ["cell_id", "region_id", "kind", "minx", "miny", "maxx",
@@ -1666,16 +1619,12 @@ class SpatialEngine:
         BASE-res cell with rect == cell rect, tiler.push). The one-pass
         Q1/Q2 plans and the Q3 index path need it because
         `_boundary_index` deliberately holds only kind≠1 tiles. Returns
-        the Broadcast or None when the interior row count exceeds
-        `interior_broadcast_rows` (Q1, Q2 and Q3 then take their join
-        fallbacks)."""
+        the Broadcast, or None when `_interior_fits` fails (Q1, Q2 and
+        Q3 then take their join fallbacks)."""
+        if not self._interior_fits():
+            return None
         if self._iindex is not None:
             return self._iindex
-        if self._iindex_off:
-            return None
-        if self._tile_kind_counts()[0] > self.interior_broadcast_rows:
-            self._iindex_off = True
-            return None
         tbl = (self.tiles.filter(F.col("kind") == 1)
                .select("cell_id", "region_id").toArrow())
         cell = tbl.column("cell_id").to_numpy().astype(np.int64)
@@ -1708,29 +1657,14 @@ class SpatialEngine:
             self._keep_cache[where] = arr
         return arr
 
-    def _boundary_broadcastable(self) -> bool:
-        """Whether the boundary tiles may broadcast: always under the
-        whole-table broadcast; otherwise (broadcast_tiles=False) per
-        branch, by row AND byte ceiling — few-but-huge tiles (township
-        set: 955k rows, 0.3 GB WKB) must take the shuffle leg even
-        under the row ceiling."""
-        if self.broadcast_tiles:
-            return True
-        return (self._tile_kind_counts()[1] <= self.boundary_broadcast_rows
-                and self._boundary_wkb_bytes() <= self.broadcast_wkb_budget)
-
     def _one_pass_indexes(self) -> tuple | None:
-        """(interior, boundary) index Broadcasts when the one-pass Q1/Q2
-        plans apply — no salted shuffle path, the boundary branch
-        broadcastable, and both indexes within their broadcast ceilings
-        (`broadcast_wkb_budget`, `interior_broadcast_rows`) — else None,
-        and Q1/Q2 take their join fallbacks. The only plan switch."""
-        if not self.broadcast_tiles and self.salt_buckets > 1:
+        """(interior, boundary) index Broadcasts when both indexes fit
+        their ceilings (`_interior_fits`, `_boundary_fits`), else None.
+        The only plan switch: Q1, Q2 and Q3 take their index plans on a
+        tuple and their join fallbacks on None."""
+        if not (self._interior_fits() and self._boundary_fits()):
             return None
-        bidx = self._boundary_index() if self._boundary_broadcastable() \
-            else None
-        iidx = self._interior_index() if bidx is not None else None
-        return None if iidx is None else (iidx, bidx[0])
+        return self._interior_index(), self._boundary_index()[0]
 
     def _match_points(self, points: DataFrame, where: str | None = None,
                       lng="lng", lat="lat",
@@ -1748,14 +1682,18 @@ class SpatialEngine:
         dense fixture's docs join ~80% of geo spans land in boundary
         cells, so sending only those would save little).
 
-        Otherwise (an index over its ceiling, or the salted shuffle
-        path) the join fallback: kind=1 hits by an equi-join that stays
-        in the JVM, UNION the kind 0/2 rows through a tile join and a
-        mapInPandas refine (`_make_point_refine_fn`: the index kernels
-        over a per-batch tile index). A point hits at most one kind-1
-        tile per region, but can hit several kind 0/2 tiles of one
-        region whose rows Arrow may put in different batches, so the
-        refined branch is deduped per (*id_cols, region_id).
+        Otherwise (an index over its ceiling) the join fallback: kind=1
+        hits by an equi-join that stays in the JVM, UNION the boundary
+        branch: a tile join pairs the probes with their kind 0/2 tiles
+        and a mapInPandas refines the pairs (`_make_point_refine_fn`:
+        the index kernels over a per-batch tile index). Each tile side
+        is broadcast when its ceiling holds and sort-merge joined
+        otherwise (`_pin`); a broadcast boundary side is reached
+        through a semi-join and a salted repartition. A point
+        hits at most one kind-1 tile per region, but can hit several
+        kind 0/2 tiles of one region whose rows Arrow may put in
+        different batches, so the refined branch is deduped per
+        (*id_cols, region_id).
 
         observers: optional (interior_obs, refined_obs) Observation pair
         — each gets {"rows": n}, the interior and refined hit rows (the
@@ -1765,7 +1703,7 @@ class SpatialEngine:
         idx = self._one_pass_indexes()
         if idx is not None:
             # one-pass index plan; the join fallback below runs only
-            # when an index is over its ceiling or on the salted path
+            # when an index is over its ceiling
             hits = _make_regions_udf(
                 *idx, self._keep_region_ids(where),
                 counts=observers is not None)(
@@ -1784,78 +1722,29 @@ class SpatialEngine:
                              .alias("rows"))
                     .select(*id_cols, F.explode("_hits.region_id")
                             .alias("region_id")))
-        if not self.broadcast_tiles and self.salt_buckets > 1:
-            # shuffle-join path: replicate tiles S× and spread probe rows
-            # pseudo-randomly so hot cells don't pin one reducer
-            s = self.salt_buckets
-            salted_tiles = self._tiles_for(where).withColumn(
-                "salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1))))
-            probe_s = probe.withColumn(
-                "salt", F.pmod(F.xxhash64(F.col(lng), F.col(lat)), F.lit(s)).cast("int"))
-            interior = probe_s.join(
-                salted_tiles.filter(F.col("kind") == 1), ["cell_id", "salt"]
-            ).select(*id_cols, "region_id")
-            tiles_b = salted_tiles.filter(F.col("kind") != 1)
-            bpts = probe_s.join(
-                tiles_b.select("cell_id", "salt").distinct(),
-                ["cell_id", "salt"], "left_semi")
-            brows = bpts.join(tiles_b, ["cell_id", "salt"])
-        else:
-            base = self._tiles_for(where, hint=False)
-            if self.broadcast_tiles:
-                tiles_all = F.broadcast(base)
-                tiles_i = tiles_all.filter(F.col("kind") == 1)
-                tiles_b = tiles_all.filter(F.col("kind") != 1)
-                bcast_b = True
-            else:
-                # PER-BRANCH broadcast decision. broadcast_tiles=False
-                # only says the WHOLE tile table (boundary WKB included)
-                # is past the one-shot broadcast threshold; the two join
-                # branches have very different widths and each may still
-                # be broadcastable on its own:
-                #   - interior rows prune to 16-byte (cell_id, region_id)
-                #     pairs — 12M rows ≈ a couple hundred MB hashed,
-                #     vs the alternative of sort-shuffling the ENTIRE
-                #     probe table (trillions of rows at the 100-TB
-                #     target). Measured on the reference-density set
-                #     (3.7M tiles, 10M probes, local[8]): forced SMJ
-                #     75-110 s vs per-branch broadcast ~4 s interior.
-                #   - boundary rows carry tile_wkb but are few (the
-                #     dense fixture: 450k of 3.7M).
-                # Only past these per-branch ceilings does the salted
-                # sort-merge path earn its shuffles.
-                n_i = self._tile_kind_counts()[0]
-                ti = base.filter(F.col("kind") == 1) \
-                         .select("cell_id", "region_id")
-                tiles_i = (F.broadcast(ti)
-                           if n_i <= self.interior_broadcast_rows
-                           else ti.hint("shuffle_merge"))
-                tb = base.filter(F.col("kind") != 1)
-                bcast_b = self._boundary_broadcastable()
-                tiles_b = (F.broadcast(tb) if bcast_b
-                           else tb.hint("shuffle_merge"))
-            interior = probe.join(tiles_i, "cell_id") \
-                            .select(*id_cols, "region_id")
-            # join-based refine: skinny semi-join first — only probes
-            # in boundary-ish cells survive, ONE row each (no fan-out),
-            # then repartition by (cell, salt) so the refine sees
-            # cell-contiguous batches — each tile decodes on one task
-            # and its points arrive as one dense group. The salt splits
-            # dense-city hot cells.
-            # the distinct-cells list is far smaller than the boundary
-            # tile rows (no wkb, deduped) — broadcast it whenever the
-            # boundary branch itself is broadcastable (the hint does
-            # not survive the distinct aggregate, so re-apply
-            # explicitly)
-            bcells = tiles_b.select("cell_id").distinct()
-            if bcast_b:
-                bcells = F.broadcast(bcells)
-            bpts = probe.join(bcells, "cell_id", "left_semi")
-            n_parts = self.spark.sparkContext.defaultParallelism
+        base = self._tiles_for(where)
+        tiles_i = self._pin(base.filter(F.col("kind") == 1)
+                            .select("cell_id", "region_id"),
+                            self._interior_fits())
+        bcast_b = self._boundary_fits()
+        tiles_b = self._pin(base.filter(F.col("kind") != 1), bcast_b)
+        interior = probe.join(tiles_i, "cell_id") \
+                        .select(*id_cols, "region_id")
+        bpts = probe
+        if bcast_b:
+            # a broadcast tile join keeps the probe partitioning: keep
+            # the probes in kind 0/2 cells, then repartition by (cell,
+            # salt) for cell-contiguous refine batches, the salt
+            # splitting dense-city hot cells
+            bcells = F.broadcast(tiles_b.select("cell_id").distinct())
             salt = F.pmod(F.xxhash64(F.col(lng), F.col(lat)),
-                          F.lit(self.probe_salt)).cast("int")
-            bpts = bpts.repartition(n_parts, F.col("cell_id"), salt)
-            brows = bpts.join(tiles_b, "cell_id")
+                          F.lit(PROBE_SALT)).cast("int")
+            bpts = probe.join(bcells, "cell_id", "left_semi").repartition(
+                self.spark.sparkContext.defaultParallelism,
+                F.col("cell_id"), salt)
+        # a sort-merge tile join's probe child is its own exchange, so
+        # AQE's skew join can split a hot cell's partition
+        brows = bpts.join(tiles_b, "cell_id")
         boundary = brows.select(
             *id_cols, F.col(lng).alias("lng"), F.col(lat).alias("lat"),
             "cell_id", "region_id", "kind", "minx", "miny", "maxx",
@@ -2003,6 +1892,12 @@ class SpatialEngine:
 
     # ------------------------------------------------ envelope-hit debug
 
+    def _all_tiles_for(self, where: str | None) -> DataFrame:
+        """Every tile kind as one join side: rects and WKB, so it is
+        broadcast only when both ceilings hold."""
+        return self._pin(self._tiles_for(where),
+                         self._interior_fits() and self._boundary_fits())
+
     def _envelope_hit_props(self, cand: DataFrame,
                             id_cols: tuple[str, ...]) -> DataFrame:
         """Shared tail of the Set_EnvelopeHitResult analog
@@ -2068,7 +1963,7 @@ class SpatialEngine:
         cell (a slight superset of the reference's envelope test: the
         cell rect contains the tile envelope)."""
         probe = self._probe_cells(points, lng, lat)
-        cand = probe.join(self._tiles_for(where), "cell_id")
+        cand = probe.join(self._all_tiles_for(where), "cell_id")
         return self._envelope_hit_props(cand, id_cols)
 
     def query_geometry_envelope_hits(self, probes: DataFrame,
@@ -2099,7 +1994,7 @@ class SpatialEngine:
                 })
 
         cov = probes.select("probe_id", "wkt").mapInPandas(cover, schema)
-        cand = cov.join(self._tiles_for(where), "cell_id")
+        cand = cov.join(self._all_tiles_for(where), "cell_id")
         return self._envelope_hit_props(cand, ("probe_id",))
 
     # ---------------------------------------------------------- Q2
@@ -2127,7 +2022,7 @@ class SpatialEngine:
         regions per deep, all in one Arrow batch) and one broadcast
         join with the props dim — no checkpoint, anti-join, window,
         union or shuffle exchange. Otherwise (an index over its
-        ceiling, or the salted path) the two-stage join fallback: Q1 is
+        ceiling) the two-stage join fallback: Q1 is
         checkpointed, its misses (a LEFT ANTI join on point_id) run a
         distance stage, and `_finish_tolerance` keeps the nearest per
         deep. The distance stage for tolerance > 0 is the 24-gon cover
@@ -2230,7 +2125,9 @@ class SpatialEngine:
         # parallelism at any cluster size.
         misses = misses.repartition(F.col("point_id"))
         cover = misses.mapInPandas(cover_fn, cover_schema)
-        tiles_b = self._tiles_for(where).filter(F.col("kind") == 0)
+        tiles_b = self._pin(self._tiles_for(where)
+                            .filter(F.col("kind") == 0),
+                            self._boundary_fits())
         cand = cover.join(tiles_b, "cell_id").select(
             "point_id", "lng", "lat", "cell_id", "region_id",
             "minx", "miny", "maxx", "maxy", "tile_wkb")
@@ -2282,7 +2179,7 @@ class SpatialEngine:
 
     # ---------------------------------------------------------- Q3
 
-    def _geometry_index_refine(self, probes: DataFrame,
+    def _geometry_index_refine(self, probes: DataFrame, idx: tuple,
                                keep: np.ndarray | None = None) -> DataFrame:
         """Q3 against the broadcast indexes — zero-shuffle
         geometry-intersects: ONE mapInPandas over the probe table.
@@ -2291,17 +2188,16 @@ class SpatialEngine:
         (grid.cover_bboxes), candidate tiles come from the boundary
         CSR (`_boundary_index`, kind 0/2 — pre-decoded segments, no
         per-task WKB decode) and the interior CSR (`_interior_index`,
-        kind 1). Every (primitive, tile) pair goes through
-        `_prim_tile_hits`, the kernel the cover-join fallback runs
-        too. A probe's primitives never leave their batch, so
+        kind 1), the pair `idx` from `_one_pass_indexes()`. Every
+        (primitive, tile) pair goes through `_prim_tile_hits`, the
+        kernel the cover-join fallback runs too. A probe's primitives never leave their batch, so
         (probe_id, region_id) dedup is LOCAL — the join path's global
         dropDuplicates exchange disappears along with the cover
         shuffle. Output set is identical to the join path
         (tests/test_q3_index_parity.py sweeps generated nested
         boundaries). Each batch first calls `_drop_spark_zip_importers`.
         """
-        bc, _ = self._boundary_index()
-        bi = self._interior_index()
+        bi, bc = idx
         base_res = self.base_res
         schema = StructType([StructField("probe_id", LongType()),
                              StructField("region_id", LongType())])
@@ -2368,20 +2264,20 @@ class SpatialEngine:
         MULTIPOLYGON probe. Returns (probe_id, region_id [, props])
         for every boundary the probe intersects (boundary-touch counts).
 
-        Queries against an index-budget boundary set take the
-        BROADCAST-INDEX refine (`_geometry_index_refine`) — zero
-        shuffle Exchanges, no per-task WKB decode, local dedup;
-        `where` rides along as an in-kernel keep-region array.
-        Past-budget sets run the cover-join plan below: primitives
-        cover cells, join the tiles, and refine through the same
-        `_prim_tile_hits`, kind-0 tiles against a per-batch
-        `_batch_index`, then one global dedup. Both plans' functions
-        call `_drop_spark_zip_importers` per batch.
+        With both indexes within their ceilings (`_one_pass_indexes`)
+        the query takes the BROADCAST-INDEX refine
+        (`_geometry_index_refine`) — zero shuffle Exchanges, no
+        per-task WKB decode, local dedup; `where` rides along as an
+        in-kernel keep-region array. Otherwise the cover-join plan
+        below runs: primitives cover cells, sort-merge join the tiles,
+        and refine through the same `_prim_tile_hits`, kind-0 tiles
+        against a per-batch `_batch_index`, then one global dedup. Both
+        plans' functions call `_drop_spark_zip_importers` per batch.
         """
-        if self._boundary_index() is not None \
-                and self._interior_index() is not None:
+        idx = self._one_pass_indexes()
+        if idx is not None:
             matches = self._geometry_index_refine(
-                probes, self._keep_region_ids(where))
+                probes, idx, self._keep_region_ids(where))
             if not with_props:
                 return matches
             return self._with_props(matches, return_wkt_key=return_wkt_key)
@@ -2427,16 +2323,16 @@ class SpatialEngine:
         # vertex decides region⊂probe — so they join a deduped tile side
         # (cuts the WKT-carrying fan-out by the subtile multiplicity).
         # Both tile sides union into ONE join (flag `cr` as a join
-        # filter) so the cover UDF evaluates once, not per branch.
-        t_base = self._tiles_for(where, hint=False)
+        # filter) so the cover UDF evaluates once, not per branch. The
+        # side mixes every kind (rects and WKB): it could broadcast
+        # only with both ceilings holding, when the index plan runs.
+        t_base = self._tiles_for(where)
         tiles_u = (
             t_base.withColumn("cr", F.lit(0))
             .unionByName(t_base.dropDuplicates(["cell_id", "region_id"])
                          .withColumn("cr", F.lit(1)))
             .withColumnRenamed("cell_id", "tcell")
-        )
-        if self.broadcast_tiles:
-            tiles_u = F.broadcast(tiles_u)
+        ).hint("shuffle_merge")
         joined = cover.join(
             tiles_u,
             (F.col("cell_id") == F.col("tcell"))

@@ -348,15 +348,13 @@ def line_length_in_regions(eng, probes: DataFrame,
             .selectExpr("probe_id", "x1", "y1", "x2", "y2",
                         f"{pack} AS cell_id"))
 
-    t = eng._tiles_for(where, hint=False)
+    t = eng._tiles_for(where)
     ti = t.filter(F.col("kind") != 0).select(
         "cell_id", "region_id", "minx", "miny", "maxx", "maxy")
     tb = t.filter(F.col("kind") == 0).select(
         "cell_id", "region_id", "minx", "miny", "maxx", "maxy", "tile_wkb")
-    if eng.broadcast_tiles:
-        ti, tb = F.broadcast(ti), F.broadcast(tb)
-    else:
-        ti, tb = ti.hint("shuffle_merge"), tb.hint("shuffle_merge")
+    ti = eng._pin(ti, eng._rect_tiles_fit())
+    tb = eng._pin(tb, eng._boundary_fits())
 
     # interior tiles: the whole clipped run counts. Axis-aligned →
     # exact rect algebra with the half-open constant-axis band;

@@ -46,8 +46,8 @@ def save(engine: SpatialEngine, path: str, params: dict,
         "grid_version": GRID_VERSION,
         "n_features": engine.boundaries.count(),
         "n_tiles": engine.tiles.count(),
-        # join-strategy statistics (seeds the loaded engine's "auto"
-        # broadcast resolution without re-scanning the tile table)
+        # the statistics behind the two index ceilings (seed the loaded
+        # engine's plan choice without re-scanning the tile table)
         "boundary_wkb_bytes": engine._boundary_wkb_bytes(),
         "tiles_by_kind": engine._tile_counts_by_kind(),
         **params,
@@ -79,7 +79,7 @@ def load(spark: SparkSession, path: str,
     boundaries = fmt.read_boundaries(spark, path).cache()
     tiles = fmt.read_tiles(spark, path).cache()
     eng = SpatialEngine(spark, boundaries, tiles, base_res=meta["base_res"])
-    # seed the auto join-strategy statistics from the store metadata so
+    # seed the plan-choice statistics from the store metadata so
     # loading costs no extra jobs (older stores lack the keys → the
     # engine computes them lazily from the parquet)
     if "boundary_wkb_bytes" in meta:
@@ -113,14 +113,12 @@ def save_bucketed(engine: SpatialEngine, table: str, n_buckets: int = 64) -> Non
 
 def load_bucketed(spark: SparkSession, table: str, base_res: int,
                   boundaries=None) -> SpatialEngine:
-    """Engine over the bucketed tile table with the whole-table tile
-    broadcast off (broadcast_tiles=False). The bucketed scan serves the
-    join fallback, which runs only when a broadcast tile index is over
-    its budget (`broadcast_wkb_budget`, `interior_broadcast_rows`);
+    """Engine over the bucketed tile table. The bucketed scan serves
+    the join fallback, which runs only when a broadcast tile index is
+    over its budget (`broadcast_wkb_budget`, `interior_broadcast_rows`);
     otherwise the one-pass index plans answer without the scan."""
     tiles = spark.table(table)
-    return SpatialEngine(spark, boundaries, tiles, base_res=base_res,
-                         broadcast_tiles=False)
+    return SpatialEngine(spark, boundaries, tiles, base_res=base_res)
 
 
 def load_or_build(

@@ -1,9 +1,10 @@
-"""broadcast_tiles="auto" resolution (engine.py) — the byte-aware join
-strategy. Measured basis (BENCH/TOWNSHIP.md r4 re-measure): at 1.04M
-tiles / 0.3 GB boundary WKB, whole-table broadcast is the losing leg
-even though the row count sits far under the 3M ceiling — so "auto"
-must look at bytes, and the per-branch boundary broadcast must too.
-Runs on a generated `fixtures_dense` boundary set (no external files).
+"""Plan choice by the two index ceilings (engine.py `_interior_fits`,
+`_boundary_fits`): the byte-aware join strategy. Measured basis
+(BENCH/TOWNSHIP.md r4 re-measure): at 1.04M tiles / 0.3 GB boundary
+WKB, broadcasting the tile WKB is the losing leg although the row count
+is small, so the boundary ceiling is in bytes. Q1, Q2 and Q3 choose
+their plan through `_one_pass_indexes()` alone. Runs on a generated
+`fixtures_dense` boundary set (no external files).
 """
 import contextlib
 import io
@@ -29,29 +30,46 @@ PROBES = [(80.3, 24.1), (97.7, 41.2), (121.4, 31.2), (0.0, 0.0),
 
 class TestAutoResolution:
     def test_fixture_resolves_broadcast(self, dense_engine):
-        # the generated fixture is tiny on both axes → broadcast
-        assert dense_engine._broadcast_tiles_cfg == "auto"
-        assert dense_engine.broadcast_tiles is True
+        # the generated fixture is tiny on both axes → both indexes fit
+        assert dense_engine._interior_fits()
+        assert dense_engine._boundary_fits()
 
     def test_byte_budget_refuses_broadcast(self, spark, dense_engine):
         eng = SpatialEngine(
             spark, dense_engine.boundaries, dense_engine.tiles,
             base_res=dense_engine.base_res, broadcast_wkb_budget=0)
-        assert eng.broadcast_tiles is False
+        assert not eng._boundary_fits()
+        assert eng._interior_fits()
 
-    def test_explicit_pin_wins(self, spark, dense_engine):
+    def test_rect_side_priced_at_its_row_width(self, spark, dense_engine):
+        """The overlay rect side carries kind 1 and 2 rows of 48 bytes,
+        three times a (cell_id, region_id) pair: a ceiling that admits
+        the interior pairs but not the rect rows keeps that side on
+        sort-merge, and the areas do not change."""
+        from areacity_query_geometry_spark import overlay
+
+        c = dense_engine._tile_counts_by_kind()
         eng = SpatialEngine(
             spark, dense_engine.boundaries, dense_engine.tiles,
-            base_res=dense_engine.base_res, broadcast_tiles=True,
-            broadcast_wkb_budget=0)
-        assert eng.broadcast_tiles is True
+            base_res=dense_engine.base_res,
+            interior_broadcast_rows=3 * (c.get(1, 0) + c.get(2, 0)) - 1)
+        assert eng._interior_fits()
+        assert not eng._rect_tiles_fit()
+        assert dense_engine._rect_tiles_fit()
+        probes = spark.createDataFrame(
+            [(0, 80.0, 24.0, 99.0, 42.0)],
+            "probe_id long, x0 double, y0 double, x1 double, y1 double")
+        got = overlay.overlay_rect_area(eng, probes)
+        assert _plan_nodes(got, "SortMergeJoin") == 1
+        want = overlay.overlay_rect_area(dense_engine, probes)
+        assert _plan_nodes(want, "SortMergeJoin") == 0
 
-    def test_setter_revalidates(self, spark, dense_engine):
-        eng = SpatialEngine(
-            spark, dense_engine.boundaries, dense_engine.tiles,
-            base_res=dense_engine.base_res)
-        with pytest.raises(ValueError):
-            eng.broadcast_tiles = 1  # int is not a pin
+        def areas(df):
+            return sorted((r["region_id"], round(r["area"], 9))
+                          for r in df.collect())
+
+        assert areas(got) == areas(want)
+        assert areas(want)
 
     def test_wkb_stat_cached_once(self, dense_engine):
         a = dense_engine._boundary_wkb_bytes()
@@ -62,14 +80,14 @@ class TestAutoResolution:
 
 class TestAutoFallbackParity:
     def test_per_branch_leg_matches_broadcast(self, spark, dense_engine):
-        """Force the auto rule onto the per-branch path (byte budget 0
-        also disables the boundary-branch broadcast AND the boundary
-        index) and require identical hits to the broadcast engine —
-        the same cross-leg equality TOWNSHIP hash-checks at 1M tiles."""
+        """Byte budget 0 turns the boundary index off and shuffles the
+        boundary tile side (the interior side still broadcasts); the
+        fallback must give the one-pass engine's hits — the same
+        cross-leg equality TOWNSHIP hash-checks at 1M tiles."""
         eng = SpatialEngine(
             spark, dense_engine.boundaries, dense_engine.tiles,
             base_res=dense_engine.base_res, broadcast_wkb_budget=0)
-        assert eng.broadcast_tiles is False
+        assert not eng._boundary_fits()
         probes = _pts(spark, PROBES)
         got = sorted((r["point_id"], r["region_id"]) for r in
                      eng.query_points(probes, with_props=False).collect())
@@ -87,10 +105,10 @@ class TestAutoFallbackParity:
                         {"base_res": dense_engine.base_res,
                          "max_res": 14, "seg_budget": 48})
         eng = tile_store.load(spark, path)
-        # stats seeded from _meta.json — resolving "auto" runs no job
+        # stats seeded from _meta.json — the plan choice runs no job
         assert eng._wkb_bytes == dense_engine._boundary_wkb_bytes()
         assert eng._kind_counts == dense_engine._tile_counts_by_kind()
-        assert eng.broadcast_tiles is True
+        assert eng._boundary_fits()
 
 
 def _plan_nodes(df, name):
@@ -100,45 +118,68 @@ def _plan_nodes(df, name):
     return len(re.findall(rf"\(\d+\) {name}\n", buf.getvalue()))
 
 
+def _geoms(spark):
+    return spark.createDataFrame(
+        [(1, "POLYGON ((113 30, 113 33, 117 33, 117 30, 113 30))"),
+         (2, "LINESTRING (80 24, 98 41)"),
+         (3, "POINT (121.4 31.2)")],
+        "probe_id long, wkt string")
+
+
 class TestPlanChoice:
     def test_one_pass_iff_both_indexes_fit_their_ceilings(
             self, spark, dense_engine):
         """The only plan switch is `_one_pass_indexes()`: each index is
-        gated by the broadcast ceiling that prices it (interior rows by
+        gated by the ceiling that prices it (interior rows by
         `interior_broadcast_rows`, boundary WKB bytes by
-        `broadcast_wkb_budget`). With either one over, Q1 takes the
-        join fallback, and every plan returns the same hits."""
+        `broadcast_wkb_budget`). Q1, Q2 at 25 km and Q3 agree: the
+        default engine takes the index plans, either ceiling at 0
+        takes the join fallbacks, and every plan returns the same
+        rows."""
         def variant(**kw):
             return SpatialEngine(
                 spark, dense_engine.boundaries, dense_engine.tiles,
                 base_res=dense_engine.base_res, **kw)
 
-        no_interior = variant(interior_broadcast_rows=0)
-        no_boundary = variant(broadcast_tiles=True, broadcast_wkb_budget=0)
+        engines = {"default": dense_engine,
+                   "no_interior": variant(interior_broadcast_rows=0),
+                   "no_boundary": variant(broadcast_wkb_budget=0)}
         probes = _pts(spark, PROBES)
-
-        def q1(eng):
-            return eng.query_points(probes, with_props=False)
+        geoms = _geoms(spark)
+        queries = {
+            "q1": lambda e: e.query_points(probes, with_props=False),
+            "q2": lambda e: e.query_points_with_tolerance(
+                probes, 25000.0).select("point_id", "region_id",
+                                        "point_distance"),
+            "q3": lambda e: e.query_geometry(geoms, with_props=False),
+        }
+        # the Python node each index plan runs, absent on the fallbacks
+        index_node = {"q1": "ArrowEvalPython", "q2": "ArrowEvalPython",
+                      "q3": "MapInPandas"}
 
         assert dense_engine._one_pass_indexes() is not None
-        assert _plan_nodes(q1(dense_engine), "ArrowEvalPython") == 1
-        assert _plan_nodes(q1(dense_engine), "Union") == 0
+        assert engines["no_interior"]._interior_index() is None
+        assert engines["no_boundary"]._boundary_index() is None
+        for name, eng in engines.items():
+            one_pass = name == "default"
+            assert (eng._one_pass_indexes() is not None) == one_pass
+            for q, run in queries.items():
+                plan = run(eng)
+                # Q1's fallback unions its interior and boundary
+                # branches; Q2's unions its Q1 rows and nearest rows;
+                # Q3's fallback adds a cover MapInPandas
+                if q == "q3":
+                    assert _plan_nodes(plan, "MapInPandas") == \
+                        (1 if one_pass else 2), (name, q)
+                else:
+                    assert _plan_nodes(plan, index_node[q]) == \
+                        (1 if one_pass else 0), (name, q)
+                    assert _plan_nodes(plan, "Union") == \
+                        (0 if one_pass else 1), (name, q)
 
-        assert no_interior._interior_index() is None
-        assert no_interior._one_pass_indexes() is None
-        plan = q1(no_interior)
-        assert _plan_nodes(plan, "Union") == 1
-        assert _plan_nodes(plan, "MapInPandas") == 1
-        assert _plan_nodes(plan, "ArrowEvalPython") == 0
-
-        assert no_boundary._boundary_index() is None
-        assert no_boundary._one_pass_indexes() is None
-
-        def hits(eng):
-            return sorted((r["point_id"], r["region_id"])
-                          for r in q1(eng).collect())
-
-        want = hits(dense_engine)
-        assert len({p for p, _ in want}) >= 3  # in-extent probes resolve
-        assert hits(no_interior) == want
-        assert hits(no_boundary) == want
+        for q, run in queries.items():
+            rows = {name: sorted(tuple(r) for r in run(eng).collect())
+                    for name, eng in engines.items()}
+            assert rows["default"], q
+            assert rows["no_interior"] == rows["default"], q
+            assert rows["no_boundary"] == rows["default"], q

@@ -23,6 +23,9 @@ from areacity_query_geometry_spark.geom import core, predicates, wkb
 
 BASE_RES = 9
 WHERE = "deep = 2"
+# the join fallback's two sub-legs: boundary tile side broadcast (the
+# interior index off) and shuffled (the boundary index off)
+FALLBACKS = ({"interior_broadcast_rows": 0}, {"broadcast_wkb_budget": 0})
 
 
 @pytest.fixture(scope="module")
@@ -50,19 +53,19 @@ def _hits(eng, pts, where=None):
 
 def test_index_path_equals_join_path(spark, engine):
     pts = _pts(spark, 3000)
-    # tile-join refine
-    joined = _variant(engine, broadcast_tiles=True, broadcast_wkb_budget=0)
     assert engine._boundary_index() is not None
-    assert joined._boundary_index() is None
     got = _hits(engine, pts)
     assert len({p for p, _ in got}) > 2500
-    assert got == _hits(joined, pts)
+    for kw in FALLBACKS:  # tile-join refine
+        joined = _variant(engine, **kw)
+        assert joined._one_pass_indexes() is None
+        assert got == _hits(joined, pts), kw
 
 
 def test_budget_fallback(spark, engine):
-    tiny = _variant(engine, broadcast_tiles=True, broadcast_wkb_budget=1)
+    tiny = _variant(engine, broadcast_wkb_budget=1)
     assert tiny._boundary_index() is None
-    assert tiny._bindex_off  # decision cached, no re-agg per query
+    assert tiny._wkb_bytes is not None  # statistic cached, no re-agg
     # and the engine still answers correctly through the join path
     pts = _pts(spark, 500)
     assert _hits(tiny, pts) == _hits(engine, pts)
@@ -132,8 +135,8 @@ def test_where_filter_stays_on_index_path_and_agrees(spark, engine):
             engine.boundaries.filter(WHERE).select("region_id").collect()}
     full = {(p, rid) for (p, rid) in _hits(engine, pts) if rid in keep}
     assert filtered and filtered == full
-    joined = _variant(engine, broadcast_tiles=True, broadcast_wkb_budget=0)
-    assert filtered == _hits(joined, pts, WHERE)
+    for kw in FALLBACKS:
+        assert filtered == _hits(_variant(engine, **kw), pts, WHERE), kw
 
 
 def _oracle_index(engine):

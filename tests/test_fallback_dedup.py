@@ -27,11 +27,14 @@ def engines(spark, tmp_path_factory):
     fixtures_dense.generate(path, nx=4, ny=4, city_bx=2, city_by=2,
                             prov_bx=4, prov_by=4, pts_per_edge=120)
     one = SpatialEngine.from_geojson(spark, path, base_res=BASE_RES)
-    join = SpatialEngine(spark, one.boundaries, one.tiles, BASE_RES,
-                         broadcast_tiles=True, broadcast_wkb_budget=0)
+    # the join fallback's two sub-legs: boundary tile side broadcast
+    # (the interior index off) and shuffled (the boundary index off)
+    joins = [SpatialEngine(spark, one.boundaries, one.tiles, BASE_RES, **kw)
+             for kw in ({"interior_broadcast_rows": 0},
+                        {"broadcast_wkb_budget": 0})]
     assert one._one_pass_indexes() is not None
-    assert join._one_pass_indexes() is None
-    return one, join
+    assert all(j._one_pass_indexes() is None for j in joins)
+    return one, *joins
 
 
 @pytest.fixture(scope="module")
@@ -66,8 +69,8 @@ def test_q1_fallback_rows_equal_one_pass(engines, corner_probes,
     got = [Counter(tuple(r) for r in e.query_points(
         corner_probes, with_props=False)
         .select("point_id", "region_id").collect()) for e in engines]
-    assert got[0] == got[1]
-    assert max(got[1].values()) == 1
+    assert got[0] == got[1] == got[2]
+    assert max(got[0].values()) == 1
     assert len(got[0]) > 300
 
 
@@ -77,5 +80,5 @@ def test_q2_fallback_rows_equal_one_pass(engines, corner_probes,
         corner_probes, 5000.0)
         .select("point_id", "region_id", "point_distance").collect())
         for e in engines]
-    assert got[0] == got[1]
-    assert max(got[1].values()) == 1
+    assert got[0] == got[1] == got[2]
+    assert max(got[0].values()) == 1

@@ -1,7 +1,8 @@
 """Q1's two plans agree on a generated boundary set (no external
 files): the one-pass plan (one scalar Arrow UDF over the probe, then
-explode) and the join fallback (boundary index over its byte ceiling:
-interior join UNION the broadcast tile-join refine) return the same
+explode) and the join fallback (an index over its ceiling: interior
+join UNION the tile-join refine, its boundary tile side shuffled or,
+with only the interior index off, broadcast) return the same
 (point, region) rows — unfiltered, `where`-filtered, on probes sitting
 exactly on shared edges, and with string id columns from the docs
 table. Also pins the one-pass plan shape and the metrics split.
@@ -36,7 +37,8 @@ def engines(spark, dense_engine):
         return SpatialEngine(spark, one.boundaries, one.tiles, BASE_RES, **kw)
 
     return {"one_pass": one,
-            "join": variant(broadcast_tiles=True, broadcast_wkb_budget=0)}
+            "join": variant(broadcast_wkb_budget=0),
+            "join_bcast": variant(interior_broadcast_rows=0)}
 
 
 def _district_rings(path):
@@ -99,7 +101,9 @@ def test_index_on_one_pass_and_off_on_fallbacks(engines):
     assert one._interior_index() is not None
     assert one._boundary_index() is not None
     assert join._boundary_index() is None
+    assert engines["join_bcast"]._interior_index() is None
     assert join._one_pass_indexes() is None
+    assert engines["join_bcast"]._one_pass_indexes() is None
 
 
 @pytest.mark.parametrize("where", [None, "deep = 1"])
@@ -108,7 +112,7 @@ def test_three_plans_return_identical_rows(spark, engines, edge_probes,
     pts = _probe_df(spark, edge_probes)
     got = {k: _rows(e.query_points(pts, where=where, with_props=False))
            for k, e in engines.items()}
-    assert got["one_pass"] == got["join"]
+    assert got["one_pass"] == got["join"] == got["join_bcast"]
     assert max(got["one_pass"].values()) == 1  # no duplicate rows
     if where is None:
         # nested lattice: every in-bbox random probe hits 3 levels
@@ -140,7 +144,7 @@ def test_edge_touch_matches_both_neighbours(spark, engines, edge_probes):
 def test_metrics_split_adds_up(spark, engines, edge_probes):
     pts = _probe_df(spark, edge_probes)
     counts = {}
-    for key in ("one_pass", "join"):
+    for key in engines:
         df, obs = engines[key].query_points_with_metrics(pts)
         total = df.count()
         n_int = obs["interior"].get["rows"]
@@ -148,11 +152,11 @@ def test_metrics_split_adds_up(spark, engines, edge_probes):
         assert n_int > 0 and n_ref > 0
         assert n_int + n_ref == total
         counts[key] = (n_int, n_ref)
-    assert counts["one_pass"] == counts["join"]
+    assert counts["one_pass"] == counts["join"] == counts["join_bcast"]
 
 
 def test_one_pass_plan_reads_probe_once(spark, engines, edge_probes):
-    one, join = engines["one_pass"], engines["join"]
+    one = engines["one_pass"]
     pts = _probe_df(spark, edge_probes)
     for where in (None, "deep = 0"):
         plan = _plan(one.query_points(pts, where=where, with_props=False))
@@ -160,8 +164,9 @@ def test_one_pass_plan_reads_probe_once(spark, engines, edge_probes):
         for name in ("Union", "Exchange", "BroadcastExchange",
                      "MapInPandas"):
             assert _nodes(plan, name) == 0, (where, name)
-    assert _nodes(_plan(join.query_points(pts, with_props=False)),
-                  "Union") == 1
+    for key in ("join", "join_bcast"):
+        assert _nodes(_plan(engines[key].query_points(
+            pts, with_props=False)), "Union") == 1, key
 
 
 def test_docs_join_one_scan_and_same_rows(spark, engines, tmp_path):
@@ -179,4 +184,6 @@ def test_docs_join_one_scan_and_same_rows(spark, engines, tmp_path):
     assert _nodes(_plan(one), r"Scan parquet\s*") == 1
     cols = (*ids, "region_id")
     got = _rows(one, cols)
-    assert got and got == _rows(q1(engines["join"]), cols)
+    assert got
+    assert got == _rows(q1(engines["join"]), cols) \
+        == _rows(q1(engines["join_bcast"]), cols)

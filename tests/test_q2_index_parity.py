@@ -45,12 +45,12 @@ def test_index_path_matches_join_path(spark, dense_engine, tol_m):
     with_index = _checksums(eng, probes, tol_m)
     assert with_index[3] > 0, "probe set must contain tolerance matches"
 
-    saved = (eng._bindex, eng._bindex_off)
+    saved = eng.broadcast_wkb_budget
     try:
-        eng._bindex, eng._bindex_off = None, True
+        eng.broadcast_wkb_budget = 0
         without_index = _checksums(eng, probes, tol_m)
     finally:
-        eng._bindex, eng._bindex_off = saved
+        eng.broadcast_wkb_budget = saved
 
     assert with_index == without_index
 
@@ -79,9 +79,9 @@ def test_where_filter_rides_index_path(spark, dense_engine):
 
     with_index = sums()
     assert with_index[0] > 0
-    saved = (eng._bindex, eng._bindex_off)
+    saved = eng.broadcast_wkb_budget
     try:
-        eng._bindex, eng._bindex_off = None, True
+        eng.broadcast_wkb_budget = 0
         assert sums() == with_index
     finally:
-        eng._bindex, eng._bindex_off = saved
+        eng.broadcast_wkb_budget = saved

@@ -1,7 +1,8 @@
 """Q2's (tolerance) two plans agree on generated boundary sets (no
 external files): the one-pass plan (one scalar Arrow UDF over the
 probe, then explode and the props join) and the cover-join fallback
-(boundary index over its byte ceiling: checkpointed Q1, miss
+(an index over its ceiling, the boundary tile side shuffled or, with
+only the interior index off, broadcast: checkpointed Q1, miss
 anti-join, 24-gon cover joined to the tiles, distance kernel,
 min-agg + window) return the same full rows — `point_distance` and
 `prop_json_out` text bit-equal — at 2.5, 25 and 250 km, k=1 and k=2,
@@ -40,8 +41,8 @@ def _variants(spark, one):
         return SpatialEngine(spark, one.boundaries, one.tiles, BASE_RES, **kw)
 
     return {"one_pass": one,
-            "cover_join": variant(broadcast_tiles=True,
-                                  broadcast_wkb_budget=0)}
+            "cover_join": variant(broadcast_wkb_budget=0),
+            "cover_join_bcast": variant(interior_broadcast_rows=0)}
 
 
 @pytest.fixture(scope="module")
@@ -117,6 +118,8 @@ def test_index_switches(engines):
     assert engines["one_pass"]._one_pass_indexes() is not None
     assert engines["cover_join"]._one_pass_indexes() is None
     assert engines["cover_join"]._boundary_index() is None
+    assert engines["cover_join_bcast"]._one_pass_indexes() is None
+    assert engines["cover_join_bcast"]._interior_index() is None
 
 
 @pytest.mark.parametrize("tol,k,where", [
@@ -129,7 +132,7 @@ def test_three_plans_return_identical_rows(engines, probes, tol, k, where):
     cols = outs["one_pass"].columns
     assert all(o.columns == cols for o in outs.values())
     got = {key: _rows(o) for key, o in outs.items()}
-    assert got["one_pass"] == got["cover_join"]
+    assert got["one_pass"] == got["cover_join"] == got["cover_join_bcast"]
     rows = [dict(zip(cols, r)) for r in got["one_pass"]]
     assert max(got["one_pass"].values()) == 1  # no duplicate rows
     near = [r for r in rows if r["point_distance"] is not None]
@@ -261,7 +264,7 @@ def test_distance_ties_break_by_region_id(spark, tie_engines):
                           .select("point_id", "deep", "region_id",
                                   "point_distance"))
                for key, e in tie_engines.items()}
-        assert got["one_pass"] == got["cover_join"]
+        assert got["one_pass"] == got["cover_join"] == got["cover_join_bcast"]
         best = {}
         for pid, deep, region, d in got["one_pass"]:
             best.setdefault((pid, deep), []).append((d, region))

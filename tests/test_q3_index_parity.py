@@ -23,12 +23,12 @@ def _checksums(eng, probes):
 
 
 def _join_path(eng, probes):
-    saved = (eng._bindex, eng._bindex_off)
+    saved = eng.broadcast_wkb_budget
     try:
-        eng._bindex, eng._bindex_off = None, True
+        eng.broadcast_wkb_budget = 0
         return _checksums(eng, probes)
     finally:
-        eng._bindex, eng._bindex_off = saved
+        eng.broadcast_wkb_budget = saved
 
 
 PROBES = {
@@ -95,12 +95,12 @@ def test_where_filter_rides_index_path(spark, dense_engine):
 
     with_index = sums()
     assert with_index
-    saved = (eng._bindex, eng._bindex_off)
+    saved = eng.broadcast_wkb_budget
     try:
-        eng._bindex, eng._bindex_off = None, True
+        eng.broadcast_wkb_budget = 0
         assert sums() == with_index
     finally:
-        eng._bindex, eng._bindex_off = saved
+        eng.broadcast_wkb_budget = saved
 
 
 def test_cell_aligned_edge_probes_parity(spark, dense_engine):
@@ -143,16 +143,16 @@ def test_interior_budget_fallback(spark, dense_engine):
         [(0, "POLYGON ((100 25, 106 25, 106 31, 100 31, 100 25))")],
         "probe_id long, wkt string")
     with_index = _checksums(eng, probes)
-    saved = (eng._iindex, eng._iindex_off)
+    saved = eng.interior_broadcast_rows
     try:
-        eng._iindex, eng._iindex_off = None, True
+        eng.interior_broadcast_rows = 0
         plan = eng.query_geometry(probes, with_props=False) \
             ._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan, \
             "fallback must run the cover-join plan"
         assert _checksums(eng, probes) == with_index
     finally:
-        eng._iindex, eng._iindex_off = saved
+        eng.interior_broadcast_rows = saved
 
 
 def test_empty_and_miss_probes(spark, dense_engine):

@@ -3,6 +3,8 @@ equivalence tests, on the generated `dense_engine` set (no external
 files). The shuffle legs are the join fallbacks: each test that names
 one sets the knobs that keep the broadcast indexes off, so the leg
 actually runs."""
+import re
+
 from pyspark.sql import functions as F
 
 from areacity_query_geometry_spark.engine import SpatialEngine
@@ -19,13 +21,33 @@ def _pts(spark, n=500):
     )
 
 
+def _variant(spark, eng, **kw):
+    return SpatialEngine(spark, eng.boundaries, eng.tiles,
+                         base_res=eng.base_res, **kw)
+
+
 def _smj_engine(spark, eng):
-    """The plain sort-merge leg: no whole-table broadcast, both index
-    ceilings at 0 (so both tile branches shuffle too)."""
-    return SpatialEngine(
-        spark, eng.boundaries, eng.tiles, base_res=eng.base_res,
-        broadcast_tiles=False, broadcast_wkb_budget=0,
-        interior_broadcast_rows=0)
+    """The all-shuffle leg: both index ceilings at 0, so both tile
+    sides of the join fallback are sort-merge joined."""
+    return _variant(spark, eng, broadcast_wkb_budget=0,
+                    interior_broadcast_rows=0)
+
+
+def _plan(df):
+    import contextlib
+    import io
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def _probe_exchanges(plan):
+    """Exchange nodes that carry the probes' coordinates (the refine's
+    input), as opposed to tile-side and post-refine dedup exchanges."""
+    return len(re.findall(
+        r"\(\d+\) Exchange\nInput \[\d+\]: \[[^\]]*\blng#", plan))
 
 
 def _hits(engine, pts):
@@ -107,14 +129,71 @@ class TestBucketedStore:
 
 class TestSaltedJoin:
     def test_salted_shuffle_equals_broadcast(self, spark, dense_engine):
-        salted = SpatialEngine(
-            spark, dense_engine.boundaries, dense_engine.tiles,
-            base_res=dense_engine.base_res,
-            broadcast_tiles=False, salt_buckets=4,
-        )
+        """Interior side past its ceiling, boundary side broadcast: the
+        boundary probes repartition by (cell_id, salt) in front of the
+        broadcast tile join, and the hits equal the one-pass plan's."""
+        salted = _variant(spark, dense_engine, interior_broadcast_rows=0)
         assert salted._one_pass_indexes() is None
         pts = _pts(spark, 800)
+        plan = _plan(salted.query_points(pts, with_props=False))
+        assert "REPARTITION_BY_NUM" in plan
         assert _hits(salted, pts) == _hits(dense_engine, pts)
+
+    def test_shuffled_boundary_side_moves_probes_once(self, spark,
+                                                      dense_engine):
+        """Boundary side past its ceiling: the boundary probes reach
+        the SortMergeJoin with their tiles through one Exchange (the
+        join's own hash partitioning by cell_id), with no semi-join or
+        salted REPARTITION_BY_NUM in front of it."""
+        eng = _variant(spark, dense_engine, broadcast_wkb_budget=0)
+        plan = _plan(eng.query_points(_pts(spark, 800), with_props=False))
+        assert re.search(r"SortMergeJoin Inner \(\d+\)", plan)
+        assert "REPARTITION_BY_NUM" not in plan
+        assert "LeftSemi" not in plan
+        assert _probe_exchanges(plan) == 1
+
+    def test_shuffled_boundary_side_lets_aqe_split_hot_cells(
+            self, spark, dense_engine):
+        """Half the probes in one boundary cell, the skew-join threshold
+        lowered so this small set counts as skewed: AQE splits the hot
+        partition of the boundary tile SortMergeJoin (its probe child is
+        a shuffle stage of its own), and the hits do not change."""
+        from areacity_query_geometry_spark import grid
+
+        hot = dense_engine.tiles.filter("kind = 0").select("cell_id") \
+            .orderBy("cell_id").first()[0]
+        x0, y0, x1, y1 = grid.cell_bounds(hot)
+        pid = F.col("point_id")
+        in_hot = pid % 2 == 0
+        pts = _pts(spark, 100_000).select(
+            "point_id",
+            F.when(in_hot, x0 + pid % 997 * ((x1 - x0) / 997))
+             .otherwise(F.col("lng")).alias("lng"),
+            F.when(in_hot, y0 + pid * 7 % 991 * ((y1 - y0) / 991))
+             .otherwise(F.col("lat")).alias("lat"))
+
+        def hit_agg(eng):
+            return eng.query_points(pts, with_props=False).agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.xxhash64("point_id", "region_id")
+                      .cast("decimal(38,0)")).alias("h"))
+
+        keys = ("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
+                "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        saved = [spark.conf.get(k) for k in keys]
+        try:
+            for k in keys:
+                spark.conf.set(k, "64k")
+            agg = hit_agg(_variant(spark, dense_engine,
+                                   broadcast_wkb_budget=0))
+            got = agg.collect()[0]
+            plan = agg._jdf.queryExecution().executedPlan().toString()
+        finally:
+            for k, v in zip(keys, saved):
+                spark.conf.set(k, v)
+        assert "SortMergeJoin(skew=true)" in plan
+        assert got == hit_agg(dense_engine).collect()[0]
+        assert got["n"] > 50_000
 
     def test_plain_shuffle_equals_broadcast(self, spark, dense_engine):
         smj = _smj_engine(spark, dense_engine)

@@ -77,10 +77,13 @@ def main():
     q1_where_plan = grab_plan(eng.query_points(
         pts, where="deep = 0", with_props=False))
     # the join fallbacks: an engine over the same tables whose interior
-    # index is past its ceiling
+    # index is past its ceiling, and one whose boundary index is
     over = SpatialEngine(spark, eng.boundaries, eng.tiles, eng.base_res,
                          interior_broadcast_rows=0)
     q1_join_plan = grab_plan(over.query_points(pts, with_props=False))
+    over_b = SpatialEngine(spark, eng.boundaries, eng.tiles, eng.base_res,
+                           broadcast_wkb_budget=0)
+    q1_smj_plan = grab_plan(over_b.query_points(pts, with_props=False))
     q3_join_plan = grab_plan(over.query_geometry(probes, with_props=False))
 
     # Q2 at a finite tolerance over a parquet probe source: the
@@ -143,6 +146,15 @@ def main():
           and nodes(q1_join_plan, "MapInPandas") == 1
           and nodes(q1_join_plan, "ArrowEvalPython") == 0
           and keyed_aggs(q1_join_plan, ("point_id", "region_id")) == 2)
+    check("Q1 join fallback with the boundary side past its ceiling "
+          "(broadcast_wkb_budget=0): the boundary probes reach the "
+          "SortMergeJoin through one Exchange, with no REPARTITION_BY_NUM "
+          "and no semi-join",
+          re.search(r"SortMergeJoin Inner \(\d+\)", q1_smj_plan) is not None
+          and "REPARTITION_BY_NUM" not in q1_smj_plan
+          and "LeftSemi" not in q1_smj_plan
+          and len(re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: "
+                             r"\[[^\]]*\blng#", q1_smj_plan)) == 1)
     check("Q3 default = broadcast-index refine: ONE MapInPandas over the "
           "probe table, ZERO Exchanges (cover, candidate lookup, kernels "
           "and dedup all in-kernel against the CSR indexes)",
@@ -316,9 +328,11 @@ def main():
           and "CartesianProduct" not in idw_plan
           and "BroadcastNestedLoopJoin" not in idw_plan)
     sm_plan = grab_plan(entrymod.q1_sortmerge_salted(spark, "/root/testdata/sf0.001"))
-    check("q1_sortmerge_salted: tile join actually runs the shuffle leg "
-          "(SortMergeJoin/ShuffledHashJoin present)",
-          "SortMergeJoin" in sm_plan or "ShuffledHashJoin" in sm_plan)
+    check("q1_sortmerge_salted: the all-shuffle join fallback (both index "
+          "ceilings 0) sort-merge joins both tile sides (two "
+          "SortMergeJoin Inner), with no REPARTITION_BY_NUM",
+          len(re.findall(r"SortMergeJoin Inner \(\d+\)", sm_plan)) == 2
+          and "REPARTITION_BY_NUM" not in sm_plan)
     entry_src = open(os.path.join(REPO, "__spark_entry__.py")).read()
     check("gates hold no full-table collect "
           "(the only .collect() is the 16-row IVF centroid fetch)",

@@ -33,7 +33,7 @@ def main():
     from pyspark.sql import SparkSession, functions as F
 
     from areacity_query_geometry_spark import fixtures_dense
-    from areacity_query_geometry_spark.engine import SpatialEngine
+    from areacity_query_geometry_spark.engine import PROBE_SALT, SpatialEngine
 
     spark = (SparkSession.builder.master(f"local[{cpus}]")
              .config("spark.sql.shuffle.partitions", str(cpus))
@@ -50,9 +50,9 @@ def main():
     t0 = time.time()
     eng = SpatialEngine.from_geojson(spark, path, base_res=base_res)
     print(f"build_sec={time.time() - t0:.1f}")
-    n_i, n_b = eng._tile_kind_counts()
-    print(f"tiles interior={n_i} boundary={n_b} "
-          f"broadcast_tiles={eng.broadcast_tiles}")
+    kinds = eng._tile_counts_by_kind()
+    print(f"tiles by kind={kinds} interior_fits={eng._interior_fits()} "
+          f"boundary_fits={eng._boundary_fits()}")
 
     probes = spark.range(n).select(
         F.col("id").alias("point_id"),
@@ -60,7 +60,7 @@ def main():
         (18.0 + (F.col("id") * 101 % 36000) / 1000.0).alias("lat"),
     )
     probe = eng._probe_cells(probes)
-    base = eng._tiles_for(None, hint=False)
+    base = eng._tiles_for(None)
     ti = F.broadcast(base.filter(F.col("kind") == 1)
                      .select("cell_id", "region_id"))
     tb = F.broadcast(base.filter(F.col("kind") != 1))
@@ -84,7 +84,7 @@ def main():
 
     n_parts = spark.sparkContext.defaultParallelism
     salt = F.pmod(F.xxhash64(F.col("lng"), F.col("lat")),
-                  F.lit(eng.probe_salt)).cast("int")
+                  F.lit(PROBE_SALT)).cast("int")
     bpts_r = bpts.repartition(n_parts, F.col("cell_id"), salt)
     brows = bpts_r.join(tb, "cell_id")
     bench("B2 semi+repart+tile join (no refine)", brows)

@@ -6,12 +6,15 @@ star-shaped polygons with jittered radii on a grid over the China
 bbox — the shape mix that actually stresses the clip kernels: every
 edge is oblique, nothing is axis-aligned), builds the tile index at
 base_res 13, and reports build throughput + tile counts. Then runs the
-SAME 2M-probe Q1 join through BOTH physical legs — broadcast and
-forced sort-merge+salt — and hash-compares their hit-sets, the
-at-scale equality proof for the non-broadcast path over a multi-million
-tile index.
+SAME 2M-probe Q1 through two engines — the default one (whatever plan
+its two index ceilings choose for this set) and the all-shuffle join
+fallback (both ceilings 0: both tile sides sort-merge joined) — and
+hash-compares their hit-sets, the at-scale equality proof for the
+shuffled fallback over a multi-million tile index.
 
 Usage: python tools/township_stress.py [n_features] [pts_per_feature] [cpus]
+cpus defaults to the host's CPU count and the driver gets a third of
+the host's memory (2-8 GB), as perfbench sizes its session.
 Prints one JSON line; append to BENCH/TOWNSHIP.md via tee.
 """
 from __future__ import annotations
@@ -29,12 +32,64 @@ os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
 os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
 
-N_FEATURES = int(sys.argv[1]) if len(sys.argv) > 1 else 40_000
-PTS_PER_FEATURE = int(sys.argv[2]) if len(sys.argv) > 2 else 250
-CPUS = int(sys.argv[3]) if len(sys.argv) > 3 else 32
 BASE_RES = 13
 
 X0, X1, Y0, Y1 = 73.0, 135.0, 18.0, 54.0
+
+
+def _driver_mem_g() -> int:
+    """A third of the host's memory, 2-8 GB (perfbench's session)."""
+    with open("/proc/meminfo") as f:
+        mem_kb = int(f.readline().split()[1])
+    return max(2, min(8, int(mem_kb / 2**20 // 3)))
+
+
+def session(app: str, cpus: int):
+    """local[cpus] with AQE on, shuffle partitions = cpus and a third
+    of the host's memory for the driver."""
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName(app)
+        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.driver.memory", f"{_driver_mem_g()}g")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def township_tiles(spark, n_features: int, pts: int):
+    """(boundaries, tiles, build seconds): the synthetic townships and
+    their tiles at BASE_RES, both checkpointed."""
+    from areacity_query_geometry_spark import tiler
+
+    boundaries = township_boundaries(spark, n_features, pts)
+    boundaries = boundaries.localCheckpoint(eager=True)
+    t0 = time.time()
+    tiles = tiler.build_tiles(boundaries, base_res=BASE_RES)
+    tiles = tiles.localCheckpoint(eager=True)
+    return boundaries, tiles, time.time() - t0
+
+
+def hit_agg(df):
+    """One row (n, h): a hit set's rows and Σ xxhash64(point_id,
+    region_id)."""
+    from pyspark.sql import functions as F
+
+    return df.select(
+        F.count(F.lit(1)).alias("n"),
+        F.expr("sum(CAST(xxhash64(point_id, region_id) AS DECIMAL(38,0)))")
+         .alias("h"))
+
+
+def hit_hash(df):
+    row = hit_agg(df).collect()[0]
+    return int(row["n"]), int(row["h"] or 0)
 
 
 def township_boundaries(spark, n_features: int, pts: int):
@@ -85,32 +140,19 @@ def township_boundaries(spark, n_features: int, pts: int):
 
 
 def main():
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    from areacity_query_geometry_spark import tiler
     from areacity_query_geometry_spark.engine import SpatialEngine
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("township-stress")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "90g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    boundaries = township_boundaries(spark, N_FEATURES, PTS_PER_FEATURE)
-    boundaries = boundaries.localCheckpoint(eager=True)
-    n_pts_total = N_FEATURES * PTS_PER_FEATURE
-
-    t0 = time.time()
-    tiles = tiler.build_tiles(boundaries, base_res=BASE_RES)
-    tiles = tiles.localCheckpoint(eager=True)
+    n_features = int(sys.argv[1]) if len(sys.argv) > 1 else 40_000
+    pts_per_feature = int(sys.argv[2]) if len(sys.argv) > 2 else 250
+    cpus = (int(sys.argv[3]) if len(sys.argv) > 3
+            else len(os.sched_getaffinity(0)))
+    spark = session("township-stress", cpus)
+    boundaries, tiles, build_s = township_tiles(spark, n_features,
+                                                pts_per_feature)
+    n_pts_total = n_features * pts_per_feature
     n_tiles = tiles.count()
-    build_s = time.time() - t0
     by_kind = {int(r["kind"]): int(r["count"])
                for r in tiles.groupBy("kind").count().collect()}
 
@@ -121,26 +163,12 @@ def main():
         (X0 + (F.col("id") * 37 % 62000) / 1000.0).alias("lng"),
         (Y0 + (F.col("id") * 101 % 36000) / 1000.0).alias("lat"))
 
-    def hit_hash(df):
-        row = df.select(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("sum(CAST(xxhash64(point_id, region_id) AS DECIMAL(38,0)))")
-             .alias("h")).collect()[0]
-        return int(row["n"]), int(row["h"] or 0)
-
     legs = {}
-    auto_eng = SpatialEngine(spark, boundaries, tiles, BASE_RES)
-    engines = [("auto", auto_eng),
-               ("sortmerge_salted", SpatialEngine(
+    default = SpatialEngine(spark, boundaries, tiles, BASE_RES)
+    engines = [("default", default),
+               ("all_shuffle", SpatialEngine(
                    spark, boundaries, tiles, BASE_RES,
-                   broadcast_tiles=False, salt_buckets=4))]
-    if n_tiles < 3_000_000 and not auto_eng.broadcast_tiles:
-        # the auto rule refused the whole-table broadcast on byte
-        # volume; run the forced-broadcast leg too so the refusal is
-        # MEASURED, not asserted (hit-sets hash-compare across all legs)
-        engines.insert(1, ("broadcast_forced",
-                           SpatialEngine(spark, boundaries, tiles, BASE_RES,
-                                         broadcast_tiles=True)))
+                   broadcast_wkb_budget=0, interior_broadcast_rows=0))]
     for name, eng in engines:
         out = eng.query_points(probes, with_props=False)
         # warm Python workers on a sample (never .limit() — it
@@ -163,15 +191,18 @@ def main():
                 and v["hit_hash"] == vals[0]["hit_hash"] for v in vals)
     print(json.dumps({
         "metric": "township_tiler_stress",
-        "n_features": N_FEATURES,
-        "pts_per_feature": PTS_PER_FEATURE,
+        "n_features": n_features,
+        "pts_per_feature": pts_per_feature,
         "boundary_points": n_pts_total,
         "base_res": BASE_RES,
-        "cpus": CPUS,
+        "cpus": cpus,
         "build_sec": round(build_s, 2),
         "boundary_pts_per_sec": round(n_pts_total / build_s, 1),
         "n_tiles": n_tiles,
         "tiles_by_kind": by_kind,
+        "boundary_wkb_bytes": default._boundary_wkb_bytes(),
+        "default_fits": {"interior": default._interior_fits(),
+                         "boundary": default._boundary_fits()},
         "probe_n": n_probes,
         "legs": legs,
         "legs_hitset_equal": equal,
