@@ -313,6 +313,9 @@ def _build_boundary_index(tiles, count: np.ndarray, segs: np.ndarray) -> dict:
         for k in ("cell_id", "region_id", "deep", "kind"))
     rect = {k: np.asarray(tiles[k]).astype(np.float64)
             for k in ("minx", "miny", "maxx", "maxy")}
+    # a total key: region ids are unique, and a region's tiles in one
+    # cell are disjoint cells of its adaptive cover, which never share
+    # a lower-left corner; so the index does not depend on row order
     order = np.lexsort((rect["miny"].view(np.int64),
                         rect["minx"].view(np.int64), region, cell))
     cell, region, deep, kind = (cell[order], region[order],
@@ -1404,9 +1407,10 @@ class SpatialEngine:
 
         broadcast_wkb_budget: ceiling on the boundary (kind≠1) tile-WKB
         bytes. It gates the pre-decoded boundary-tile index
-        (`_boundary_index`, ~4× the WKB bytes held once per Python
-        worker: the 128 MB default prices a ~0.5 GB worker-side index,
-        the in-memory regime the reference runs its whole process in)
+        (`_boundary_index`, held once per Python worker: 3.4× the WKB
+        bytes on the perfbench store, 56.7 MB pickled from 16.5 MB, so
+        the 128 MB default prices a ~440 MB worker-side index, the
+        in-memory regime the reference runs its whole process in)
         and the broadcast of any tile side that carries WKB. Measured
         on the 40k-feature township set (1.04M tiles, 0.3 GB boundary
         WKB): replicating that WKB through a broadcast ran 4.6× slower
@@ -1432,6 +1436,9 @@ class SpatialEngine:
         self._kind_counts: dict[int, int] | None = None
         self._bindex: tuple | None = None  # (Broadcast, bcells_df)
         self._iindex = None  # Broadcast of the interior-cell CSR
+        # (columns, interior) -> Arrow table of the tile rows both index
+        # builds read; tile_store.load binds its store's reader here
+        self._read_store_tiles = None
         self._keep_cache: dict[str, np.ndarray] = {}
         # QueryInitInfo analog (/root/reference/AreaCityQuery.java:1513-1604):
         # build-phase metadata, populated by from_geojson / tile_store.load
@@ -1583,10 +1590,10 @@ class SpatialEngine:
         Returns (Broadcast, bcells_df), or None when `_boundary_fits`
         fails (the join fallbacks take over) — unless `unbounded`,
         which the tolerance -1 fallback passes: its search needs every
-        boundary tile. The build is ONE
-        Spark job, with no Python worker: the driver collects the tile
-        columns with `toArrow` (about the WKB volume, bounded by the
-        budget), decodes every tile's WKB in one vectorized
+        boundary tile. The driver reads the tile columns as one Arrow
+        table (`_tiles_arrow`: no Spark job on a Parquet store, else
+        one job with no Python worker; about the WKB volume, bounded by
+        the budget), decodes every tile's WKB in one vectorized
         `wkb.ring_segments` call and broadcasts the index — workers
         unpickle it once per process and reuse it across tasks and
         jobs. bcells_df (the index's sorted cell ids) is a lazy local
@@ -1598,8 +1605,7 @@ class SpatialEngine:
             return self._bindex
         cols = ["cell_id", "region_id", "kind", "minx", "miny", "maxx",
                 "maxy"]
-        tbl = (self.tiles.filter(F.col("kind") != 1)
-               .select(*cols, "deep", "tile_wkb").toArrow())
+        tbl = self._tiles_arrow([*cols, "deep", "tile_wkb"], interior=False)
         count, segs = wkb.ring_segments(tbl.column("tile_wkb"))
         tiles = {c: tbl.column(c).to_numpy() for c in cols}
         tiles["deep"] = tbl.column("deep").cast(pa.int64()).fill_null(
@@ -1610,6 +1616,17 @@ class SpatialEngine:
             pd.DataFrame({"cell_id": idx["cells"]}))
         self._bindex = (bc, bcells)
         return self._bindex
+
+    def _tiles_arrow(self, cols: list[str], interior: bool) -> pa.Table:
+        """The kind = 1 (`interior`) or kind ≠ 1 tile rows, `cols` only,
+        as one Arrow table, in no particular order (both index builds
+        sort them): from the store's files when `tile_store.load` bound
+        a reader, else one Spark job over `self.tiles`."""
+        if self._read_store_tiles is not None:
+            return self._read_store_tiles(cols, interior)
+        kind = F.col("kind")
+        return (self.tiles.filter(kind == 1 if interior else kind != 1)
+                .select(*cols).toArrow())
 
     def _interior_index(self):
         """Build (once, lazily) the broadcast INTERIOR-cell index: every
@@ -1625,8 +1642,7 @@ class SpatialEngine:
             return None
         if self._iindex is not None:
             return self._iindex
-        tbl = (self.tiles.filter(F.col("kind") == 1)
-               .select("cell_id", "region_id").toArrow())
+        tbl = self._tiles_arrow(["cell_id", "region_id"], interior=True)
         cell = tbl.column("cell_id").to_numpy().astype(np.int64)
         region = tbl.column("region_id").to_numpy().astype(np.int64)
         order = np.lexsort((region, cell))

@@ -15,12 +15,21 @@ bytes hit a table format:
   guarded: it raises a clear error unless a Spark catalog is
   configured. Swapping formats is exactly one constructor argument in
   `tile_store.save/load` — no engine code changes.
+
+`ParquetStoreFormat.read_tiles_arrow` hands the engine's two broadcast
+index builds their tile rows as one Arrow table, read from its own
+files with pyarrow, so an engine loaded from a Parquet store builds both
+indexes with no Spark job on the tile table, and `tile_store.load`
+caches that table only when an index is past its ceiling. A format
+without the method (Iceberg) leaves the engine to collect the rows
+from its tile DataFrame through Spark.
 """
 from __future__ import annotations
 
 import json
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -80,6 +89,22 @@ class ParquetStoreFormat(StoreFormat):
                 return json.load(f)
         except (OSError, json.JSONDecodeError):
             return None
+
+    def read_tiles_arrow(self, store: str, columns,
+                         interior: bool) -> pa.Table:
+        """The kind = 1 (`interior`) or kind ≠ 1 tile rows, `columns`
+        only, as one Arrow table in no particular order: a pyarrow read
+        of the tiles directory, no Spark job. Local paths only, like
+        `read_meta`."""
+        # imported here, not at module level: pyarrow.dataset would add
+        # ~5 MB to every Python worker that imports this module
+        import pyarrow.dataset as pds
+
+        kind = pds.field("kind")
+        return pds.dataset(os.path.join(store, "tiles"),
+                           format="parquet").to_table(
+            columns=list(columns),
+            filter=kind == 1 if interior else kind != 1)
 
 
 class IcebergStoreFormat(StoreFormat):

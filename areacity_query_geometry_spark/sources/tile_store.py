@@ -18,8 +18,16 @@ constructor argument (`fmt=IcebergStoreFormat(spark, "lake")`) with no
 engine changes — this container ships no Iceberg runtime jar, so the
 default stays parquet with the same snapshot-style validation (the
 limitation and the swap point are documented in README/SCALE.md).
+
+An engine loaded from a Parquet store reads the tile rows of its two
+broadcast indexes with `ParquetStoreFormat.read_tiles_arrow` (a pyarrow
+read, no Spark job). On the one-pass plans nothing else reads the tile
+table, so `load` caches it only for an engine past either index
+ceiling at load, whose join fallbacks read it on every query.
 """
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import SparkSession
 
@@ -77,16 +85,23 @@ def load(spark: SparkSession, path: str,
     if meta is None:
         raise FileNotFoundError(f"no valid store metadata at {path}")
     boundaries = fmt.read_boundaries(spark, path).cache()
-    tiles = fmt.read_tiles(spark, path).cache()
-    eng = SpatialEngine(spark, boundaries, tiles, base_res=meta["base_res"])
+    eng = SpatialEngine(spark, boundaries, fmt.read_tiles(spark, path),
+                        base_res=meta["base_res"])
+    # a format without a direct reader leaves the engine to collect
+    # the index rows from its tile DataFrame through Spark
+    reader = getattr(fmt, "read_tiles_arrow", None)
+    if reader is not None:
+        eng._read_store_tiles = partial(reader, path)
     # seed the plan-choice statistics from the store metadata so
     # loading costs no extra jobs (older stores lack the keys → the
-    # engine computes them lazily from the parquet)
+    # ceiling check below computes them from the parquet)
     if "boundary_wkb_bytes" in meta:
         eng._wkb_bytes = int(meta["boundary_wkb_bytes"])
     if "tiles_by_kind" in meta:
         eng._kind_counts = {int(k): int(v)
                             for k, v in meta["tiles_by_kind"].items()}
+    if not (eng._interior_fits() and eng._boundary_fits()):
+        eng.tiles = eng.tiles.cache()
     # DataFromWkbsFile analog (QueryInitInfo, AreaCityQuery.java:1562-1565)
     eng._init_meta = {"data_from_store": True, "store_path": path,
                       "polygon_count": meta.get("n_tiles"), **meta}
@@ -158,4 +173,6 @@ def load_or_build(
     engine = SpatialEngine(spark, boundaries, tiles, base_res)
     save(engine, store_path,
          {"base_res": base_res, "max_res": max_res, "seg_budget": seg_budget})
+    boundaries.unpersist()
+    tiles.unpersist()
     return load(spark, store_path)
