@@ -212,19 +212,28 @@ def _ambiguous_circle_keep(ppx, ppy, prb, prc,
     return out
 
 
+def _pair_parity(x1, y1, y2, yds, dxv, row_pair, p, q,
+                 npairs: int) -> np.ndarray:
+    """Even-odd parity per pair over flat (pair, segment) rows: the rows
+    whose segment crosses the pair point's scanline at `p < xint`
+    (half-open in y), counted per pair with bincount. Arguments as in
+    `_pair_hits_flat`."""
+    cond = (y1 > q) != (y2 > q)
+    xint = x1 + (q - y1) / yds * dxv
+    crossing = cond & (p < xint)
+    return (np.bincount(row_pair[crossing], minlength=npairs) % 2) == 1
+
+
 def _pair_hits_flat(x1, y1, x2, y2, yds, dxv, ln, degen,
                     row_pair, p, q, npairs: int) -> np.ndarray:
     """Shared flat (pair, segment)-row kernel: every input array is one
     value per segment ROW (already gathered), `row_pair` maps each row
     to its pair, `p`/`q` are the pair's point repeated per row. Crossing
-    parity (half-open `p < xint`) reduces per pair with bincount; EPS
-    on-segment acceptance ORs in. `_slab_point_hits` calls it over a
-    point's y-slab; tests/test_slab_index.py runs it over whole tiles
-    as the unslabbed reference."""
-    cond = (y1 > q) != (y2 > q)
-    xint = x1 + (q - y1) / yds * dxv
-    crossing = cond & (p < xint)
-    parity = (np.bincount(row_pair[crossing], minlength=npairs) % 2) == 1
+    parity (`_pair_parity`); EPS on-segment acceptance ORs in.
+    `_slab_point_hits` calls it over a point's y-slab;
+    tests/test_slab_index.py runs it over whole tiles as the unslabbed
+    reference."""
+    parity = _pair_parity(x1, y1, y2, yds, dxv, row_pair, p, q, npairs)
     qx = p - x1
     qy = q - y1
     yd = y2 - y1
@@ -401,18 +410,25 @@ def _batch_index(pdf: pd.DataFrame) -> tuple[dict, np.ndarray]:
     return _build_boundary_index(tiles, count, segs), tix
 
 
-def _slab_point_hits(I: dict, tiles: np.ndarray, px: np.ndarray,
-                     py: np.ndarray) -> np.ndarray:
-    """SFS `intersects(point, tile)` per (point, kind-0 tile) pair by
-    `_pair_hits_flat` over the rows of the point's y-slab of the
+def _slab_rows(I: dict, tiles: np.ndarray, py: np.ndarray):
+    """(row_pair, x1, y1, x2, y2, ln): the flat rows of each pair's
+    y-slab, the slab of `py[i]` in tile `tiles[i]`, gathered from the
     packed store `SEG` (`_build_boundary_index`). The segments left out
-    can neither cross the point's scanline nor accept it within EPS, so
-    the verdicts are those of the tile's whole ring."""
+    can neither cross the scanline y = py[i] nor come within EPS of a
+    point on it."""
     slab = tiles * SLABS + _slab_of(py, I["slab_y0"][tiles],
                                     I["slab_h"][tiles])
     soff = I["slab_ptr"][slab].astype(np.int64)
     row_pair, idx = _ranges(soff, I["slab_ptr"][slab + 1] - soff)
-    x1, y1, x2, y2, ln = I["SEG"][I["slab_seg"][idx]].T
+    return (row_pair, *I["SEG"][I["slab_seg"][idx]].T)
+
+
+def _slab_point_hits(I: dict, tiles: np.ndarray, px: np.ndarray,
+                     py: np.ndarray) -> np.ndarray:
+    """SFS `intersects(point, tile)` per (point, kind-0 tile) pair by
+    `_pair_hits_flat` over the point's `_slab_rows`, so the verdicts
+    are those of the tile's whole ring."""
+    row_pair, x1, y1, x2, y2, ln = _slab_rows(I, tiles, py)
     dx = x2 - x1
     yd = y2 - y1
     return _pair_hits_flat(
@@ -421,8 +437,20 @@ def _slab_point_hits(I: dict, tiles: np.ndarray, px: np.ndarray,
         row_pair, px[row_pair], py[row_pair], len(tiles))
 
 
-# bounds `_boundary_prim_hits`' temporaries whatever the probe sizes
+# bounds the flat kernels' temporaries whatever the probe sizes
 PRIM_BLOCK_ROWS = 1 << 16
+
+
+def _row_blocks(rows: np.ndarray, cap: int = PRIM_BLOCK_ROWS):
+    """Consecutive [b0, b1) ranges of pairs whose summed `rows` stay
+    within `cap`; a pair over `cap` runs alone."""
+    end = np.cumsum(rows)
+    b0 = 0
+    while b0 < len(rows):
+        b1 = max(b0 + 1, int(np.searchsorted(
+            end, end[b0] - rows[b0] + cap, side="right")))
+        yield b0, b1
+        b0 = b1
 
 
 def _boundary_prim_hits(I: dict, tiles: np.ndarray, pk: np.ndarray,
@@ -435,15 +463,9 @@ def _boundary_prim_hits(I: dict, tiles: np.ndarray, pk: np.ndarray,
     point is in the tile (`_slab_point_hits`). Pairs run in blocks of
     at most PRIM_BLOCK_ROWS raw ring segments, which bound both the fit
     rows and the slab rows (a larger tile runs alone)."""
-    n = len(tiles)
-    hit = np.zeros(n, dtype=bool)
-    fptr = I["fseg_ptr"]
-    raw = I["seg_ptr"][tiles + 1] - I["seg_ptr"][tiles]
-    end = np.cumsum(raw)
-    b0 = 0
-    while b0 < n:
-        b1 = max(b0 + 1, int(np.searchsorted(
-            end, end[b0] - raw[b0] + PRIM_BLOCK_ROWS, side="right")))
+    hit = np.zeros(len(tiles), dtype=bool)
+    fptr, sptr = I["fseg_ptr"], I["seg_ptr"]
+    for b0, b1 in _row_blocks(sptr[tiles + 1] - sptr[tiles]):
         t, pb = tiles[b0:b1], p[b0:b1]
         f0 = fptr[t]
         rp, idx = _ranges(f0, fptr[t + 1] - f0)
@@ -459,7 +481,6 @@ def _boundary_prim_hits(I: dict, tiles: np.ndarray, pk: np.ndarray,
             seg[sr, 0], seg[sr, 1], seg[sr, 2], seg[sr, 3])
         hit[b0:b1] = (np.bincount(rp[touch], minlength=len(t)) > 0) \
             | _slab_point_hits(I, t, pb[:, 0], pb[:, 1])
-        b0 = b1
     return hit
 
 

@@ -37,6 +37,32 @@ def apply_malloc_tuning() -> None:
         os.environ.setdefault(k, v)
 
 
+def driver_memory_conf() -> dict[str, str]:
+    """Driver JVM memory for a benchmark session, sized from the host's
+    MemTotal: a heap (-Xmx) of a third of it, 2-90 GB, of which 2/5, at
+    most 24 GB, is committed up front (-Xms with AlwaysPreTouch). The
+    pre-touch exists because lazy G1 heap growth under page faulting
+    cost a measured 65-127 s on the first heap-hungry run (see
+    tools/scaling_bench.py); the sizes follow the host because a fixed
+    -Xms24g cannot even be committed on a 16 GB host. Pass the items as
+    SparkSession `.config`s, or to spark-submit through
+    `driver_submit_args`."""
+    with open("/proc/meminfo") as f:
+        mem_g = int(f.readline().split()[1]) / 2**20
+    heap = max(2, min(90, int(mem_g / 3)))
+    return {
+        "spark.driver.memory": f"{heap}g",
+        "spark.driver.extraJavaOptions":
+            f"-Xms{max(1, min(24, heap * 2 // 5))}g -XX:+AlwaysPreTouch",
+    }
+
+
+def driver_submit_args() -> list[str]:
+    """`driver_memory_conf` as spark-submit `--conf` arguments."""
+    return [a for k, v in driver_memory_conf().items()
+            for a in ("--conf", f"{k}={v}")]
+
+
 def psi_snapshot() -> dict:
     """Cumulative pressure-stall totals (µs) from /proc/pressure: the
     'full' lines for cpu/io/memory. Empty dict if PSI is unavailable.

@@ -14,15 +14,18 @@ Distributed shape (mirrors overlay.py, the 2D face):
   varying axis × a half-open band test on the constant axis), general
   diagonals via Liang–Barsky in t-space (safe: the diagonal branch
   divides only by nonzero deltas).
-- Only boundary tiles (kind 0) reach the Arrow kernel: each stored
-  tile piece's segments decode once per tile per task; probe segments
-  are first clipped to the EXACT cell (undoing the tiler's CLIP_EPS
-  expansion exactly as overlay.py does, so tile pieces partition each
-  region), then `seg_lengths_in_piece` finds every proper crossing
-  against the piece's edges, orders the breakpoints along the
+- Only boundary tiles (kind 0) reach the Arrow kernel (`zonal_join`,
+  the tile side both zonal verbs share): each batch's tiles come from
+  `engine._batch_index`, which decodes each unique tile's WKB once
+  with `wkb.ring_segments`. Probe segments are first clipped to the
+  EXACT cell (undoing the tiler's CLIP_EPS expansion exactly as
+  overlay.py does, so tile pieces partition each region), then
+  `piece_lengths` runs one flat pass over (pair, tile segment) rows:
+  it finds every proper crossing, orders the breakpoints along each
   segment, and keeps the intervals whose midpoints pass the even-odd
-  parity test (holes handled by parity itself; `points_parity` is the
-  engine's division-free kernel).
+  parity test of the engine's point kernel (`engine._pair_parity`;
+  holes handled by parity itself). overlay.py's area kernel is a sum
+  of these lengths.
 - Tile pieces partition each region, so the final per-(probe, region)
   length is ONE sum aggregation.
 
@@ -50,55 +53,78 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from . import grid
-from .geom import core, predicates, wkb
+from .engine import (
+    SLABS, _batch_index, _pair_parity, _ranges, _row_blocks, _slab_of,
+    _slab_rows,
+)
 
 
-def seg_lengths_in_piece(sx1: np.ndarray, sy1: np.ndarray,
-                         sx2: np.ndarray, sy2: np.ndarray,
-                         segs: np.ndarray) -> np.ndarray:
-    """Per input segment, the total length of the part inside the
-    even-odd region bounded by `segs` ((m, 4) edge array). Inputs must
-    already be clipped to the window of interest. Crossing coordinates
-    copy the edge constant on axis-parallel edges (dyadic-exact for
-    rectilinear pieces + axis-aligned probes); interval membership is
-    the midpoint's division-free parity."""
-    n = len(sx1)
-    if n == 0 or len(segs) == 0:
-        return np.zeros(n)
-    dx = sx2 - sx1
-    dy = sy2 - sy1
-    ex1, ey1, ex2, ey2 = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
-    gx = ex2 - ex1
-    gy = ey2 - ey1
-    denom = dx[:, None] * gy[None, :] - dy[:, None] * gx[None, :]
-    wx = ex1[None, :] - sx1[:, None]
-    wy = ey1[None, :] - sy1[:, None]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = (wx * gy[None, :] - wy * gx[None, :]) / denom
-        u = (wx * dy[:, None] - wy * dx[:, None]) / denom
-    # proper crossings only; u half-open so a crossing AT a shared ring
-    # vertex is counted once, not once per incident edge
-    valid = (np.isfinite(t) & np.isfinite(u)
+def piece_lengths(I: dict, tiles: np.ndarray, x1: np.ndarray,
+                  y1: np.ndarray, x2: np.ndarray,
+                  y2: np.ndarray) -> np.ndarray:
+    """Per pair i, the length of segment i inside the even-odd region of
+    tile `tiles[i]` of the boundary index I (`_build_boundary_index`).
+    Segments must already be clipped to the window of interest.
+
+    One flat pass over (pair, tile segment) rows: a segment inside one
+    y-slab meets only that slab's rows, any other the whole tile's.
+    Proper crossings (t strictly inside the segment, u half-open so a
+    crossing AT a shared ring vertex counts once) become breakpoints,
+    which sort per pair along the segment; the intervals between them
+    count when their midpoint passes the even-odd `_pair_parity` over
+    its `_slab_rows`. Crossing coordinates copy the edge constant on
+    axis-parallel edges, so rectilinear pieces and axis-aligned
+    segments stay dyadic-exact. Pairs run in blocks of at most
+    PRIM_BLOCK_ROWS crossing rows."""
+    out = np.zeros(len(tiles))
+    sy0, sh = I["slab_y0"][tiles], I["slab_h"][tiles]
+    s1 = _slab_of(y1, sy0, sh)
+    one = s1 == _slab_of(y2, sy0, sh)
+    slab = tiles * SLABS + s1
+    lo = np.where(one, I["slab_ptr"][slab], I["seg_ptr"][tiles])
+    cnt = np.where(one, I["slab_ptr"][slab + 1], I["seg_ptr"][tiles + 1]) - lo
+    for b0, b1 in _row_blocks(cnt + 1):
+        n = b1 - b0
+        rp, seg = _ranges(lo[b0:b1], cnt[b0:b1])
+        m = one[b0:b1][rp]
+        seg[m] = I["slab_seg"][seg[m]]
+        ex1, ey1, ex2, ey2 = I["SEG"][seg, :4].T
+        sx1, sy1 = x1[b0:b1], y1[b0:b1]
+        dx, dy = x2[b0:b1] - sx1, y2[b0:b1] - sy1
+        gx, gy = ex2 - ex1, ey2 - ey1
+        denom = dx[rp] * gy - dy[rp] * gx
+        wx, wy = ex1 - sx1[rp], ey1 - sy1[rp]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            t = (wx * gy - wy * gx) / denom
+            u = (wx * dy[rp] - wy * dx[rp]) / denom
+        v = (np.isfinite(t) & np.isfinite(u)
              & (t > 0.0) & (t < 1.0) & (u >= 0.0) & (u < 1.0))
-    si, ei = np.nonzero(valid)
-    tc = t[si, ei]
-    cx = np.where(gx[ei] == 0.0, ex1[ei], sx1[si] + tc * dx[si])
-    cy = np.where(gy[ei] == 0.0, ey1[ei], sy1[si] + tc * dy[si])
+        si, tc = rp[v], t[v]
+        cx = np.where(gx[v] == 0.0, ex1[v], sx1[si] + tc * dx[si])
+        cy = np.where(gy[v] == 0.0, ey1[v], sy1[si] + tc * dy[si])
 
-    bp_s = np.concatenate([np.arange(n), np.arange(n), si])
-    bp_t = np.concatenate([np.zeros(n), np.ones(n), tc])
-    bp_x = np.concatenate([sx1, sx2, cx])
-    bp_y = np.concatenate([sy1, sy2, cy])
-    order = np.lexsort((bp_t, bp_s))
-    bs, bx, by = bp_s[order], bp_x[order], bp_y[order]
-    same = bs[1:] == bs[:-1]
-    ax, ay = bx[:-1][same], by[:-1][same]
-    qx, qy = bx[1:][same], by[1:][same]
-    seg_of = bs[:-1][same]
-    inside = predicates.points_parity(0.5 * (ax + qx), 0.5 * (ay + qy),
-                                      segs)
-    ln = np.hypot(qx - ax, qy - ay)
-    return np.bincount(seg_of[inside], weights=ln[inside], minlength=n)
+        ar = np.arange(n)
+        bp_s = np.concatenate([ar, ar, si])
+        bp_t = np.concatenate([np.zeros(n), np.ones(n), tc])
+        bp_x = np.concatenate([sx1, x2[b0:b1], cx])
+        bp_y = np.concatenate([sy1, y2[b0:b1], cy])
+        order = np.lexsort((bp_t, bp_s))
+        bs, bx, by = bp_s[order], bp_x[order], bp_y[order]
+        same = bs[1:] == bs[:-1]
+        ax, ay = bx[:-1][same], by[:-1][same]
+        qx, qy = bx[1:][same], by[1:][same]
+        ln = np.hypot(qx - ax, qy - ay)
+        pos = ln > 0.0
+        seg_of, ln = bs[:-1][same][pos], ln[pos]
+        mx = 0.5 * (ax[pos] + qx[pos])
+        my = 0.5 * (ay[pos] + qy[pos])
+        pr, px1, py1, px2, py2, _ = _slab_rows(I, tiles[b0:b1][seg_of], my)
+        yd = py2 - py1
+        inside = _pair_parity(px1, py1, py2, np.where(yd == 0, 1.0, yd),
+                              px2 - px1, pr, mx[pr], my[pr], len(my))
+        out[b0:b1] = np.bincount(seg_of[inside], weights=ln[inside],
+                                 minlength=n)
+    return out
 
 
 def _clip_segs_to_rects(x1, y1, x2, y2, wx0, wy0, wx1, wy1):
@@ -156,78 +182,60 @@ def _clip_segs_to_rects(x1, y1, x2, y2, wx0, wy0, wx1, wy1):
     return nx1, ny1, nx2, ny2, keep
 
 
-_OUT_SCHEMA = StructType([
-    StructField("probe_id", LongType()),
-    StructField("region_id", LongType()),
-    StructField("length", DoubleType()),
-])
+def _boundary_lengths(I: dict, tix: np.ndarray,
+                      pdf: pd.DataFrame) -> np.ndarray:
+    """`zonal_join` kernel: each row's probe segment clipped to its
+    tile's exact cell, then `piece_lengths`."""
+    nx1, ny1, nx2, ny2, keep = _clip_segs_to_rects(
+        *(pdf[c].to_numpy(dtype=np.float64) for c in
+          ("x1", "y1", "x2", "y2", "minx", "miny", "maxx", "maxy")))
+    out = np.zeros(len(pdf))
+    k = np.nonzero(keep)[0]
+    out[k] = piece_lengths(I, tix[k], nx1[k], ny1[k], nx2[k], ny2[k])
+    return out
 
 
-def _boundary_length_fn(it):
-    """Arrow kernel over (probe segment × boundary tile) candidates:
-    decode each tile piece once per task, clip the tile's probe
-    segments to the exact cell, run one crossing/parity pass."""
-    registry: dict[tuple, np.ndarray] = {}
+def zonal_join(eng, cand: DataFrame, where: str | None,
+               rect_sql: str, kernel, value: str) -> DataFrame:
+    """The tile side of both zonal verbs: candidate rows (probe_id,
+    probe columns, cell_id) equi-join the tiles of their cell. Rect
+    tiles (kind 1/2) answer in the JVM by `rect_sql` over the probe
+    columns and the tile rect; boundary tiles (kind 0) by
+    `kernel(I, tix, pdf)` over each Arrow batch's `_batch_index`. Each
+    tile side is broadcast while its ceiling holds (`eng._pin`). Tile
+    pieces partition each region, so the result (probe_id, region_id,
+    `value`) is one sum per pair, positive sums only."""
+    t = eng._tiles_for(where)
+    rect = ("cell_id", "region_id", "minx", "miny", "maxx", "maxy")
+    ti = eng._pin(t.filter(F.col("kind") != 0).select(*rect),
+                  eng._rect_tiles_fit())
+    tb = eng._pin(t.filter(F.col("kind") == 0).select(*rect, "tile_wkb"),
+                  eng._boundary_fits())
+    schema = StructType([
+        StructField("probe_id", LongType()),
+        StructField("region_id", LongType()),
+        StructField(value, DoubleType()),
+    ])
 
-    def _empty():
-        return pd.DataFrame({
-            "probe_id": pd.Series([], dtype="int64"),
-            "region_id": pd.Series([], dtype="int64"),
-            "length": pd.Series([], dtype="float64"),
-        })
+    def boundary_fn(it):
+        for pdf in it:
+            v = np.zeros(len(pdf))
+            if len(pdf):
+                I, tix = _batch_index(pdf)
+                v = kernel(I, tix, pdf)
+            yield pd.DataFrame({
+                "probe_id": pdf["probe_id"].to_numpy().astype(np.int64),
+                "region_id": pdf["region_id"].to_numpy().astype(np.int64),
+                value: v,
+            })
 
-    for pdf in it:
-        n = len(pdf)
-        if n == 0:
-            yield _empty()
-            continue
-        cid = pdf["cell_id"].to_numpy()
-        rid = pdf["region_id"].to_numpy()
-        mnx = pdf["minx"].to_numpy(dtype=np.float64)
-        mny = pdf["miny"].to_numpy(dtype=np.float64)
-        mxx = pdf["maxx"].to_numpy(dtype=np.float64)
-        mxy = pdf["maxy"].to_numpy(dtype=np.float64)
-        x1 = pdf["x1"].to_numpy(dtype=np.float64)
-        y1 = pdf["y1"].to_numpy(dtype=np.float64)
-        x2 = pdf["x2"].to_numpy(dtype=np.float64)
-        y2 = pdf["y2"].to_numpy(dtype=np.float64)
-        pid = pdf["probe_id"].to_numpy()
-        wkb_col = pdf["tile_wkb"].to_numpy()
-
-        xb = mnx.view(np.int64)
-        yb = mny.view(np.int64)
-        order = np.lexsort((yb, xb, rid, cid))
-        cs, rs, xs, ys = cid[order], rid[order], xb[order], yb[order]
-        new_grp = np.empty(n, dtype=bool)
-        new_grp[0] = True
-        new_grp[1:] = (np.diff(cs) != 0) | (np.diff(rs) != 0) | \
-                      (np.diff(xs) != 0) | (np.diff(ys) != 0)
-        starts = np.nonzero(new_grp)[0]
-        ends = np.append(starts[1:], n)
-
-        len_out = np.zeros(n)
-        for s0, s1 in zip(starts, ends):
-            g = order[s0:s1]
-            key = (cs[s0], rs[s0], xs[s0], ys[s0])
-            piece = registry.get(key)
-            if piece is None:
-                geom = wkb.loads(bytes(wkb_col[g[0]]))
-                piece = predicates.segments_of_rings(core.all_rings(geom))
-                registry[key] = piece
-            nx1, ny1, nx2, ny2, keep = _clip_segs_to_rects(
-                x1[g], y1[g], x2[g], y2[g],
-                mnx[g], mny[g], mxx[g], mxy[g])
-            if keep.any():
-                k = np.nonzero(keep)[0]
-                lens = seg_lengths_in_piece(
-                    nx1[k], ny1[k], nx2[k], ny2[k], piece)
-                len_out[g[k]] = lens
-
-        yield pd.DataFrame({
-            "probe_id": pid.astype(np.int64),
-            "region_id": rid.astype(np.int64),
-            "length": len_out,
-        })
+    interior = cand.join(ti, "cell_id").selectExpr(
+        "probe_id", "region_id", f"{rect_sql} AS {value}")
+    boundary = cand.join(tb, "cell_id").mapInPandas(boundary_fn, schema)
+    return (interior.unionByName(boundary)
+            .groupBy("probe_id", "region_id")
+            .agg(F.sum(value).alias(value))
+            .filter(F.col(value) > 0.0))
 
 
 _SEG_SCHEMA = StructType([
@@ -348,20 +356,10 @@ def line_length_in_regions(eng, probes: DataFrame,
             .selectExpr("probe_id", "x1", "y1", "x2", "y2",
                         f"{pack} AS cell_id"))
 
-    t = eng._tiles_for(where)
-    ti = t.filter(F.col("kind") != 0).select(
-        "cell_id", "region_id", "minx", "miny", "maxx", "maxy")
-    tb = t.filter(F.col("kind") == 0).select(
-        "cell_id", "region_id", "minx", "miny", "maxx", "maxy", "tile_wkb")
-    ti = eng._pin(ti, eng._rect_tiles_fit())
-    tb = eng._pin(tb, eng._boundary_fits())
-
     # interior tiles: the whole clipped run counts. Axis-aligned →
     # exact rect algebra with the half-open constant-axis band;
     # diagonal → Liang–Barsky (x1<>x2 AND y1<>y2 so no 0/0).
-    interior = cand.join(ti, "cell_id").selectExpr(
-        "probe_id", "region_id",
-        """CASE
+    return zonal_join(eng, cand, where, """CASE
              WHEN y1 = y2 AND x1 <> x2 THEN
                greatest(0.0D, least(maxx, greatest(x1, x2))
                         - greatest(minx, least(x1, x2)))
@@ -380,14 +378,4 @@ def line_length_in_regions(eng, probes: DataFrame,
                               least((miny - y1) / (y2 - y1), (maxy - y1) / (y2 - y1)),
                               0.0D))
              ELSE 0.0D
-           END AS length""")
-    boundary = (cand.join(tb, "cell_id")
-                .select("probe_id", "x1", "y1", "x2", "y2", "cell_id",
-                        "region_id", "minx", "miny", "maxx", "maxy",
-                        "tile_wkb")
-                .mapInPandas(_boundary_length_fn, _OUT_SCHEMA))
-
-    return (interior.unionByName(boundary)
-            .groupBy("probe_id", "region_id")
-            .agg(F.sum("length").alias("length"))
-            .filter(F.col("length") > 0.0))
+           END""", _boundary_lengths, "length")

@@ -14,32 +14,32 @@ Distributed shape (the one that survives 100 TB):
   reduce to a clamped rect-overlap product WITHOUT leaving the JVM:
   `greatest(0, least(maxx,px1)-greatest(minx,px0)) * ...` — the bulk
   of any region's area never touches Python.
-- Only boundary tiles (kind 0) reach the Arrow kernel. Each stored
-  ring is re-clipped to (exact cell ∩ probe): the tiler clips against
-  an eps-EXPANDED cell (tiler.CLIP_EPS) so slivers along grid lines
-  stay point-testable, which means raw piece areas would double-count
-  those slivers across neighbouring tiles — the re-clip restores the
-  exact partition (a sliver strictly outside its exact cell clips to
-  area 0.0 exactly). Ring WKB decodes ONCE per tile per task and the
-  clip is `predicates.clip_ring_to_rects` — one CSR Sutherland-Hodgman
-  pass per ring across ALL of the tile's probe windows, no per-row
-  Python.
-- Shell/hole signs: area(region ∩ W) distributes over the polygon
-  structure — Σ_parts [area(shell∩W) − Σ area(hole∩W)] — so each
-  ring carries a FIXED sign independent of the probe window. The tile
-  WKB flattens ring roles away, so the sign is recovered once per tile
-  from nesting parity: ring i is negated iff an odd number of
-  larger-|area| rings of the same piece contain its interior sample
-  (rings of one piece never cross, so containment is decided by one
-  strict point-parity test). Exact for the rectilinear gate fixtures;
-  for arbitrary curved pieces the sample test is standard-fp robust.
+- Only boundary tiles (kind 0) reach the Arrow kernel, which
+  linework.py's `zonal_join` runs for both zonal verbs: each batch's
+  tiles come from `engine._batch_index` (rows grouped by tile, each
+  unique tile's WKB decoded once by `wkb.ring_segments`), and
+  `piece_areas` answers every (window, tile) row in one flat pass.
+  The window is exact cell ∩ probe: the tiler clips against an
+  eps-EXPANDED cell (tiler.CLIP_EPS) so slivers along grid lines stay
+  point-testable, which means raw piece areas would double-count
+  those slivers across neighbouring tiles — the exact-cell window
+  restores the partition (a sliver strictly outside its exact cell
+  contributes 0.0 exactly).
+- Area is a sum of band lengths: cut the window into horizontal bands
+  at every vertex y and every crossing of its vertical sides; inside a
+  band the piece's width is linear in y, so band height × the length
+  of the piece along the band's mid-line (`linework.piece_lengths`,
+  the even-odd crossing kernel) is the band's exact area. Even-odd
+  parity needs no ring roles, so the flattened tile WKB (shells,
+  holes, islands, in any orientation) is used as stored.
 - Tile pieces partition every region, so the final per-(probe, region)
   area is ONE sum aggregation; contributions are exact dyadic
   multiples for dyadic inputs (fixture coords 2^-6, res-7/9 cell edges
   multiples of 45·2^-10 → every vertex a multiple of 2^-10, every
-  term a multiple of 2^-21 bounded ≪ 2^53), so the sum is
-  order-independent bit-exact and the DuckDB rect-algebra oracle
-  matches without tolerance.
+  band height and mid-line length a multiple of 2^-10, every term a
+  multiple of 2^-20 bounded ≪ 2^53), so the sum is order-independent
+  bit-exact and the DuckDB rect-algebra oracle matches without
+  tolerance.
 """
 from __future__ import annotations
 
@@ -49,169 +49,70 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from . import grid
-from .geom import core, predicates, wkb
+from .engine import _ranges, _row_blocks
+from .linework import piece_lengths, zonal_join
 
 
-def csr_ring_areas(vx: np.ndarray, vy: np.ndarray,
-                   offsets: np.ndarray) -> np.ndarray:
-    """Signed shoelace area per CSR slice of OPEN rings (the layout
-    `predicates.clip_ring_to_rects` returns). Wraparound handled via a
-    next-index vector; empty slices → 0.0. Exact for dyadic inputs
-    (cumsum magnitude stays far under 2^53)."""
-    k = len(offsets) - 1
-    n = len(vx)
-    if n == 0:
-        return np.zeros(k)
-    starts = offsets[:-1]
-    ends = offsets[1:]
-    nxt = np.arange(1, n + 1, dtype=np.int64)
-    nonempty = ends > starts
-    nxt[ends[nonempty] - 1] = starts[nonempty]
-    terms = vx * vy[nxt] - vx[nxt] * vy
-    c = np.concatenate([[0.0], np.cumsum(terms)])
-    return 0.5 * (c[ends] - c[starts])
+def piece_areas(I: dict, tiles: np.ndarray, x0: np.ndarray,
+                y0: np.ndarray, x1: np.ndarray,
+                y1: np.ndarray) -> np.ndarray:
+    """Per pair i, the area of tile `tiles[i]`'s even-odd region P (of
+    the boundary index I) inside the window [x0, x1] × [y0, y1]; 0.0
+    for an empty window. The band identity
+
+        area(P ∩ W) = Σ_k (y_k+1 − y_k) · |P ∩ [x0,x1] × {(y_k + y_k+1)/2}|
+
+    holds when the band edges y_k are y0, y1 and every y strictly
+    between them at which the tile has a vertex inside [x0, x1] or a
+    segment crossing x = x0 or x = x1: inside one band no boundary
+    segment starts, ends or leaves the strip, so P's width is linear in
+    y and the midpoint rule is exact. The mid-line lengths are
+    `piece_lengths`. For dyadic pieces and windows every term is exact,
+    so the area is bit-equal to the shoelace area of the clipped rings.
+    Pairs run in blocks of at most PRIM_BLOCK_ROWS tile segments."""
+    out = np.zeros(len(tiles))
+    cnt = I["seg_ptr"][tiles + 1] - I["seg_ptr"][tiles]
+    for b0, b1 in _row_blocks(cnt + 1):
+        wx0, wy0, wx1, wy1 = (a[b0:b1] for a in (x0, y0, x1, y1))
+        rp, seg = _ranges(I["seg_ptr"][tiles[b0:b1]], cnt[b0:b1])
+        ex1, ey1, ex2, ey2 = I["SEG"][seg, :4].T
+        # band edges: the vertices in [x0, x1] (each ring vertex starts
+        # one segment) and the crossings of x = x0 and x = x1
+        v = (ex1 >= wx0[rp]) & (ex1 <= wx1[rp])
+        ys, yp = [ey1[v]], [rp[v]]
+        lo, hi = np.minimum(ex1, ex2), np.maximum(ex1, ex2)
+        for xc in (wx0[rp], wx1[rp]):
+            c = (lo < xc) & (xc < hi)
+            ys.append(ey1[c] + (xc[c] - ex1[c]) * (ey2[c] - ey1[c])
+                      / (ex2[c] - ex1[c]))
+            yp.append(rp[c])
+        ys, yp = np.concatenate(ys), np.concatenate(yp)
+        m = (ys > wy0[yp]) & (ys < wy1[yp])
+        ar = np.arange(b1 - b0)
+        ys = np.concatenate([wy0, wy1, ys[m]])
+        yp = np.concatenate([ar, ar, yp[m]])
+        order = np.lexsort((ys, yp))
+        ys, yp = ys[order], yp[order]
+        ok = (wx1 > wx0) & (wy1 > wy0)
+        band = (yp[1:] == yp[:-1]) & (ys[1:] > ys[:-1]) & ok[yp[:-1]]
+        bb, ya, yb = yp[:-1][band], ys[:-1][band], ys[1:][band]
+        mid = 0.5 * (ya + yb)
+        ln = piece_lengths(I, tiles[b0:b1][bb], wx0[bb], mid, wx1[bb], mid)
+        out[b0:b1] = np.bincount(bb, weights=(yb - ya) * ln,
+                                 minlength=b1 - b0)
+    return out
 
 
-def interior_sample(ring: np.ndarray):
-    """A point strictly inside a simple closed ring, or None for
-    degenerate rings: horizontal scanline through the widest gap
-    between distinct vertex y-values, widest crossing interval's
-    midpoint. Exact-arithmetic for rectilinear rings."""
-    if len(ring) < 4:
-        return None
-    uys = np.unique(ring[:, 1])
-    if len(uys) < 2:
-        return None
-    gaps = np.diff(uys)
-    gi = int(np.argmax(gaps))
-    if gaps[gi] <= 0.0:
-        return None
-    ys = 0.5 * (uys[gi] + uys[gi + 1])
-    x1, y1 = ring[:-1, 0], ring[:-1, 1]
-    x2, y2 = ring[1:, 0], ring[1:, 1]
-    m = (y1 <= ys) != (y2 <= ys)
-    if not m.any():
-        return None
-    xc = np.sort(x1[m] + (ys - y1[m]) * (x2[m] - x1[m]) / (y2[m] - y1[m]))
-    if len(xc) < 2 or len(xc) % 2:
-        return None
-    pairs = xc.reshape(-1, 2)
-    widths = pairs[:, 1] - pairs[:, 0]
-    wi = int(np.argmax(widths))
-    if widths[wi] <= 0.0:
-        return None
-    return (0.5 * (pairs[wi, 0] + pairs[wi, 1]), ys)
-
-
-def ring_signs(rings: list[np.ndarray]) -> np.ndarray:
-    """+1/−1 per ring of one tile piece: (−1)^depth where depth counts
-    the other rings containing this ring's interior (|area| ordering +
-    index tiebreak decides direction — rings of a piece never cross,
-    so `sample_i inside j` with |A_j| ≥ |A_i| means j ⊇ i)."""
-    k = len(rings)
-    signs = np.ones(k)
-    if k < 2:
-        return signs
-    abs_a = np.array([abs(core.ring_area(r)) for r in rings])
-    segs = [predicates.segments_of_rings([r]) for r in rings]
-    for i in range(k):
-        if abs_a[i] == 0.0:
-            continue
-        s = interior_sample(rings[i])
-        if s is None:
-            continue
-        px = np.array([s[0]])
-        py = np.array([s[1]])
-        depth = 0
-        for j in range(k):
-            if j == i:
-                continue
-            bigger = abs_a[j] > abs_a[i] or (abs_a[j] == abs_a[i] and j < i)
-            if bigger and bool(predicates.points_parity(px, py, segs[j])[0]):
-                depth += 1
-        if depth % 2:
-            signs[i] = -1.0
-    return signs
-
-
-_OUT_SCHEMA = StructType([
-    StructField("probe_id", LongType()),
-    StructField("region_id", LongType()),
-    StructField("area", DoubleType()),
-])
-
-
-def _boundary_overlay_fn(it):
-    """Arrow kernel over (probe window × boundary tile) candidate rows:
-    decode + sign each tile piece once per task, CSR-clip each ring
-    across the tile's probe windows, emit signed |area| sums."""
-    registry: dict[tuple, tuple] = {}
-
-    def _empty():
-        return pd.DataFrame({
-            "probe_id": pd.Series([], dtype="int64"),
-            "region_id": pd.Series([], dtype="int64"),
-            "area": pd.Series([], dtype="float64"),
-        })
-
-    for pdf in it:
-        n = len(pdf)
-        if n == 0:
-            yield _empty()
-            continue
-        cid = pdf["cell_id"].to_numpy()
-        rid = pdf["region_id"].to_numpy()
-        mnx = pdf["minx"].to_numpy(dtype=np.float64)
-        mny = pdf["miny"].to_numpy(dtype=np.float64)
-        mxx = pdf["maxx"].to_numpy(dtype=np.float64)
-        mxy = pdf["maxy"].to_numpy(dtype=np.float64)
-        px0 = pdf["px0"].to_numpy(dtype=np.float64)
-        py0 = pdf["py0"].to_numpy(dtype=np.float64)
-        px1 = pdf["px1"].to_numpy(dtype=np.float64)
-        py1 = pdf["py1"].to_numpy(dtype=np.float64)
-        pid = pdf["probe_id"].to_numpy()
-        wkb_col = pdf["tile_wkb"].to_numpy()
-
-        xb = mnx.view(np.int64)
-        yb = mny.view(np.int64)
-        order = np.lexsort((yb, xb, rid, cid))
-        cs, rs, xs, ys = cid[order], rid[order], xb[order], yb[order]
-        new_grp = np.empty(n, dtype=bool)
-        new_grp[0] = True
-        new_grp[1:] = (np.diff(cs) != 0) | (np.diff(rs) != 0) | \
-                      (np.diff(xs) != 0) | (np.diff(ys) != 0)
-        starts = np.nonzero(new_grp)[0]
-        ends = np.append(starts[1:], n)
-
-        area_out = np.zeros(n)
-        for s0, s1 in zip(starts, ends):
-            g = order[s0:s1]
-            key = (cs[s0], rs[s0], xs[s0], ys[s0])
-            ent = registry.get(key)
-            if ent is None:
-                geom = wkb.loads(bytes(wkb_col[g[0]]))
-                rings = core.all_rings(geom)
-                ent = (rings, ring_signs(rings))
-                registry[key] = ent
-            rings, signs = ent
-            # window = exact cell ∩ probe rect (NOT the eps-expanded
-            # tiler window — see module docstring)
-            wx0 = np.maximum(mnx[g], px0[g])
-            wy0 = np.maximum(mny[g], py0[g])
-            wx1 = np.minimum(mxx[g], px1[g])
-            wy1 = np.minimum(mxy[g], py1[g])
-            acc = np.zeros(len(g))
-            for ring, sgn in zip(rings, signs):
-                vx, vy, offs = predicates.clip_ring_to_rects(
-                    ring, wx0, wy0, wx1, wy1)
-                acc += sgn * np.abs(csr_ring_areas(vx, vy, offs))
-            area_out[g] = acc
-
-        yield pd.DataFrame({
-            "probe_id": pid.astype(np.int64),
-            "region_id": rid.astype(np.int64),
-            "area": area_out,
-        })
+def _boundary_areas(I: dict, tix: np.ndarray,
+                    pdf: pd.DataFrame) -> np.ndarray:
+    """`zonal_join` kernel: `piece_areas` over the window exact cell ∩
+    probe rect (NOT the CLIP_EPS-expanded tiler window; see the module
+    docstring)."""
+    mnx, mny, mxx, mxy, px0, py0, px1, py1 = (
+        pdf[k].to_numpy(dtype=np.float64) for k in
+        ("minx", "miny", "maxx", "maxy", "px0", "py0", "px1", "py1"))
+    return piece_areas(I, tix, np.maximum(mnx, px0), np.maximum(mny, py0),
+                       np.minimum(mxx, px1), np.minimum(mxy, py1))
 
 
 def overlay_rect_area(eng, probes: DataFrame,
@@ -229,7 +130,7 @@ def overlay_rect_area(eng, probes: DataFrame,
     the existing probe_id sum re-assembles them. Sub-window edges lie ON
     cell boundaries (exact dyadic multiples of 45·2^(3-res)), and tiles
     never cross cell lines, so every per-tile contribution — interior
-    rect product and boundary ring clip alike — is BIT-IDENTICAL to the
+    rect product and boundary band sum alike — is BIT-IDENTICAL to the
     undecomposed run; only the summation grouping changes, and the sum
     itself is exact for dyadic inputs (module docstring). This is the
     SCALE.md overlay recipe for continent-scale windows: fan-out per
@@ -274,28 +175,11 @@ def overlay_rect_area(eng, probes: DataFrame,
             .selectExpr("probe_id", "px0", "py0", "px1", "py1",
                         f"{pack} AS cell_id"))
 
-    t = eng._tiles_for(where)
-    ti = t.filter(F.col("kind") != 0).select(
-        "cell_id", "region_id", "minx", "miny", "maxx", "maxy")
-    tb = t.filter(F.col("kind") == 0).select(
-        "cell_id", "region_id", "minx", "miny", "maxx", "maxy", "tile_wkb")
-    ti = eng._pin(ti, eng._rect_tiles_fit())
-    tb = eng._pin(tb, eng._boundary_fits())
-
-    interior = cand.join(ti, "cell_id").selectExpr(
-        "probe_id", "region_id",
+    return zonal_join(
+        eng, cand, where,
         "greatest(0.0D, least(maxx, px1) - greatest(minx, px0))"
-        " * greatest(0.0D, least(maxy, py1) - greatest(miny, py0)) AS area")
-    boundary = (cand.join(tb, "cell_id")
-                .select("probe_id", "px0", "py0", "px1", "py1", "cell_id",
-                        "region_id", "minx", "miny", "maxx", "maxy",
-                        "tile_wkb")
-                .mapInPandas(_boundary_overlay_fn, _OUT_SCHEMA))
-
-    return (interior.unionByName(boundary)
-            .groupBy("probe_id", "region_id")
-            .agg(F.sum("area").alias("area"))
-            .filter(F.col("area") > 0.0))
+        " * greatest(0.0D, least(maxy, py1) - greatest(miny, py0))",
+        _boundary_areas, "area")
 
 
 def rect_decompose(rings: list) -> np.ndarray:
@@ -360,7 +244,7 @@ def poly_rect_probes(probes: DataFrame, id_col: str = "probe_id",
     disjoint rect rows `overlay_rect_area` takes (each keeps its
     polygon's probe_id — the final per-probe sum reassembles areas
     exactly because the rects partition the polygon)."""
-    from .geom import wkt as wkt_codec
+    from .geom import core, wkt as wkt_codec
 
     def fn(it):
         for pdf in it:

@@ -74,6 +74,18 @@ def dense_engine(spark, dense_geojson):
 
 
 @pytest.fixture(scope="session")
+def dense_engines_6_8(spark, dense_geojson):
+    """Engines over `dense_geojson` at base_res 6 and 8, for the tests
+    that check an answer does not depend on the tile grid. Held for the
+    session, so their checkpointed tables are not cleaned up while a
+    later test counts persisted RDDs."""
+    from areacity_query_geometry_spark.engine import SpatialEngine
+
+    return tuple(SpatialEngine.from_geojson(spark, dense_geojson,
+                                            base_res=r) for r in (6, 8))
+
+
+@pytest.fixture(scope="session")
 def province_engine(spark):
     from areacity_query_geometry_spark.engine import SpatialEngine
 

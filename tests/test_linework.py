@@ -5,9 +5,8 @@ import numpy as np
 import pytest
 
 from areacity_query_geometry_spark import fixtures, linework
+from areacity_query_geometry_spark.engine import _build_boundary_index
 from areacity_query_geometry_spark.geom import predicates
-
-from conftest import PROVINCE_FIXTURE, reference_file
 
 
 def _square_segs(x0, y0, x1, y1):
@@ -16,17 +15,33 @@ def _square_segs(x0, y0, x1, y1):
     return predicates.segments_of_rings([ring])
 
 
+def one_tile_index(segs):
+    """The boundary index of one tile holding `segs`, its rect their
+    bounding box."""
+    tile = {"cell_id": [0], "region_id": [0], "deep": [0], "kind": [0],
+            "minx": [segs[:, [0, 2]].min()], "miny": [segs[:, [1, 3]].min()],
+            "maxx": [segs[:, [0, 2]].max()], "maxy": [segs[:, [1, 3]].max()]}
+    return _build_boundary_index(tile, np.array([len(segs)]), segs)
+
+
+def piece_lengths(sx1, sy1, sx2, sy2, segs):
+    """`linework.piece_lengths` of each segment against one tile."""
+    return linework.piece_lengths(
+        one_tile_index(segs), np.zeros(len(sx1), np.int64),
+        sx1, sy1, sx2, sy2)
+
+
 class TestKernel:
     def test_horizontal_through_square(self):
         segs = _square_segs(1.0, 1.0, 3.0, 3.0)
-        out = linework.seg_lengths_in_piece(
+        out = piece_lengths(
             np.array([0.0]), np.array([2.0]),
             np.array([4.0]), np.array([2.0]), segs)
         assert out[0] == 2.0  # exactly the square's width
 
     def test_fully_inside_and_outside(self):
         segs = _square_segs(1.0, 1.0, 3.0, 3.0)
-        out = linework.seg_lengths_in_piece(
+        out = piece_lengths(
             np.array([1.25, 5.0]), np.array([2.0, 2.0]),
             np.array([2.75, 6.0]), np.array([2.0, 2.0]), segs)
         assert out[0] == 1.5
@@ -36,14 +51,14 @@ class TestKernel:
         shell = _square_segs(0.0, 0.0, 4.0, 4.0)
         hole = _square_segs(1.0, 1.0, 3.0, 3.0)
         segs = np.vstack([shell, hole])
-        out = linework.seg_lengths_in_piece(
+        out = piece_lengths(
             np.array([0.0]), np.array([2.0]),
             np.array([4.0]), np.array([2.0]), segs)
         assert out[0] == 2.0  # 4 crossing the shell minus 2 in the hole
 
     def test_diagonal_through_square(self):
         segs = _square_segs(0.0, 0.0, 2.0, 2.0)
-        out = linework.seg_lengths_in_piece(
+        out = piece_lengths(
             np.array([-1.0]), np.array([-1.0]),
             np.array([3.0]), np.array([3.0]), segs)
         assert out[0] == pytest.approx(2.0 * np.sqrt(2.0), rel=1e-12)
@@ -51,7 +66,7 @@ class TestKernel:
     def test_vertex_crossing_counted_once(self):
         # diagonal entering exactly through the square's corner
         segs = _square_segs(1.0, 1.0, 3.0, 3.0)
-        out = linework.seg_lengths_in_piece(
+        out = piece_lengths(
             np.array([0.0]), np.array([2.0]),
             np.array([2.0]), np.array([0.0]), segs)
         # touches only the corner (1,1)..? the line x+y=2 passes through
@@ -60,7 +75,7 @@ class TestKernel:
 
     def test_empty_inputs(self):
         segs = _square_segs(0.0, 0.0, 1.0, 1.0)
-        assert len(linework.seg_lengths_in_piece(
+        assert len(piece_lengths(
             np.array([]), np.array([]), np.array([]), np.array([]),
             segs)) == 0
 
@@ -227,21 +242,15 @@ class TestLineLength:
 
 class TestRealGeometryResIndependence:
     """The bridge-run bug's signature was a RESOLUTION-DEPENDENT
-    answer; pin the opposite for line lengths on real curved geometry:
-    two engines at different base_res must agree per (probe, region)
-    to fp tolerance (tile decompositions differ, the decomposed sums
-    may round differently — but the value is a property of the
-    geometry, not the grid)."""
+    answer; pin the opposite for line lengths on curved geometry (the
+    generated dense set's wiggly oblique edges): two engines at
+    different base_res must agree per (probe, region) to fp tolerance
+    (tile decompositions differ, the decomposed sums may round
+    differently — but the value is a property of the geometry, not the
+    grid)."""
 
-    def test_lengths_res_independent(self, spark):
-        import numpy as np
-
-        from areacity_query_geometry_spark.engine import SpatialEngine
-
-        path = reference_file(PROVINCE_FIXTURE)
-        eng6 = SpatialEngine.from_geojson(spark, path, base_res=6)
-        eng8 = SpatialEngine.from_geojson(spark, path, base_res=8)
-
+    def test_lengths_res_independent(self, spark, dense_engines_6_8):
+        eng6, eng8 = dense_engines_6_8
         rng = np.random.RandomState(71)
         segs = []
         for _ in range(60):
@@ -252,6 +261,7 @@ class TestRealGeometryResIndependence:
             segs.append((a, b, a + ln * np.cos(ang), b + ln * np.sin(ang)))
         r6 = run_lengths(spark, eng6, segs)
         r8 = run_lengths(spark, eng8, segs)
+        assert len(r6) == len(segs)
         assert set(r6) == set(r8)
         for pid in r6:
             assert set(r6[pid]) == set(r8[pid]), pid
@@ -323,7 +333,7 @@ class TestKernelProperty:
                 sx1, sy1, sx2, sy2 = a, c, b, c
             else:
                 sx1, sy1, sx2, sy2 = c, a, c, b
-            out = linework.seg_lengths_in_piece(
+            out = piece_lengths(
                 np.array([sx1]), np.array([sy1]),
                 np.array([sx2]), np.array([sy2]), segs)
 
@@ -339,3 +349,57 @@ class TestKernelProperty:
                 want -= box_len(*hole)
             assert out[0] == want, \
                 (x0, y0, wdt, hgt, hole, sx1, sy1, sx2, sy2)
+
+    def test_curved_pieces_vs_dense_reference(self):
+        """Property: on curved pieces with holes and islands (oblique
+        edges, many y-slabs), the flat kernel equals, bit for bit, a
+        dense all-segments × all-edges pass with the same crossing and
+        parity arithmetic, for short segments inside one y-slab (slab
+        rows only) and long ones (the whole tile)."""
+
+        def dense(sx1, sy1, sx2, sy2, segs):
+            dx, dy = sx2 - sx1, sy2 - sy1
+            ex1, ey1, ex2, ey2 = segs.T
+            gx, gy = ex2 - ex1, ey2 - ey1
+            denom = dx[:, None] * gy - dy[:, None] * gx
+            wx, wy = ex1 - sx1[:, None], ey1 - sy1[:, None]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                t = (wx * gy - wy * gx) / denom
+                u = (wx * dy[:, None] - wy * dx[:, None]) / denom
+            si, ei = np.nonzero(np.isfinite(t) & np.isfinite(u) & (t > 0)
+                                & (t < 1) & (u >= 0) & (u < 1))
+            tc = t[si, ei]
+            cx = np.where(gx[ei] == 0, ex1[ei], sx1[si] + tc * dx[si])
+            cy = np.where(gy[ei] == 0, ey1[ei], sy1[si] + tc * dy[si])
+            n = len(sx1)
+            s = np.r_[np.arange(n), np.arange(n), si]
+            o = np.lexsort((np.r_[np.zeros(n), np.ones(n), tc], s))
+            bs = s[o]
+            bx, by = np.r_[sx1, sx2, cx][o], np.r_[sy1, sy2, cy][o]
+            m = bs[1:] == bs[:-1]
+            ax, ay, qx, qy = bx[:-1][m], by[:-1][m], bx[1:][m], by[1:][m]
+            ins = predicates.points_parity(0.5 * (ax + qx), 0.5 * (ay + qy),
+                                           segs)
+            ln = np.hypot(qx - ax, qy - ay)
+            return np.bincount(bs[:-1][m][ins], weights=ln[ins], minlength=n)
+
+        rng = np.random.RandomState(41)
+        for _ in range(20):
+            rings = []
+            for cx, cy, r, k, ccw in ((5.0, 5.0, 4.0, 60, True),
+                                      (5.2, 4.9, 1.6, 30, False),
+                                      (5.1, 5.0, 0.5, 12, True)):
+                a = np.linspace(0, 2 * np.pi, k, endpoint=False)
+                rr = r * (1 + 0.15 * np.sin(3 * a + rng.rand())
+                          + 0.05 * rng.rand(k))
+                pts = np.c_[cx + rr * np.cos(a), cy + rr * np.sin(a)]
+                rings.append(np.vstack([pts, pts[:1]])[::1 if ccw else -1])
+            segs = predicates.segments_of_rings(rings)
+            n = 200
+            sx1, sy1 = rng.rand(n) * 10, rng.rand(n) * 10
+            step = np.where(rng.rand(n) < 0.5, 0.05, 6.0)
+            sx2 = sx1 + (rng.rand(n) - 0.5) * step
+            sy2 = sy1 + (rng.rand(n) - 0.5) * step
+            sy2[::7] = sy1[::7]
+            got = piece_lengths(sx1, sy1, sx2, sy2, segs)
+            assert got.tolist() == dense(sx1, sy1, sx2, sy2, segs).tolist()

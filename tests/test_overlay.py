@@ -3,57 +3,245 @@ equality against rect-algebra brute force on the fixture world."""
 import numpy as np
 import pytest
 
-from areacity_query_geometry_spark import fixtures, overlay
-from areacity_query_geometry_spark.geom import core
-
-from conftest import PROVINCE_FIXTURE, reference_file
+from areacity_query_geometry_spark import fixtures, grid, overlay, tiler
+from areacity_query_geometry_spark.engine import _build_boundary_index
+from areacity_query_geometry_spark.geom import core, predicates, wkb
 
 
 def _ring(pts):
     return core.ensure_closed(np.asarray(pts, dtype=np.float64))
 
 
+def _index(pieces):
+    """Boundary index with one tile per piece (a list of (rings, rect));
+    tile i is pieces[i]."""
+    segs = [predicates.segments_of_rings(rings) for rings, _ in pieces]
+    rects = np.array([rect for _, rect in pieces], dtype=np.float64)
+    n = len(pieces)
+    tiles = {"cell_id": np.arange(n), "region_id": np.zeros(n),
+             "deep": np.zeros(n), "kind": np.zeros(n),
+             "minx": rects[:, 0], "miny": rects[:, 1],
+             "maxx": rects[:, 2], "maxy": rects[:, 3]}
+    return _build_boundary_index(
+        tiles, np.array([len(s) for s in segs]), np.vstack(segs))
+
+
+def _areas(rings, windows):
+    """`overlay.piece_areas` of one piece over (k, 4) windows."""
+    w = np.asarray(windows, dtype=np.float64)
+    b = np.array([min(r[:, 0].min() for r in rings),
+                  min(r[:, 1].min() for r in rings),
+                  max(r[:, 0].max() for r in rings),
+                  max(r[:, 1].max() for r in rings)])
+    return overlay.piece_areas(_index([(rings, b)]),
+                               np.zeros(len(w), np.int64),
+                               w[:, 0], w[:, 1], w[:, 2], w[:, 3])
+
+
 class TestKernels:
-    def test_csr_ring_areas(self):
-        # two open rings: unit square CCW, 2x1 rect CW, one empty slice
-        vx = np.array([0.0, 1, 1, 0, 0, 0, 2, 2])
-        vy = np.array([0.0, 0, 1, 1, 0, 1, 1, 0])
-        offsets = np.array([0, 4, 4, 8], dtype=np.int64)
-        a = overlay.csr_ring_areas(vx, vy, offsets)
-        assert a.tolist() == [1.0, 0.0, -2.0]
-
-    def test_csr_empty(self):
-        a = overlay.csr_ring_areas(
-            np.zeros(0), np.zeros(0), np.array([0, 0, 0], dtype=np.int64))
-        assert a.tolist() == [0.0, 0.0]
-
-    def test_interior_sample(self):
-        r = _ring([(0, 0), (4, 0), (4, 2), (0, 2)])
-        x, y = overlay.interior_sample(r)
-        assert 0 < x < 4 and 0 < y < 2
-
-    def test_interior_sample_degenerate(self):
-        assert overlay.interior_sample(
-            _ring([(0, 0), (4, 0), (8, 0)])) is None
+    """Ring roles: the tile WKB flattens them away, and the even-odd
+    band kernel needs none, whatever the ring order and orientation."""
 
     def test_ring_signs_shell_hole_same_orientation(self):
         # fixture convention: hole ring has the SAME (CCW) orientation
         # as the shell — the sign must come from nesting, not winding
         shell = _ring([(0, 0), (10, 0), (10, 10), (0, 10)])
         hole = _ring([(2, 2), (3, 2), (3, 3), (2, 3)])
-        assert overlay.ring_signs([shell, hole]).tolist() == [1.0, -1.0]
-        assert overlay.ring_signs([hole, shell]).tolist() == [-1.0, 1.0]
+        win = [(0.0, 0.0, 10.0, 10.0), (2.5, 0.0, 10.0, 2.5)]
+        assert _areas([shell, hole], win).tolist() == [99.0, 18.75 - 0.25]
+        assert _areas([hole, shell], win).tolist() == [99.0, 18.75 - 0.25]
 
     def test_ring_signs_island_in_lake(self):
         shell = _ring([(0, 0), (10, 0), (10, 10), (0, 10)])
         lake = _ring([(1, 1), (9, 1), (9, 9), (1, 9)])
         island = _ring([(4, 4), (6, 4), (6, 6), (4, 6)])
-        assert overlay.ring_signs([shell, lake, island]).tolist() == \
-            [1.0, -1.0, 1.0]
+        assert _areas([shell, lake, island],
+                      [(0.0, 0.0, 10.0, 10.0), (5.0, 5.0, 6.0, 6.0),
+                       (3.0, 3.0, 5.0, 5.0)]).tolist() == [40.0, 1.0, 1.0]
 
     def test_ring_signs_single(self):
-        assert overlay.ring_signs(
-            [_ring([(0, 0), (1, 0), (1, 1), (0, 1)])]).tolist() == [1.0]
+        assert _areas([_ring([(0, 0), (1, 0), (1, 1), (0, 1)])],
+                      [(0.0, 0.0, 1.0, 1.0)]).tolist() == [1.0]
+
+    def test_empty_windows_and_pairs(self):
+        sq = [_ring([(0, 0), (4, 0), (4, 4), (0, 4)])]
+        assert _areas(sq, [(1.0, 1.0, 1.0, 3.0), (1.0, 3.0, 2.0, 1.0),
+                           (5.0, 5.0, 6.0, 6.0)]).tolist() == [0.0] * 3
+        assert len(_areas(sq, np.zeros((0, 4)))) == 0
+
+
+def _wiggly(rng, cx, cy, r, n, ccw):
+    """A star-shaped ring with n oblique edges, radius within
+    r · [0.85, 1.2]; CCW or CW."""
+    a = np.linspace(0, 2 * np.pi, n, endpoint=False)
+    rr = r * (1 + 0.15 * np.sin(3 * a + rng.rand()) + 0.05 * rng.rand(n))
+    pts = np.c_[cx + rr * np.cos(a), cy + rr * np.sin(a)]
+    return core.ensure_closed(pts if ccw else pts[::-1])
+
+
+def _shoelace(vx, vy, offs):
+    """Signed area per CSR slice of open rings, each about its first
+    vertex (so that coordinates near 100° lose no digits to
+    cancellation)."""
+    out = np.zeros(len(offs) - 1)
+    for i in range(len(out)):
+        x, y = vx[offs[i]:offs[i + 1]], vy[offs[i]:offs[i + 1]]
+        if len(x):
+            x, y = x - x[0], y - y[0]
+            out[i] = 0.5 * np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y)
+    return out
+
+
+def _clip_oracle(rings, w):
+    """Σ over rings of the signed shoelace area of the ring clipped to
+    each window (`predicates.clip_ring_to_rects`): shells CCW and holes
+    CW by construction, so the sum is the area of the piece."""
+    tot = np.zeros(len(w))
+    for r in rings:
+        tot += _shoelace(*predicates.clip_ring_to_rects(
+            r, w[:, 0], w[:, 1], w[:, 2], w[:, 3]))
+    return tot
+
+
+def _windows(rng, rings, rect, k):
+    """k windows inside rect: sides at random x/y and at vertex
+    coordinates, so sides cross diagonal edges and y0/y1 land on
+    vertex y's."""
+    v = np.vstack(rings)
+    v = v[(v[:, 0] > rect[0]) & (v[:, 0] < rect[2])
+          & (v[:, 1] > rect[1]) & (v[:, 1] < rect[3])]
+    c = rect[0] + rng.rand(k, 4) * (rect[2] - rect[0])
+    c[:, 1::2] = rect[1] + rng.rand(k, 2) * (rect[3] - rect[1])
+    if len(v):
+        pick = v[rng.randint(0, len(v), (k, 4))]
+        on = rng.rand(k, 4) < 0.5
+        c[:, 0::2] = np.where(on[:, 0::2], pick[:, 0::2, 0], c[:, 0::2])
+        c[:, 1::2] = np.where(on[:, 1::2], pick[:, 1::2, 1], c[:, 1::2])
+    return np.c_[np.minimum(c[:, 0], c[:, 2]), np.minimum(c[:, 1], c[:, 3]),
+                 np.maximum(c[:, 0], c[:, 2]), np.maximum(c[:, 1], c[:, 3])]
+
+
+class TestBandIdentity:
+    """`overlay.piece_areas` (Σ band height × mid-line length) against
+    the per-ring clip oracle on generated curved pieces, and bit for
+    bit on dyadic rectilinear ones."""
+
+    @staticmethod
+    def _nested(rng, cx, cy):
+        """CCW shell, CW lake, CCW island in the lake: radii and centre
+        offsets keep the rings disjoint and nested."""
+        shell = _wiggly(rng, cx, cy, 4.0, 40, True)
+        hx, hy = cx + 0.6 * rng.rand() - 0.3, cy + 0.6 * rng.rand() - 0.3
+        lake = _wiggly(rng, hx, hy, 1.6, 20, False)
+        island = _wiggly(rng, hx + 0.4 * rng.rand() - 0.2,
+                         hy + 0.4 * rng.rand() - 0.2, 0.4, 12, True)
+        return [shell, lake, island]
+
+    def test_curved_pieces_vs_clip_oracle(self):
+        rng = np.random.RandomState(5)
+        for _ in range(40):
+            rings = self._nested(rng, 5.0, 5.0)
+            if rng.rand() < 0.5:
+                rings = rings[:2]
+            rect = (0.0, 0.0, 10.0, 10.0)
+            w = _windows(rng, rings, rect, 30)
+            got = overlay.piece_areas(
+                _index([(rings, rect)]), np.zeros(len(w), np.int64),
+                w[:, 0], w[:, 1], w[:, 2], w[:, 3])
+            np.testing.assert_allclose(got, _clip_oracle(rings, w),
+                                       rtol=0, atol=1e-12)
+
+    def test_tiler_cut_pieces_vs_clip_oracle(self):
+        """Pieces as the tiler stores them: CLIP_EPS window runs and
+        Sutherland–Hodgman bridges between the clip's disjoint parts.
+        Windows lie inside the exact cell, as the overlay kernel's."""
+        rng = np.random.RandomState(9)
+        res = 6
+        w6 = grid.cell_width(res)
+        n_pieces = n_runs = 0
+        for _ in range(30):
+            cid = int(grid.pack(res, 50 + rng.randint(0, 2),
+                                20 + rng.randint(0, 2)))
+            cell = grid.cell_bounds(cid)
+            cx = cell[0] + (rng.rand() - 0.5) * w6
+            cy = cell[1] + (rng.rand() - 0.5) * w6
+            geom = {"type": "Polygon", "rings": self._nested(
+                rng, 0.0, 0.0)}
+            geom["rings"] = [r * (w6 / 5.0) + (cx, cy)
+                             for r in geom["rings"]]
+            b = tiler.clip_geom_to_cell(geom, cid)
+            if b is None:
+                continue
+            n_pieces += 1
+            rings = core.all_rings(wkb.loads(b))
+            s = predicates.segments_of_rings(rings)
+            e = tiler.CLIP_EPS
+            n_runs += bool(np.any(
+                ((s[:, 0] == s[:, 2])
+                 & ((s[:, 0] == cell[0] - e) | (s[:, 0] == cell[2] + e)))
+                | ((s[:, 1] == s[:, 3])
+                   & ((s[:, 1] == cell[1] - e) | (s[:, 1] == cell[3] + e)))))
+            w = _windows(rng, rings, cell, 30)
+            got = overlay.piece_areas(
+                _index([(rings, cell)]), np.zeros(len(w), np.int64),
+                w[:, 0], w[:, 1], w[:, 2], w[:, 3])
+            np.testing.assert_allclose(got, _clip_oracle(rings, w),
+                                       rtol=0, atol=1e-12)
+        assert n_pieces >= 20 and n_runs >= 20
+
+    def test_dyadic_rectilinear_bitexact(self):
+        """Rect shell with a rect hole and an island, coordinates and
+        windows multiples of 2^-6: every band term is exact, so the
+        areas equal rect algebra bit for bit."""
+        rng = np.random.RandomState(3)
+
+        def box(x0, y0, x1, y1, ccw=True):
+            r = _ring([(x0, y0), (x1, y0), (x1, y1), (x0, y1)])
+            return r if ccw else r[::-1]
+
+        def ov(b, w):
+            return (np.maximum(0.0, np.minimum(b[2], w[:, 2])
+                               - np.maximum(b[0], w[:, 0]))
+                    * np.maximum(0.0, np.minimum(b[3], w[:, 3])
+                                 - np.maximum(b[1], w[:, 1])))
+
+        for _ in range(50):
+            q = rng.randint(0, 64, 6) / 64.0
+            shell = (q[0], q[1], 6.0 + q[2], 6.0 + q[3])
+            hole = (1.0 + q[4], 1.0 + q[5], 4.5, 4.25)
+            isle = (2.0, 2.0, 3.0 + q[0], 3.0 + q[1])
+            rings = [box(*shell), box(*hole, ccw=bool(rng.rand() < 0.5)),
+                     box(*isle)]
+            c = rng.randint(0, 8 * 64, (30, 4)) / 64.0
+            w = np.c_[np.minimum(c[:, 0], c[:, 2]),
+                      np.minimum(c[:, 1], c[:, 3]),
+                      np.maximum(c[:, 0], c[:, 2]),
+                      np.maximum(c[:, 1], c[:, 3])]
+            got = overlay.piece_areas(
+                _index([(rings, shell)]), np.zeros(len(w), np.int64),
+                w[:, 0], w[:, 1], w[:, 2], w[:, 3])
+            want = ov(shell, w) - ov(hole, w) + ov(isle, w)
+            assert got.tolist() == want.tolist()
+            assert got.tolist() == _clip_oracle(
+                [box(*shell), box(*hole, ccw=False), box(*isle)],
+                w).tolist()
+
+    def test_many_tiles_one_call(self):
+        """Pairs over several tiles in one call give each pair its own
+        tile's area."""
+        rng = np.random.RandomState(17)
+        pieces = [(self._nested(rng, 5.0, 5.0), (0.0, 0.0, 10.0, 10.0))
+                  for _ in range(4)]
+        I = _index(pieces)
+        tiles = rng.randint(0, 4, 60)
+        w = _windows(rng, pieces[0][0], pieces[0][1], 60)
+        got = overlay.piece_areas(I, tiles, w[:, 0], w[:, 1], w[:, 2],
+                                  w[:, 3])
+        for t in range(4):
+            m = tiles == t
+            np.testing.assert_allclose(
+                got[m], _clip_oracle(pieces[t][0], w[m]), rtol=0,
+                atol=1e-12)
 
 
 def brute_overlay(px0, py0, px1, py1):
@@ -138,20 +326,21 @@ class TestOverlayArea:
             assert got.get(i, {}) == brute_overlay(a, b, c, d), \
                 f"window {i} {(a, b, c, d)}"
 
-    def test_province_total_area_roundtrip(self, spark, province_engine):
-        """Real (curved) geometry end-to-end: a window covering all of
-        China must give, per region, exactly that region's own polygon
-        area (shell minus holes, from the source WKB) — checking the
-        tile partition, the exact-cell re-clip (CLIP_EPS undo), and the
-        nesting signs on non-rectilinear pieces in one identity."""
-        from areacity_query_geometry_spark.geom import core as gcore, wkb
+    def test_province_total_area_roundtrip(self, spark, dense_engine):
+        """Curved geometry end-to-end (the generated dense set's wiggly
+        oblique edges): a window covering the whole set must give, per
+        region, exactly that region's own polygon area (shell minus
+        holes, from the source WKB) — checking the tile partition, the
+        exact-cell re-clip (CLIP_EPS undo) and the ring roles on
+        non-rectilinear pieces in one identity. The lattice spans
+        73–135 × 18–54 and its warp moves edges by < 0.3°, so the
+        window is that extent padded by 1°."""
+        from areacity_query_geometry_spark.geom import core as gcore
 
-        rows = province_engine.boundaries.select(
+        rows = dense_engine.boundaries.select(
             "region_id", "geom_wkb").collect()
         want = {}
         for r in rows:
-            if r["geom_wkb"] is None:
-                continue
             g = wkb.loads(bytes(r["geom_wkb"]))
             a = 0.0
             for rings in gcore.polygons_of(g):
@@ -159,8 +348,9 @@ class TestOverlayArea:
                 for h in rings[1:]:
                     a -= abs(gcore.ring_area(h))
             want[int(r["region_id"])] = a
-        got = run_overlay(spark, province_engine,
-                          [(70.0, 0.0, 140.0, 60.0)])[0]
+        got = run_overlay(spark, dense_engine,
+                          [(72.0, 17.0, 136.0, 55.0)])[0]
+        assert len(got) == 84
         assert set(got) == {k for k, v in want.items() if v > 0}
         for rid, area in got.items():
             assert area == pytest.approx(want[rid], rel=1e-9), rid
@@ -173,19 +363,14 @@ class TestOverlayArea:
             world_engine, probes, where="deep = 0").collect()
         assert {int(r["region_id"]) for r in rows} == {1}
 
-    def test_real_geometry_res_independent(self, spark):
-        """Random partial windows over real curved geometry: engines at
-        base_res 6 and 8 must report the same (window, region) areas to
-        rel 1e-9 — the area is a property of the geometry, not of the
-        tile grid (the overlay kernel's exact-cell re-clip undoes
-        CLIP_EPS, and zero-width bridge runs are area-neutral)."""
-        import numpy as np
-
-        from areacity_query_geometry_spark.engine import SpatialEngine
-
-        path = reference_file(PROVINCE_FIXTURE)
-        eng6 = SpatialEngine.from_geojson(spark, path, base_res=6)
-        eng8 = SpatialEngine.from_geojson(spark, path, base_res=8)
+    def test_real_geometry_res_independent(self, spark, dense_engines_6_8):
+        """Random partial windows over curved geometry (the generated
+        dense set): engines at base_res 6 and 8 must report the same
+        (window, region) areas to rel 1e-9 — the area is a property of
+        the geometry, not of the tile grid (the overlay kernel's
+        exact-cell re-clip undoes CLIP_EPS, and zero-width bridge runs
+        are area-neutral)."""
+        eng6, eng8 = dense_engines_6_8
         rng = np.random.RandomState(13)
         wins = []
         for _ in range(40):
@@ -195,6 +380,7 @@ class TestOverlayArea:
                          b + 10.0 ** (rng.rand() * 2 - 1)))
         r6 = run_overlay(spark, eng6, wins)
         r8 = run_overlay(spark, eng8, wins)
+        assert len(r6) == len(wins)
         assert set(r6) == set(r8)
         for pid in r6:
             assert set(r6[pid]) == set(r8[pid]), pid

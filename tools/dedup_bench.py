@@ -20,7 +20,9 @@ import subprocess
 import sys
 import tempfile
 
-from scaling_bench import APPEND_MARKER, _fmt_runs, build_zip, MALLOC_TUNING
+from scaling_bench import (
+    APPEND_MARKER, _fmt_runs, build_zip, driver_submit_args, MALLOC_TUNING,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BEGIN = "<!-- DEDUP_BENCH_BEGIN (tools/dedup_bench.py rewrites this block) -->"
@@ -40,8 +42,7 @@ def run_dedup(cpus: int, n_docs: int) -> dict:
              "--master", f"local[{cpus}]",
              "--conf", f"spark.sql.shuffle.partitions={cpus}",
              "--conf", "spark.ui.enabled=false",
-             "--conf", "spark.driver.extraJavaOptions=-Xms24g -XX:+AlwaysPreTouch",
-             "--driver-memory", "60g",
+             *driver_submit_args(),
              "--py-files", zip_path,
              os.path.join(REPO, "tools", "submit_dedup.py"),
              str(n_docs)],

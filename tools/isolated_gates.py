@@ -34,13 +34,14 @@ def main():
 
     from pyspark.sql import SparkSession
 
+    from areacity_query_geometry_spark.hostload import driver_memory_conf
+
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("aqgs-isolated-gates")
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "60g")
-        .config("spark.driver.extraJavaOptions", "-Xms24g -XX:+AlwaysPreTouch")
+        .config(map=driver_memory_conf())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")

@@ -20,7 +20,9 @@ import subprocess
 import sys
 import tempfile
 
-from scaling_bench import APPEND_MARKER, _fmt_runs, build_zip, MALLOC_TUNING
+from scaling_bench import (
+    APPEND_MARKER, _fmt_runs, build_zip, driver_submit_args, MALLOC_TUNING,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BEGIN = "<!-- KNN_BENCH_BEGIN (tools/knn_bench.py rewrites this block) -->"
@@ -41,8 +43,7 @@ def run_knn(cpus: int, n_probes: int, n_points: int, res: int) -> dict:
              "--conf", f"spark.sql.shuffle.partitions={cpus}",
              "--conf", "spark.ui.enabled=false",
              "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=65536",
-             "--conf", "spark.driver.extraJavaOptions=-Xms24g -XX:+AlwaysPreTouch",
-             "--driver-memory", "60g",
+             *driver_submit_args(),
              "--py-files", zip_path,
              os.path.join(REPO, "tools", "submit_knn.py"),
              str(n_probes), str(n_points), str(res)],

@@ -34,12 +34,11 @@ def main():
 
     from areacity_query_geometry_spark import fixtures_dense
     from areacity_query_geometry_spark.engine import PROBE_SALT, SpatialEngine
+    from areacity_query_geometry_spark.hostload import driver_memory_conf
 
     spark = (SparkSession.builder.master(f"local[{cpus}]")
              .config("spark.sql.shuffle.partitions", str(cpus))
-             .config("spark.driver.memory", "48g")
-             .config("spark.driver.extraJavaOptions",
-                     "-Xms24g -XX:+AlwaysPreTouch")
+             .config(map=driver_memory_conf())
              .config("spark.ui.enabled", "false")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")

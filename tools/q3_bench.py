@@ -21,7 +21,9 @@ import subprocess
 import sys
 import tempfile
 
-from scaling_bench import APPEND_MARKER, _fmt_runs, build_zip, MALLOC_TUNING
+from scaling_bench import (
+    APPEND_MARKER, _fmt_runs, build_zip, driver_submit_args, MALLOC_TUNING,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BEGIN = "<!-- Q3_BENCH_BEGIN (tools/q3_bench.py rewrites this block) -->"
@@ -42,8 +44,7 @@ def run_q3(cpus: int, n_probes: int, base_res: int) -> dict:
              "--conf", f"spark.sql.shuffle.partitions={cpus}",
              "--conf", "spark.ui.enabled=false",
              "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=65536",
-             "--conf", "spark.driver.extraJavaOptions=-Xms24g -XX:+AlwaysPreTouch",
-             "--driver-memory", "60g",
+             *driver_submit_args(),
              "--py-files", zip_path,
              os.path.join(REPO, "tools", "submit_q3.py"),
              str(n_probes), str(base_res)],

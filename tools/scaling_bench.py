@@ -30,7 +30,9 @@ import tempfile
 import zipfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from areacity_query_geometry_spark.hostload import MALLOC_TUNING  # noqa: E402
+from areacity_query_geometry_spark.hostload import (  # noqa: E402
+    MALLOC_TUNING, driver_submit_args,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "areacity_query_geometry_spark"
@@ -73,10 +75,9 @@ def run(cpus: int, lookups: int, fixture: str = "province",
              # page-faulting cost a MEASURED 65-127s on the first
              # heap-hungry run (docs leg), with zero steal and zero PSI
              # pressure — an engine-looking regression that was purely
-             # JVM memory management. 24g covers the observed ~18g
-             # steady-state heap so timed runs never grow the heap.
-             "--conf", "spark.driver.extraJavaOptions=-Xms24g -XX:+AlwaysPreTouch",
-             "--driver-memory", "60g",
+             # JVM memory management. Both sizes follow the host's
+             # memory (hostload.driver_memory_conf).
+             *driver_submit_args(),
              "--py-files", zip_path,
              os.path.join(REPO, "tools", "submit_job.py"), str(lookups),
              fixture, str(base_res), str(docs_n)],

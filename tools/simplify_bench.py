@@ -14,7 +14,9 @@ import subprocess
 import sys
 import tempfile
 
-from scaling_bench import APPEND_MARKER, _fmt_runs, build_zip, MALLOC_TUNING
+from scaling_bench import (
+    APPEND_MARKER, _fmt_runs, build_zip, driver_submit_args, MALLOC_TUNING,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BEGIN = "<!-- SIMPLIFY_BENCH_BEGIN (tools/simplify_bench.py rewrites this block) -->"
@@ -36,8 +38,7 @@ def run_leg(cpus: int, n_verts: int, per_line: int,
              "--conf", f"spark.sql.shuffle.partitions={cpus * 2}",
              "--conf", "spark.ui.enabled=false",
              "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=1048576",
-             "--conf", "spark.driver.extraJavaOptions=-Xms24g -XX:+AlwaysPreTouch",
-             "--driver-memory", "60g",
+             *driver_submit_args(),
              "--py-files", zip_path,
              os.path.join(REPO, "tools", "submit_simplify.py"),
              str(n_verts), str(per_line), "5.0", mode],

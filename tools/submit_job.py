@@ -4,11 +4,12 @@ The engine package ships as a zip on --py-files — exactly how the job
 reaches a real multi-executor cluster — and is imported from there (the
 scaling bench runs this from a neutral cwd so the zip is the ONLY
 source of the package). Master/parallelism/memory come from the
-spark-submit command line, e.g.:
+spark-submit command line, e.g. (size the driver memory to the host;
+tools/scaling_bench.py passes `hostload.driver_submit_args()`):
 
     spark-submit --master "local[8]" \
         --conf spark.sql.shuffle.partitions=8 \
-        --driver-memory 60g \
+        --driver-memory 5g \
         --py-files dist/areacity_query_geometry_spark.zip \
         tools/submit_job.py 100000000
 
