@@ -284,6 +284,76 @@ def _slab_of(y: np.ndarray, y0: np.ndarray, h: np.ndarray) -> np.ndarray:
     return np.clip(s, 0, SLABS - 1).astype(np.int64)
 
 
+def _seg_len(x1, y1, x2, y2) -> np.ndarray:
+    """Each segment's length, 1.0 when degenerate: the `ln` of the
+    slab pad and of `_pair_hits_flat`. hypot reads only |Δx| and |Δy|,
+    so a row and its reversal give the same bits."""
+    ln = np.hypot(x2 - x1, y2 - y1)
+    ln[ln == 0] = 1.0
+    return ln
+
+
+def _seg_rows(SEG: np.ndarray, ref: np.ndarray) -> np.ndarray:
+    """(n, 4) x1, y1, x2, y2 of signed refs into the boundary index's
+    segment store (`_build_boundary_index`): ref j ≥ 0 is row j as
+    stored, ref ~j is row j reversed (x2, y2, x1, y1). Every kernel
+    gathers its segments here, so each tile's rows come back exactly
+    as its ring has them: the same bits in the same direction. One
+    take of (x, y) endpoints, SEG's row j being complex128 elements 2j
+    and 2j + 1: a ref's first endpoint is 2·ref XOR its sign mask
+    (2j, or 2j + 1 for ~j), its second that XOR 1."""
+    r = np.asarray(ref)
+    idx = np.empty((len(r), 2), np.int64)
+    first = idx[:, 0]
+    np.left_shift(r, 1, out=first, dtype=np.int64)
+    first ^= r >> (8 * r.itemsize - 1)
+    np.bitwise_xor(first, 1, out=idx[:, 1])
+    return SEG.view(np.complex128).ravel().take(idx).view(np.float64)
+
+
+def _dedup_segments(S: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(SEG, ref): each distinct undirected row of the (n, 4) float64
+    segments `S` once, in order of first occurrence and in a canonical
+    direction (the endpoint with the smaller (x, y) bit pattern first),
+    and per row of `S` its signed ref into SEG (`_seg_rows` gives the
+    row back bit for bit). Rows are compared by bits, so -0.0 and 0.0
+    stay apart and nothing a kernel reads can change. One sort of a
+    uint64 key, a hash of the canonical row in the high bits and the
+    row number in the low ones, brings equal rows together, first
+    occurrence first; an exact compare with the previous row then
+    splits them, so a hash collision can only miss a dedup."""
+    n = len(S)
+    x1, y1, x2, y2 = S.view(np.int64).T
+    rev = (x1 > x2) | ((x1 == x2) & (y1 > y2))
+    C = (np.where(rev, x2, x1), np.where(rev, y2, y1),
+         np.where(rev, x1, x2), np.where(rev, y1, y2))
+    key = np.zeros(n, np.uint64)
+    for c, m in zip(C, (0x9E3779B97F4A7C15, 0xC2B2AE3D27D4EB4F,
+                        0x165667B19E3779F9, 0xD6E8FEB86659FD93)):
+        key ^= c.view(np.uint64) * np.uint64(m)
+    nb = np.uint64(max(1, (n - 1).bit_length()))
+    key >>= nb
+    key <<= nb
+    key |= np.arange(n, dtype=np.uint64)
+    key.sort()
+    o = (key & ((np.uint64(1) << nb) - np.uint64(1))).astype(np.int64)
+    new = np.zeros(n, dtype=bool)
+    new[:1] = True
+    for c in C:
+        co = c[o]
+        new[1:] |= co[1:] != co[:-1]
+    first = o[new]
+    keep = np.zeros(n, dtype=bool)
+    keep[first] = True
+    uid = np.cumsum(keep) - 1
+    ref = np.empty(n, np.int64)
+    ref[o] = np.repeat(uid[first], np.diff(np.append(np.nonzero(new)[0], n)))
+    SEG = np.empty((len(first), 4), np.int64)
+    for k, c in enumerate(C):
+        SEG[:, k] = c[keep]
+    return SEG.view(np.float64), np.where(rev, ~ref, ref)
+
+
 def _build_boundary_index(tiles, count: np.ndarray, segs: np.ndarray) -> dict:
     """The driver-side numpy half of `SpatialEngine._boundary_index`:
     one entry per kind≠1 tile in `tiles` (a mapping of equal-length
@@ -295,16 +365,22 @@ def _build_boundary_index(tiles, count: np.ndarray, segs: np.ndarray) -> dict:
 
     - `cells`/`cell_ptr`: sorted cell table and per-cell tile ranges;
       per tile `region`, `deep`, `kind`, the rect, and `seg_ptr`;
-    - `SEG` (nseg, 5): x1, y1, x2, y2, ln per segment, each segment
-      once (ln = its length, 1.0 when degenerate);
+    - `SEG` (nuniq, 4): x1, y1, x2, y2 of each distinct undirected
+      segment once (`_dedup_segments`). A province's edge is also an
+      edge of its cities and districts, and neighbours share edges in
+      reverse, so on the China-scale set fewer than half the ring
+      segments are distinct;
+    - `tile_seg`: per tile, `tile_seg[seg_ptr[t]:seg_ptr[t + 1]]` are
+      its ring segments in ring order, as signed refs into SEG (ref ~j
+      is row j reversed; `_seg_rows` resolves them);
     - the y-slab CSR: each tile's [miny, maxy] cut into SLABS equal
       slabs (`slab_y0`, `slab_h`); slab t*SLABS+s lists (`slab_ptr`,
-      `slab_seg`) every segment of tile t whose y-range, padded by
-      4·EPS·(1 + ln), overlaps slab s. No other segment can cross a
-      probe's scanline or accept it within EPS, so the kernel tests
-      only the probe's slab;
-    - `fseg_ptr`/`fseg`: per tile, the indexes into SEG of the
-      segments fit for distance and crossing use. A stored tile is its
+      `slab_seg`, refs in ring order) every segment of tile t whose
+      y-range, padded by 4·EPS·(1 + ln) (`_seg_len`), overlaps slab s.
+      No other segment can cross a probe's scanline or accept it
+      within EPS, so the kernel tests only the probe's slab;
+    - `fseg_ptr`/`fseg`: per tile, the refs of the segments fit for
+      distance and crossing use, in ring order. A stored tile is its
       region clipped to the CLIP_EPS-expanded cell rect
       (tiler.clip_geom_to_cell), so its rings also run ALONG that
       window: closure edges, and Sutherland–Hodgman bridge runs that
@@ -316,6 +392,8 @@ def _build_boundary_index(tiles, count: np.ndarray, segs: np.ndarray) -> dict:
       from the tile's own rect, so exact float equality finds every
       run; a true boundary segment on the window line would survive in
       the neighbouring cell's tile, so per-region minima are unchanged.
+
+    The refs are int32 while there are fewer than 2^31 slab entries.
     """
     cell, region, deep, kind = (
         np.asarray(tiles[k]).astype(np.int64)
@@ -335,8 +413,6 @@ def _build_boundary_index(tiles, count: np.ndarray, segs: np.ndarray) -> dict:
     np.cumsum(seg_len, out=seg_ptr[1:])
     S = segs[_ranges((np.cumsum(count) - count)[order], seg_len)[1]]
     x1, y1, x2, y2 = S[:, 0], S[:, 1], S[:, 2], S[:, 3]
-    ln = np.hypot(x2 - x1, y2 - y1)
-    ln[ln == 0] = 1.0
     cells, first = np.unique(cell, return_index=True)
     cell_ptr = np.append(first, len(cell)).astype(np.int64)
     ntiles = len(cell)
@@ -346,7 +422,7 @@ def _build_boundary_index(tiles, count: np.ndarray, segs: np.ndarray) -> dict:
     h = (rect["maxy"] - y0) / SLABS
     ok = np.isfinite(y0) & np.isfinite(h) & (h > 0)
     y0, h = np.where(ok, y0, 0.0), np.where(ok, h, 1.0)
-    pad = 4 * predicates.EPS * (1 + ln)
+    pad = 4 * predicates.EPS * (1 + _seg_len(x1, y1, x2, y2))
     ty0, th = y0[tile_of_seg], h[tile_of_seg]
     s_lo = _slab_of(np.minimum(y1, y2) - pad, ty0, th)
     s_hi = _slab_of(np.maximum(y1, y2) + pad, ty0, th)
@@ -367,16 +443,18 @@ def _build_boundary_index(tiles, count: np.ndarray, segs: np.ndarray) -> dict:
     fseg_ptr = np.zeros(ntiles + 1, dtype=np.int64)
     np.cumsum(np.bincount(tile_of_seg[fseg], minlength=ntiles),
               out=fseg_ptr[1:])
+    SEG, ref = _dedup_segments(S)
+    ref = ref.astype(ix)
     return {
         "cells": cells, "cell_ptr": cell_ptr,
         "region": region, "deep": deep, "kind": kind,
         "minx": rect["minx"], "miny": rect["miny"],
         "maxx": rect["maxx"], "maxy": rect["maxy"],
-        "seg_ptr": seg_ptr, "SEG": np.column_stack((S, ln)),
+        "seg_ptr": seg_ptr, "tile_seg": ref, "SEG": SEG,
         "slab_y0": y0, "slab_h": h,
         "slab_ptr": slab_ptr.astype(ix),
-        "slab_seg": seg_of[np.argsort(key, kind="stable")].astype(ix),
-        "fseg_ptr": fseg_ptr, "fseg": fseg.astype(ix),
+        "slab_seg": ref[seg_of[np.argsort(key, kind="stable")]],
+        "fseg_ptr": fseg_ptr, "fseg": ref[fseg],
     }
 
 
@@ -411,16 +489,16 @@ def _batch_index(pdf: pd.DataFrame) -> tuple[dict, np.ndarray]:
 
 
 def _slab_rows(I: dict, tiles: np.ndarray, py: np.ndarray):
-    """(row_pair, x1, y1, x2, y2, ln): the flat rows of each pair's
+    """(row_pair, x1, y1, x2, y2): the flat rows of each pair's
     y-slab, the slab of `py[i]` in tile `tiles[i]`, gathered from the
-    packed store `SEG` (`_build_boundary_index`). The segments left out
-    can neither cross the scanline y = py[i] nor come within EPS of a
-    point on it."""
+    segment store `SEG` (`_build_boundary_index`, `_seg_rows`). The
+    segments left out can neither cross the scanline y = py[i] nor
+    come within EPS of a point on it."""
     slab = tiles * SLABS + _slab_of(py, I["slab_y0"][tiles],
                                     I["slab_h"][tiles])
     soff = I["slab_ptr"][slab].astype(np.int64)
     row_pair, idx = _ranges(soff, I["slab_ptr"][slab + 1] - soff)
-    return (row_pair, *I["SEG"][I["slab_seg"][idx]].T)
+    return (row_pair, *_seg_rows(I["SEG"], I["slab_seg"][idx]).T)
 
 
 def _slab_point_hits(I: dict, tiles: np.ndarray, px: np.ndarray,
@@ -428,11 +506,12 @@ def _slab_point_hits(I: dict, tiles: np.ndarray, px: np.ndarray,
     """SFS `intersects(point, tile)` per (point, kind-0 tile) pair by
     `_pair_hits_flat` over the point's `_slab_rows`, so the verdicts
     are those of the tile's whole ring."""
-    row_pair, x1, y1, x2, y2, ln = _slab_rows(I, tiles, py)
+    row_pair, x1, y1, x2, y2 = _slab_rows(I, tiles, py)
     dx = x2 - x1
     yd = y2 - y1
     return _pair_hits_flat(
-        x1, y1, x2, y2, np.where(yd == 0, 1.0, yd), dx, ln,
+        x1, y1, x2, y2, np.where(yd == 0, 1.0, yd), dx,
+        _seg_len(x1, y1, x2, y2),
         (dx == 0) & (yd == 0),
         row_pair, px[row_pair], py[row_pair], len(tiles))
 
@@ -469,7 +548,7 @@ def _boundary_prim_hits(I: dict, tiles: np.ndarray, pk: np.ndarray,
         t, pb = tiles[b0:b1], p[b0:b1]
         f0 = fptr[t]
         rp, idx = _ranges(f0, fptr[t + 1] - f0)
-        seg = I["SEG"][I["fseg"][idx], :4]
+        seg = _seg_rows(I["SEG"], I["fseg"][idx])
         a = pb[rp]
         rect = pk[b0:b1][rp] == 1
         touch = np.empty(len(rp), dtype=bool)
@@ -530,11 +609,11 @@ def _prim_tile_hits(I: dict | None, tix: np.ndarray, kind: np.ndarray,
         t = tix[m3[b]]
         has = sptr[t + 1] > sptr[t]
         b, t = b[has], t[has]
-        first = sptr[t].copy()
+        first = I["tile_seg"][sptr[t]]
         mf = fptr[t + 1] > fptr[t]
         first[mf] = I["fseg"][fptr[t[mf]]]
         ok[b] = True
-        qx[b], qy[b] = I["SEG"][first, 0], I["SEG"][first, 1]
+        qx[b], qy[b] = _seg_rows(I["SEG"], first)[:, :2].T
     w3 = wkt[m3]
     order = np.argsort(w3, kind="stable")
     sw = w3[order]
@@ -737,9 +816,9 @@ def _pair_argmins(I: dict, ppx: np.ndarray, ppy: np.ndarray,
                   tix: np.ndarray) -> dict:
     """Planar and cos-scaled nearest points of each (point, kind-0
     tile) pair over the tile's distance-fit segments, FLAT over all
-    (pair, segment) rows read from the packed store as
-    `SEG[fseg[fseg_ptr[t]:fseg_ptr[t + 1]]]`: the arithmetic of
-    predicates.nearest_on_segments_idx and
+    (pair, segment) rows read from the segment store as
+    `_seg_rows(SEG, fseg[fseg_ptr[t]:fseg_ptr[t + 1]])`: the arithmetic
+    of predicates.nearest_on_segments_idx and
     nearest_on_segments_scaled_idx, formula for formula, with the same
     first-hit tie-break. Every tile needs at least one fit segment.
 
@@ -760,7 +839,7 @@ def _pair_argmins(I: dict, ppx: np.ndarray, ppy: np.ndarray,
     soffs = sidx - np.repeat(s0, scnt)
     starts = np.zeros(len(tix), dtype=np.int64)
     np.cumsum(scnt[:-1], out=starts[1:])
-    seg = I["SEG"][I["fseg"][sidx], :4]
+    seg = _seg_rows(I["SEG"], I["fseg"][sidx])
     ax, ay, bx, by = seg.T
     cxt = (I["minx"][tix] + I["maxx"][tix]) / 2.0
     pxa_p = ppx - 360.0 * np.round((ppx - cxt) / 360.0)
@@ -1428,9 +1507,9 @@ class SpatialEngine:
 
         broadcast_wkb_budget: ceiling on the boundary (kind≠1) tile-WKB
         bytes. It gates the pre-decoded boundary-tile index
-        (`_boundary_index`, held once per Python worker: 3.4× the WKB
-        bytes on the perfbench store, 56.7 MB pickled from 16.5 MB, so
-        the 128 MB default prices a ~440 MB worker-side index, the
+        (`_boundary_index`, held once per Python worker: 2.1× the WKB
+        bytes on the perfbench store, 35.5 MB pickled from 16.5 MB, so
+        the 128 MB default prices a ~275 MB worker-side index, the
         in-memory regime the reference runs its whole process in)
         and the broadcast of any tile side that carries WKB. Measured
         on the 40k-feature township set (1.04M tiles, 0.3 GB boundary
@@ -1604,9 +1683,9 @@ class SpatialEngine:
         every kind≠1 tile pre-decoded into flat numpy CSR arrays
         (`_build_boundary_index`): sorted cell table, per-cell tile
         ranges, per-tile region/deep/kind/rect/segment ranges, one
-        packed (nseg, 5) segment store, a per-tile y-slab CSR into it
-        for the point kernel, and an index of the segments fit for
-        distance use.
+        store of the distinct undirected segments with per-tile signed
+        refs into it, a per-tile y-slab CSR of refs for the point
+        kernel, and the refs of the segments fit for distance use.
 
         Returns (Broadcast, bcells_df), or None when `_boundary_fits`
         fails (the join fallbacks take over) — unless `unbounded`,

@@ -54,8 +54,8 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from . import grid
 from .engine import (
-    SLABS, _batch_index, _pair_parity, _ranges, _row_blocks, _slab_of,
-    _slab_rows,
+    SLABS, _batch_index, _pair_parity, _ranges, _row_blocks, _seg_rows,
+    _slab_of, _slab_rows,
 )
 
 
@@ -87,8 +87,10 @@ def piece_lengths(I: dict, tiles: np.ndarray, x1: np.ndarray,
         n = b1 - b0
         rp, seg = _ranges(lo[b0:b1], cnt[b0:b1])
         m = one[b0:b1][rp]
-        seg[m] = I["slab_seg"][seg[m]]
-        ex1, ey1, ex2, ey2 = I["SEG"][seg, :4].T
+        ref = np.empty(len(seg), dtype=np.int64)
+        ref[m] = I["slab_seg"][seg[m]]
+        ref[~m] = I["tile_seg"][seg[~m]]
+        ex1, ey1, ex2, ey2 = _seg_rows(I["SEG"], ref).T
         sx1, sy1 = x1[b0:b1], y1[b0:b1]
         dx, dy = x2[b0:b1] - sx1, y2[b0:b1] - sy1
         gx, gy = ex2 - ex1, ey2 - ey1
@@ -118,7 +120,7 @@ def piece_lengths(I: dict, tiles: np.ndarray, x1: np.ndarray,
         seg_of, ln = bs[:-1][same][pos], ln[pos]
         mx = 0.5 * (ax[pos] + qx[pos])
         my = 0.5 * (ay[pos] + qy[pos])
-        pr, px1, py1, px2, py2, _ = _slab_rows(I, tiles[b0:b1][seg_of], my)
+        pr, px1, py1, px2, py2 = _slab_rows(I, tiles[b0:b1][seg_of], my)
         yd = py2 - py1
         inside = _pair_parity(px1, py1, py2, np.where(yd == 0, 1.0, yd),
                               px2 - px1, pr, mx[pr], my[pr], len(my))

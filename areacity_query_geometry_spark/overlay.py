@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from . import grid
-from .engine import _ranges, _row_blocks
+from .engine import _ranges, _row_blocks, _seg_rows
 from .linework import piece_lengths, zonal_join
 
 
@@ -75,7 +75,7 @@ def piece_areas(I: dict, tiles: np.ndarray, x0: np.ndarray,
     for b0, b1 in _row_blocks(cnt + 1):
         wx0, wy0, wx1, wy1 = (a[b0:b1] for a in (x0, y0, x1, y1))
         rp, seg = _ranges(I["seg_ptr"][tiles[b0:b1]], cnt[b0:b1])
-        ex1, ey1, ex2, ey2 = I["SEG"][seg, :4].T
+        ex1, ey1, ex2, ey2 = _seg_rows(I["SEG"], I["tile_seg"][seg]).T
         # band edges: the vertices in [x0, x1] (each ring vertex starts
         # one segment) and the crossings of x = x0 and x = x1
         v = (ex1 >= wx0[rp]) & (ex1 <= wx1[rp])

@@ -16,6 +16,11 @@ bytes hit a table format:
   configured. Swapping formats is exactly one constructor argument in
   `tile_store.save/load` — no engine code changes.
 
+`ParquetStoreFormat` reads both tables with the schema Spark wrote into
+each table's first part file (`_spark_schema`), so `tile_store.load`
+runs no Spark job: without it, each `spark.read.parquet` runs one
+schema-inference job.
+
 `ParquetStoreFormat.read_tiles_arrow` hands the engine's two broadcast
 index builds their tile rows as one Arrow table, read from its own
 files with pyarrow, so an engine loaded from a Parquet store builds both
@@ -31,6 +36,40 @@ import os
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# the footer key under which Spark's Parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _spark_schema(table_dir: str) -> StructType | None:
+    """The Spark schema that Spark's Parquet writer stored in the footer
+    of `table_dir`'s first part file, read with pyarrow on the driver
+    (no Spark job); None when the directory has no part file of its own
+    (a partitioned layout) or the footer lacks the key, and the caller
+    leaves the schema to Spark's inference."""
+    # imported here for the reason given in `read_tiles_arrow`
+    import pyarrow.parquet as pq
+
+    try:
+        names = sorted(n for n in os.listdir(table_dir)
+                       if n.endswith(".parquet")
+                       and not n.startswith(("_", ".")))
+    except OSError:
+        return None
+    if not names:
+        return None
+    meta = pq.read_metadata(os.path.join(table_dir, names[0])).metadata or {}
+    raw = meta.get(_SPARK_SCHEMA_KEY)
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
+def _read_parquet(spark: SparkSession, table_dir: str) -> DataFrame:
+    """`spark.read.parquet(table_dir)`, given the footer schema
+    (`_spark_schema`) when there is one, so no inference job runs."""
+    schema = _spark_schema(table_dir)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(table_dir)
 
 
 class StoreFormat:
@@ -75,10 +114,10 @@ class ParquetStoreFormat(StoreFormat):
             json.dump(meta, f)
 
     def read_boundaries(self, spark: SparkSession, store: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(store, "boundaries"))
+        return _read_parquet(spark, os.path.join(store, "boundaries"))
 
     def read_tiles(self, spark: SparkSession, store: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(store, "tiles"))
+        return _read_parquet(spark, os.path.join(store, "tiles"))
 
     def read_meta(self, spark: SparkSession, store: str) -> dict | None:
         p = os.path.join(store, "_meta.json")

@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 
 from areacity_query_geometry_spark.engine import (
-    _batch_index, _slab_point_hits,
+    _batch_index, _seg_rows, _slab_point_hits,
 )
 from areacity_query_geometry_spark.geom import predicates, wkb
 
@@ -116,7 +116,8 @@ def _check(pdf, tile, rings, px, py):
     assert len(set(zip(tile, tix))) == len(np.unique(tix)) == len(rings)
     ring_of = dict(zip(tix, tile))
     for g in range(len(rings)):
-        got = I["SEG"][I["seg_ptr"][g]:I["seg_ptr"][g + 1], :4]
+        got = _seg_rows(I["SEG"],
+                        I["tile_seg"][I["seg_ptr"][g]:I["seg_ptr"][g + 1]])
         assert (got == predicates.segments_of_rings([rings[ring_of[g]]])).all()
     want = _want(tile, rings, px, py)
     assert (_slab_point_hits(I, tix, px, py) == want).all()

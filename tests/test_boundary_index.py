@@ -6,8 +6,9 @@ on the same tile table (same predicates; only the pair-formation
 plumbing differs), respect the `broadcast_wkb_budget` byte ceiling,
 and fall back cleanly when over it.
 Runs on a generated `fixtures_dense` set (no external files), and pins
-the index layout's invariants: one packed segment store, a y-slab CSR
-into it, and an index of the distance-fit segments.
+the index layout's invariants: one store of distinct undirected
+segments, per-tile signed refs into it, a y-slab CSR of refs, and the
+refs of the distance-fit segments.
 """
 import re
 
@@ -17,7 +18,7 @@ import pytest
 
 from areacity_query_geometry_spark import tiler
 from areacity_query_geometry_spark.engine import (
-    SLABS, SpatialEngine, _build_boundary_index,
+    SLABS, SpatialEngine, _build_boundary_index, _seg_rows,
 )
 from areacity_query_geometry_spark.geom import core, predicates, wkb
 
@@ -81,48 +82,76 @@ def test_index_layout_invariants(engine):
     assert idx["cell_ptr"][-1] == len(idx["region"])
     ntiles = len(idx["region"])
 
-    # each segment once, in one packed store
-    SEG, seg_ptr = idx["SEG"], idx["seg_ptr"]
-    assert SEG.ndim == 2 and SEG.shape[1] == 5 and SEG.dtype == np.float64
-    assert seg_ptr[-1] == len(SEG)
+    # one store of distinct undirected segments, and per tile its refs
+    SEG, seg_ptr, tile_seg = idx["SEG"], idx["seg_ptr"], idx["tile_seg"]
+    assert SEG.ndim == 2 and SEG.shape[1] == 4 and SEG.dtype == np.float64
+    assert seg_ptr[-1] == len(tile_seg)
     assert not {"X1", "Y1", "X2", "Y2", "YDS", "DX", "LN", "DEG",
-                "FX1", "FY1", "FX2", "FY2"} & set(idx)
+                "FX1", "FY1", "FX2", "FY2", "ln"} & set(idx)
     # kind-0 tiles all carry segments; kind-2 carry none
     seg_len = np.diff(seg_ptr)
     assert (seg_len[idx["kind"] == 0] > 0).all()
     assert (seg_len[idx["kind"] == 2] == 0).all()
     tile_of_seg = np.repeat(np.arange(ntiles), seg_len)
 
-    # the int32 arrays are in range
+    # each tile's refs resolve to its decoded ring segments, in order
+    rows = (engine.tiles.filter("kind = 0")
+            .select("cell_id", "region_id", "minx", "miny", "tile_wkb")
+            .collect())
+    ring = {(r.cell_id, r.region_id, r.minx, r.miny):
+            predicates.segments_of_rings(core.all_rings(
+                wkb.loads(bytes(r.tile_wkb)))) for r in rows}
+    cell_of = np.repeat(idx["cells"], np.diff(idx["cell_ptr"]))
+    for t in np.nonzero(idx["kind"] == 0)[0]:
+        got = _seg_rows(SEG, tile_seg[seg_ptr[t]:seg_ptr[t + 1]])
+        want = ring[(cell_of[t], idx["region"][t], idx["minx"][t],
+                     idx["miny"][t])]
+        assert got.tobytes() == want.tobytes(), t
+    # every SEG row is referenced, and none repeats another undirected:
+    # each is in the canonical direction (smaller (x, y) bits first)
+    # and their bit patterns are distinct
+    ref = tile_seg.astype(np.int64)
+    assert (np.bincount(np.where(ref < 0, ~ref, ref),
+                        minlength=len(SEG)) > 0).all()
+    bits = SEG.view(np.int64)
+    assert ((bits[:, 0] < bits[:, 2])
+            | ((bits[:, 0] == bits[:, 2]) & (bits[:, 1] <= bits[:, 3]))).all()
+    assert len(np.unique(bits, axis=0)) == len(SEG)
+    assert len(SEG) < len(tile_seg)
+
+    # the int32 arrays, and every ref, are in range
     slab_ptr, slab_seg, fseg = idx["slab_ptr"], idx["slab_seg"], idx["fseg"]
-    for a in (slab_ptr, slab_seg, fseg):
+    for a in (tile_seg, slab_ptr, slab_seg, fseg):
         assert a.dtype == np.int32
+    for a in (tile_seg, slab_seg, fseg):
+        assert ((a >= -len(SEG)) & (a < len(SEG))).all()
     assert len(slab_ptr) == ntiles * SLABS + 1
     assert slab_ptr[0] == 0 and slab_ptr[-1] == len(slab_seg)
     assert (np.diff(slab_ptr) >= 0).all()
-    assert ((slab_seg >= 0) & (slab_seg < len(SEG))).all()
-    assert ((fseg >= 0) & (fseg < len(SEG))).all()
     assert (idx["slab_h"] > 0).all()
 
-    # every segment is listed in at least one slab of its own tile
+    # a tile's slabs list refs of its own segments only, and every one
+    # of its segments in at least one slab
     slab_tile = np.repeat(np.arange(ntiles * SLABS) // SLABS,
                           np.diff(slab_ptr))
-    assert (tile_of_seg[slab_seg] == slab_tile).all()
-    assert (np.bincount(slab_seg, minlength=len(SEG)) > 0).all()
+    key = len(SEG) + 1
+    assert np.array_equal(
+        np.unique(slab_tile * 2 * key + slab_seg + key),
+        np.unique(tile_of_seg * 2 * key + tile_seg + key))
 
     # fseg lists, per tile and in order, exactly the non-window segments
     fseg_ptr = idx["fseg_ptr"]
-    assert fseg_ptr[-1] == len(fseg) and (np.diff(fseg) > 0).all()
-    assert (tile_of_seg[fseg]
-            == np.repeat(np.arange(ntiles), np.diff(fseg_ptr))).all()
-    x1, y1, x2, y2 = SEG[:, 0], SEG[:, 1], SEG[:, 2], SEG[:, 3]
+    assert fseg_ptr[-1] == len(fseg)
+    x1, y1, x2, y2 = _seg_rows(SEG, tile_seg).T
     e = tiler.CLIP_EPS
     on_win = (((x1 == x2) & ((x1 == idx["minx"][tile_of_seg] - e)
                              | (x1 == idx["maxx"][tile_of_seg] + e)))
               | ((y1 == y2) & ((y1 == idx["miny"][tile_of_seg] - e)
                                | (y1 == idx["maxy"][tile_of_seg] + e))))
     assert on_win.any()
-    assert np.array_equal(fseg, np.nonzero(~on_win)[0])
+    assert np.array_equal(fseg, tile_seg[~on_win])
+    assert np.array_equal(np.diff(fseg_ptr),
+                          np.bincount(tile_of_seg[~on_win], minlength=ntiles))
 
 
 def test_where_filter_stays_on_index_path_and_agrees(spark, engine):

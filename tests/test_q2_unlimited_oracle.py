@@ -71,7 +71,8 @@ def _oracle(I: dict, px, py, k: int, keep, refine: bool) -> dict:
              and (keep is None or I["region"][t] in keep)]
     best: dict[int, list] = {}  # region → per-probe winners
     for t in tiles:
-        segs = I["SEG"][I["fseg"][fptr[t]:fptr[t + 1]], :4]
+        segs = engine_mod._seg_rows(I["SEG"],
+                                    I["fseg"][fptr[t]:fptr[t + 1]])
         cx = (I["minx"][t] + I["maxx"][t]) / 2.0
         pxa = px - 360.0 * np.round((px - cx) / 360.0)
         nx, ny, d, jn = predicates.nearest_on_segments_idx(pxa, py, segs)
@@ -167,7 +168,8 @@ def test_bound_never_exceeds_a_tile_distance(dense_engine):
     fptr, eps = I["fseg_ptr"], tiler.CLIP_EPS
     n = 0
     for t in np.nonzero((I["kind"] == 0) & (fptr[1:] > fptr[:-1]))[0]:
-        segs = I["SEG"][I["fseg"][fptr[t]:fptr[t + 1]], :4]
+        segs = engine_mod._seg_rows(I["SEG"],
+                                    I["fseg"][fptr[t]:fptr[t + 1]])
         cx = (I["minx"][t] + I["maxx"][t]) / 2.0
         pxa = px - 360.0 * np.round((px - cx) / 360.0)
         nx, ny, _ = predicates.nearest_on_segments(pxa, py, segs)
@@ -196,8 +198,7 @@ def _polar_index(seed: int):
     I = {"kind": np.zeros(n, np.int64), "deep": np.zeros(n, np.int64),
          "region": rng.integers(0, 3, n), "minx": x0, "miny": y0,
          "maxx": x1, "maxy": y1,
-         "SEG": np.column_stack((segs, np.ones(len(t)))),
-         "fseg": np.arange(len(t)),
+         "SEG": segs, "fseg": np.arange(len(t)),
          "fseg_ptr": np.concatenate(([0], np.cumsum(cnt)))}
     return I, rng.uniform(-30, 30, 1), rng.uniform(80, 89, 1)
 

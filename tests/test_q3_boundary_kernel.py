@@ -22,7 +22,7 @@ import pytest
 
 from areacity_query_geometry_spark import engine, tiler
 from areacity_query_geometry_spark.engine import (
-    SLABS, _boundary_prim_hits, _build_boundary_index,
+    SLABS, _boundary_prim_hits, _build_boundary_index, _seg_rows,
 )
 from areacity_query_geometry_spark.geom import predicates
 
@@ -80,7 +80,7 @@ def _probes(I):
     """(pk, p) primitives: pk 1 rows are (minx, miny, maxx, maxy), pk 2
     rows segment endpoints (x1, y1, x2, y2)."""
     rng = np.random.default_rng(4)
-    S = I["SEG"][:, :4]
+    S = _seg_rows(I["SEG"], I["tile_seg"])
     v = S[:, :2]
     d = 1e-3
     rects = [
@@ -137,8 +137,8 @@ def _per_tile(I, tiles, pk, p):
     inside = np.zeros(len(tiles), dtype=bool)
     SEG = I["SEG"]
     for t in np.unique(tiles):
-        raw = SEG[I["seg_ptr"][t]:I["seg_ptr"][t + 1], :4]
-        flt = SEG[I["fseg"][I["fseg_ptr"][t]:I["fseg_ptr"][t + 1]], :4]
+        raw = _seg_rows(SEG, I["tile_seg"][I["seg_ptr"][t]:I["seg_ptr"][t + 1]])
+        flt = _seg_rows(SEG, I["fseg"][I["fseg_ptr"][t]:I["fseg_ptr"][t + 1]])
         for k in (1, 2):
             rows = np.nonzero((tiles == t) & (pk == k))[0]
             a0, a1, a2, a3 = p[rows].T

@@ -2,13 +2,13 @@
 
 `_index_point_hits` tests a kind-0 (probe, tile) pair only against the
 segments listed under the probe's y-slab; this compares it with an
-unslabbed reference that runs `_pair_hits_flat` over the tile's whole
-`seg_ptr` range. The index is built by `_build_boundary_index` from
-synthetic tiles, so no Spark and no external file is needed. The
-probes sit where a slab could lose a segment: on near-horizontal
-edges, on vertices, exactly on slab borders, within EPS above a flat
-roof apex just below a border, at the tile's miny/maxy, outside its
-y-range, and at NaN.
+unslabbed reference that runs `_pair_hits_flat` over all of the tile's
+ring segments (its `tile_seg` refs). The index is built by
+`_build_boundary_index` from synthetic tiles, so no Spark and no
+external file is needed. The probes sit where a slab could lose a
+segment: on near-horizontal edges, on vertices, exactly on slab
+borders, within EPS above a flat roof apex just below a border, at
+the tile's miny/maxy, outside its y-range, and at NaN.
 """
 import numpy as np
 import pandas as pd
@@ -16,7 +16,7 @@ import pytest
 
 from areacity_query_geometry_spark.engine import (
     SLABS, _build_boundary_index, _cell_pairs, _index_point_hits,
-    _pair_hits_flat,
+    _pair_hits_flat, _seg_len, _seg_rows,
 )
 from areacity_query_geometry_spark.geom import predicates
 
@@ -92,7 +92,7 @@ def _ring_segs(tile_rings):
 
 def _probes(I):
     """Probe points, each paired with every cell of the index."""
-    S = I["SEG"]
+    S = _seg_rows(I["SEG"], I["tile_seg"])
     rng = np.random.default_rng(8)
     t = rng.uniform(0, 1, len(S))[:, None]
     on_edge = S[:, :2] + t * (S[:, 2:4] - S[:, :2])
@@ -124,7 +124,6 @@ def _unslabbed(I, px, py, cid):
     """(row, region) boundary hits testing every segment of each kind-0
     tile, and the half-open rect of each kind-2 tile."""
     rows, _, tile = _cell_pairs(I["cells"], I["cell_ptr"], cid)
-    S = I["SEG"]
     hits = set()
     for r, t in zip(rows, tile):
         if I["kind"][t] == 2:
@@ -132,12 +131,14 @@ def _unslabbed(I, px, py, cid):
                     and I["miny"][t] <= py[r] < I["maxy"][t]):
                 hits.add((int(r), int(I["region"][t])))
             continue
-        seg = S[I["seg_ptr"][t]:I["seg_ptr"][t + 1]]
-        x1, y1, x2, y2, ln = seg.T
+        seg = _seg_rows(I["SEG"],
+                        I["tile_seg"][I["seg_ptr"][t]:I["seg_ptr"][t + 1]])
+        x1, y1, x2, y2 = seg.T
         dx, yd = x2 - x1, y2 - y1
         n = len(seg)
         hit = _pair_hits_flat(
-            x1, y1, x2, y2, np.where(yd == 0, 1.0, yd), dx, ln,
+            x1, y1, x2, y2, np.where(yd == 0, 1.0, yd), dx,
+            _seg_len(x1, y1, x2, y2),
             (dx == 0) & (yd == 0), np.zeros(n, np.int64),
             np.full(n, px[r]), np.full(n, py[r]), 1)
         if hit[0]:
@@ -193,22 +194,23 @@ def test_roof_apex_probe_is_on_segment_only_through_the_roof(index):
 
 
 def test_slab_lists_cover_each_segment_y_range(index):
-    """Every segment is listed under each slab its unpadded y-range
-    overlaps, and only in its own tile's slabs."""
+    """Every ring segment of a tile is listed under each slab of that
+    tile its unpadded y-range overlaps, and a slab lists only refs of
+    its own tile's segments."""
     I = index
     ntiles = len(I["region"])
-    tile_of_seg = np.repeat(np.arange(ntiles), np.diff(I["seg_ptr"]))
     ptr, seg = I["slab_ptr"], I["slab_seg"]
     assert ptr.dtype == np.int32 and seg.dtype == np.int32
     assert len(ptr) == ntiles * SLABS + 1 and ptr[-1] == len(seg)
     listed = {}
     for k in range(ntiles * SLABS):
-        for s in seg[ptr[k]:ptr[k + 1]]:
-            assert tile_of_seg[s] == k // SLABS
-            listed.setdefault(int(s), set()).add(k % SLABS)
-    for s, (x1, y1, x2, y2, _) in enumerate(I["SEG"]):
-        t = tile_of_seg[s]
+        for r in seg[ptr[k]:ptr[k + 1]]:
+            listed.setdefault((k // SLABS, int(r)), set()).add(k % SLABS)
+    for t in range(ntiles):
+        refs = I["tile_seg"][I["seg_ptr"][t]:I["seg_ptr"][t + 1]]
+        assert {r for (u, r) in listed if u == t} == set(refs.tolist())
         y0, h = I["slab_y0"][t], I["slab_h"][t]
-        lo = int(np.clip(np.floor((min(y1, y2) - y0) / h), 0, SLABS - 1))
-        hi = int(np.clip(np.floor((max(y1, y2) - y0) / h), 0, SLABS - 1))
-        assert set(range(lo, hi + 1)) <= listed[s]
+        for r, (x1, y1, x2, y2) in zip(refs, _seg_rows(I["SEG"], refs)):
+            lo = int(np.clip(np.floor((min(y1, y2) - y0) / h), 0, SLABS - 1))
+            hi = int(np.clip(np.floor((max(y1, y2) - y0) / h), 0, SLABS - 1))
+            assert set(range(lo, hi + 1)) <= listed[(t, int(r))]

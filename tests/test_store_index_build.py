@@ -5,8 +5,8 @@ indexes from the store's Parquet with pyarrow: no Spark job, and the
 same indexes, array for array, as an engine over the same DataFrames,
 which collects them through Spark. The pyarrow read returns the rows
 a Spark read of the same store does, and a cold `load_or_build`
-leaves no persisted RDD behind. `load` caches the tile table only for
-an engine past an index ceiling. Runs on a generated `fixtures_dense` set (no external files).
+leaves no persisted RDD behind. `load` runs no Spark job, and caches
+the tile table only for an engine past an index ceiling. Runs on a generated `fixtures_dense` set (no external files).
 """
 import json
 import os
@@ -30,14 +30,14 @@ BOUNDARY_COLS = ["cell_id", "region_id", "kind", "minx", "miny", "maxx",
 INTERIOR_COLS = ["cell_id", "region_id"]
 
 
-def _persistent_rdds(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 @pytest.fixture(scope="module")
 def cold(spark, dense_geojson, tmp_path_factory):
     """A cold `load_or_build` of the dense set into an empty directory:
-    (engine, store, persisted RDDs before, persisted RDDs after)."""
+    (engine, store, ids of the persisted RDDs before, and after)."""
     store = str(tmp_path_factory.mktemp("cold") / "store")
     before = _persistent_rdds(spark)
     eng = tile_store.load_or_build(spark, dense_geojson, store,
@@ -84,8 +84,23 @@ def _sorted(tbl: pa.Table) -> pa.Table:
 
 
 def test_cold_load_or_build_leaves_no_persisted_rdd(cold):
+    """No RDD the build persisted is still persisted afterwards. RDDs
+    of other modules' tables may meanwhile be unpersisted by Spark's
+    asynchronous ContextCleaner, so only new ids count."""
     _, _, before, after = cold
-    assert after == before
+    assert not after - before
+
+
+def test_load_runs_no_spark_job(spark, cold):
+    """`load` reads both tables with the schema in their Parquet
+    footers: no schema-inference job, and the schemas Spark would
+    infer."""
+    store = cold[1]
+    eng, n = _jobs(spark, "store-load", lambda: tile_store.load(spark, store))
+    assert n == 0
+    for df, table in ((eng.boundaries, "boundaries"), (eng.tiles, "tiles")):
+        assert df.schema == spark.read.parquet(
+            os.path.join(store, table)).schema, table
 
 
 def test_load_caches_tiles_only_past_a_ceiling(spark, cold, tmp_path):

@@ -51,7 +51,9 @@ class TestTolerance:
         import pandas as pd
 
         from areacity_query_geometry_spark import tiler
-        from areacity_query_geometry_spark.engine import _batch_index
+        from areacity_query_geometry_spark.engine import (
+            _batch_index, _seg_rows,
+        )
         from areacity_query_geometry_spark.geom import predicates, wkb
 
         # ONE ring with two prongs dipping into the cell [0,8]² from
@@ -80,7 +82,7 @@ class TestTolerance:
             "cell_id": [0], "region_id": [0], "minx": [minx],
             "miny": [miny], "maxx": [maxx], "maxy": [maxy],
             "tile_wkb": [piece]}))
-        segs = I["SEG"][I["fseg"], :4]
+        segs = _seg_rows(I["SEG"], I["fseg"])
         assert len(segs)
         x1, y1, x2, y2 = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
         assert not (((x1 == x2) & ((x1 == minx - e) | (x1 == maxx + e)))

@@ -51,7 +51,7 @@ def main():
     print(f"index_build_sec={time.time() - t0:.1f}")
     idx = bc.value
     print(f"index tiles={len(idx['region'])} cells={len(idx['cells'])} "
-          f"segs={len(idx['SEG'])} "
+          f"seg_rows={len(idx['SEG'])} tile_refs={len(idx['tile_seg'])} "
           f"bytes={sum(a.nbytes for a in idx.values())/1e6:.0f}MB")
 
     # deterministic probes biased into boundary cells: take the index's
