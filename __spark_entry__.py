@@ -1961,7 +1961,7 @@ def minhash_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact Jaccard verification of candidates. Fully deterministic: the
     shingle hash is the md5-prefix integer, identical across engines.
     The SQL is built by pipeline/minhash.py::near_dup_sql — the same
-    builder the N-vs-4N dedup scaling bench (tools/submit_dedup.py)
+    builder the N-vs-4N dedup scaling bench (`tools/submit_job.py dedup`)
     runs, so the scaling evidence measures THIS gate's plan."""
     from areacity_query_geometry_spark.pipeline import minhash
 

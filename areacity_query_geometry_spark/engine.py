@@ -520,9 +520,12 @@ def _slab_point_hits(I: dict, tiles: np.ndarray, px: np.ndarray,
 PRIM_BLOCK_ROWS = 1 << 16
 
 
-def _row_blocks(rows: np.ndarray, cap: int = PRIM_BLOCK_ROWS):
+def _row_blocks(rows: np.ndarray, cap: int | None = None):
     """Consecutive [b0, b1) ranges of pairs whose summed `rows` stay
-    within `cap`; a pair over `cap` runs alone."""
+    within `cap` (default: PRIM_BLOCK_ROWS, read at call time); a pair
+    over `cap` runs alone."""
+    if cap is None:
+        cap = PRIM_BLOCK_ROWS
     end = np.cumsum(rows)
     b0 = 0
     while b0 < len(rows):
@@ -736,10 +739,9 @@ def _make_index_refine_fn(id_cols: tuple[str, ...], bc,
     """Boundary-only refine against the broadcast boundary index, as a
     mapInPandas-style function over (*id_cols, lng, lat, cell_id)
     batches → (*id_cols, region_id). No query plan uses it: Q1 resolves
-    both tile kinds in `_make_regions_udf`. It serves only the
-    kernel timers: perfbench's `engine.q1.refine_kernel_s`,
-    `tools/kernel_profile.py` and `tools/micro_index_refine.py`. Each
-    batch first calls `_drop_spark_zip_importers`."""
+    both tile kinds in `_make_regions_udf`. It serves only perfbench's
+    kernel timer `engine.q1.refine_kernel_s`. Each batch first calls
+    `_drop_spark_zip_importers`."""
     id_list = list(id_cols)
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

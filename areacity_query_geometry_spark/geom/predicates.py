@@ -178,27 +178,6 @@ def segments_in_cells(segs: np.ndarray, cell_minx, cell_miny, cell_maxx, cell_ma
     return out
 
 
-def segment_counts_in_cells(segs: np.ndarray, cell_minx, cell_miny, cell_maxx, cell_maxy) -> np.ndarray:
-    """(C,) int: number of segments whose bbox overlaps each cell —
-    the density signal driving adaptive tile splitting (the distributed
-    analog of the reference's gridFactor point-count budget,
-    /root/reference/AreaCityQuery.java:1310-1375)."""
-    C = len(cell_minx)
-    if len(segs) == 0 or C == 0:
-        return np.zeros(C, dtype=np.int64)
-    sminx = np.minimum(segs[:, 0], segs[:, 2])[None, :]
-    smaxx = np.maximum(segs[:, 0], segs[:, 2])[None, :]
-    sminy = np.minimum(segs[:, 1], segs[:, 3])[None, :]
-    smaxy = np.maximum(segs[:, 1], segs[:, 3])[None, :]
-    hit = (
-        (sminx <= np.asarray(cell_maxx)[:, None])
-        & (smaxx >= np.asarray(cell_minx)[:, None])
-        & (sminy <= np.asarray(cell_maxy)[:, None])
-        & (smaxy >= np.asarray(cell_miny)[:, None])
-    )
-    return hit.sum(axis=1)
-
-
 def clip_ring_to_rects(ring: np.ndarray, minxs: np.ndarray, minys: np.ndarray,
                        maxxs: np.ndarray, maxys: np.ndarray,
                        chunk_elems: int = 4_000_000):

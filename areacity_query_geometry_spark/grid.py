@@ -113,16 +113,6 @@ def k_ring(lon: float, lat: float, res: int, k: int) -> np.ndarray:
     return pack(res, gx.ravel(), gy.ravel())
 
 
-def k_for_radius(lat: float, radius_m: float, res: int) -> int:
-    """Ring count covering radius_m meters around a point at `lat`."""
-    w = cell_width(res)
-    # meters per degree: lat ~111.19km fixed, lon shrinks by cos(lat)
-    m_per_deg_lat = 111194.9
-    coslat = max(0.01, math.cos(math.radians(lat)))
-    deg = max(radius_m / (m_per_deg_lat * coslat), radius_m / m_per_deg_lat)
-    return int(math.ceil(deg / w)) + 1
-
-
 def cover_bbox(minx, miny, maxx, maxy, res: int) -> np.ndarray:
     """All cells overlapping the CLOSED bbox, inclusive of edge touches
     on every side: when the bbox min edge lies exactly on a cell border

@@ -2,7 +2,7 @@
 
 One source of truth for the pipeline shape both the oracle gate
 (`__spark_entry__.minhash_lsh_near_dup`) and the N-vs-4N scaling bench
-(`tools/submit_dedup.py`) run: word 3-gram shingles → md5-prefix
+(`tools/submit_job.py dedup`) run: word 3-gram shingles → md5-prefix
 integer hash → K min-aggregates computed in ONE group-by pass (map-side
 combine collapses each doc's shingles inside its scan partition — the
 shuffle carries K numbers per doc, never the shingle stream, and never
@@ -26,7 +26,7 @@ rep loses its pairs from that bucket, even a pair with another member
 that would verify. Below the cap the output is byte-identical to the
 unguarded query. Per the
 no-silent-caps rule, `capped_buckets_sql` reports exactly which
-buckets degraded; tools/submit_dedup.py logs the count per run.
+buckets degraded; the dedup op of tools/submit_job.py logs the count per run.
 Everything is deterministic integer arithmetic (md5-prefix mod P),
 identical across engines and parallelism levels.
 """

@@ -202,12 +202,6 @@ def _expand_to_base(cid: int, base_res: int) -> np.ndarray:
     return grid.pack(base_res, gx.ravel(), gy.ravel())
 
 
-def _ancestor_at(cid: int, base_res: int) -> int:
-    r, ix, iy = (int(v) for v in grid.unpack(cid))
-    k = r - base_res
-    return int(grid.pack(base_res, ix >> k, iy >> k))
-
-
 def _tile_batches(base_res: int, max_res: int, seg_budget: int):
     cols = ("cell_id", "res", "region_id", "deep", "kind",
             "minx", "miny", "maxx", "maxy", "tile_wkb", "n_pts")

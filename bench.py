@@ -7,7 +7,7 @@ analog of the reference's QPS benchmark (/root/reference/Test.java:437-603,
 baseline 11,034 lookups/sec/core in-memory, README.md:196).
 
 The OFFICIAL headline is the ISOLATED `spark-submit local[8]` leg
-(fresh JVM, package shipped as a --py-files zip, tools/submit_job.py) —
+(fresh JVM, package shipped as a --py-files zip, tools/submit_job.py q1) —
 not an in-session figure — and every timed run in this file records its
 own window's /proc/stat steal%% plus all per-run times in the JSON, so
 the number carries its host-conditions evidence (VERDICT r2 #1: the
@@ -155,15 +155,15 @@ def headline_point_lookup(spark) -> dict:
 
 def isolated_headline(n_lookups: int, cpus: int = 8) -> dict | None:
     """The OFFICIAL headline leg: a fresh-JVM `spark-submit
-    --master local[8] --py-files <zip> tools/submit_job.py` run from a
-    neutral cwd (tools/scaling_bench.run) — isolated from this session's
-    broadcasts, codegen cache, and GC state. Returns submit_job.py's
-    JSON (per-run times + steal%% included), or None if spark-submit is
-    unavailable in the calling environment."""
+    --master local[8] --py-files <zip> tools/submit_job.py q1 <n>` run
+    from a neutral cwd (tools/scaling_bench.run) — isolated from this
+    session's broadcasts, codegen cache, and GC state. Returns the q1
+    job's JSON (per-run times + steal%% included), or None if
+    spark-submit is unavailable in the calling environment."""
     try:
         from tools.scaling_bench import run as submit_run
 
-        return submit_run(cpus, n_lookups)
+        return submit_run("q1", cpus, [n_lookups])
     except Exception as e:
         print(f"# isolated headline leg failed ({e}); "
               "falling back to in-session figure", file=sys.stderr)

@@ -165,6 +165,12 @@ def test_flat_pass_equals_per_tile_predicates(case, block, monkeypatch):
     I, tiles, pk, p, (touch, inside) = case
     if block is not None:  # smaller than most tiles: one pair per block
         monkeypatch.setattr(engine, "PRIM_BLOCK_ROWS", block)
+        # `_row_blocks` reads the patched size when called
+        raw = I["seg_ptr"][tiles + 1] - I["seg_ptr"][tiles]
+        blocks = list(engine._row_blocks(raw))
+        assert len(blocks) > 1
+        assert all(b1 - b0 == 1 or raw[b0:b1].sum() <= block
+                   for b0, b1 in blocks)
     got = _boundary_prim_hits(I, tiles, pk, p)
     np.testing.assert_array_equal(got, touch | inside)
 

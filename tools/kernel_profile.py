@@ -1,7 +1,14 @@
-"""cProfile the index-refine kernel on a saved index snapshot (no
-Spark): `python tools/kernel_profile.py build` once to snapshot the
-dense index to /tmp/aqgs_dense_index.npz, then
-`python tools/kernel_profile.py [n] [batch]` to profile the kernel.
+"""Single-thread profile of the one-pass Q1 kernel, `_index_point_hits`
+with both the boundary and the interior index, as `_make_regions_udf`
+runs it, on the reference-density set (fixtures_dense). Spark only
+builds the two indexes; the kernel then runs on the driver over
+deterministic probes placed inside the boundary index's cells, so the
+figure is pure kernel time with no scheduling or Arrow handoff.
+
+Prints the index stats (tiles, cells, arrays and bytes), the
+single-thread rate and the top of a cProfile by cumulative time.
+
+Usage: python tools/kernel_profile.py [n_probes] [batch] [base_res]
 """
 from __future__ import annotations
 
@@ -13,76 +20,72 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
-# glibc malloc tunables BEFORE the JVM starts (workers inherit): large
-# numpy temporaries otherwise mmap/munmap per call and the page-fault
-# churn serializes concurrent Arrow kernels (hostload.MALLOC_TUNING)
-os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
-os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "1073741824")
 
-import numpy as np
-import pandas as pd
+import numpy as np  # noqa: E402
 
-SNAP = "/tmp/aqgs_dense_index.npz"
+from areacity_query_geometry_spark import hostload  # noqa: E402
 
 
-class FakeBroadcast:
-    def __init__(self, v):
-        self.value = v
-
-
-def build():
-    from pyspark.sql import SparkSession
-
-    from areacity_query_geometry_spark import fixtures_dense
-    from areacity_query_geometry_spark.engine import SpatialEngine
-
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.driver.memory", "32g")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-    eng = SpatialEngine.from_geojson(
-        spark, fixtures_dense.ensure(), base_res=13)
-    t0 = time.time()
-    bc, _ = eng._boundary_index()
-    print(f"index_build_sec={time.time() - t0:.1f}")
-    np.savez(SNAP, **bc.value)
-    spark.stop()
+def _stats(name: str, idx: dict) -> None:
+    arrays = ", ".join(f"{k} {v.nbytes / 1e6:.1f}" for k, v in idx.items())
+    print(f"{name}: {len(idx['region'])} tile rows, {len(idx['cells'])} "
+          f"cells, {sum(v.nbytes for v in idx.values()) / 1e6:.1f} MB "
+          f"({arrays} MB)")
 
 
 def main():
-    if len(sys.argv) > 1 and sys.argv[1] == "build":
-        build()
-        return
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 130_000
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_300_000
     batch = int(sys.argv[2]) if len(sys.argv) > 2 else 65536
-    idx = {k: v for k, v in np.load(SNAP).items()}
+    base_res = int(sys.argv[3]) if len(sys.argv) > 3 else 13
+    hostload.apply_malloc_tuning()  # before the JVM starts
 
-    from areacity_query_geometry_spark import grid
-    from areacity_query_geometry_spark.engine import _make_index_refine_fn
+    from pyspark.sql import SparkSession
 
+    from areacity_query_geometry_spark import fixtures_dense, grid
+    from areacity_query_geometry_spark.engine import (
+        SpatialEngine, _index_point_hits,
+    )
+
+    cpus = len(os.sched_getaffinity(0))
+    builder = (SparkSession.builder.master(f"local[{cpus}]")
+               .config("spark.sql.shuffle.partitions", str(cpus))
+               .config("spark.ui.enabled", "false"))
+    for k, v in hostload.driver_memory_conf().items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    eng = SpatialEngine.from_geojson(
+        spark, fixtures_dense.ensure(), base_res=base_res)
+    t0 = time.time()
+    I, J = eng._boundary_index()[0].value, eng._interior_index().value
+    print(f"index_build_sec={time.time() - t0:.1f} on local[{cpus}]")
+    spark.stop()
+    _stats("boundary", I)
+    _stats("interior", J)
+
+    # deterministic probes in boundary cells: the index's own cells,
+    # jittered inside each cell
     rng = np.arange(n, dtype=np.int64)
-    cells = idx["cells"][rng % len(idx["cells"])]
+    cells = I["cells"][rng % len(I["cells"])]
     bx0, by0, bx1, by1 = grid.cells_bounds(cells)
-    fx = ((rng * 2654435761) % 1000) / 1000.0
-    fy = ((rng * 40503) % 1000) / 1000.0
-    px = bx0 + (bx1 - bx0) * fx
-    py = by0 + (by1 - by0) * fy
-    fn = _make_index_refine_fn(("point_id",), FakeBroadcast(idx))
+    px = bx0 + (bx1 - bx0) * (((rng * 2654435761) % 1000) / 1000.0)
+    py = by0 + (by1 - by0) * (((rng * 40503) % 1000) / 1000.0)
 
     def run():
-        total = 0
+        hits = 0
         for s in range(0, n, batch):
-            pdf = pd.DataFrame({
-                "point_id": rng[s:s + batch], "lng": px[s:s + batch],
-                "lat": py[s:s + batch], "cell_id": cells[s:s + batch]})
-            for out in fn(iter([pdf])):
-                total += len(out)
-        return total
+            e = s + batch
+            (ir, _), (br, _) = _index_point_hits(
+                I, px[s:e], py[s:e], cells[s:e], None, J)
+            hits += len(ir) + len(br)
+        return hits
 
     run()  # warm
     t0 = time.time()
-    total = run()
-    print(f"plain: {time.time() - t0:.2f}s hits={total}")
+    hits = run()
+    el = time.time() - t0
+    print(f"kernel_single_thread: {el:.2f}s for {n} probes in boundary "
+          f"cells ({n / el / 1e6:.2f}M probes/s/core), hits={hits}")
     pr = cProfile.Profile()
     pr.enable()
     run()

@@ -36,6 +36,7 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
 import reference_parity as rp  # noqa: E402
+from scaling_bench import splice_block  # noqa: E402
 
 BASELINE_MD = os.path.join(REPO, "BENCH", "BASELINE.md")
 BEGIN = "<!-- REFBENCH_BEGIN (tools/reference_bench.py rewrites this block) -->"
@@ -91,12 +92,7 @@ def spark_leg(spark, eng, n: int, runs: int) -> dict:
 
 def write_block(text: str, begin: str = BEGIN, end: str = END) -> None:
     md = open(BASELINE_MD, encoding="utf-8").read()
-    block = f"{begin}\n{text}\n{end}"
-    if begin in md:
-        md = re.sub(re.escape(begin) + r".*?" + re.escape(end),
-                    lambda _: block, md, flags=re.S)
-    else:
-        md = md.rstrip() + "\n\n\n" + block + "\n"
+    md = splice_block(md, begin, end, f"{begin}\n{text}\n{end}")
     with open(BASELINE_MD, "w", encoding="utf-8") as f:
         f.write(md)
 
